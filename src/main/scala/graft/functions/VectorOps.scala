@@ -26,8 +26,15 @@ object VectorOps {
 
   def vecL2(a: Column, b: Column): Column = sqrt(vecL2Sq(a, b))
 
+  /** Cosine similarity; 0.0 (distance 1.0) when either vector has
+    * zero norm — the hnswlib convention ([[HnswGraph]] uses it too).
+    * A zero norm makes the dot exactly 0, so flooring the norm product
+    * at the smallest positive double yields 0 without a division by
+    * zero (which ANSI mode raises), and leaves every non-zero pair's
+    * quotient bit-identical: two non-zero float vectors' norm product
+    * is at least ~2e-90. */
   def vecCosine(a: Column, b: Column): Column =
-    vecDot(a, b) / (vecNorm(a) * vecNorm(b))
+    vecDot(a, b) / greatest(vecNorm(a) * vecNorm(b), lit(Double.MinPositiveValue))
 
   /** Dot product against a plan-time constant query vector. */
   def vecDotConst(a: Column, q: Array[Float]): Column =
@@ -96,7 +103,8 @@ object VectorOps {
     def l2SqD = fold(zip_with(a, b, (x, y) => (x - y) * (x - y)))
     def normSqD(v: Column) = fold(zip_with(v, v, (x, y) => x * y))
     space match {
-      case "cosine" => lit(1.0) - dotD / (sqrt(normSqD(a)) * sqrt(normSqD(b)))
+      case "cosine" => lit(1.0) -
+        dotD / greatest(sqrt(normSqD(a)) * sqrt(normSqD(b)), lit(Double.MinPositiveValue))
       case "ip"     => lit(1.0) - dotD
       case "l2"     => l2SqD
       case other => throw new IllegalArgumentException(

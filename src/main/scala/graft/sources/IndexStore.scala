@@ -15,10 +15,11 @@ import graft.functions.{exprs, hashExprs, Embed, Lsh, VectorOps}
   *   by `source` and written with dynamic partition overwrite, so
   *   re-indexing a source is idempotent (fixes the duplicate-id
   *   `collection.add` defect, indexer.py:56).
-  * - `searchTopK` is the query lifecycle (app.py:42-78): read index ->
-  *   distance vs a broadcast query vector -> TakeOrderedAndProject
-  *   top-k -> deep-link projection. Column pruning means a search
-  *   reads only (embedding, id, provenance) — never the documents.
+  * - every `searchTopK*` verb is the query lifecycle (app.py:42-78),
+  *   one search pipeline for all layouts: probe -> candidates ->
+  *   pre-rank -> rerank-and-present (see "the search pipeline" below).
+  *   Column pruning means a search reads only (embedding, id,
+  *   provenance) — never the documents.
   *
   * At 100 TB: build is a narrow pipeline (no shuffle) parallel over
   * input splits; search is a scan + per-partition top-k + driver merge
@@ -177,43 +178,180 @@ object IndexStore {
   }
 
   /** The chroma 0.4.6 `query(include=[...])` vocabulary. `"ids"` is
-    * not a member — chroma always returns ids, as does [[present]]
+    * not a member — chroma always returns ids, as does [[rerankPresent]]
     * (rank + chunk_id are unconditional). */
   private[graft] val QueryIncludes: Set[String] =
     Set("documents", "metadatas", "embeddings", "distances")
 
-  /** Shared result presentation — the chroma `Collection.query`
-    * return contract. `includeDistance` appends the chroma-convention
-    * `distance` column (`collection.query` returns distances by
-    * default) — derived from the space-sim the rank already ordered
+  // ---- the search pipeline -------------------------------------------
+  //
+  // Every vector search verb composes the same four stages, defined
+  // once below (the reference's embed -> kNN -> deep-link query step,
+  // app.py:50-78):
+  //   1. probe — the IVF quantizer's nearest cells per query, after a
+  //      dim check against the trained centroids (IVF, IVF-PQ and the
+  //      IVF-routed MMR verbs; the other layouts have no quantizer);
+  //   2. candidates — the rows a query can reach, `where` applied: a
+  //      full scan (exact, SQ8, MMR), LSH bucket overlap (ANN), the
+  //      probed cell partitions (IVF, IVF-PQ), the HNSW traversal's
+  //      ids, or the probed bucket partitions (bucketed LSH);
+  //   3. pre-rank — the overfetch cut on a compressed score: SQ8 codes
+  //      (SQ8, IVF) or the PQ-ADC lookup (IVF-PQ); the other families
+  //      go straight to the rerank;
+  //   4. rerank-and-present — exact similarity in the collection's
+  //      space, top-k per query, and the chroma result projection with
+  //      the deep link.
+  // Single-query verbs keep the query vector a plan literal, so the
+  // optimizer folds its norm; batch verbs carry their queries as a
+  // broadcast column. The explain verbs run the search's own stages.
+
+  /** The reference's per-hit deep link (app.py:50-78): the chunk's sheet row. */
+  private def deepLink: Column =
+    format_string("https://docs.google.com/spreadsheets/d/%s/edit#gid=%s&range=A%d",
+      col("source"), lit("0"), col("sheet_row"))
+
+  /** The trained `_centroids` quantizer of an IVF layout. */
+  private final case class Quantizer(ids: Array[Long], cents: Array[Array[Float]]) {
+    /** The `probes` nearest cells to `qvec`, nearest first. */
+    def probe(qvec: Array[Float], probes: Int): Seq[Long] =
+      graft.functions.VecIndex.nearestCells(
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(qvec), ids, cents,
+        math.min(probes, ids.length)).toLongArray().toSeq
+    def centroid(cell: Long): Array[Float] = cents(ids.indexOf(cell))
+  }
+
+  /** Stage 1, probe: the layout's quantizer, once every query (named
+    * by `what` in the error) is checked against its trained dim — a
+    * vector of another width would silently probe the wrong cells. */
+  private def quantizer(spark: SparkSession, path: String,
+                        queries: Seq[(String, Array[Float])]): Quantizer = {
+    val (ids, cents) = Relations.centroids(spark, s"$path/_centroids")
+    queries.foreach { case (what, qvec) =>
+      require(qvec.length == cents.head.length,
+        s"$path was trained at dim=${cents.head.length}, $what has dim=${qvec.length}")
+    }
+    Quantizer(ids, cents)
+  }
+
+  /** Stage 1 for one query: the quantizer and the probed cells. */
+  private def probe(spark: SparkSession, path: String, qvec: Array[Float],
+                    probes: Int): (Quantizer, Seq[Long]) = {
+    val q = quantizer(spark, path, Seq("query vector" -> qvec))
+    (q, q.probe(qvec, probes))
+  }
+
+  /** Stage 1 for a batch: (query_id, vector, probed cells) in query_id
+    * order. */
+  private def probeBatch(spark: SparkSession, path: String,
+                         queries: Seq[(Long, Array[Float])], probes: Int)
+      : (Quantizer, Seq[(Long, Array[Float], Seq[Long])]) = {
+    val q = quantizer(spark, path,
+      queries.map { case (qid, v) => s"batch query $qid" -> v })
+    (q, queries.sortBy(_._1).map { case (qid, v) => (qid, v, q.probe(v, probes)) })
+  }
+
+  /** Stage 2, candidates: the layout's rows narrowed by the family's
+    * candidate `source`, then by `where` — beneath every rank, so a
+    * filtered search is exact over the filter's survivors. */
+  private def candidates(spark: SparkSession, path: String, where: Option[Column],
+                         source: DataFrame => DataFrame = identity): DataFrame = {
+    val rows = source(Relations.parquet(spark, path))
+    where.fold(rows)(rows.filter)
+  }
+
+  /** The IVF candidate source: only the probed cell partitions (the
+    * predicate prunes directories at planning time). */
+  private def inCells(cells: Seq[Long]): DataFrame => DataFrame =
+    _.filter(col("cell").isin(cells: _*))
+
+  /** Stage 3, pre-rank: keep the top-`overfetch` candidates by a
+    * compressed `score` (ties to the smaller chunk_id), so only they
+    * read their float embedding. The cut is a broadcast join back onto
+    * the candidates; `rankCol` adds each survivor's cut position (the
+    * explain verbs). */
+  private def preRank(rows: DataFrame, score: Column, overfetch: Int,
+                      name: String = "approx",
+                      rankCol: Option[String] = None): DataFrame = {
+    val cut = rows.select(col("chunk_id").as("cid"), score.as(name))
+      .orderBy(col(name).desc, col("cid"))
+      .limit(overfetch)
+    val ranked = rankCol.fold(cut)(r => cut.withColumn(r,
+      row_number().over(Window.orderBy(col(name).desc, col("cid")))))
+    rows.join(broadcast(ranked), col("chunk_id") === col("cid"))
+  }
+
+  /** [[preRank]] for a batch: `probeTable` fans each row out to the
+    * queries probing its cell (a hash equi-join on `qcell`, never a
+    * membership test), and a per-query window keeps each query's top
+    * `overfetch` as (query_id, cid). */
+  private def preRankBatch(rows: DataFrame, probeTable: DataFrame, score: Column,
+                           overfetch: Int): DataFrame =
+    rows.join(broadcast(probeTable), col("cell").cast("long") === col("qcell"))
+      .select(col("query_id"), col("chunk_id").as("cid"), score.as("approx"))
+      .withColumn("arn", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col("approx").desc, col("cid"))))
+      .filter(col("arn") <= overfetch)
+      .select("query_id", "cid")
+
+  /** The SQ8 pre-rank score against a query code and factor. */
+  private def sq8Score(qCode: Column, qFac: Column): Column =
+    graft.functions.vecIndexExprs.sq8Dot(col("sq8_code"), qCode) *
+      col("sq8_factor") * qFac
+
+  /** [[sq8Score]] with the query's code and factor as plan literals. */
+  private def sq8Score(qvec: Array[Float]): Column = {
+    val q = new org.apache.spark.sql.catalyst.util.GenericArrayData(qvec)
+    sq8Score(lit(graft.functions.VecIndex.sq8Code(q)),
+      lit(graft.functions.VecIndex.sq8Factor(q)))
+  }
+
+  /** The PQ-ADC pre-rank score: m LUT lookups + adds per row, in
+    * integer micros. The residual encoding (`_pqmeta`) adds each probed
+    * cell's dot(q, centroid) constant from a tiny literal map, so the
+    * scan costs the same as raw ADC. */
+  private def adcScore(spark: SparkSession, path: String, quant: Quantizer,
+                       qvec: Array[Float], cells: Seq[Long]): Column = {
+    import graft.operators.VectorSearch.{microsDot, pqLut}
+    val adc = graft.functions.vecIndexExprs.pqAdc(col("pq_code"),
+      pqLut(qvec, readPqBooks(spark, path)))
+    if (pqEncoding(spark, path) != "residual") adc
+    else element_at(typedlit(cells.map(c => c -> microsDot(qvec, quant.centroid(c))).toMap),
+      col("cell").cast("long")) + adc
+  }
+
+  /** Stage 4, rerank (one query): exact similarity in `space` and the
+    * top-k by (sim desc, chunk_id). */
+  private def rerank(rows: DataFrame, space: String, qvec: Array[Float],
+                     k: Int): DataFrame =
+    rows.withColumn("sim", VectorOps.spaceSim(space, col("embedding"), qvec))
+      .orderBy(col("sim").desc, col("chunk_id"))
+      .limit(k)
+
+  /** Stage 4, rerank-and-present (one query): [[rerank]] in the
+    * collection's space, then the chroma `Collection.query` return
+    * contract. `includeDistance` appends the chroma-convention
+    * `distance` column, derived from the sim the rank already ordered
     * by, so it costs no extra vector work: cosine -> 1 - cos, ip ->
-    * 1 - dot, l2 -> squared L2 (= -sim, [[VectorOps.spaceSim]]
-    * negates it for the shared desc order).
+    * 1 - dot, l2 -> squared L2 (= -sim,
+    * [[VectorOps.spaceSim]] negates it for the shared desc order).
     *
     * `include` is the chroma `query(include=[...])` projection
-    * (chromadb 0.4.6 `Collection.query` signature; the reference
-    * consumes the documents+metadatas legs at app.py:58-61): empty
-    * keeps the legacy columns (where `includeDistance` appends the
-    * distance leg); nonempty returns ids (rank, chunk_id) plus
-    * EXACTLY the requested legs — `documents` -> chunk, `metadatas`
-    * -> doc_id/source/link, `embeddings` -> the float vector,
-    * `distances` -> the distance column — and ignores
-    * `includeDistance` (chroma's include list is the whole
-    * projection contract; an extra unrequested column would break
-    * positional consumers). Column pruning means an `include`
-    * WITHOUT `embeddings` never reads the vector bytes of the
-    * presented rows. */
-  private def present(df: DataFrame, space: String = "cosine",
-                      includeDistance: Boolean = false,
-                      include: Seq[String] = Nil): DataFrame = {
+    * (chromadb 0.4.6; the reference consumes the documents+metadatas
+    * legs at app.py:58-61): empty keeps the legacy columns (where
+    * `includeDistance` appends the distance leg); nonempty returns ids
+    * (rank, chunk_id) plus EXACTLY the requested legs — `documents` ->
+    * chunk, `metadatas` -> doc_id/source/link, `embeddings` -> the
+    * float vector, `distances` -> the distance column — and ignores
+    * `includeDistance` (chroma's include list is the whole projection
+    * contract; an extra unrequested column would break positional
+    * consumers). Column pruning means an `include` without
+    * `embeddings` never reads the vector bytes of the presented rows. */
+  private def rerankPresent(spark: SparkSession, path: String, rows: DataFrame,
+                            qvec: Array[Float], k: Int, includeDistance: Boolean,
+                            include: Seq[String]): DataFrame = {
     require(include.forall(QueryIncludes),
       s"include must be among ${QueryIncludes.mkString(", ")}, got $include")
-    val base = df
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("sim").desc, col("chunk_id"))))
-      .withColumn("link",
-        format_string("https://docs.google.com/spreadsheets/d/%s/edit#gid=%s&range=A%d",
-          col("source"), lit("0"), col("sheet_row")))
+    val space = collectionSpace(spark, path)
     val distCol = (if (space == "l2") -col("sim") else lit(1.0) - col("sim"))
       .as("distance")
     val out =
@@ -228,17 +366,71 @@ object IndexStore {
           (if (include.contains("documents")) Seq(col("chunk")) else Nil) ++
           (if (include.contains("embeddings")) Seq(col("embedding")) else Nil) ++
           (if (include.contains("distances")) Seq(distCol) else Nil)
-    base.select(out: _*)
+    rerank(rows, space, qvec, k)
+      .withColumn("rank", row_number().over(
+        Window.orderBy(col("sim").desc, col("chunk_id"))))
+      .withColumn("link", deepLink)
+      .select(out: _*)
   }
 
-  /** Exact cosine top-k for a free-text query, with deep links.
-    *
-    * `where` is the chromadb `collection.query(where=...)` surface: a
-    * metadata predicate over the index columns (source, doc_id, ...)
-    * applied BENEATH the distance computation and rank, so the top-k
-    * is exact over the filtered corpus. Declared as a plain filter on
-    * the scan, it reaches the parquet reader as a pushed filter —
-    * and, on this layout (partitioned by `source`), a source
+  /** Stage 4, rerank-and-present (batch): each query's exact top-k over
+    * its (query_id, cid) `cands` drawn from `rows`, then the
+    * presentation columns joined back from `shown` for the ranked rows
+    * only. The rank exchange carries (query_id, chunk_id, sim): neither
+    * vectors nor text ride it. Output: (query_id, rank, chunk_id,
+    * doc_id, source, chunk, link), ordered by query and rank. */
+  private def rerankPresentBatch(spark: SparkSession, path: String,
+                                 rows: DataFrame, shown: DataFrame,
+                                 cands: DataFrame,
+                                 queries: Seq[(Long, Array[Float])],
+                                 k: Int): DataFrame = {
+    import spark.implicits._
+    val qvecs = queries.sortBy(_._1)
+      .map { case (qid, v) => (qid, v.toSeq) }.toDF("query_id", "qvec")
+    val ranked = rows.select(col("chunk_id"), col("embedding"))
+      .join(broadcast(cands), col("chunk_id") === col("cid"))
+      .join(broadcast(qvecs), Seq("query_id"))
+      .select(col("query_id"), col("chunk_id"),
+        VectorOps.spaceSim2(collectionSpace(spark, path),
+          col("embedding"), col("qvec")).as("sim"))
+      .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col("sim").desc, col("chunk_id"))))
+      .filter(col("rank") <= k)
+    shown.select(col("chunk_id"), col("doc_id"), col("source"), col("chunk"),
+        col("sheet_row"))
+      .join(broadcast(ranked), Seq("chunk_id"))
+      .withColumn("link", deepLink)
+      .select(col("query_id"), col("rank"), col("chunk_id"), col("doc_id"),
+        col("source"), col("chunk"), col("link"))
+      .orderBy("query_id", "rank")
+  }
+
+  /** The IVF-family explain tail: the search's own pre-rank (its cut
+    * position as `<name>_rank`) and rerank, then per hit the stored
+    * cell, the probe position that found it, `score` (the pre-rank
+    * score as presented) and ⌊1e6·sim⌋; k rows, ordered by rank. */
+  private def explainIvfFamily(spark: SparkSession, path: String, rows: DataFrame,
+                               cells: Seq[Long], qvec: Array[Float], k: Int,
+                               overfetch: Int, preScore: Column, name: String,
+                               score: Column): DataFrame = {
+    import spark.implicits._
+    val probeDf = cells.zipWithIndex
+      .map { case (c, i) => (c, i + 1) }.toDF("pcell", "probe_pos")
+    rerank(preRank(rows, preScore, overfetch, name, Some(s"${name}_rank")),
+        collectionSpace(spark, path), qvec, k)
+      .withColumn("rank", row_number().over(
+        Window.orderBy(col("sim").desc, col("chunk_id"))))
+      .join(broadcast(probeDf), col("cell").cast("long") === col("pcell"))
+      .select(col("rank"), col("chunk_id"), col("cell").cast("long").as("cell"),
+        col("probe_pos"), col(s"${name}_rank"), score,
+        floor(lit(1000000.0d) * col("sim")).cast("long").as("sim_micros"))
+      .orderBy(col("rank"))
+  }
+
+  /** Exact top-k for a free-text query, with deep links: the search
+    * pipeline over a full scan, no pre-rank. `where` is chroma's
+    * `query(where=...)`; it reaches the parquet reader as a pushed
+    * filter, and on this layout (partitioned by `source`) a source
     * predicate prunes whole partition directories at planning time
     * (PlanAuditSpec pins both). */
   def searchTopK(spark: SparkSession, path: String, queryText: String,
@@ -258,22 +450,14 @@ object IndexStore {
   def searchTopKVec(spark: SparkSession, path: String, qvec: Array[Float],
                     k: Int = 10, where: Option[Column] = None,
                     includeDistance: Boolean = false,
-                    include: Seq[String] = Nil): DataFrame = {
-    // the collection's hnsw:space metadata picks the rank metric —
-    // a default-space layout pays one local fs stat, no Spark job
-    val space = collectionSpace(spark, path)
-    val idx = Relations.parquet(spark, path)
-    present(where.fold(idx)(idx.filter)
-      .withColumn("sim", VectorOps.spaceSim(space, col("embedding"), qvec))
-      .orderBy(col("sim").desc, col("chunk_id"))
-      .limit(k), space, includeDistance, include)
-  }
+                    include: Seq[String] = Nil): DataFrame =
+    rerankPresent(spark, path, candidates(spark, path, where), qvec, k,
+      includeDistance, include)
 
-  /** Approximate top-k: probe the persisted LSH buckets — only rows
-    * colliding with the query in at least one table pay the distance
-    * computation (~20% of the corpus at the default operating point;
-    * recall measured by the q67 harness on the same kernel). Exact
-    * rerank on the candidates, same presentation as [[searchTopK]]. */
+  /** Approximate top-k over the persisted LSH buckets: the candidates
+    * are the rows colliding with the query in at least one table
+    * (~20% of the corpus at the default operating point; recall
+    * measured by the q67 harness on the same kernel). */
   def searchTopKAnn(spark: SparkSession, path: String, queryText: String,
                     k: Int = 10, dim: Int = Embed.DefaultDim,
                     where: Option[Column] = None,
@@ -289,24 +473,18 @@ object IndexStore {
                        k: Int = 10, where: Option[Column] = None,
                        includeDistance: Boolean = false,
                        include: Seq[String] = Nil): DataFrame = {
-    val space = collectionSpace(spark, path)
     val qBuckets = Lsh.queryBuckets(qvec, qvec.length, LshBits, LshTables)
-    val hit = Relations.parquet(spark, path)
-      .filter(arrays_overlap(col("lsh_buckets"),
-        lit(qBuckets)))
-    present(where.fold(hit)(hit.filter)
-      .withColumn("sim", VectorOps.spaceSim(space, col("embedding"), qvec))
-      .orderBy(col("sim").desc, col("chunk_id"))
-      .limit(k), space, includeDistance, include)
+    rerankPresent(spark, path,
+      candidates(spark, path, where,
+        _.filter(arrays_overlap(col("lsh_buckets"), lit(qBuckets)))),
+      qvec, k, includeDistance, include)
   }
 
-  /** Compressed-domain top-k: rank ALL chunks by the integer SQ8 dot
-    * against the query code (reading only the 1-byte/dim code column
-    * — 4x less IO than the float embeddings), then exact-rerank the
-    * top-`overfetch` candidates (only those rows read their float
-    * embedding). The right search path when the corpus has no cluster
-    * structure for [[searchTopKAnn]]'s buckets to exploit — recall
-    * measured 1.0 at <=3% candidate fraction by the q67 harness. */
+  /** Compressed-domain top-k: the SQ8 pre-rank over a full scan
+    * (1-byte/dim codes, 4x less IO than the float embeddings). The
+    * right path when the corpus has no cluster structure for
+    * [[searchTopKAnn]]'s buckets to exploit — recall measured 1.0 at
+    * <=3% candidate fraction by the q67 harness. */
   def searchTopKSq8(spark: SparkSession, path: String, queryText: String,
                     k: Int = 10, overfetch: Int = 32,
                     dim: Int = Embed.DefaultDim,
@@ -323,40 +501,11 @@ object IndexStore {
                        k: Int = 10, overfetch: Int = 32,
                        where: Option[Column] = None,
                        includeDistance: Boolean = false,
-                       include: Seq[String] = Nil): DataFrame = {
-    import graft.functions.vecIndexExprs
-    val space = collectionSpace(spark, path)
-    val qvecData = new org.apache.spark.sql.catalyst.util.GenericArrayData(qvec)
-    val qCode = graft.functions.VecIndex.sq8Code(qvecData)
-    val qFac = graft.functions.VecIndex.sq8Factor(qvecData)
-    val all = Relations.parquet(spark, path)
-    // beneath the pre-rank: candidates are filter-survivors, so the
-    // overfetch budget is spent on rows that can actually be returned
-    val idx = where.fold(all)(all.filter)
-    val candidates = idx
-      .select(col("chunk_id").as("cid"),
-        (vecIndexExprs.sq8Dot(col("sq8_code"), lit(qCode)) * col("sq8_factor") * lit(qFac))
-          .as("approx"))
-      .orderBy(col("approx").desc, col("cid"))
-      .limit(overfetch)
-    present(idx.join(broadcast(candidates), col("chunk_id") === col("cid"))
-      .withColumn("sim", VectorOps.spaceSim(space, col("embedding"), qvec))
-      .orderBy(col("sim").desc, col("chunk_id"))
-      .limit(k), space, includeDistance, include)
-  }
+                       include: Seq[String] = Nil): DataFrame =
+    rerankPresent(spark, path,
+      preRank(candidates(spark, path, where), sq8Score(qvec), overfetch),
+      qvec, k, includeDistance, include)
 
-  /** IVF-partitioned index — the other 100 TB layout besides LSH
-    * buckets: rows land in the parquet partition of their
-    * nearest-centroid cell (`NearestCell` scan-side assignment; ONE
-    * cell-keyed exchange of the finished rows feeds the partitioned
-    * write so each cell gets one file, not one per task), and the trained
-    * centroid table persists as a `_centroids` sidecar (underscore
-    * prefix = invisible to Spark's file index). A query probes its
-    * `probes` nearest cells -> partition pruning opens only those
-    * directories; within them the SQ8 codes pre-rank candidates
-    * (1 byte/dim reads) and only the top-`overfetch` rows pay the
-    * float embedding read + exact cosine — the FAISS IVF-SQ pattern
-    * as a parquet layout. */
   /** Rows-per-writer bound for the cell-partitioned bulk writes —
     * ~250k rows ≈ 0.5–1 GB of embedding+code columns per parquet
     * file, the conventional target. Overridable per build for probes. */
@@ -418,6 +567,14 @@ object IndexStore {
     }
   }
 
+  /** IVF-partitioned index — the other 100 TB layout besides LSH
+    * buckets: rows land in the parquet partition of their
+    * nearest-centroid cell (`NearestCell` scan-side assignment; ONE
+    * cell-keyed exchange of the finished rows feeds the partitioned
+    * write so each cell gets one file, not one per task), and the trained
+    * centroid table persists as a `_centroids` sidecar (underscore
+    * prefix = invisible to Spark's file index). Searched by
+    * [[searchTopKIvf]]: the FAISS IVF-SQ pattern as a parquet layout. */
   def buildIvf(spark: SparkSession, docs: DataFrame, path: String,
                nCells: Int = 16, lloydIters: Int = 2,
                dim: Int = Embed.DefaultDim, bitExact: Boolean = false,
@@ -685,12 +842,10 @@ object IndexStore {
                     k: Int = 10, fetchK: Int = 32,
                     lambdaMicros: Long = 500000L,
                     dim: Int = Embed.DefaultDim,
-                    where: Option[Column] = None): DataFrame = {
-    val idx0 = Relations.parquet(spark, path)
-    mmrOverFetchSet(spark, where.fold(idx0)(idx0.filter),
+                    where: Option[Column] = None): DataFrame =
+    mmrOverFetchSet(spark, candidates(spark, path, where),
       collectionSpace(spark, path), Embed.embed(queryText, dim),
       k, fetchK, lambdaMicros)
-  }
 
   /** [[searchTopKMmr]] with the fetch routed through the IVF probe
     * path: the candidate scan prunes to the query's `probes` nearest
@@ -705,15 +860,8 @@ object IndexStore {
                        dim: Int = Embed.DefaultDim,
                        where: Option[Column] = None): DataFrame = {
     val qvec = Embed.embed(queryText, dim)
-    val (ids, cents) = Relations.centroids(spark, s"$path/_centroids")
-    require(cents.head.length == qvec.length,
-      s"$path was trained at dim=${cents.head.length}, query has dim=${qvec.length}")
-    val qData = new org.apache.spark.sql.catalyst.util.GenericArrayData(qvec)
-    val probeCells = graft.functions.VecIndex.nearestCells(qData, ids, cents,
-      math.min(probes, ids.length)).toLongArray().toSeq
-    val pruned = Relations.parquet(spark, path)
-      .filter(col("cell").isin(probeCells: _*))
-    mmrOverFetchSet(spark, where.fold(pruned)(pruned.filter),
+    val (_, cells) = probe(spark, path, qvec, probes)
+    mmrOverFetchSet(spark, candidates(spark, path, where, inCells(cells)),
       collectionSpace(spark, path), qvec, k, fetchK, lambdaMicros)
   }
 
@@ -748,11 +896,15 @@ object IndexStore {
     val selDf = sel.toDF("chunk_id", "rank")
     uniq.join(broadcast(selDf), Seq("chunk_id"))
       .select(col("rank"), col("chunk_id"), col("doc_id"), col("source"),
-        col("chunk"),
-        concat(lit("https://docs.google.com/spreadsheets/d/"), col("source"),
-          lit("/edit#gid=0&range=A"), (col("doc_id") + 2).cast("long")).as("link"))
+        col("chunk"), mmrLink)
       .orderBy(col("rank"))
   }
+
+  /** The MMR verbs' deep link: [[deepLink]]'s text, spelled from
+    * doc_id + 2 (= sheet_row) as the oracle SQL spells it. */
+  private def mmrLink: Column =
+    concat(lit("https://docs.google.com/spreadsheets/d/"), col("source"),
+      lit("/edit#gid=0&range=A"), (col("doc_id") + 2).cast("long")).as("link")
 
   /** [[searchTopKMmr]] on the V4 batch surface: ONE corpus scan
     * computes every query's micro-quantized relevance (the query
@@ -769,18 +921,12 @@ object IndexStore {
                          dim: Int = Embed.DefaultDim,
                          where: Option[Column] = None): DataFrame = {
     import spark.implicits._
-    val idx0 = Relations.parquet(spark, path)
-    val uniq = where.fold(idx0)(idx0.filter).dropDuplicates("chunk_id")
+    val uniq = candidates(spark, path, where).dropDuplicates("chunk_id")
     val qDf = queries.sortBy(_._1)
       .map { case (qid, t) => (qid, Embed.embed(t, dim).toSeq) }
       .toDF("query_id", "qvec")
-    val cands = uniq.crossJoin(broadcast(qDf))
-      .select(col("query_id"), col("chunk_id"),
-        floor(VectorOps.spaceSim2(collectionSpace(spark, path),
-          col("embedding"), col("qvec")) * lit(1000000d))
-          .cast("long").as("simq_micros"),
-        col("embedding"))
-    mmrBatchOverFetchSet(spark, uniq, cands, k, fetchK, lambdaMicros)
+    mmrBatchOverFetchSet(spark, path, uniq, uniq.crossJoin(broadcast(qDf)),
+      k, fetchK, lambdaMicros)
   }
 
   /** [[searchTopKMmrIvf]] on the batch surface: the candidate scan is
@@ -796,45 +942,37 @@ object IndexStore {
                             dim: Int = Embed.DefaultDim,
                             where: Option[Column] = None): DataFrame = {
     import spark.implicits._
-    val (cids, cents) = Relations.centroids(spark, s"$path/_centroids")
-    val qMeta = queries.sortBy(_._1).map { case (qid, t) =>
-      val qvec = Embed.embed(t, dim)
-      require(qvec.length == cents.head.length,
-        s"$path was trained at dim=${cents.head.length}, " +
-          s"batch query $qid has dim=${qvec.length}")
-      val qData = new org.apache.spark.sql.catalyst.util.GenericArrayData(qvec)
-      (qid, qvec.toSeq, graft.functions.VecIndex
-        .nearestCells(qData, cids, cents, math.min(probes, cids.length))
-        .toLongArray().toSeq)
-    }
-    val qDf = qMeta.toDF("query_id", "qvec", "qcells")
-    val allCells = qMeta.flatMap(_._3).distinct.sorted
-    val pruned0 = Relations.parquet(spark, path).filter(col("cell").isin(allCells: _*))
-    val pruned = where.fold(pruned0)(pruned0.filter)
+    val (_, probed) = probeBatch(spark, path,
+      queries.map { case (qid, t) => (qid, Embed.embed(t, dim)) }, probes)
+    val qDf = probed.map { case (qid, v, cells) => (qid, v.toSeq, cells) }
+      .toDF("query_id", "qvec", "qcells")
+    val pruned = candidates(spark, path, where,
+      inCells(probed.flatMap(_._3).distinct.sorted))
     val qProbe = qDf.select(col("query_id"), col("qvec"),
       explode(col("qcells")).as("qcell"))
-    val cands = pruned
-      .join(broadcast(qProbe), col("cell").cast("long") === col("qcell"))
+    mmrBatchOverFetchSet(spark, path, pruned.dropDuplicates("chunk_id"),
+      pruned.join(broadcast(qProbe), col("cell").cast("long") === col("qcell")),
+      k, fetchK, lambdaMicros)
+  }
+
+  /** The shared batch-MMR tail: each (query_id, qvec) x candidate row
+    * of `pairs` gets its micro-quantized relevance in the collection's
+    * space, one per-query window takes each query's fetchK cut, the
+    * collected batch×fetchK candidate set is grouped by query on the
+    * driver — the same query-sized place the single-form greedy runs —
+    * and [[mmrSelect]] runs unchanged per query. */
+  private def mmrBatchOverFetchSet(spark: SparkSession, path: String,
+                                   present: DataFrame, pairs: DataFrame,
+                                   k: Int, fetchK: Int,
+                                   lambdaMicros: Long): DataFrame = {
+    val wFetch = Window.partitionBy(col("query_id"))
+      .orderBy(col("simq_micros").desc, col("chunk_id"))
+    val fetched = pairs
       .select(col("query_id"), col("chunk_id"),
         floor(VectorOps.spaceSim2(collectionSpace(spark, path),
           col("embedding"), col("qvec")) * lit(1000000d))
           .cast("long").as("simq_micros"),
         col("embedding"))
-    mmrBatchOverFetchSet(spark, pruned.dropDuplicates("chunk_id"), cands,
-      k, fetchK, lambdaMicros)
-  }
-
-  /** The shared batch-MMR tail: one per-query window takes each
-    * query's fetchK cut (relevance already micro-quantized by the
-    * caller), the collected batch×fetchK candidate set is grouped by
-    * query on the driver — the same query-sized place the single-form
-    * greedy runs — and [[mmrSelect]] runs unchanged per query. */
-  private def mmrBatchOverFetchSet(spark: SparkSession, present: DataFrame,
-                                   cands: DataFrame, k: Int, fetchK: Int,
-                                   lambdaMicros: Long): DataFrame = {
-    val wFetch = Window.partitionBy(col("query_id"))
-      .orderBy(col("simq_micros").desc, col("chunk_id"))
-    val fetched = cands
       .withColumn("frn", row_number().over(wFetch))
       .filter(col("frn") <= fetchK)
       .select(col("query_id"), col("chunk_id"), col("simq_micros"),
@@ -850,9 +988,7 @@ object IndexStore {
     val selDf = sel.toDF("query_id", "chunk_id", "rank")
     present.join(broadcast(selDf), Seq("chunk_id"))
       .select(col("query_id"), col("rank"), col("chunk_id"), col("doc_id"),
-        col("source"), col("chunk"),
-        concat(lit("https://docs.google.com/spreadsheets/d/"), col("source"),
-          lit("/edit#gid=0&range=A"), (col("doc_id") + 2).cast("long")).as("link"))
+        col("source"), col("chunk"), mmrLink)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -971,7 +1107,10 @@ object IndexStore {
     val mPath = new org.apache.hadoop.fs.Path(s"$path/_pqmeta")
     val fs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(mPath)) "raw"
-    else Relations.collectCached(spark, s"$path/_pqmeta").head.getString(0)
+    else {
+      val r = Relations.collectCached(spark, s"$path/_pqmeta").head
+      r.getString(r.fieldIndex("encoding"))
+    }
   }
 
   /** [[buildIvfPq]] executed at most once per (session, path,
@@ -994,25 +1133,21 @@ object IndexStore {
   private[graft] def readPqBooks(spark: SparkSession, path: String)
       : Array[Array[Array[Float]]] = {
     // collectCached: the codebook is (m·ksub) tiny rows re-read by
-    // every PQ search/append — the raw sidecar columns ARE
-    // (sub, code_id, cvec), the writer's own order
+    // every PQ search/append; columns resolve by name, not position
     val rows = Relations.collectCached(spark, s"$path/_pq")
-    val m = rows.map(_.getInt(0)).max + 1
-    val books = Array.ofDim[Array[Array[Float]]](m)
-    rows.groupBy(_.getInt(0)).foreach { case (s, rs) =>
-      books(s) = rs.sortBy(_.getInt(1)).map(_.getSeq[Float](2).toArray)
+    def sub(r: org.apache.spark.sql.Row) = r.getInt(r.fieldIndex("sub"))
+    val books = Array.ofDim[Array[Array[Float]]](rows.map(sub).max + 1)
+    rows.groupBy(sub).foreach { case (s, rs) =>
+      books(s) = rs.sortBy(r => r.getInt(r.fieldIndex("code_id")))
+        .map(r => r.getSeq[Float](r.fieldIndex("cvec")).toArray)
     }
     books
   }
 
-  /** [[searchTopKIvf]] with PQ-ADC candidate generation: probe the
-    * `probes` nearest coarse cells (partition pruning opens only
-    * those directories), rank the pruned rows by the integer ADC
-    * score of their m-byte `pq_code` against the query's
-    * micro-quantized LUT (m lookups + adds per row — the scan reads
-    * only (chunk_id, pq_code)), then exact-rerank the top
-    * `overfetch` in the collection's distance space. `where` applies
-    * inside the probed cells, beneath both ranks. */
+  /** [[searchTopKIvf]] with the PQ-ADC pre-rank: the probed cells'
+    * rows rank by the integer ADC score of their m-byte `pq_code`
+    * (the scan reads only (chunk_id, pq_code)) before the exact
+    * rerank of the top `overfetch`. */
   def searchTopKIvfPq(spark: SparkSession, path: String, queryText: String,
                       k: Int = 10, probes: Int = 3, overfetch: Int = 64,
                       dim: Int = Embed.DefaultDim,
@@ -1022,70 +1157,23 @@ object IndexStore {
     searchTopKIvfPqVec(spark, path, Embed.embed(queryText, dim), k,
       probes, overfetch, where, includeDistance, include)
 
-  /** [[ivfQueryPrep]]'s PQ sibling, shared by [[searchTopKIvfPqVec]]
-    * and [[explainSearchIvfPqVec]]: (probed cells in proximity
-    * order, the pruned+filtered read, the integer ADC Column — with
-    * the residual encoding's per-probed-cell dot(q,c) constant
-    * folded in when the `_pqmeta` contract says so). */
-  private def pqQueryPrep(spark: SparkSession, path: String,
-                          qvec: Array[Float], probes: Int,
-                          where: Option[Column])
-      : (Seq[Long], DataFrame, Column) = {
-    import graft.functions.vecIndexExprs
-    val (ids, cents) = Relations.centroids(spark, s"$path/_centroids")
-    require(cents.head.length == qvec.length,
-      s"$path was trained at dim=${cents.head.length}, query vector has dim=${qvec.length}")
-    val books = readPqBooks(spark, path)
-    val lut = graft.operators.VectorSearch.pqLut(qvec, books)
-    val qData = new org.apache.spark.sql.catalyst.util.GenericArrayData(qvec)
-    val probeCells = graft.functions.VecIndex.nearestCells(qData, ids, cents,
-      math.min(probes, ids.length)).toLongArray().toSeq
-    val pruned = Relations.parquet(spark, path)
-      .filter(col("cell").isin(probeCells: _*))
-    val idx = where.fold(pruned)(pruned.filter)
-    // residual encoding: dot(q,v) ≈ dot(q,c) + dot(q,residual) — the
-    // per-probed-cell micro-constant rides a tiny literal map, the
-    // scan cost is identical to raw ADC
-    val adcExpr =
-      if (pqEncoding(spark, path) == "residual") {
-        val constMap = probeCells.map { c =>
-          c -> graft.operators.VectorSearch.microsDot(qvec,
-            cents(ids.indexOf(c)))
-        }.toMap
-        element_at(typedlit(constMap), col("cell").cast("long")) +
-          vecIndexExprs.pqAdc(col("pq_code"), lut)
-      } else vecIndexExprs.pqAdc(col("pq_code"), lut)
-    (probeCells, idx, adcExpr)
-  }
-
   /** [[searchTopKIvfPq]] for a caller-supplied query vector. */
   def searchTopKIvfPqVec(spark: SparkSession, path: String, qvec: Array[Float],
                          k: Int = 10, probes: Int = 3, overfetch: Int = 64,
                          where: Option[Column] = None,
                          includeDistance: Boolean = false,
                          include: Seq[String] = Nil): DataFrame = {
-    val space = collectionSpace(spark, path)
-    val (_, idx, adcExpr) = pqQueryPrep(spark, path, qvec, probes, where)
-    val candidates = idx
-      .select(col("chunk_id").as("cid"), adcExpr.as("adc"))
-      .orderBy(col("adc").desc, col("cid"))
-      .limit(overfetch)
-    present(idx.join(broadcast(candidates), col("chunk_id") === col("cid"))
-      .withColumn("sim", VectorOps.spaceSim(space, col("embedding"), qvec))
-      .orderBy(col("sim").desc, col("chunk_id"))
-      .limit(k), space, includeDistance, include)
+    val (quant, cells) = probe(spark, path, qvec, probes)
+    rerankPresent(spark, path,
+      preRank(candidates(spark, path, where, inCells(cells)),
+        adcScore(spark, path, quant, qvec, cells), overfetch),
+      qvec, k, includeDistance, include)
   }
 
-  /** Multi-query search over the IVF-PQ layout — the V4 batch form
-    * for the PQ family ([[searchTopKIvfBatch]]'s shape with the SQ8
-    * pre-rank swapped for per-query ADC): ONE scan prunes to the
-    * UNION of all queries' probe cells; each query's flat LUT
-    * (m·ksub micro-unit longs — query-sized metadata) rides the
-    * broadcast (query_id, cell) probe table as a column, so the
-    * fan-out stays a hash equi-join and the candidate scan reads
-    * (chunk_id, pq_code) plus m lookups+adds per (row, probing
-    * query). Exact rerank windows per query; `where` applies inside
-    * the probed cells, beneath both ranks, for every query. */
+  /** Multi-query search over the IVF-PQ layout: [[searchTopKIvfBatch]]
+    * with the SQ8 pre-rank swapped for per-query ADC. Each query's
+    * flat LUT (m·ksub micro-unit longs) rides the broadcast probe
+    * table as a column. */
   def searchTopKIvfPqBatch(spark: SparkSession, path: String,
                            queries: Seq[(Long, String)],
                            k: Int = 10, probes: Int = 3, overfetch: Int = 64,
@@ -1100,71 +1188,27 @@ object IndexStore {
                               queries: Seq[(Long, Array[Float])],
                               k: Int = 10, probes: Int = 3, overfetch: Int = 64,
                               where: Option[Column] = None): DataFrame = {
-    import graft.functions.vecIndexExprs
-    val (cids, cents) = Relations.centroids(spark, s"$path/_centroids")
-    queries.foreach { case (qid, qvec) =>
-      require(qvec.length == cents.head.length,
-        s"$path was trained at dim=${cents.head.length}, " +
-          s"batch query $qid has dim=${qvec.length}")
-    }
+    val (quant, probed) = probeBatch(spark, path, queries, probes)
     val books = readPqBooks(spark, path)
-    val ksub = books.head.length
-    val residualEnc = pqEncoding(spark, path) == "residual"
-    val qMeta = queries.sortBy(_._1).map { case (qid, qvec) =>
-      val qData = new org.apache.spark.sql.catalyst.util.GenericArrayData(qvec)
-      val cells = graft.functions.VecIndex
-        .nearestCells(qData, cids, cents, math.min(probes, cids.length))
-        .toLongArray().toSeq
-      val lutFlat = graft.operators.VectorSearch.pqLut(qvec, books)
-        .flatten.toSeq
-      // residual encoding: each probed cell carries its per-(query,
-      // cell) micro-constant dot(q, centroid) on the probe row
-      val consts =
-        if (residualEnc) cells.map(c =>
-          graft.operators.VectorSearch.microsDot(qvec,
-            cents(cids.indexOf(c))))
-        else cells.map(_ => 0L)
-      (qid, qvec.toSeq, lutFlat, cells, consts)
-    }
+    val residual = pqEncoding(spark, path) == "residual"
     import spark.implicits._
-    val qDf = qMeta.toDF("query_id", "qvec", "qlut", "qcells", "qconsts")
-    val allCells = qMeta.flatMap(_._4).distinct.sorted
-    val pruned0 = Relations.parquet(spark, path).filter(col("cell").isin(allCells: _*))
-    val pruned = where.fold(pruned0)(pruned0.filter)
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("cid"))
-    val qProbe = qDf.select(col("query_id"), col("qlut"),
-      posexplode(col("qcells")).as(Seq("qpos", "qcell")),
-      col("qconsts"))
+    // each query's flat LUT and, per probed cell, its residual-encoding
+    // constant dot(q, centroid) (0 for raw codes) ride the probe rows
+    val qDf = probed.map { case (qid, qvec, cells) =>
+      (qid, graft.operators.VectorSearch.pqLut(qvec, books).flatten.toSeq, cells,
+        cells.map(c => if (residual)
+          graft.operators.VectorSearch.microsDot(qvec, quant.centroid(c)) else 0L))
+    }.toDF("query_id", "qlut", "qcells", "qconsts")
+    val rows = candidates(spark, path, where,
+      inCells(probed.flatMap(_._3).distinct.sorted))
+    val probeTable = qDf.select(col("query_id"), col("qlut"),
+        posexplode(col("qcells")).as(Seq("qpos", "qcell")), col("qconsts"))
       .select(col("query_id"), col("qlut"), col("qcell"),
         element_at(col("qconsts"), col("qpos") + 1).as("qconst"))
-    val cand = pruned
-      .join(broadcast(qProbe), col("cell").cast("long") === col("qcell"))
-      .select(col("query_id"), col("chunk_id").as("cid"),
-        (col("qconst") +
-          vecIndexExprs.pqAdcFlat(col("pq_code"), col("qlut"), ksub)).as("adc"))
-      .withColumn("arn", row_number().over(wApprox))
-      .filter(col("arn") <= overfetch)
-      .select("query_id", "cid")
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("chunk_id"))
-    val ranked = pruned.select(col("chunk_id"), col("embedding"))
-      .join(broadcast(cand), col("chunk_id") === col("cid"))
-      .join(broadcast(qDf.select(col("query_id"), col("qvec"))), Seq("query_id"))
-      .select(col("query_id"), col("chunk_id"),
-        VectorOps.spaceSim2(collectionSpace(spark, path),
-          col("embedding"), col("qvec")).as("sim"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-    pruned.select(col("chunk_id"), col("doc_id"), col("source"), col("chunk"),
-        col("sheet_row"))
-      .join(broadcast(ranked), Seq("chunk_id"))
-      .withColumn("link",
-        format_string("https://docs.google.com/spreadsheets/d/%s/edit#gid=%s&range=A%d",
-          col("source"), lit("0"), col("sheet_row")))
-      .select(col("query_id"), col("rank"), col("chunk_id"), col("doc_id"),
-        col("source"), col("chunk"), col("link"))
-      .orderBy("query_id", "rank")
+    val cands = preRankBatch(rows, probeTable, col("qconst") +
+      graft.functions.vecIndexExprs.pqAdcFlat(col("pq_code"), col("qlut"),
+        books.head.length), overfetch)
+    rerankPresentBatch(spark, path, rows, rows, cands, queries, k)
   }
 
   // ---- delete / upsert by id: the index-maintenance surface ---------
@@ -1884,17 +1928,12 @@ object IndexStore {
   def updateHnsw(spark: SparkSession, docs: DataFrame, path: String): Unit =
     upsertHnsw(spark, existingOnly(spark, docs, path), path)
 
-  /** ANN search over the IVF-partitioned layout: the cell predicate
-    * resolves to partition directories at planning time; SQ8 pre-rank
-    * + exact rerank inside the probed cells.
-    *
-    * `where` (chroma's `query(where=...)`): the metadata predicate
-    * composes with the probe — it applies inside the probed cells
-    * BEFORE the SQ8 candidate limit, so the `overfetch` candidates
-    * are all filter-survivors and the top-k stays exact over the
-    * filtered candidate set (a post-filter would silently return
-    * fewer than k). Comparison predicates additionally push into the
-    * parquet reader of the pruned directories. */
+  /** ANN search over the IVF-partitioned layout: probe the `probes`
+    * nearest cells (the cell predicate resolves to partition
+    * directories at planning time), SQ8 pre-rank inside them, exact
+    * rerank of the top `overfetch`. `where` applies before the
+    * pre-rank cut, so the cut is spent on rows that can be returned
+    * (a post-filter would silently return fewer than k). */
   def searchTopKIvf(spark: SparkSession, path: String, queryText: String,
                     k: Int = 10, probes: Int = 3, overfetch: Int = 32,
                     dim: Int = Embed.DefaultDim,
@@ -1904,33 +1943,6 @@ object IndexStore {
     searchTopKIvfVec(spark, path, Embed.embed(queryText, dim), k,
       probes, overfetch, where, includeDistance, include)
 
-  /** Driver-side query prep shared by [[searchTopKIvfVec]] and
-    * [[explainSearchIvfVec]] — one definition (the explain-is-the-
-    * scorer's-own-code-path discipline), so the explain probes the
-    * same cells and pre-ranks with the same SQ8 approx expression
-    * the search did: (probed cells in proximity order, the
-    * tombstone-free pruned+filtered read, the approx Column). */
-  private def ivfQueryPrep(spark: SparkSession, path: String,
-                           qvec: Array[Float], probes: Int,
-                           where: Option[Column])
-      : (Seq[Long], DataFrame, Column) = {
-    import graft.functions.vecIndexExprs
-    val (ids, cents) = Relations.centroids(spark, s"$path/_centroids")
-    require(cents.head.length == qvec.length,
-      s"$path was trained at dim=${cents.head.length}, query vector has dim=${qvec.length}")
-    val qData = new org.apache.spark.sql.catalyst.util.GenericArrayData(qvec)
-    val probeCells = graft.functions.VecIndex.nearestCells(qData, ids, cents,
-      math.min(probes, ids.length)).toLongArray().toSeq
-    val qCode = graft.functions.VecIndex.sq8Code(qData)
-    val qFac = graft.functions.VecIndex.sq8Factor(qData)
-    val pruned = Relations.parquet(spark, path)
-      .filter(col("cell").isin(probeCells: _*))
-    val idx = where.fold(pruned)(pruned.filter)
-    val approx = vecIndexExprs.sq8Dot(col("sq8_code"), lit(qCode)) *
-      col("sq8_factor") * lit(qFac)
-    (probeCells, idx, approx)
-  }
-
   /** [[searchTopKIvf]] for a caller-supplied query vector (the
     * `query_embeddings` form; probe cells and the SQ8 code come from
     * the given vector against the stored quantizer). */
@@ -1939,16 +1951,10 @@ object IndexStore {
                        where: Option[Column] = None,
                        includeDistance: Boolean = false,
                        include: Seq[String] = Nil): DataFrame = {
-    val space = collectionSpace(spark, path)
-    val (_, idx, approx) = ivfQueryPrep(spark, path, qvec, probes, where)
-    val candidates = idx
-      .select(col("chunk_id").as("cid"), approx.as("approx"))
-      .orderBy(col("approx").desc, col("cid"))
-      .limit(overfetch)
-    present(idx.join(broadcast(candidates), col("chunk_id") === col("cid"))
-      .withColumn("sim", VectorOps.spaceSim(space, col("embedding"), qvec))
-      .orderBy(col("sim").desc, col("chunk_id"))
-      .limit(k), space, includeDistance, include)
+    val (_, cells) = probe(spark, path, qvec, probes)
+    rerankPresent(spark, path,
+      preRank(candidates(spark, path, where, inCells(cells)), sq8Score(qvec), overfetch),
+      qvec, k, includeDistance, include)
   }
 
   /** Search explain for the IVF layout — the vector-side counterpart
@@ -1983,30 +1989,10 @@ object IndexStore {
                           qvec: Array[Float], k: Int = 10,
                           probes: Int = 3, overfetch: Int = 32,
                           where: Option[Column] = None): DataFrame = {
-    val space = collectionSpace(spark, path)
-    val (probeCells, idx, approx) =
-      ivfQueryPrep(spark, path, qvec, probes, where)
-    import spark.implicits._
-    val probeDf = probeCells.zipWithIndex
-      .map { case (c, i) => (c, i + 1) }.toDF("pcell", "probe_pos")
-    val wApprox = Window.orderBy(col("approx").desc, col("cid"))
-    val candidates = idx
-      .select(col("chunk_id").as("cid"), approx.as("approx"))
-      .orderBy(col("approx").desc, col("cid"))
-      .limit(overfetch)
-      .withColumn("approx_rank", row_number().over(wApprox))
-    idx.join(broadcast(candidates), col("chunk_id") === col("cid"))
-      .withColumn("sim", VectorOps.spaceSim(space, col("embedding"), qvec))
-      .orderBy(col("sim").desc, col("chunk_id"))
-      .limit(k)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("sim").desc, col("chunk_id"))))
-      .join(broadcast(probeDf), col("cell").cast("long") === col("pcell"))
-      .select(col("rank"), col("chunk_id"), col("cell").cast("long").as("cell"),
-        col("probe_pos"), col("approx_rank"),
-        floor(lit(1000000.0d) * col("approx")).cast("long").as("approx_micros"),
-        floor(lit(1000000.0d) * col("sim")).cast("long").as("sim_micros"))
-      .orderBy(col("rank"))
+    val (_, cells) = probe(spark, path, qvec, probes)
+    explainIvfFamily(spark, path, candidates(spark, path, where, inCells(cells)),
+      cells, qvec, k, overfetch, sq8Score(qvec), "approx",
+      floor(lit(1000000.0d) * col("approx")).cast("long").as("approx_micros"))
   }
 
   /** [[explainSearchIvf]] for the IVF-PQ layout — completing the
@@ -2032,47 +2018,17 @@ object IndexStore {
                             qvec: Array[Float], k: Int = 10,
                             probes: Int = 3, overfetch: Int = 64,
                             where: Option[Column] = None): DataFrame = {
-    val space = collectionSpace(spark, path)
-    val (probeCells, idx, adcExpr) =
-      pqQueryPrep(spark, path, qvec, probes, where)
-    import spark.implicits._
-    val probeDf = probeCells.zipWithIndex
-      .map { case (c, i) => (c, i + 1) }.toDF("pcell", "probe_pos")
-    val wAdc = Window.orderBy(col("adc").desc, col("cid"))
-    val candidates = idx
-      .select(col("chunk_id").as("cid"), adcExpr.as("adc"))
-      .orderBy(col("adc").desc, col("cid"))
-      .limit(overfetch)
-      .withColumn("adc_rank", row_number().over(wAdc))
-    idx.join(broadcast(candidates), col("chunk_id") === col("cid"))
-      .withColumn("sim", VectorOps.spaceSim(space, col("embedding"), qvec))
-      .orderBy(col("sim").desc, col("chunk_id"))
-      .limit(k)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("sim").desc, col("chunk_id"))))
-      .join(broadcast(probeDf), col("cell").cast("long") === col("pcell"))
-      .select(col("rank"), col("chunk_id"), col("cell").cast("long").as("cell"),
-        col("probe_pos"), col("adc_rank"), col("adc"),
-        floor(lit(1000000.0d) * col("sim")).cast("long").as("sim_micros"))
-      .orderBy(col("rank"))
+    val (quant, cells) = probe(spark, path, qvec, probes)
+    explainIvfFamily(spark, path, candidates(spark, path, where, inCells(cells)),
+      cells, qvec, k, overfetch, adcScore(spark, path, quant, qvec, cells), "adc",
+      col("adc"))
   }
 
   /** Multi-query search over the IVF layout — chroma's
-    * `query(query_texts=[...])` batch surface on the partitioned
-    * index (the IVF counterpart of [[searchTopKHnswBatch]]). Each
-    * query's probe cells come from the quantizer driver-side
-    * (quantizer-sized metadata); ONE scan prunes to the UNION of all
-    * probed cells, and the broadcast (query_id, cell) probe table —
-    * the per-query cell lists EXPLODED so the fan-out is a hash
-    * equi-join on `cell`, never a nested-loop membership test — fans
-    * each pruned row out to only the queries probing its cell (at
-    * thousands of batched queries the nested loop would pay
-    * |pruned|×|queries| comparisons; the hash join stays
-    * |pruned|×avg-probes). SQ8 pre-rank and exact rerank are windowed
-    * per query;
-    * the rank exchanges carry (query_id, chunk_id, approx|sim) only —
-    * codes, vectors and text never ride them. `where` applies inside
-    * the probed cells, beneath both ranks, for every query. */
+    * `query(query_texts=[...])` batch surface. ONE scan prunes to the
+    * UNION of all queries' probe cells, and the exploded (query_id,
+    * cell) probe table fans each row out to only the queries probing
+    * its cell; SQ8 pre-rank and exact rerank are windowed per query. */
   def searchTopKIvfBatch(spark: SparkSession, path: String,
                          queries: Seq[(Long, String)],
                          k: Int = 10, probes: Int = 3, overfetch: Int = 32,
@@ -2092,57 +2048,20 @@ object IndexStore {
                             queries: Seq[(Long, Array[Float])],
                             k: Int = 10, probes: Int = 3, overfetch: Int = 32,
                             where: Option[Column] = None): DataFrame = {
-    import graft.functions.vecIndexExprs
-    val (cids, cents) = Relations.centroids(spark, s"$path/_centroids")
-    queries.foreach { case (qid, qvec) =>
-      require(qvec.length == cents.head.length,
-        s"$path was trained at dim=${cents.head.length}, " +
-          s"batch query $qid has dim=${qvec.length}")
-    }
-    val qMeta = queries.sortBy(_._1).map { case (qid, qvec) =>
-      val qData = new org.apache.spark.sql.catalyst.util.GenericArrayData(qvec)
-      val cells = graft.functions.VecIndex
-        .nearestCells(qData, cids, cents, math.min(probes, cids.length))
-        .toLongArray().toSeq
-      (qid, qvec.toSeq, graft.functions.VecIndex.sq8Code(qData),
-        graft.functions.VecIndex.sq8Factor(qData), cells)
-    }
+    val (_, probed) = probeBatch(spark, path, queries, probes)
     import spark.implicits._
-    val qDf = qMeta.toDF("query_id", "qvec", "qcode", "qfac", "qcells")
-    val allCells = qMeta.flatMap(_._5).distinct.sorted
-    val pruned0 = Relations.parquet(spark, path).filter(col("cell").isin(allCells: _*))
-    val pruned = where.fold(pruned0)(pruned0.filter)
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("cid"))
-    val qProbe = qDf.select(col("query_id"), col("qcode"), col("qfac"),
-      explode(col("qcells")).as("qcell"))
-    val cand = pruned
-      .join(broadcast(qProbe), col("cell").cast("long") === col("qcell"))
-      .select(col("query_id"), col("chunk_id").as("cid"),
-        (vecIndexExprs.sq8Dot(col("sq8_code"), col("qcode"))
-          * col("sq8_factor") * col("qfac")).as("approx"))
-      .withColumn("arn", row_number().over(wApprox))
-      .filter(col("arn") <= overfetch)
-      .select("query_id", "cid")
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("chunk_id"))
-    val ranked = pruned.select(col("chunk_id"), col("embedding"))
-      .join(broadcast(cand), col("chunk_id") === col("cid"))
-      .join(broadcast(qDf.select(col("query_id"), col("qvec"))), Seq("query_id"))
-      .select(col("query_id"), col("chunk_id"),
-        VectorOps.spaceSim2(collectionSpace(spark, path),
-          col("embedding"), col("qvec")).as("sim"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-    pruned.select(col("chunk_id"), col("doc_id"), col("source"), col("chunk"),
-        col("sheet_row"))
-      .join(broadcast(ranked), Seq("chunk_id"))
-      .withColumn("link",
-        format_string("https://docs.google.com/spreadsheets/d/%s/edit#gid=%s&range=A%d",
-          col("source"), lit("0"), col("sheet_row")))
-      .select(col("query_id"), col("rank"), col("chunk_id"), col("doc_id"),
-        col("source"), col("chunk"), col("link"))
-      .orderBy("query_id", "rank")
+    val qDf = probed.map { case (qid, qvec, cells) =>
+      val q = new org.apache.spark.sql.catalyst.util.GenericArrayData(qvec)
+      (qid, graft.functions.VecIndex.sq8Code(q), graft.functions.VecIndex.sq8Factor(q),
+        cells)
+    }.toDF("query_id", "qcode", "qfac", "qcells")
+    val rows = candidates(spark, path, where,
+      inCells(probed.flatMap(_._3).distinct.sorted))
+    val cands = preRankBatch(rows,
+      qDf.select(col("query_id"), col("qcode"), col("qfac"),
+        explode(col("qcells")).as("qcell")),
+      sq8Score(col("qcode"), col("qfac")), overfetch)
+    rerankPresentBatch(spark, path, rows, rows, cands, queries, k)
   }
 
   // HNSW layout parameters — the graph is persisted per shard and the
@@ -2189,10 +2108,13 @@ object IndexStore {
   private[graft] def readHnswMeta(spark: SparkSession, path: String): HnswMeta =
     try {
       // collectCached: one one-task job per layout version instead of
-      // a head() job per search/maintenance call (the sidecar memo
-      // discipline — the writer's column order is the select below)
+      // a head() job per search/maintenance call; columns resolve by
+      // name, so a reordered or widened sidecar still parses (or fails
+      // loudly on a missing column) instead of shifting fields
       val r = Relations.collectCached(spark, s"$path/_meta").head
-      HnswMeta(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4))
+      def int(c: String) = r.getInt(r.fieldIndex(c))
+      HnswMeta(int("num_shards"), int("m"), int("ef_construction"), int("dim"),
+        r.getLong(r.fieldIndex("target_nodes")))
     } catch {
       case e: org.apache.spark.sql.AnalysisException =>
         legacyHnswMeta(spark, path, e)
@@ -2633,20 +2555,6 @@ object IndexStore {
       .toDF("query_id", "cid")
   }
 
-  /** ANN search over the HNSW-persisted layout: per-shard graph
-    * traversal ([[hnswCandidates]]) fans the query out, then the
-    * merged candidate set pays one exact-cosine rerank + the standard
-    * presentation — same candidates-then-rerank contract as the
-    * LSH/SQ8/IVF search paths, so the oracle can re-derive everything
-    * downstream of the traversal. */
-  /** `where` on the graph path: the stored adjacency knows nothing of
-    * metadata, so the traversal cannot pre-filter — instead it
-    * overfetches 4x per shard and the predicate applies at the rerank
-    * (chroma's own where= makes the same fetch-then-filter trade on
-    * its HNSW; a highly selective predicate belongs on
-    * [[searchTopKIvf]]/[[searchTopK]], where it prunes IO instead of
-    * discarding traversal work). May return fewer than k rows when
-    * the filter kills most of the widened candidate set. */
   /** The widened traversal a FILTERED graph search runs:
     * `overfetchFactor` x the requested k per shard (beam at least as
     * wide), because the metadata predicate is applied after the
@@ -2661,6 +2569,18 @@ object IndexStore {
     hnswCandidates(spark, path, queryText, k * overfetchFactor,
       math.max(efSearch, k * overfetchFactor))
 
+  /** ANN search over the HNSW-persisted layout: the per-shard graph
+    * traversal ([[hnswCandidates]]) is the candidate source, so the
+    * oracle can re-derive everything downstream of it.
+    *
+    * `where` on the graph path: the stored adjacency knows nothing of
+    * metadata, so the traversal cannot pre-filter — instead it
+    * overfetches `whereOverfetch`x per shard and the predicate applies
+    * at the rerank (chroma's own where= makes the same fetch-then-filter
+    * trade on its HNSW; a highly selective predicate belongs on
+    * [[searchTopKIvf]]/[[searchTopK]], where it prunes IO instead of
+    * discarding traversal work). May return fewer than k rows when
+    * the filter kills most of the widened candidate set. */
   def searchTopKHnsw(spark: SparkSession, path: String, queryText: String,
                      k: Int = 10, efSearch: Int = 48,
                      where: Option[Column] = None,
@@ -2681,34 +2601,34 @@ object IndexStore {
                         whereOverfetch: Int = 4,
                         includeDistance: Boolean = false,
                         include: Seq[String] = Nil): DataFrame = {
-    val space = collectionSpace(spark, path)
     val dim = hnswPin(spark, path).meta.dim
     require(qvec.length == dim,
       s"$path stores dim=$dim vectors, query vector has dim=${qvec.length}")
-    val cands =
-      if (where.isDefined)
-        hnswCandidatesBatchVec(spark, path, Seq(0L -> qvec),
-          k * whereOverfetch, math.max(efSearch, k * whereOverfetch))
-          .select(col("cid"))
-      else hnswCandidatesBatchVec(spark, path, Seq(0L -> qvec), k, efSearch)
-        .select(col("cid"))
-    val joined = Relations.parquet(spark, path)
-      .join(broadcast(cands), col("chunk_id") === col("cid"))
-    present(where.fold(joined)(joined.filter)
-      .withColumn("sim", VectorOps.spaceSim(space, col("embedding"), qvec))
-      .orderBy(col("sim").desc, col("chunk_id"))
-      .limit(k), space, includeDistance, include)
+    val cands = hnswTraversal(spark, path, Seq(0L -> qvec), k, efSearch,
+      where, whereOverfetch).select(col("cid"))
+    rerankPresent(spark, path,
+      candidates(spark, path, where,
+        _.join(broadcast(cands), col("chunk_id") === col("cid"))),
+      qvec, k, includeDistance, include)
+  }
+
+  /** Stage 2 for the graph layout: the traversal's (query_id, cid)
+    * candidates. The stored adjacency knows nothing of metadata, so
+    * with a `where` each beam widens `whereOverfetch`-fold and the
+    * predicate filters the survivors (see [[searchTopKHnsw]]). */
+  private def hnswTraversal(spark: SparkSession, path: String,
+                            queries: Seq[(Long, Array[Float])], k: Int,
+                            efSearch: Int, where: Option[Column],
+                            whereOverfetch: Int): DataFrame = {
+    val widen = if (where.isDefined) whereOverfetch else 1
+    hnswCandidatesBatchVec(spark, path, queries, k * widen,
+      math.max(efSearch, k * widen))
   }
 
   /** Multi-query search over the persisted HNSW layout — the
     * reference's batch surface (`query_texts=[...]`, SURVEY V4) on
     * the persisted graph. One traversal pass serves every query
-    * ([[hnswCandidatesBatch]]); the rerank scores a NARROW
-    * (query_id, chunk_id, sim) projection so neither vectors nor
-    * document text ride the per-query rank exchange, and the
-    * presentation columns join back against the ranked top-k only.
-    * Output: (query_id, rank, chunk_id, doc_id, source, chunk, link)
-    * — [[searchTopK]]'s presentation keyed per query.
+    * ([[hnswCandidatesBatch]]).
     *
     * `where` carries [[searchTopKHnsw]]'s fetch-then-filter semantics
     * to every query in the batch: the traversal is metadata-blind, so
@@ -2732,38 +2652,11 @@ object IndexStore {
                              queries: Seq[(Long, Array[Float])],
                              k: Int = 10, efSearch: Int = 48,
                              where: Option[Column] = None,
-                             whereOverfetch: Int = 4): DataFrame = {
-    import spark.implicits._
-    val qVecs = queries.sortBy(_._1)
-      .map { case (qid, v) => (qid, v.toSeq) }
-      .toDF("query_id", "qvec")
-    val cands =
-      if (where.isDefined)
-        hnswCandidatesBatchVec(spark, path, queries, k * whereOverfetch,
-          math.max(efSearch, k * whereOverfetch))
-      else hnswCandidatesBatchVec(spark, path, queries, k, efSearch)
-    val idx = Relations.parquet(spark, path)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("chunk_id"))
-    val ranked = where.fold(idx)(idx.filter)
-      .select(col("chunk_id"), col("embedding"))
-      .join(broadcast(cands), col("chunk_id") === col("cid"))
-      .join(broadcast(qVecs), Seq("query_id"))
-      .select(col("query_id"), col("chunk_id"),
-        VectorOps.spaceSim2(collectionSpace(spark, path),
-          col("embedding"), col("qvec")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-    idx.select(col("chunk_id"), col("doc_id"), col("source"), col("chunk"),
-        col("sheet_row"))
-      .join(broadcast(ranked), Seq("chunk_id"))
-      .withColumn("link",
-        format_string("https://docs.google.com/spreadsheets/d/%s/edit#gid=%s&range=A%d",
-          col("source"), lit("0"), col("sheet_row")))
-      .select(col("query_id"), col("rank"), col("chunk_id"), col("doc_id"),
-        col("source"), col("chunk"), col("link"))
-      .orderBy("query_id", "rank")
-  }
+                             whereOverfetch: Int = 4): DataFrame =
+    rerankPresentBatch(spark, path, candidates(spark, path, where),
+      Relations.parquet(spark, path),
+      hnswTraversal(spark, path, queries, k, efSearch, where, whereOverfetch),
+      queries, k)
 
   /** Bucket-PARTITIONED index: one row per (table-bucket, chunk),
     * parquet-partitioned by the bucket key — the full 100 TB layout
@@ -2808,18 +2701,14 @@ object IndexStore {
                                   where: Option[Column] = None,
                                   includeDistance: Boolean = false,
                                   include: Seq[String] = Nil): DataFrame = {
-    val space = collectionSpace(spark, path)
-    val dim = qvec.length
     val qBuckets =
-      if (multiprobe) Lsh.queryBucketsMultiprobe(qvec, dim, LshBits, LshTables)
-      else Lsh.queryBuckets(qvec, dim, LshBits, LshTables)
-    val pruned = Relations.parquet(spark, path)
-      .filter(col("bucket").isin(
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(qBuckets): _*))
-    present(where.fold(pruned)(pruned.filter)
-      .dropDuplicates("chunk_id")
-      .withColumn("sim", VectorOps.spaceSim(space, col("embedding"), qvec))
-      .orderBy(col("sim").desc, col("chunk_id"))
-      .limit(k), space, includeDistance, include)
+      if (multiprobe) Lsh.queryBucketsMultiprobe(qvec, qvec.length, LshBits, LshTables)
+      else Lsh.queryBuckets(qvec, qvec.length, LshBits, LshTables)
+    // a chunk has one row per LSH table: collisions dedup before the rerank
+    rerankPresent(spark, path,
+      candidates(spark, path, where, _.filter(col("bucket").isin(
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(qBuckets): _*)))
+        .dropDuplicates("chunk_id"),
+      qvec, k, includeDistance, include)
   }
 }

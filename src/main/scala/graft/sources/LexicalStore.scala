@@ -372,10 +372,11 @@ object LexicalStore {
     if (!fs.exists(p)) None
     // collectCached + driver sort on `pos` — the descriptor is a
     // handful of rows; the old per-call orderBy+collect was a one-task
-    // job per maintenance/search verb
+    // job per maintenance/search verb. Columns resolve by name.
     else Some(Relations.collectCached(spark, s"$path/_fields")
-      .sortBy(_.getInt(0))
-      .map(r => (r.getString(1), r.getLong(2))).toSeq)
+      .sortBy(r => r.getInt(r.fieldIndex("pos")))
+      .map(r => (r.getString(r.fieldIndex("field")), r.getLong(r.fieldIndex("weight"))))
+      .toSeq)
   }
 
   /** [[buildBm25F]] under the [[buildOnce]] memo — the fields

@@ -26,28 +26,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * mtime granularity can never mask an overwrite.
   */
 object Relations {
-  private val cache = TrieMap.empty[(String, String), (String, DataFrame)]
+  private val cache = TrieMap.empty[(String, String), (String, Any)]
 
-  /** `spark.read.parquet(path)`, memoized per (session, path) until
-    * the path's listing signature changes. Falls back to an uncached
-    * read when the path cannot be listed, so error surfaces (missing
-    * path, permission) are byte-identical to the plain reader's. */
-  def parquet(spark: SparkSession, path: String): DataFrame = {
+  /** The one memo behind every reader here: `load()` at most once per
+    * (session, kind, path) until the path's listing signature changes.
+    * When the path cannot be listed the load runs uncached, so error
+    * surfaces (missing path, permission) are byte-identical to the
+    * plain reader's. */
+  private def memo[A](spark: SparkSession, kind: String, path: String)(load: => A): A = {
     val sig =
       try signature(spark, path)
-      catch { case _: java.io.IOException => return spark.read.parquet(path) }
-    val key = (IndexStore.sessionKey(spark), path)
+      catch { case _: java.io.IOException => return load }
+    val key = (IndexStore.sessionKey(spark), s"$kind:$path")
     cache.get(key) match {
-      case Some((s, df)) if s == sig => df
+      case Some((s, v)) if s == sig => v.asInstanceOf[A]
       case _ =>
-        val df = spark.read.parquet(path)
-        cache.put(key, (sig, df))
-        df
+        val v = load
+        cache.put(key, (sig, v))
+        v
     }
   }
 
-  private val collected =
-    TrieMap.empty[(String, String), (String, Array[org.apache.spark.sql.Row])]
+  /** `spark.read.parquet(path)`, memoized per (session, path) until
+    * the path's listing signature changes. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    memo(spark, "parquet", path)(spark.read.parquet(path))
 
   /** Memoized `parquet(path).collect()` for TINY metadata sidecars
     * (centroid tables, codebooks, field descriptors, 1-row stats):
@@ -57,52 +60,26 @@ object Relations {
     * sidecar re-collects — the analyzerCache discipline generalized.
     * Only for driver-bounded sidecars; never call this on data. */
   def collectCached(spark: SparkSession, path: String)
-      : Array[org.apache.spark.sql.Row] = {
-    val sig =
-      try signature(spark, path)
-      catch { case _: java.io.IOException =>
-        return spark.read.parquet(path).collect() }
-    val key = (IndexStore.sessionKey(spark), path)
-    collected.get(key) match {
-      case Some((s, rows)) if s == sig => rows
-      case _ =>
-        val rows = parquet(spark, path).collect()
-        collected.put(key, (sig, rows))
-        rows
-    }
-  }
-
-  private val centroidCache =
-    TrieMap.empty[(String, String), (String, (Array[Long], Array[Array[Float]]))]
+      : Array[org.apache.spark.sql.Row] =
+    memo(spark, "collect", path)(parquet(spark, path).collect())
 
   /** The `_centroids`-shaped sidecar (cent_id BIGINT, cvec
     * ARRAY<FLOAT>) as sorted driver arrays — the uniform pattern every
     * IVF/PQ/ColBERT verb repeats (`collect().sortBy(_.getLong(0))`),
     * memoized with the same invalidation as [[collectCached]]. */
   def centroids(spark: SparkSession, path: String)
-      : (Array[Long], Array[Array[Float]]) = {
-    def load() = {
+      : (Array[Long], Array[Array[Float]]) =
+    memo(spark, "centroids", path) {
       val rows = parquet(spark, path).collect().sortBy(_.getLong(0))
       (rows.map(_.getLong(0)), rows.map(_.getSeq[Float](1).toArray))
     }
-    val sig =
-      try signature(spark, path)
-      catch { case _: java.io.IOException =>
-        val rows = spark.read.parquet(path).collect().sortBy(_.getLong(0))
-        return (rows.map(_.getLong(0)), rows.map(_.getSeq[Float](1).toArray)) }
-    val key = (IndexStore.sessionKey(spark), path)
-    centroidCache.get(key) match {
-      case Some((s, v)) if s == sig => v
-      case _ =>
-        val v = load()
-        centroidCache.put(key, (sig, v))
-        v
-    }
-  }
 
   /** Recursive (name, length) fingerprint of `path` — the same
     * driver-side fs walk resolution itself performs, microseconds on
-    * a local fs, hashed to bound the key. */
+    * a local fs, hashed to bound the key. Each directory's entries are
+    * closed by a ')' so the encoding is injective: a file that is the
+    * last child of a subdirectory never reads like the same file as
+    * the subdirectory's next sibling. */
   private def signature(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -110,7 +87,7 @@ object Relations {
     def walk(dir: org.apache.hadoop.fs.Path): Unit =
       fs.listStatus(dir).sortBy(_.getPath.getName).foreach { st =>
         if (st.isDirectory) {
-          sb.append(st.getPath.getName).append('/'); walk(st.getPath)
+          sb.append(st.getPath.getName).append('/'); walk(st.getPath); sb.append(')')
         } else sb.append(st.getPath.getName).append(':')
           .append(st.getLen).append(';')
       }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.Embed
 import graft.operators.{Dedup, VectorSearch}
 
 /** Library-robustness edge cases: the public operators must behave
@@ -404,5 +405,79 @@ class EdgeCasesSpec extends AnyFunSuite {
       s"salt-map plan constant should be O(hot cells), " +
         s"plan is ${plan.length} chars")
     assert(plan.contains("4096"), "the hot cell must be in the salt map")
+  }
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  test("zero-vector queries and corpus rows score cosine 0 (distance 1) " +
+      "on exact, IVF, IVF batch and hybrid search") {
+    import graft.sources.{IndexStore, LexicalStore, Relations}
+    import spark.implicits._
+    // texts whose hashed n-gram features cancel to the zero vector
+    val zeroTexts = Seq("3727.13", "voj luf")
+    zeroTexts.foreach(t =>
+      assert(Embed.embed(t, Embed.DefaultDim).forall(_ == 0f), s"'$t' embeds to zero"))
+    assert(Embed.embed("---", Embed.DefaultDim).forall(_ == 0f))
+    val root = tempDir("zero-vector")
+    val docs = (zeroTexts ++ (1 to 20).map(i => s"pivot chart formula range $i"))
+      .zipWithIndex.map { case (t, i) => (i.toLong, t, "sheet") }
+      .toDF("doc_id", "text", "source")
+    val (exact, ivf, lex) = (s"$root/exact", s"$root/ivf", s"$root/lex")
+    IndexStore.build(spark, docs, exact)
+    IndexStore.buildIvf(spark, docs, ivf, nCells = 2)
+    LexicalStore.build(spark, Relations.parquet(spark, ivf).select("chunk_id", "chunk"),
+      lex, "chunk_id", "chunk")
+    val n = 22
+    for (q <- Seq("pivot chart formula", "---")) {
+      val ex = IndexStore.searchTopK(spark, exact, q, k = n, includeDistance = true)
+        .collect()
+      assert(ex.length == n, q)
+      // a zero vector on either side is at distance exactly 1.0
+      ex.filter(r => q == "---" || zeroTexts.contains(r.getString(4)))
+        .foreach(r => assert(r.getDouble(6) == 1.0, s"$q: $r"))
+      val fullProbe = IndexStore.searchTopKIvf(spark, ivf, q, k = n, probes = 2,
+        overfetch = n, includeDistance = true).collect()
+      assert(fullProbe.toSeq == ex.toSeq, q)
+      val batch = IndexStore.searchTopKIvfBatch(spark, ivf, Seq(1L -> q), k = n,
+        probes = 2, overfetch = n).collect()
+      assert(batch.map(_.getString(2)).toSeq == ex.map(_.getString(1)).toSeq, q)
+    }
+    val hy = graft.operators.Hybrid.searchTopKHybrid(spark, lex, ivf, "---").collect()
+    assert(hy.nonEmpty && hy.forall(_.isNullAt(2)), "no lexical hit; vector ranks only")
+  }
+
+  test("the Relations memo re-resolves a tree whose old fingerprint collided") {
+    import graft.sources.Relations
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    val root = tempDir("relations-memo") + "/t"
+    Seq(1L, 2L).toDF("x").coalesce(1).write.parquet(root)
+    // hidden entries: Spark ignores them, the listing signature does not
+    val dir = Files.createDirectory(Paths.get(root, "_d"))
+    Files.write(dir.resolve("_e"), Array[Byte](1, 2, 3))
+    val first = Relations.parquet(spark, root)
+    assert(Relations.parquet(spark, root) eq first, "an unchanged tree is a memo hit")
+    // move _d/_e up one level: without a close marker per directory
+    // the listing reads "_d/" + "_e:3;" either way
+    Files.move(dir.resolve("_e"), Paths.get(root, "_e"))
+    assert(!(Relations.parquet(spark, root) eq first), "a changed tree must re-resolve")
+  }
+
+  test("readHnswMeta resolves _meta columns by name, not position") {
+    import graft.sources.IndexStore
+    import spark.implicits._
+    val path = tempDir("hnsw-meta") + "/hnsw"
+    val docs = (1 to 12).map(i => (i.toLong, s"pivot chart $i formula", "sheet"))
+      .toDF("doc_id", "text", "source")
+    IndexStore.buildHnsw(spark, docs, path, numShards = 5, m = 6, efConstruction = 40)
+    val meta = IndexStore.readHnswMeta(spark, path)
+    assert(meta == IndexStore.HnswMeta(5, 6, 40, Embed.DefaultDim,
+      IndexStore.HnswTargetNodesPerShard))
+    // a writer that orders the same columns differently
+    Seq((meta.dim, meta.efConstruction, meta.m, meta.numShards, meta.targetNodesPerShard))
+      .toDF("dim", "ef_construction", "m", "num_shards", "target_nodes")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/_meta")
+    assert(IndexStore.readHnswMeta(spark, path) == meta)
   }
 }
