@@ -716,15 +716,12 @@ object IndexStore {
   private[graft] def appendIvfRows(spark: SparkSession, rows0: DataFrame,
                                    path: String,
                                    dim: Int = Embed.DefaultDim): Unit = {
-    import graft.functions.vecIndexExprs
     val (ids, cents) = Relations.centroids(spark, s"$path/_centroids")
     // the persisted quantizer is authoritative for the embedding dim —
     // appending vectors of another width would silently mis-assign
     require(cents.head.length == dim,
       s"$path was trained at dim=${cents.head.length}, append requested dim=$dim")
-    val rows = withPqCodeIfPresent(spark, path, rows0)
-    rows
-      .withColumn("cell", vecIndexExprs.nearestCell(col("embedding"), ids, cents))
+    cellLayout(spark, path).place(rows0)
       // one writer task per cell -> ONE file per touched cell per
       // append (the documented contract). Appends deliberately skip
       // the bulk builds' writer-skew bound: these rows are NOT
@@ -767,16 +764,14 @@ object IndexStore {
       // read the crowded cells BEFORE the overwrite truncates them
       // (same read-own-writes discipline as appendHnsw)
       .localCheckpoint()
-    // repartition by the partition column: each cell's rows land in
-    // exactly one task -> exactly one file per rewritten directory —
-    // except a hot cell past the writer-skew bound, which compacts to
-    // ⌈n/bound⌉ files instead of serializing through one task (the
-    // goal is FEW files, not one giant one; see cellWritePartitioning)
-    cellWritePartitioning(rows, crowded.size)
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell")
-      .parquet(path)
+    // each cell's rows land in exactly one task -> exactly one file
+    // per rewritten directory — except a hot cell past the writer-skew
+    // bound, which compacts to ⌈n/bound⌉ files instead of serializing
+    // through one task (the goal is FEW files, not one giant one; see
+    // cellWritePartitioning). No cell empties: present = touched.
+    val cells = crowded.map(_.toString)
+    rewriteTouched(spark, path, "cell", cells, cells.toSet,
+      cellWritePartitioning(rows, crowded.size))
   }
 
   // ---- MMR: maximal-marginal-relevance diversity reranking ----------
@@ -1211,15 +1206,17 @@ object IndexStore {
     rerankPresentBatch(spark, path, rows, rows, cands, queries, k)
   }
 
-  // ---- delete / upsert by id: the index-maintenance surface ---------
-  // chromadb's `collection.delete(ids=...)` / `collection.upsert(...)`
-  // contract on the partitioned-parquet layouts: identify the
-  // partitions that hold the affected rows, rewrite ONLY those
-  // (read-before-overwrite checkpoint, one file per rewritten
-  // directory), leave every other partition byte-untouched — the
-  // compactIvf/appendHnsw discipline applied to row removal. A
-  // takedown touching one document rewrites one partition, never the
-  // corpus.
+  // ---- index maintenance: one rewrite core per layout family -------
+  // chromadb's `collection.delete` / `upsert` / `update` contract on
+  // the partitioned-parquet layouts. Every verb is `rewritePartitioned`
+  // over its layout family (source, cell, shard, bucket) and a batch:
+  // doomed ids (`Seq`, broadcast; `DataFrame`, kept distributed), a
+  // predicate (chroma's `where=` / `where_document`), or new documents
+  // replacing their (source, doc_id) identity. README "Index
+  // maintenance" states the protocol: read-before-overwrite
+  // checkpoint, only touched partitions rewrite (one file per
+  // rewritten directory), emptied partitions are removed. A takedown
+  // touching one document rewrites one partition, never the corpus.
   //
   // Concurrency contract: SINGLE WRITER per layout. Mutations
   // (delete/upsert/append/compact/rename) assume they own the layout
@@ -1232,10 +1229,10 @@ object IndexStore {
   // Serialize writers externally (one maintenance job per index —
   // the natural shape of a takedown/compaction pipeline).
 
-  /** Rewrite only `touched` partition values with `out` (dynamic
-    * overwrite, one writer task per partition), then delete any
-    * touched directory that `out` writes no rows into — dynamic mode
-    * can only truncate partitions it writes, so a partition whose
+  /** Rewrite only `touched` partition values with `out`, already
+    * partitioned into its writer tasks (dynamic overwrite), then delete
+    * any touched directory that `out` writes no rows into — dynamic
+    * mode can only truncate partitions it writes, so a partition whose
     * every row died must be removed explicitly or stale files would
     * survive. `presentVals` = partition values present in `out`
     * (caller computes it from a checkpointed frame so the plan isn't
@@ -1243,8 +1240,7 @@ object IndexStore {
   private def rewriteTouched(spark: SparkSession, path: String, partCol: String,
                              touched: Seq[String], presentVals: Set[String],
                              out: DataFrame): Unit = {
-    out.repartition(math.max(1, touched.size), col(partCol))
-      .write.mode(SaveMode.Overwrite)
+    out.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol)
       .parquet(path)
@@ -1260,102 +1256,190 @@ object IndexStore {
     }
   }
 
-  /** ONE core for every delete flavor (id-list and predicate): find
-    * the partitions holding a doomed row, rewrite only those with the
-    * survivors, remove any that emptied. `doomedOf` selects the doomed
-    * rows of a frame; `survivorsOf` its complement over the touched
-    * partitions' scan (the two flavors differ ONLY here: semi/anti
-    * broadcast join on ids vs. pred/!pred); `rebuild` post-processes
-    * the survivors (identity for row layouts, graph rebuild for HNSW).
-    * Returns the touched partition values (empty = no-op). */
-  private def deletePartitionedCore(spark: SparkSession, path: String,
-                                    partCol: String,
-                                    doomedOf: DataFrame => DataFrame,
-                                    survivorsOf: DataFrame => DataFrame,
-                                    rebuild: DataFrame => DataFrame): Seq[Any] = {
-    // the wrong-verb guard: deleteIds on a cell-partitioned layout
-    // (or deleteIdsIvf on a source-partitioned one) would rewrite
-    // into partition directories of the WRONG column — corrupting
-    // the layout, not failing. One fs listing proves the layout is
-    // actually partitioned by partCol before anything rewrites.
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val pfs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a missing path, or a layout whose every partition previously
-    // emptied (no 'col=' children left), has nothing to corrupt —
-    // a legitimate no-op delete, not a wrong-verb call
-    if (!pfs.exists(hPath)) return Seq.empty
-    val children = pfs.listStatus(hPath)
-    val partDirs = children.filter(s =>
-      s.isDirectory && s.getPath.getName.contains("="))
-    if (partDirs.isEmpty) return Seq.empty
-    require(partDirs.exists(_.getPath.getName.startsWith(s"$partCol=")),
-      s"$path is not partitioned by '$partCol' — use the delete/upsert " +
-        "verb matching the layout family (source/cell/shard)")
-    val all = Relations.parquet(spark, path)
-    // the bucket= column probe: LexicalStore layouts (scoring postings
-    // AND positional postings) also partition by bucket=, so the
-    // directory check above cannot tell them from an LSH row layout.
-    // A vector verb run against them would semi-join on columns the
-    // layout doesn't have (or worse, a where-flavor predicate could
-    // silently match) — fail loudly with the routing fix instead.
-    // describeCollection reports the same disambiguation as
-    // family=lexical-postings / lexical-positional.
-    require(!(all.columns.contains("term") && !all.columns.contains("chunk_id")), {
-      val fam = if (all.columns.contains("positions")) "lexical-positional"
-                else "lexical-postings"
-      s"$path is a $fam layout (term column, no chunk_id) — " +
-        "use the LexicalStore verbs (deleteLexical and, for the scoring " +
-        "layout, upsertLexical/compactLexical), not the vector-index " +
-        "maintenance family"
+  /** A partitioned layout family as the maintenance core sees it: the
+    * partition column, the sidecar that marks the family (if any), how
+    * new `indexRows` are placed into it, which derived columns a
+    * survivor drops before the rebuild, how the rows of a touched
+    * partition are rebuilt, and what runs after a rewrite. */
+  private case class Layout(partCol: String,
+                            marker: Option[String] = None,
+                            place: DataFrame => DataFrame = identity,
+                            derived: Seq[String] = Nil,
+                            rebuild: DataFrame => DataFrame = identity,
+                            after: () => Unit = () => ())
+
+  private val sourceLayout = Layout("source")
+
+  private val bucketLayout = Layout("bucket",
+    place = _.withColumn("bucket", explode(col("lsh_buckets"))).drop("lsh_buckets"))
+
+  /** Cells: new rows go through the persisted `_centroids` quantizer
+    * (and the `_pq` books, if any). The sidecars are read only when a
+    * batch actually carries new rows. */
+  private def cellLayout(spark: SparkSession, path: String) = Layout("cell", Some("_centroids"),
+    place = { rows =>
+      val (ids, cents) = Relations.centroids(spark, s"$path/_centroids")
+      withPqCodeIfPresent(spark, path, rows).withColumn("cell",
+        graft.functions.vecIndexExprs.nearestCell(col("embedding"), ids, cents))
     })
-    // NATIVE-typed partition values (never stringified in the plan):
-    // the isin below must stay a bare predicate on the partition
-    // column so it prunes directories at planning time
-    val touched = doomedOf(all).select(partCol).distinct()
-      .collect().map(_.get(0)).toSeq.sortBy(_.toString)
-    if (touched.isEmpty) return Seq.empty
-    val survivors = survivorsOf(all.filter(col(partCol).isin(touched: _*)))
-      // read the touched partitions BEFORE the overwrite truncates them
-      .localCheckpoint()
-    val present = survivors.select(partCol).distinct()
-      .collect().map(_.get(0).toString).toSet
-    rewriteTouched(spark, path, partCol, touched.map(_.toString), present,
-      rebuild(survivors))
-    touched
-  }
 
-  /** [[deletePartitionedCore]] with the doomed set as an id list. */
-  private def deleteFromPartitioned(spark: SparkSession, path: String,
-                                    partCol: String, ids: Seq[String],
-                                    rebuild: DataFrame => DataFrame): Seq[Any] = {
-    if (ids.isEmpty) return Seq.empty
-    import spark.implicits._
-    val doomed = ids.toDF("chunk_id")
-    deletePartitionedCore(spark, path, partCol,
-      _.join(broadcast(doomed), Seq("chunk_id"), "left_semi"),
-      _.join(broadcast(doomed), Seq("chunk_id"), "left_anti"),
-      rebuild)
-  }
+  /** Shards: placement by the stored shard count, and a touched shard
+    * rebuilds its whole graph (adjacency stores in-shard ordinals) with
+    * the stored m/efConstruction; every session's pin is evicted. */
+  private def shardLayout(spark: SparkSession, path: String, meta: HnswMeta) =
+    Layout("shard", Some("_meta"),
+      place = _.withColumn("shard", shardOf(meta.numShards)),
+      derived = Seq("hnsw_node", "hnsw_level", "hnsw_links"),
+      rebuild = rows =>
+        rows.join(hnswAdjacency(rows, meta.numShards, meta.m, meta.efConstruction), Seq("chunk_id")),
+      after = () => evictHnswShards(spark, path))
 
-  /** [[deleteFromPartitioned]] with the doomed ids as a DataFrame —
-    * the mass-takedown form: a 100 TB takedown list does not fit a
-    * driver `Seq`, so here the id set stays distributed end to end.
-    * No broadcast hint: the semi/anti joins are left to AQE, which
-    * broadcasts a page-sized list and shuffle-joins a corpus-sized
-    * one. The frame must carry a `chunk_id` column; extra columns are
-    * projected away. Checkpointed once so the (possibly expensive)
-    * id-producing plan runs a single time across the touched-partition
-    * probe and the survivor anti-join. */
-  private def deleteFromPartitionedDf(spark: SparkSession, path: String,
-                                      partCol: String, ids: DataFrame,
-                                      rebuild: DataFrame => DataFrame): Seq[Any] = {
+  /** A chunk's shard among `shards`: the hash placement every HNSW
+    * write path shares. */
+  private def shardOf(shards: Int): Column =
+    pmod(xxhash64(col("chunk_id")), lit(shards.toLong)).cast("int")
+
+  /** One maintenance batch: the rows it removes, or the rows it
+    * upserts (which remove every row of their identities). */
+  private sealed trait Batch
+  private case object NoRows extends Batch
+  /** Doomed rows as a semi/anti pair over a layout frame. */
+  private case class Doomed(of: DataFrame => DataFrame, rest: DataFrame => DataFrame) extends Batch
+  /** New `indexRows`, replacing every existing row of their identities. */
+  private case class Upsert(rows: DataFrame) extends Batch
+
+  /** A chroma document's identity: upsert replaces ALL its chunks, so a
+    * shorter revision leaves no stale tail chunk behind. */
+  private val IdentityKey = Seq("source", "doc_id")
+
+  /** A driver-sized id list, broadcast into the semi/anti joins. */
+  private def doomedIds(spark: SparkSession, ids: Seq[String]): Batch =
+    if (ids.isEmpty) NoRows
+    else {
+      import spark.implicits._
+      val doomed = ids.toDF("chunk_id")
+      Doomed(_.join(broadcast(doomed), Seq("chunk_id"), "left_semi"),
+        _.join(broadcast(doomed), Seq("chunk_id"), "left_anti"))
+    }
+
+  /** The mass-takedown form: the id set stays distributed end to end
+    * (a 100 TB takedown list does not fit a driver `Seq`) and the joins
+    * are left to AQE. Checkpointed once, so the id-producing plan runs
+    * a single time across the touched-partition probe and the
+    * survivor anti-join. Extra columns are projected away. */
+  private def doomedIds(ids: DataFrame): Batch = {
     require(ids.columns.contains("chunk_id"),
       s"id frame must carry a chunk_id column, has [${ids.columns.mkString(",")}]")
     val doomed = ids.select("chunk_id").distinct().localCheckpoint()
-    deletePartitionedCore(spark, path, partCol,
-      _.join(doomed, Seq("chunk_id"), "left_semi"),
-      _.join(doomed, Seq("chunk_id"), "left_anti"),
-      rebuild)
+    Doomed(_.join(doomed, Seq("chunk_id"), "left_semi"),
+      _.join(doomed, Seq("chunk_id"), "left_anti"))
+  }
+
+  /** chroma's `delete(where=..., where_document=...)`: rows where `pred`
+    * is null are kept (only a definite match is doomed). */
+  private def doomedWhere(pred: Column): Batch = {
+    val p = pred <=> lit(true)
+    Doomed(_.filter(p), _.filter(!p))
+  }
+
+  /** THE rewrite core of the partitioned layouts (README "Index
+    * maintenance"): find the partitions holding a doomed row or
+    * receiving a new one, read them (minus the doomed rows) into a
+    * checkpoint, rewrite only those with the layout's rebuild over the
+    * survivors and placed new rows, remove any that emptied, run the
+    * layout's after-hook. */
+  private def rewritePartitioned(spark: SparkSession, path: String,
+                                 layout: Layout, batch: Batch): Unit = {
+    if (batch == NoRows) return
+    val partCol = layout.partCol
+    val upsert = batch.isInstanceOf[Upsert]
+    val parts = Relations.partitionDirs(spark, path)
+    val partDirs = parts.getOrElse(Nil)
+    val emptied = parts.exists(_.isEmpty)
+    // a missing path, or a layout whose every partition emptied, has
+    // nothing to delete — a legitimate no-op, not a wrong-verb call
+    if (partDirs.isEmpty && !upsert) return
+    // the wrong-verb guard: a verb of another family would rewrite
+    // into partition directories of the WRONG column — corrupting the
+    // layout, not failing
+    require(partDirs.isEmpty || partDirs.exists(_.getPath.getName.startsWith(s"$partCol=")),
+      s"$path is not partitioned by '$partCol' — use the delete/upsert " +
+        "verb matching the layout family (source/cell/shard)")
+    // an emptied layout has no partition left to name its family, but
+    // its sidecars still do: an upsert of another family (or into a
+    // lexical layout) must fail here, not write beside them
+    if (emptied) {
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val found = Seq("_centroids", "_meta", "_analyzer")
+        .filter(s => fs.exists(new org.apache.hadoop.fs.Path(path, s)))
+      require(found == layout.marker.toSeq,
+        s"$path is an emptied layout with sidecar(s) [${found.mkString(", ")}] — use the " +
+          "upsert verb matching the layout family (source/cell/shard/bucket, or the " +
+          "LexicalStore verbs for a lexical layout)")
+    }
+    // an emptied layout has no rows to read, but an upsert still
+    // inserts into it (a missing path still fails on this read). Read
+    // on first use: a keyed upsert (below) needs no read to find its
+    // touched partitions.
+    lazy val all = {
+      val a = if (emptied) None
+              else Some(Relations.parquet(spark, path))
+      // the lexical guard: LexicalStore layouts also partition by
+      // bucket=, so the directory check cannot tell them from an LSH
+      // row layout, and a where-flavor predicate could silently match
+      a.foreach(l => require(!(l.columns.contains("term") && !l.columns.contains("chunk_id")), {
+        val fam = if (l.columns.contains("positions")) "lexical-positional"
+                  else "lexical-postings"
+        s"$path is a $fam layout (term column, no chunk_id) — " +
+          "use the LexicalStore verbs (deleteLexical and, for the scoring " +
+          "layout, upsertLexical/compactLexical), not the vector-index " +
+          "maintenance family"
+      }))
+      a
+    }
+    // keyed: the partition column is part of the identity, so an
+    // upserted document's old rows live where its new rows land — the
+    // new rows alone name every touched partition, and none can empty
+    val keyed = IdentityKey.contains(partCol)
+    val adds = batch match {
+      case Upsert(rows) =>
+        // a placed partition column takes the READ schema's native
+        // type, so every partition predicate below prunes directories
+        val readType = if (keyed) None else all.map(_.schema(partCol).dataType)
+        val placed = layout.place(rows)
+        Some(readType.fold(placed)(t => placed.withColumn(partCol, col(partCol).cast(t)))
+          .localCheckpoint())
+      case _ => None
+    }
+    val doomed = batch match {
+      case d: Doomed => d
+      case _ =>
+        val keys = adds.get.select(IdentityKey.map(col): _*).distinct()
+        Doomed(_.join(broadcast(keys), IdentityKey, "left_semi"),
+          _.join(broadcast(keys), IdentityKey, "left_anti"))
+    }
+    val newRowsCoverOld = adds.isDefined && (keyed || all.isEmpty)
+    val oldParts = if (newRowsCoverOld) None else all.map(doomed.of(_).select(partCol))
+    // NATIVE-typed partition values (never stringified in the plan):
+    // the isin below must stay a bare predicate on the partition column
+    // so it prunes directories at planning time
+    val touched = (oldParts ++ adds.map(_.select(partCol))).reduce(_.union(_))
+      .distinct().collect().map(_.get(0)).toSeq.sortBy(_.toString)
+    if (touched.isEmpty) return
+    val survivors = all.map(a => doomed.rest(a.filter(col(partCol).isin(touched: _*)))
+      .drop(layout.derived: _*)
+      // read the touched partitions BEFORE the overwrite truncates them
+      .localCheckpoint())
+    val rows = (survivors ++ adds).reduce((s, a) =>
+      s.unionByName(a.select(s.columns.toIndexedSeq.map(col): _*)))
+    val present =
+      if (newRowsCoverOld) touched.map(_.toString).toSet
+      else rows.select(partCol).distinct().collect().map(_.get(0).toString).toSet
+    rewriteTouched(spark, path, partCol, touched.map(_.toString), present,
+      // one writer task per partition -> one file per rewritten directory
+      layout.rebuild(rows).repartition(touched.size, col(partCol)))
+    layout.after()
   }
 
   /** chroma `collection.get`: retrieval WITHOUT a query vector — by
@@ -1591,7 +1675,7 @@ object IndexStore {
     // scoring verbs would misroute on it). `positions` then `term`
     // are the disambiguators — an orchestrator routed by this report must send
     // lexical layouts to the LexicalStore verbs, never the vector
-    // maintenance family (deletePartitionedCore enforces the same
+    // maintenance family (rewritePartitioned enforces the same
     // probe loudly on the verb side).
     val family = partCol match {
       case Some("cell") if df.columns.contains("tokvec") => "colbert-token-ivf"
@@ -1629,202 +1713,94 @@ object IndexStore {
         "has_collmeta", "has_tombstones")
   }
 
-  /** [[deletePartitionedCore]] with the doomed set as a predicate —
-    * chroma's `collection.delete(where=...)` / `where_document`. */
-  private def deleteWherePartitioned(spark: SparkSession, path: String,
-                                     partCol: String, pred: Column,
-                                     rebuild: DataFrame => DataFrame): Seq[Any] =
-    deletePartitionedCore(spark, path, partCol,
-      _.filter(pred), _.filter(!pred), rebuild)
-
-  /** Delete chunks by id from a [[build]] source-partitioned layout.
-    * Only the source partitions holding the ids are rewritten. */
+  /** Delete chunks by id from a [[build]] source-partitioned layout. */
   def deleteIds(spark: SparkSession, path: String, ids: Seq[String]): Unit =
-    deleteFromPartitioned(spark, path, "source", ids, identity)
+    rewritePartitioned(spark, path, sourceLayout, doomedIds(spark, ids))
 
   /** [[deleteIds]] with the id list as a DataFrame (`chunk_id`
     * column) — the mass-takedown form for lists that don't fit a
-    * driver allocation. Same partition-scoped rewrite; the id set
-    * stays distributed (see [[deleteFromPartitionedDf]]). */
+    * driver allocation; the id set stays distributed. */
   def deleteIds(spark: SparkSession, path: String, ids: DataFrame): Unit =
-    deleteFromPartitionedDf(spark, path, "source", ids, identity)
+    rewritePartitioned(spark, path, sourceLayout, doomedIds(ids))
 
   /** Delete every chunk matching a metadata/document predicate from a
-    * [[build]] source-partitioned layout — chroma's
-    * `collection.delete(where=..., where_document=...)` surface, the
-    * same Column family [[searchTopK]]'s `where` accepts (a
-    * `$contains` is `col("chunk").contains(...)`). Rows where `pred`
-    * is null are kept (three-valued logic: only a definite match is
-    * doomed). */
+    * [[build]] source-partitioned layout (a `$contains` is
+    * `col("chunk").contains(...)`). Rows where `pred` is null are
+    * kept. */
   def deleteWhere(spark: SparkSession, path: String, pred: Column): Unit =
-    deleteWherePartitioned(spark, path, "source", pred <=> lit(true), identity)
+    rewritePartitioned(spark, path, sourceLayout, doomedWhere(pred))
 
-  /** [[deleteWhere]] on an IVF layout (emptied cells are removed, the
-    * `_centroids` quantizer is untouched). */
+  /** [[deleteWhere]] on an IVF layout (the `_centroids` quantizer is
+    * untouched — deletion never changes the trained cell geometry). */
   def deleteWhereIvf(spark: SparkSession, path: String, pred: Column): Unit =
-    deleteWherePartitioned(spark, path, "cell", pred <=> lit(true), identity)
+    rewritePartitioned(spark, path, cellLayout(spark, path), doomedWhere(pred))
 
   /** [[deleteWhere]] on an HNSW layout (touched shards rebuild their
-    * graphs, as in [[deleteIdsHnsw]]). */
-  def deleteWhereHnsw(spark: SparkSession, path: String, pred: Column): Unit = {
-    val meta = readHnswMeta(spark, path)
-    val touched = deleteWherePartitioned(spark, path, "shard",
-      pred <=> lit(true), { survivors =>
-        val stripped = survivors.drop("hnsw_node", "hnsw_level", "hnsw_links")
-        stripped.join(
-          hnswAdjacency(stripped, meta.numShards, meta.m, meta.efConstruction),
-          Seq("chunk_id"))
-      })
-    if (touched.nonEmpty) evictHnswShards(spark, path)
-  }
+    * graphs). */
+  def deleteWhereHnsw(spark: SparkSession, path: String, pred: Column): Unit =
+    rewritePartitioned(spark, path, shardLayout(spark, path, readHnswMeta(spark, path)),
+      doomedWhere(pred))
 
-  /** Delete chunks by id from an IVF layout: only the cells holding
-    * the ids rewrite (and a cell whose every row died is removed, so
-    * probes never open stale files). The `_centroids` quantizer is
-    * untouched — deletion never changes the trained cell geometry. */
+  /** Delete chunks by id from an IVF layout. */
   def deleteIdsIvf(spark: SparkSession, path: String, ids: Seq[String]): Unit =
-    deleteFromPartitioned(spark, path, "cell", ids, identity)
+    rewritePartitioned(spark, path, cellLayout(spark, path), doomedIds(spark, ids))
 
-  /** [[deleteIdsIvf]] with a DataFrame id list (mass-takedown form,
-    * see the [[deleteIds]] DataFrame overload). */
+  /** [[deleteIdsIvf]] with a DataFrame id list (mass-takedown form). */
   def deleteIdsIvf(spark: SparkSession, path: String, ids: DataFrame): Unit =
-    deleteFromPartitionedDf(spark, path, "cell", ids, identity)
+    rewritePartitioned(spark, path, cellLayout(spark, path), doomedIds(ids))
 
   /** Delete chunks by id from a [[buildBucketed]] LSH layout: a chunk
     * has one row PER LSH table, so the doomed set spans up to
-    * LshTables bucket partitions — the shared core finds and rewrites
-    * exactly those (a row surviving in ANY bucket would resurrect the
-    * chunk in probes of that bucket). */
+    * LshTables bucket partitions (a row surviving in ANY bucket would
+    * resurrect the chunk in probes of that bucket). */
   def deleteIdsBucketed(spark: SparkSession, path: String, ids: Seq[String]): Unit =
-    deleteFromPartitioned(spark, path, "bucket", ids, identity)
+    rewritePartitioned(spark, path, bucketLayout, doomedIds(spark, ids))
 
   /** [[deleteIdsBucketed]] with a DataFrame id list (mass-takedown
-    * form, see the [[deleteIds]] DataFrame overload). */
+    * form). */
   def deleteIdsBucketed(spark: SparkSession, path: String, ids: DataFrame): Unit =
-    deleteFromPartitionedDf(spark, path, "bucket", ids, identity)
+    rewritePartitioned(spark, path, bucketLayout, doomedIds(ids))
 
   /** [[deleteWhere]] on a bucketed LSH layout. */
   def deleteWhereBucketed(spark: SparkSession, path: String, pred: Column): Unit =
-    deleteWherePartitioned(spark, path, "bucket", pred <=> lit(true), identity)
+    rewritePartitioned(spark, path, bucketLayout, doomedWhere(pred))
 
-  /** Upsert documents into a bucketed LSH layout: delete-by-
-    * (source, doc_id) identity + insert the re-chunked revision's
-    * exploded bucket rows, rewriting ONLY the buckets holding old or
-    * new rows of the upserted docs. Bucket placement is the pure
-    * LSH hash of the new embeddings — no trained state to consult. */
+  /** Upsert documents into a bucketed LSH layout. Bucket placement is
+    * the pure LSH hash of the new embeddings — no trained state to
+    * consult. */
   def upsertBucketed(spark: SparkSession, docs: DataFrame, path: String,
-                     dim: Int = Embed.DefaultDim): Unit = {
-    val all = Relations.parquet(spark, path)
-    val bucketT = all.schema("bucket").dataType
-    val newRows = indexRows(docs, dim)
-      .withColumn("bucket", explode(col("lsh_buckets")))
-      .withColumn("bucket", col("bucket").cast(bucketT))
-      .drop("lsh_buckets")
-      .localCheckpoint()
-    val keys = newRows.select(col("source"), col("doc_id")).distinct()
-    val touched = all.join(broadcast(keys), Seq("source", "doc_id"), "left_semi")
-      .select("bucket")
-      .union(newRows.select("bucket"))
-      .distinct().collect().map(_.get(0)).toSeq.sortBy(_.toString)
-    if (touched.isEmpty) return
-    val survivors = all
-      .filter(col("bucket").isin(touched: _*))
-      .join(broadcast(keys), Seq("source", "doc_id"), "left_anti")
-      .localCheckpoint()
-    val out = survivors.unionByName(
-      newRows.select(survivors.columns.toIndexedSeq.map(col): _*))
-    val present = newRows.select("bucket").distinct()
-      .union(survivors.select("bucket").distinct())
-      .distinct().collect().map(_.get(0).toString).toSet
-    rewriteTouched(spark, path, "bucket", touched.map(_.toString), present, out)
-  }
+                     dim: Int = Embed.DefaultDim): Unit =
+    rewritePartitioned(spark, path, bucketLayout, Upsert(indexRows(docs, dim)))
 
-  /** Delete chunks by id from an HNSW layout. Adjacency stores
-    * in-shard ordinals, so removing a node invalidates its whole
-    * shard's graph — the touched shards rebuild their graphs over the
-    * survivors (the same maintenance unit [[appendHnsw]] rebuilds);
-    * untouched shards keep their bytes. */
-  def deleteIdsHnsw(spark: SparkSession, path: String, ids: Seq[String]): Unit = {
-    val meta = readHnswMeta(spark, path)
-    val touched = deleteFromPartitioned(spark, path, "shard", ids, { survivors =>
-      val stripped = survivors.drop("hnsw_node", "hnsw_level", "hnsw_links")
-      stripped.join(
-        hnswAdjacency(stripped, meta.numShards, meta.m, meta.efConstruction),
-        Seq("chunk_id"))
-    })
-    if (touched.nonEmpty) evictHnswShards(spark, path)
-  }
+  /** Delete chunks by id from an HNSW layout: touched shards rebuild
+    * their graphs over the survivors (the [[appendHnsw]] maintenance
+    * unit); untouched shards keep their bytes. */
+  def deleteIdsHnsw(spark: SparkSession, path: String, ids: Seq[String]): Unit =
+    rewritePartitioned(spark, path, shardLayout(spark, path, readHnswMeta(spark, path)),
+      doomedIds(spark, ids))
 
-  /** [[deleteIdsHnsw]] with a DataFrame id list (mass-takedown form,
-    * see the [[deleteIds]] DataFrame overload). Touched shards still
-    * rebuild their graphs over the survivors. */
-  def deleteIdsHnsw(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    val meta = readHnswMeta(spark, path)
-    val touched = deleteFromPartitionedDf(spark, path, "shard", ids, { survivors =>
-      val stripped = survivors.drop("hnsw_node", "hnsw_level", "hnsw_links")
-      stripped.join(
-        hnswAdjacency(stripped, meta.numShards, meta.m, meta.efConstruction),
-        Seq("chunk_id"))
-    })
-    if (touched.nonEmpty) evictHnswShards(spark, path)
-  }
+  /** [[deleteIdsHnsw]] with a DataFrame id list (mass-takedown form). */
+  def deleteIdsHnsw(spark: SparkSession, path: String, ids: DataFrame): Unit =
+    rewritePartitioned(spark, path, shardLayout(spark, path, readHnswMeta(spark, path)),
+      doomedIds(ids))
 
   /** Upsert documents into a [[build]] source-partitioned layout —
-    * chroma's `collection.upsert`: the identity of a document is
-    * (source, doc_id), and replacing it deletes ALL its existing
-    * chunks before inserting the re-chunked rows (a shorter revision
-    * must not leave stale tail chunks under the old chunk ids). Only
-    * the source partitions of the upserted documents rewrite. */
+    * chroma's `collection.upsert`: replacing a (source, doc_id)
+    * identity deletes ALL its existing chunks before inserting the
+    * re-chunked rows. */
   def upsertDocs(spark: SparkSession, docs: DataFrame, path: String,
-                 dim: Int = Embed.DefaultDim): Unit = {
-    val newRows = indexRows(docs, dim).localCheckpoint()
-    val keys = newRows.select(col("source"), col("doc_id")).distinct()
-    val touched = newRows.select("source").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    if (touched.isEmpty) return
-    val survivors = Relations.parquet(spark, path)
-      .filter(col("source").isin(touched: _*))
-      .join(broadcast(keys), Seq("source", "doc_id"), "left_anti")
-      .localCheckpoint()
-    // upserted partitions always receive the new rows, so no touched
-    // directory can empty out — presentVals = touched
-    rewriteTouched(spark, path, "source", touched, touched.toSet,
-      survivors.unionByName(newRows.select(survivors.columns.toIndexedSeq.map(col): _*)))
-  }
+                 dim: Int = Embed.DefaultDim): Unit =
+    rewritePartitioned(spark, path, sourceLayout, Upsert(indexRows(docs, dim)))
 
-  /** Upsert documents into an IVF layout: delete-by-identity then
-    * [[appendIvf]]-style insert through the persisted `_centroids`
-    * quantizer, as one touched-cell rewrite. Closes the documented
-    * appendIvf footgun (appending an existing chunk silently
-    * duplicated it — upsert replaces instead). */
+  /** Upsert documents into an IVF layout: new rows are assigned
+    * through the persisted `_centroids` quantizer (and PQ-encoded if
+    * the layout has `_pq` books). Closes the documented appendIvf
+    * footgun (appending an existing chunk silently duplicated it —
+    * upsert replaces instead). */
   def upsertIvf(spark: SparkSession, docs: DataFrame, path: String): Unit = {
-    import graft.functions.vecIndexExprs
-    val (cids, cents) = Relations.centroids(spark, s"$path/_centroids")
-    val all = Relations.parquet(spark, path)
-    // new rows carry the partition column in the READ schema's native
-    // type, so every cell predicate below prunes directories
-    val cellT = all.schema("cell").dataType
-    val newRows = withPqCodeIfPresent(spark, path, indexRows(docs, cents.head.length))
-      .withColumn("cell",
-        vecIndexExprs.nearestCell(col("embedding"), cids, cents).cast(cellT))
-      .localCheckpoint()
-    val keys = newRows.select(col("source"), col("doc_id")).distinct()
-    // touched = cells that hold old rows of the upserted docs (their
-    // rows die) ∪ cells the new rows land in
-    val touched = all.join(broadcast(keys), Seq("source", "doc_id"), "left_semi")
-      .select("cell")
-      .union(newRows.select("cell"))
-      .distinct().collect().map(_.get(0)).toSeq.sortBy(_.toString)
-    if (touched.isEmpty) return
-    val survivors = all
-      .filter(col("cell").isin(touched: _*))
-      .join(broadcast(keys), Seq("source", "doc_id"), "left_anti")
-      .localCheckpoint()
-    val out = survivors.unionByName(newRows.select(survivors.columns.toIndexedSeq.map(col): _*))
-    val present = newRows.select("cell").distinct()
-      .union(survivors.select("cell").distinct())
-      .distinct().collect().map(_.get(0).toString).toSet
-    rewriteTouched(spark, path, "cell", touched.map(_.toString), present, out)
+    val (_, cents) = Relations.centroids(spark, s"$path/_centroids")
+    rewritePartitioned(spark, path, cellLayout(spark, path),
+      Upsert(indexRows(docs, cents.head.length)))
   }
 
   /** [[graft.operators.VectorSearch.retrainAdvice]] against a
@@ -1851,8 +1827,7 @@ object IndexStore {
     // fail loudly instead
     require(trainSample >= 1.0 || buckets >= 1,
       s"trainSample $trainSample selects zero of 256 md5 buckets")
-    val cents = Relations.parquet(spark, s"$path/_centroids")
-      .collect().sortBy(_.getLong(0)).map(_.getSeq[Float](1).toArray)
+    val (_, cents) = Relations.centroids(spark, s"$path/_centroids")
     val all = Relations.parquet(spark, path)
     val train =
       if (trainSample >= 1.0) all
@@ -1863,37 +1838,14 @@ object IndexStore {
       recent, recentVecCol, quantile, driftFrac)
   }
 
-  /** Upsert documents into an HNSW layout: delete-by-(source, doc_id)
-    * identity + insert, rebuilding the graphs of ONLY the shards that
-    * hold old or new chunks of the upserted docs (the [[appendHnsw]]
-    * maintenance unit); untouched shard directories keep their bytes.
-    * Shard placement, m and efConstruction come from the stored
-    * `_meta` contract. Upserts roughly preserve corpus size, so no
-    * reshard check — growth belongs to [[appendHnsw]]. */
+  /** Upsert documents into an HNSW layout: shard placement, m and
+    * efConstruction come from the stored `_meta` contract. Upserts
+    * roughly preserve corpus size, so no reshard check — growth
+    * belongs to [[appendHnsw]]. */
   def upsertHnsw(spark: SparkSession, docs: DataFrame, path: String): Unit = {
     val meta = readHnswMeta(spark, path)
-    val newRows = indexRows(docs, meta.dim)
-      .withColumn("shard",
-        pmod(xxhash64(col("chunk_id")), lit(meta.numShards.toLong)).cast("int"))
-      .localCheckpoint()
-    val keys = newRows.select(col("source"), col("doc_id")).distinct()
-    val all = Relations.parquet(spark, path)
-    val touched = all.join(broadcast(keys), Seq("source", "doc_id"), "left_semi")
-      .select("shard").union(newRows.select("shard"))
-      .distinct().collect().map(_.get(0)).toSeq.sortBy(_.toString)
-    if (touched.isEmpty) return
-    val survivors = all.filter(col("shard").isin(touched: _*))
-      .join(broadcast(keys), Seq("source", "doc_id"), "left_anti")
-      .drop("hnsw_node", "hnsw_level", "hnsw_links")
-      .localCheckpoint()
-    val rows = survivors
-      .unionByName(newRows.select(survivors.columns.toIndexedSeq.map(col): _*))
-    val present = rows.select("shard").distinct()
-      .collect().map(_.get(0).toString).toSet
-    rewriteTouched(spark, path, "shard", touched.map(_.toString), present,
-      rows.join(hnswAdjacency(rows, meta.numShards, meta.m, meta.efConstruction),
-        Seq("chunk_id")))
-    evictHnswShards(spark, path)
+    rewritePartitioned(spark, path, shardLayout(spark, path, meta),
+      Upsert(indexRows(docs, meta.dim)))
   }
 
   // ---- chroma collection.update: modify EXISTING identities only ----
@@ -2153,9 +2105,7 @@ object IndexStore {
         .select(col("chunk_id"), col("shard").cast("int").as("shard"))
       val base = shardVals.max + 1
       val numShards = (base until base + 8).find { m =>
-        pairs.filter(
-          pmod(xxhash64(col("chunk_id")), lit(m.toLong)).cast("int")
-            =!= col("shard")).isEmpty
+        pairs.filter(shardOf(m) =!= col("shard")).isEmpty
       }.getOrElse(throw new IllegalStateException(
         s"$path: no shard modulus in [$base, ${base + 8}) reproduces the " +
           "stored placement — rebuild the layout with IndexStore.buildHnsw"))
@@ -2236,8 +2186,7 @@ object IndexStore {
     val shards =
       if (numShards > 0) numShards
       else hnswNumShards(base.count(), targetNodesPerShard)
-    val rows = base.withColumn("shard",
-      pmod(xxhash64(col("chunk_id")), lit(shards.toLong)).cast("int"))
+    val rows = base.withColumn("shard", shardOf(shards))
     rows.join(hnswAdjacency(rows, shards, m, efConstruction), Seq("chunk_id"))
       // one writer task per shard -> one file per shard directory
       .repartition(shards, col("shard"))
@@ -2345,8 +2294,7 @@ object IndexStore {
       val all = Relations.parquet(spark, path)
         .drop("hnsw_node", "hnsw_level", "hnsw_links", "shard")
         .unionByName(newRows)
-        .withColumn("shard",
-          pmod(xxhash64(col("chunk_id")), lit(shards.toLong)).cast("int"))
+        .withColumn("shard", shardOf(shards))
         .localCheckpoint() // read everything before the truncating write
       all.join(hnswAdjacency(all, shards, meta.m, meta.efConstruction),
           Seq("chunk_id"))
@@ -2361,12 +2309,15 @@ object IndexStore {
       evictHnswShards(spark, path)
       return
     }
-    val hashed = newRows.withColumn("shard",
-      pmod(xxhash64(col("chunk_id")), lit(meta.numShards.toLong)).cast("int"))
+    // the touched-shard rebuild of the maintenance core, without its
+    // touched/present collects: an append dooms nothing, and the
+    // shards it touches stay a broadcast semi-join
+    val layout = shardLayout(spark, path, meta)
+    val hashed = layout.place(newRows)
     val touched = hashed.select("shard").distinct()
     val existing = Relations.parquet(spark, path)
       .join(broadcast(touched), Seq("shard"), "left_semi")
-      .drop("hnsw_node", "hnsw_level", "hnsw_links")
+      .drop(layout.derived: _*)
     // the localCheckpoint here is LOAD-BEARING, not an optimization:
     // it materializes the read of the existing shards BEFORE the
     // dynamic overwrite below starts truncating those directories —
@@ -2374,8 +2325,7 @@ object IndexStore {
     // (read-own-writes corruption). Pinned by HnswSpec's
     // "append reads existing rows before the overwrite" case.
     val rows = existing.unionByName(hashed).localCheckpoint()
-    rows.join(hnswAdjacency(rows, meta.numShards, meta.m, meta.efConstruction),
-        Seq("chunk_id"))
+    layout.rebuild(rows)
       .repartition(meta.numShards, col("shard"))
       .write.mode(SaveMode.Overwrite)
       // dynamic: replace ONLY the shards present in `rows` (per-write
@@ -2383,7 +2333,7 @@ object IndexStore {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("shard")
       .parquet(path)
-    evictHnswShards(spark, path)
+    layout.after()
   }
 
   /** Session-pinned, shard-co-located view of a persisted HNSW index:

@@ -579,13 +579,47 @@ object LexicalStore {
   private def idType(spark: SparkSession, path: String) =
     Relations.parquet(spark, path).schema("doc_id").dataType
 
-  /** Surviving (doc_id, term, tf) rows: current postings minus
-    * tombstoned ids, materialized so the caller can overwrite the
-    * layout they came from. */
-  private def survivorTf(spark: SparkSession, path: String): DataFrame = {
-    val tf = Relations.parquet(spark, path).select(col("doc_id"), col("term"), col("tf"))
-    tombstones(spark, path).fold(tf)(t => tf.join(t, Seq("doc_id"), "left_anti"))
+  /** The scoring layout's posting columns a rewrite carries over. */
+  private val TfCols = Seq("doc_id", "term", "tf")
+
+  /** Surviving `cols` rows: the current layout minus tombstoned ids,
+    * materialized so the caller can overwrite the layout they came
+    * from. */
+  private def survivorRows(spark: SparkSession, path: String,
+                           cols: Seq[String]): DataFrame = {
+    val rows = Relations.parquet(spark, path).select(cols.map(col): _*)
+    tombstones(spark, path).fold(rows)(t => rows.join(t, Seq("doc_id"), "left_anti"))
       .localCheckpoint()
+  }
+
+  /** THE rewrite core of the tombstoned lexical layouts (README "Index
+    * maintenance"): read the layout's analyzer, then materialize the
+    * survivors and — for an upsert — `adds(analyzer)`, the batch's
+    * rows tokenized under the LAYOUT's analyzer (an upsert must never
+    * mix folding rules in one index) and the ids they replace. The two
+    * materializations are independent (one reads the batch, the other
+    * the layout), so they overlap (guide §2.6); input order preserves
+    * the serial form's error reporting. Replaced ids drop from the
+    * survivors, `write` rewrites the layout from the union (already
+    * materialized, so overwriting the layout it came from is safe), and
+    * the tombstones clear. A compact is the core with no adds. */
+  private def rewriteLexical(spark: SparkSession, path: String, cols: Seq[String],
+                             adds: String => Option[(DataFrame, DataFrame)],
+                             write: (DataFrame, String) => Unit): Unit = {
+    val analyzer = analyzerOf(spark, path)
+    // a layout compacted down to no rows has nothing to read, but an
+    // upsert still inserts into it (a missing path still fails on the read)
+    lazy val emptied = Relations.partitionDirs(spark, path).exists(_.isEmpty)
+    val out = adds(analyzer) match {
+      case None => survivorRows(spark, path, cols)
+      case Some((rows, _)) if emptied => rows.localCheckpoint()
+      case Some((rows, ids)) =>
+        val Seq(fresh, kept) = awaitInOrder(Seq(
+          () => rows.localCheckpoint(), () => survivorRows(spark, path, cols)))
+        kept.join(ids, Seq("doc_id"), "left_anti").union(fresh)
+    }
+    write(out, analyzer)
+    clearTombstones(spark, path)
   }
 
   /** Rewrite the layout from surviving postings with freshly
@@ -593,14 +627,13 @@ object LexicalStore {
     * this, scores equal a from-scratch build over the survivors
     * (LexicalSpec compares byte-for-value). */
   def compactLexical(spark: SparkSession, path: String): Unit = {
-    val analyzer = analyzerOf(spark, path)
     // a BM25F layout compacts legitimately (survivor tf rows are
     // already combined-field quantities) — but the rewrite must
     // re-thread the `_fields` descriptor or the compacted layout
     // would read back unmarked and accept a corrupting plain upsert
     val fields = fieldsOf(spark, path)
-    writePostings(spark, survivorTf(spark, path), path, analyzer, fields)
-    clearTombstones(spark, path)
+    rewriteLexical(spark, path, TfCols, _ => None,
+      writePostings(spark, _, path, _, fields))
   }
 
   /** Upsert (id, text) documents: postings of the upserted ids (and
@@ -620,23 +653,10 @@ object LexicalStore {
         "upsert would mix single-field tf rows into combined-field " +
         "postings; use upsertBm25F (it routes the batch through the " +
         "stored field/weight transform)")
-    // new texts tokenize under the LAYOUT's analyzer (read from the
-    // sidecar) — an upsert must never mix folding rules in one index
-    val analyzer = analyzerOf(spark, path)
     val base = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-    // the two materializations are independent (newTf reads `docs`,
-    // survivors reads the layout) — overlap their jobs (guide §2.6);
-    // input order preserves the serial form's error reporting
-    val Seq(newTf, survivorsAll) = awaitInOrder(Seq(
-      () => termFreqs(base, analyzer)
-        .localCheckpoint(), // one tokenize pass feeds the df/len joins + stats
-      () => survivorTf(spark, path)))
-    val survivors = survivorsAll
-      .join(base.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-    // survivors are already materialized and newTf never reads `path`,
-    // so the union can overwrite the layout without a second checkpoint
-    writePostings(spark, survivors.union(newTf), path, analyzer)
-    clearTombstones(spark, path)
+    rewriteLexical(spark, path, TfCols,
+      a => Some((termFreqs(base, a), base.select(col("doc_id")).distinct())),
+      writePostings(spark, _, path, _))
   }
 
   /** [[upsertLexical]] for a BM25F layout: the batch's documents
@@ -644,12 +664,10 @@ object LexicalStore {
     * stored `_fields` descriptor names them — and tokenize through
     * the identical [[combinedTermFreqs]] transform (weighted tf
     * combine before saturation), so revised and surviving documents
-    * score under one kernel over one kind of quantity. Same
-    * compact-with-adds rewrite as the plain upsert: replaced and
-    * tombstoned ids drop, the merged corpus re-aggregates df/len/
-    * stats, and the descriptor rides the rewrite. Fails loudly on a
-    * plain layout (use [[upsertLexical]]) — the guard pair keeps
-    * each maintenance verb on its own layout family. */
+    * score under one kernel over one kind of quantity; the descriptor
+    * rides the rewrite. Fails loudly on a plain layout (use
+    * [[upsertLexical]]) — the guard pair keeps each maintenance verb
+    * on its own layout family. */
   def upsertBm25F(spark: SparkSession, path: String, docs: DataFrame,
                   idCol: String = "doc_id"): Unit = {
     val fields = fieldsOf(spark, path).getOrElse(sys.error(
@@ -660,19 +678,10 @@ object LexicalStore {
       s"BM25F upsert batch is missing field column(s) " +
         s"${missing.mkString(", ")} — the layout was built from " +
         fields.map { case (f, w) => s"$f^$w" }.mkString(", "))
-    val analyzer = analyzerOf(spark, path)
-    // independent materializations, overlapped (the upsertLexical
-    // argument)
-    val Seq(newTf, survivorsAll) = awaitInOrder(Seq(
-      () => combinedTermFreqs(docs, fields, idCol, analyzer)
-        .localCheckpoint(),
-      () => survivorTf(spark, path)))
-    val ids = docs.select(col(idCol).as("doc_id")).distinct()
-    val survivors = survivorsAll
-      .join(ids, Seq("doc_id"), "left_anti")
-    writePostings(spark, survivors.union(newTf), path, analyzer,
-      fields = Some(fields))
-    clearTombstones(spark, path)
+    rewriteLexical(spark, path, TfCols,
+      a => Some((combinedTermFreqs(docs, fields, idCol, a),
+        docs.select(col(idCol).as("doc_id")).distinct())),
+      writePostings(spark, _, path, _, fields = Some(fields)))
   }
 
   // ---- segmented layout: append WITHOUT rewrite ---------------------
@@ -705,13 +714,9 @@ object LexicalStore {
     withDfLen(tf)
   }
 
-  private def segIds(spark: SparkSession, path: String): Seq[Int] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+  private def segIds(spark: SparkSession, path: String): Seq[Int] =
+    Relations.partitionDirs(spark, path).getOrElse(Nil).map(_.getPath.getName)
       .filter(_.startsWith("seg=")).map(_.stripPrefix("seg=").toInt).sorted
-  }
 
   /** Append `docs` as the next segment: one batch-sized aggregation
     * and write; no existing segment file is touched. Caller contract
@@ -807,7 +812,7 @@ object LexicalStore {
     // One survivor definition with the denormalized compact/upsert;
     // the whole-path delete below also removes the `_tombstones`
     // sidecar, so the rewritten layout starts with nothing deleted.
-    val tf = survivorTf(spark, path)
+    val tf = survivorRows(spark, path, TfCols)
     // the merge rewrites the dictionary the `_symspell` index mirrors
     // (per-segment dfs collapse into global ones): invalidate meta-
     // first BEFORE the whole-path delete, so no crash state and no
@@ -1450,6 +1455,9 @@ object LexicalStore {
       .agg(sort_array(collect_list(col("pos"))).as("positions"))
   }
 
+  /** The positional layout's columns a rewrite carries over. */
+  private val PositionalCols = Seq("doc_id", "term", "positions")
+
   /** Shared positional write path (the [[writePostings]] sibling):
     * already-materialized (doc_id, term, positions) rows land
     * bucket-partitioned with the analyzer sidecar rewritten after. */
@@ -1466,50 +1474,24 @@ object LexicalStore {
     writeAnalyzer(spark, path, analyzer)
   }
 
-  /** Surviving (doc_id, term, positions) rows: current layout minus
-    * tombstoned ids, materialized so the caller can overwrite the
-    * layout they came from — [[survivorTf]] for the positional
-    * sibling. */
-  private def survivorPositional(spark: SparkSession,
-                                 path: String): DataFrame = {
-    val rows = Relations.parquet(spark, path)
-      .select(col("doc_id"), col("term"), col("positions"))
-    tombstones(spark, path).fold(rows)(t =>
-      rows.join(t, Seq("doc_id"), "left_anti")).localCheckpoint()
-  }
-
   /** Rewrite the positional layout from survivors and drop the
     * tombstones — the expungeDeletes [[compactLexical]] performs for
     * the scoring layout. Position rows carry no corpus-derived
-    * statistics (no df/len), so this is a pure survivor rewrite; a
-    * takedown on the phrase index no longer forces a full rebuild
-    * (the r15 gap: compactLexical read `tf`, which positional rows
-    * lack, and failed loudly). */
-  def compactPositional(spark: SparkSession, path: String): Unit = {
-    val analyzer = analyzerOf(spark, path)
-    writePositional(spark, survivorPositional(spark, path), path, analyzer)
-    clearTombstones(spark, path)
-  }
+    * statistics (no df/len), so this is a pure survivor rewrite. */
+  def compactPositional(spark: SparkSession, path: String): Unit =
+    rewriteLexical(spark, path, PositionalCols, _ => None,
+      writePositional(spark, _, path, _))
 
-  /** Upsert (id, text) documents into a positional layout: rows of
-    * the upserted ids (and any tombstoned ids) drop, the new texts
-    * tokenize in under the layout's analyzer, one rewrite — the
+  /** Upsert (id, text) documents into a positional layout — the
     * [[upsertLexical]] shape minus the stats re-aggregation. */
   def upsertPositional(spark: SparkSession, path: String, docs: DataFrame,
                        idCol: String = "doc_id",
                        textCol: String = "text"): Unit = {
-    val analyzer = analyzerOf(spark, path)
     val base = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-    // independent materializations, overlapped (the upsertLexical
-    // argument)
-    val Seq(newRows, survivorsAll) = awaitInOrder(Seq(
-      () => positionalRows(base, "doc_id", "text", analyzer)
-        .localCheckpoint(),
-      () => survivorPositional(spark, path)))
-    val survivors = survivorsAll
-      .join(base.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-    writePositional(spark, survivors.union(newRows), path, analyzer)
-    clearTombstones(spark, path)
+    rewriteLexical(spark, path, PositionalCols,
+      a => Some((positionalRows(base, "doc_id", "text", a),
+        base.select(col("doc_id")).distinct())),
+      writePositional(spark, _, path, _))
   }
 
   /** Exact phrase search over a [[buildPositional]] layout: a doc
@@ -2985,21 +2967,23 @@ object LexicalStore {
     }
   }
 
+  /** Set on a thread while it runs an [[awaitInOrder]] task. */
+  private val inPrepTask = ThreadLocal.withInitial[java.lang.Boolean](() => false)
+
   /** Run independent thunks concurrently, return results in input
     * order; the first failure IN INPUT ORDER rethrows, so error
     * reporting is indistinguishable from the serial form. */
-  private def awaitInOrder[A](thunks: Seq[() => A]): Seq[A] =
-    // caller-runs fallback when already ON a prepPool thread: a
+  private[graft] def awaitInOrder[A](thunks: Seq[() => A]): Seq[A] =
+    // caller-runs fallback when already inside a prepPool task: a
     // nested awaitInOrder would park this pool thread in f.get()
     // while its children queue behind it — pool-exhaustion deadlock
-    // risk for a future re-entrant caller (no current path nests,
-    // but the invariant is now enforced, not assumed)
-    if (thunks.size <= 1
-        || Thread.currentThread().getName.startsWith("graft-parsed-prep"))
-      thunks.map(_())
+    if (thunks.size <= 1 || inPrepTask.get) thunks.map(_())
     else thunks
       .map(th => prepPool.submit(new java.util.concurrent.Callable[A] {
-        override def call(): A = th()
+        override def call(): A = {
+          inPrepTask.set(true)
+          try th() finally inPrepTask.set(false)
+        }
       }))
       .map { f =>
         try f.get()

@@ -64,15 +64,30 @@ object Relations {
     memo(spark, "collect", path)(parquet(spark, path).collect())
 
   /** The `_centroids`-shaped sidecar (cent_id BIGINT, cvec
-    * ARRAY<FLOAT>) as sorted driver arrays — the uniform pattern every
-    * IVF/PQ/ColBERT verb repeats (`collect().sortBy(_.getLong(0))`),
-    * memoized with the same invalidation as [[collectCached]]. */
+    * ARRAY<FLOAT>) as driver arrays sorted by cent_id, memoized with
+    * the same invalidation as [[collectCached]]. Columns resolve by
+    * name, so a writer's column order cannot mis-parse it. */
   def centroids(spark: SparkSession, path: String)
       : (Array[Long], Array[Array[Float]]) =
     memo(spark, "centroids", path) {
-      val rows = parquet(spark, path).collect().sortBy(_.getLong(0))
-      (rows.map(_.getLong(0)), rows.map(_.getSeq[Float](1).toArray))
+      val rows = parquet(spark, path).collect()
+        .map(r => (r.getLong(r.fieldIndex("cent_id")), r.getSeq[Float](r.fieldIndex("cvec")).toArray))
+        .sortBy(_._1)
+      (rows.map(_._1), rows.map(_._2))
     }
+
+  /** The partition directories (`col=value` children) of a layout, or
+    * None when `path` does not exist. A layout whose every partition
+    * emptied is `Some(Nil)`: both maintenance cores decide "emptied"
+    * by this one predicate, whatever the partition column or nesting
+    * (a segmented lexical layout's `seg=` level counts). */
+  private[graft] def partitionDirs(spark: SparkSession, path: String)
+      : Option[Seq[org.apache.hadoop.fs.FileStatus]] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else Some(fs.listStatus(p).toSeq.filter(s => s.isDirectory && s.getPath.getName.contains("=")))
+  }
 
   /** Recursive (name, length) fingerprint of `path` — the same
     * driver-side fs walk resolution itself performs, microseconds on

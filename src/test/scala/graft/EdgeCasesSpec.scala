@@ -480,4 +480,49 @@ class EdgeCasesSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_meta")
     assert(IndexStore.readHnswMeta(spark, path) == meta)
   }
+
+  test("_centroids resolves its columns by name in search and maintenance") {
+    import graft.sources.{IndexStore, Relations}
+    import spark.implicits._
+    val root = tempDir("centroids-by-name")
+    val docs = (1 to 24).map(i => (i.toLong, s"pivot chart $i formula range ${i % 5}", "sheet"))
+      .toDF("doc_id", "text", "source")
+    val (plain, swapped) = (s"$root/plain", s"$root/swapped")
+    IndexStore.buildIvf(spark, docs, plain, nCells = 3)
+    IndexStore.buildIvf(spark, docs, swapped, nCells = 3)
+    // a writer that orders the sidecar's columns (and rows) differently
+    val cents = Relations.parquet(spark, s"$swapped/_centroids")
+      .select("cvec", "cent_id").orderBy(col("cent_id").desc).collect()
+      .map(r => (r.getSeq[Float](0), r.getLong(1)))
+    cents.toSeq.toDF("cvec", "cent_id").coalesce(1)
+      .write.mode("overwrite").parquet(s"$swapped/_centroids")
+    def search(p: String) = IndexStore.searchTopKIvf(spark, p, "pivot chart 7",
+      k = 5, probes = 2, includeDistance = true).collect().toSeq
+    assert(search(swapped) == search(plain))
+    val revised = Seq((7L, "revised macro filter text", "sheet"), (99L, "brand new vector index", "sheet"))
+      .toDF("doc_id", "text", "source")
+    Seq(plain, swapped).foreach(IndexStore.upsertIvf(spark, revised, _))
+    def cells(p: String) = Relations.parquet(spark, p).select("chunk_id", "cell", "chunk")
+      .orderBy("chunk_id").collect().toSeq
+    assert(cells(swapped) == cells(plain))
+    assert(search(swapped) == search(plain))
+  }
+
+  test("a nested awaitInOrder inside a saturated pool runs caller-side, in input order") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import graft.sources.LexicalStore
+    val width = 8 // the pool's thread count
+    val allRunning = new CountDownLatch(width)
+    val run = scala.concurrent.Future {
+      LexicalStore.awaitInOrder((0 until width).map { i => () =>
+        // every pool thread is busy before any nested call is made
+        allRunning.countDown()
+        assert(allRunning.await(60, TimeUnit.SECONDS), "pool never saturated")
+        LexicalStore.awaitInOrder((0 until 3).map { j => () =>
+          Thread.sleep(5L * (3 - j)); (i, j) })
+      })
+    }(scala.concurrent.ExecutionContext.global)
+    val out = scala.concurrent.Await.result(run, scala.concurrent.duration.Duration(120, "s"))
+    assert(out == (0 until width).map(i => (0 until 3).map(j => (i, j))))
+  }
 }
