@@ -1494,9 +1494,15 @@ object IndexStore {
   }
 
   /** chroma `collection.count`: corpus size of the layout at `path`
-    * (parquet footer metadata — no row scan). */
+    * (parquet footer metadata — no row scan); 0 for a layout whose
+    * every partition was deleted. */
   def count(spark: SparkSession, path: String): Long =
-    Relations.parquet(spark, path).count()
+    if (emptied(spark, path)) 0L else Relations.parquet(spark, path).count()
+
+  /** True when the layout at `path` exists but has no partition
+    * directory left — the maintenance cores' predicate. */
+  private def emptied(spark: SparkSession, path: String): Boolean =
+    Relations.partitionDirs(spark, path).exists(_.isEmpty)
 
   /** Per-source chunk inventory of a layout — the maintenance gates'
     * shared observable (q108 batch upsert, q113 streaming upsert): a
@@ -1850,17 +1856,20 @@ object IndexStore {
 
   // ---- chroma collection.update: modify EXISTING identities only ----
 
-  /** Identities of `docs` already present in the layout at `path` —
-    * the chroma `collection.update` contract, distinct from upsert:
-    * an unknown id is silently skipped (chroma logs and ignores it),
-    * never inserted. The existence probe reads only (source, doc_id)
-    * — a column-pruned metadata-cheap scan at any corpus size. */
-  private def existingOnly(spark: SparkSession, docs: DataFrame,
-                           path: String): DataFrame = {
-    val existing = Relations.parquet(spark, path)
-      .select(col("source"), col("doc_id")).distinct()
-    docs.join(existing, Seq("source", "doc_id"), "left_semi")
-  }
+  /** `upsert` of the identities of `docs` already present in the
+    * layout at `path` — the chroma `collection.update` contract,
+    * distinct from upsert: an unknown id is silently skipped (chroma
+    * logs and ignores it), never inserted. The existence probe reads only (source, doc_id)
+    * — a column-pruned metadata-cheap scan at any corpus size. A
+    * layout whose every partition was deleted holds no identity, so
+    * the update is skipped without reading it. */
+  private def updateExisting(spark: SparkSession, docs: DataFrame, path: String)
+                            (upsert: DataFrame => Unit): Unit =
+    if (!emptied(spark, path)) {
+      val existing = Relations.parquet(spark, path)
+        .select(col("source"), col("doc_id")).distinct()
+      upsert(docs.join(existing, Seq("source", "doc_id"), "left_semi"))
+    }
 
   /** chroma `collection.update` on the source layout: [[upsertDocs]]
     * restricted to already-present (source, doc_id) identities. Same
@@ -1868,17 +1877,17 @@ object IndexStore {
     * identities is a no-op. */
   def updateDocs(spark: SparkSession, docs: DataFrame, path: String,
                  dim: Int = Embed.DefaultDim): Unit =
-    upsertDocs(spark, existingOnly(spark, docs, path), path, dim)
+    updateExisting(spark, docs, path)(upsertDocs(spark, _, path, dim))
 
   /** [[updateDocs]] for the IVF layout (via [[upsertIvf]]'s
     * touched-cell rewrite through the persisted quantizer). */
   def updateIvf(spark: SparkSession, docs: DataFrame, path: String): Unit =
-    upsertIvf(spark, existingOnly(spark, docs, path), path)
+    updateExisting(spark, docs, path)(upsertIvf(spark, _, path))
 
   /** [[updateDocs]] for the HNSW layout (via [[upsertHnsw]]'s
     * touched-shard graph rebuild). */
   def updateHnsw(spark: SparkSession, docs: DataFrame, path: String): Unit =
-    upsertHnsw(spark, existingOnly(spark, docs, path), path)
+    updateExisting(spark, docs, path)(upsertHnsw(spark, _, path))
 
   /** ANN search over the IVF-partitioned layout: probe the `probes`
     * nearest cells (the cell predicate resolves to partition

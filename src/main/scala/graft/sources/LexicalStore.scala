@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -134,6 +134,12 @@ object LexicalStore {
     case AnalyzerRaw => c
     case _           => regexp_replace(lower(c), FoldPattern, " ")
   }
+
+  /** `queryTerms` folded under the layout's analyzer, empty tokens
+    * dropped, deduplicated — the entry of every user-text search. */
+  private def analyzedTerms(spark: SparkSession, path: String,
+                            queryTerms: Seq[String]): Seq[String] =
+    foldQueryTerms(queryTerms, analyzerOf(spark, path)).filter(_.nonEmpty).distinct
 
   /** Driver-side fold of query terms — evaluates the SAME catalyst
     * Lower + RegExpReplace tree the build plan used (the [[bucketOf]]
@@ -470,15 +476,7 @@ object LexicalStore {
     // previous build's deletion dictionary (the r16 silent-drift
     // defect) or an obscure missing-path read through a stale memo.
     invalidateSymSpell(spark, path)
-    withDfLen(tf)
-      .withColumn("bucket", bucketCol(col("term")))
-      // one task per bucket -> one file per directory
-      .repartition(NumBuckets, col("bucket"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("bucket")
-      .parquet(path)
+    writeBuckets(withDfLen(tf), path, "static")
     // `_analyzer` is written FIRST among the sidecars (the static
     // postings overwrite above clears the whole path, so every
     // sidecar is gone here): a crash after any later sidecar write
@@ -517,12 +515,28 @@ object LexicalStore {
     // every postings rewrite (build/compact/upsert), so dictionary
     // and postings can't drift.
     awaitInOrder(Seq(
-      () => tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("len"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("len")).as("sum_len"))
+      () => statsRow(tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("len")))
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/_stats"),
       () => tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/_vocab")))
   }
+
+  /** Postings rows bucket-partitioned under `dir` — one task, so one
+    * file, per bucket, sorted by (term, doc_id) — replacing the
+    * partitions `overwriteMode` names (static: all of them). */
+  private def writeBuckets(rows: DataFrame, dir: String, overwriteMode: String): Unit =
+    rows.withColumn("bucket", bucketCol(col("term")))
+      .repartition(NumBuckets, col("bucket"))
+      .sortWithinPartitions(col("term"), col("doc_id"))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", overwriteMode)
+      .partitionBy("bucket")
+      .parquet(dir)
+
+  /** The one-row (n_docs, sum_len) stats of a (doc_id, len) frame;
+    * `sum_len` is 0, not null, when there are no documents. */
+  private def statsRow(lens: DataFrame): DataFrame =
+    lens.agg(count(lit(1)).as("n_docs"), coalesce(sum(col("len")), lit(0L)).as("sum_len"))
 
   // ---- maintenance: tombstone delete, compact, upsert ---------------
   //
@@ -587,8 +601,7 @@ object LexicalStore {
     * from. */
   private def survivorRows(spark: SparkSession, path: String,
                            cols: Seq[String]): DataFrame = {
-    val rows = Relations.parquet(spark, path).select(cols.map(col): _*)
-    tombstones(spark, path).fold(rows)(t => rows.join(t, Seq("doc_id"), "left_anti"))
+    live(spark, path, Relations.parquet(spark, path).select(cols.map(col): _*))
       .localCheckpoint()
   }
 
@@ -602,7 +615,8 @@ object LexicalStore {
     * the serial form's error reporting. Replaced ids drop from the
     * survivors, `write` rewrites the layout from the union (already
     * materialized, so overwriting the layout it came from is safe), and
-    * the tombstones clear. A compact is the core with no adds. */
+    * the tombstones clear. A compact is the core with no adds; on a
+    * layout with no partition left it only clears the tombstones. */
   private def rewriteLexical(spark: SparkSession, path: String, cols: Seq[String],
                              adds: String => Option[(DataFrame, DataFrame)],
                              write: (DataFrame, String) => Unit): Unit = {
@@ -611,14 +625,15 @@ object LexicalStore {
     // upsert still inserts into it (a missing path still fails on the read)
     lazy val emptied = Relations.partitionDirs(spark, path).exists(_.isEmpty)
     val out = adds(analyzer) match {
-      case None => survivorRows(spark, path, cols)
-      case Some((rows, _)) if emptied => rows.localCheckpoint()
+      case None if emptied => None
+      case None => Some(survivorRows(spark, path, cols))
+      case Some((rows, _)) if emptied => Some(rows.localCheckpoint())
       case Some((rows, ids)) =>
         val Seq(fresh, kept) = awaitInOrder(Seq(
           () => rows.localCheckpoint(), () => survivorRows(spark, path, cols)))
-        kept.join(ids, Seq("doc_id"), "left_anti").union(fresh)
+        Some(kept.join(ids, Seq("doc_id"), "left_anti").union(fresh))
     }
-    write(out, analyzer)
+    out.foreach(write(_, analyzer))
     clearTombstones(spark, path)
   }
 
@@ -763,13 +778,7 @@ object LexicalStore {
     // same delete-first invalidation as the denormalized rewrites
     invalidateSymSpell(spark, path)
     val rows = segmentRows(docs, idCol, textCol, analyzer).localCheckpoint()
-    rows.withColumn("bucket", bucketCol(col("term")))
-      .repartition(NumBuckets, col("bucket"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic") // only this seg's dirs
-      .partitionBy("bucket")
-      .parquet(s"$path/seg=$seg")
+    writeBuckets(rows, s"$path/seg=$seg", "dynamic") // only this seg's dirs
     // first segment: the analyzer sidecar lands BEFORE `_segstats`
     // (the writePostings ordering argument): a crash between the two
     // leaves a layout without its `_segstats` discriminator, whose
@@ -784,8 +793,7 @@ object LexicalStore {
     // the append-only contract holds (query-time merge sums disjoint
     // dfs — the searchTopKSegmented gdf argument).
     awaitInOrder(Seq(
-      () => rows.select(col("doc_id"), col("len")).distinct()
-        .agg(count(lit(1)).as("n_docs"), sum(col("len")).as("sum_len"))
+      () => statsRow(rows.select(col("doc_id"), col("len")).distinct())
         .select(lit(seg).as("seg"), col("n_docs"), col("sum_len"))
         .coalesce(1).write.mode(SaveMode.Append).parquet(s"$path/_segstats"),
       () => rows.select(col("term"), col("df")).distinct()
@@ -822,14 +830,7 @@ object LexicalStore {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
-    val rows = withDfLen(tf)
-    rows.withColumn("bucket", bucketCol(col("term")))
-      .repartition(NumBuckets, col("bucket"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(s"$path/seg=0")
+    writeBuckets(withDfLen(tf), s"$path/seg=0", "dynamic")
     // analyzer sidecar FIRST among the sidecars (the writePostings
     // ordering argument): any later crash leaves `_segstats` missing
     // — the segmented discriminator — so the next read fails loudly
@@ -840,9 +841,7 @@ object LexicalStore {
     // global df comes straight from tf (rows would re-run the df/len
     // joins a second time)
     awaitInOrder(Seq(
-      () => tf.select(col("doc_id"), col("tf"))
-        .groupBy(col("doc_id")).agg(sum(col("tf")).as("len"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("len")).as("sum_len"))
+      () => statsRow(tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("len")))
         .select(lit(0).as("seg"), col("n_docs"), col("sum_len"))
         .coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$path/_segstats"),
@@ -852,13 +851,11 @@ object LexicalStore {
     ()
   }
 
-  /** Segmented top-`k`: postings pruned to the query terms' buckets
-    * ACROSS all segments, per-term global df merged from the pruned
-    * rows (a |query-terms|-row aggregate joined back — AQE
-    * broadcasts it), global stats summed from the `_segstats` rows,
-    * then the same quantized BM25 and rank as the denormalized path.
-    * Scores equal a from-scratch single-layout build over the union
-    * corpus (q157 pins it hash-exact). */
+  /** Segmented top-`k`: the denormalized search with global df merged
+    * from the pruned rows and global stats summed from `_segstats`
+    * ([[contributionsSegmented]]). Scores equal a from-scratch
+    * single-layout build over the union corpus (q157 pins it
+    * hash-exact). */
   def searchTopKSegmented(spark: SparkSession, path: String,
                           queryTerms: Seq[String], k: Int = 10): DataFrame =
     rankAnalyzedSegmented(spark, path,
@@ -875,52 +872,38 @@ object LexicalStore {
         terms0.filter(_.nonEmpty).distinct)
       .groupBy(col("doc_id"), col("seg"))
       .agg(sum(col("micros")).as("lex_micros"))
-    scored.orderBy(col("lex_micros").desc, col("doc_id")).limit(k)
-      .withColumn("lex_rank", row_number().over(
-        Window.orderBy(col("lex_micros").desc, col("doc_id"))))
-      .select(col("lex_rank"), col("doc_id"), col("seg"), col("lex_micros"))
+    rankTop(scored, desc("lex_micros"), k, "lex_rank",
+      "lex_rank", "doc_id", "seg", "lex_micros")
   }
 
   /** [[contributions]]' segmented sibling: the per-(doc, term)
     * frame [[rankAnalyzedSegmented]] aggregates and
-    * [[explainScore]] decomposes — ONE definition, so the segmented
-    * explanation is the merged-statistics scorer's own code path.
-    * Global df merges from the PRE-candidate-filter pruned rows
-    * (per-segment dfs sum — disjoint doc sets): a candidate filter
-    * narrows whose scores are explained, never the corpus
-    * statistics they are computed from. Returns (doc_id, seg, term,
-    * tf, df, len, micros) with df already the MERGED global value. */
+    * [[explainScore]] decomposes. Returns (doc_id, seg, term, tf, df,
+    * len, micros) with df already the MERGED global value. */
   private def contributionsSegmented(spark: SparkSession, path: String,
                                      terms: Seq[String],
                                      allow: Option[DataFrame] = None)
       : DataFrame = {
     require(terms.nonEmpty, "lexical search needs at least one term")
-    val buckets = terms.map(bucketOf).distinct
+    val post = prunedPostings(spark, path, terms)
     // summed driver-side from the collectCached segment-stats rows —
-    // per-segment longs, same Long addition the old 1-row aggregate
-    // performed distributively (order-free), minus its per-query scan
-    // + broadcast jobs
+    // per-segment longs, order-free, no per-query scan
     val segRows = Relations.collectCached(spark, s"$path/_segstats")
-    val nDocs = lit(segRows.map(r => r.getLong(r.fieldIndex("n_docs"))).sum)
-    val sumLen = lit(segRows.map(r => r.getLong(r.fieldIndex("sum_len"))).sum)
-    val post = Relations.parquet(spark, path)
-      .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*) &&
-        col("term").isin(terms: _*))
+    val stats = (lit(segRows.map(r => r.getLong(r.fieldIndex("n_docs"))).sum),
+      lit(segRows.map(r => r.getLong(r.fieldIndex("sum_len"))).sum))
     // global df: per-segment dfs are disjoint doc sets, so they sum;
     // one distinct (seg, term, df) row per segment contributes once.
-    // Computed BEFORE the tombstone mask — docFreq counts deleted
-    // docs until segments merge, Lucene's own semantics and this
-    // layout's settled `_vocab` convention
+    // Computed BEFORE the allow filter and the tombstone mask — a
+    // candidate filter narrows whose scores are explained, never the
+    // corpus statistics, and docFreq counts deleted docs until
+    // segments merge (Lucene's semantics, this layout's `_vocab`
+    // convention)
     val gdf = post.select(col("seg"), col("term"), col("df")).distinct()
       .groupBy(col("term")).agg(sum(col("df")).as("gdf"))
-    post.transform(p => allowFilter(p, allow))
-      .transform(p => tombstones(spark, path)
-        .fold(p)(t => p.join(t, Seq("doc_id"), "left_anti")))
+    live(spark, path, allowFilter(post, allow))
       .join(broadcast(gdf), "term")
       .select(col("doc_id"), col("seg"), col("term"), col("tf"),
-        col("gdf").as("df"), col("len"),
-        bm25Micros(col("tf"), col("gdf"), col("len"),
-          nDocs, sumLen).as("micros"))
+        col("gdf").as("df"), col("len"), bm25(stats, col("gdf")).as("micros"))
   }
 
   // key includes the LAYOUT KIND: the scoring and positional builders
@@ -969,36 +952,63 @@ object LexicalStore {
     dropSymspellMemos(path)
   }
 
-  /** Lexical top-`k`: (doc_id, lex_rank, lex_micros) for the documents
-    * best matching `queryTerms` under the quantized BM25 above.
-    * Reads ONLY the buckets of the query's terms (partition pruning +
-    * a pushed `term IN (...)` row-group filter); the TakeOrdered heap
-    * and every exchange after the pruned scan carry (doc_id, micros)
-    * pairs. `where` optionally filters candidate doc_ids BENEATH the
-    * rank (the V9 `where=` composition — a predicate over the posting
-    * columns, i.e. doc_id). */
-  /** UNRANKED exact BM25 scores of every matching doc — the shared
-    * scan-and-aggregate [[searchTopKLexical]] ranks and
-    * [[searchTopKFields]] weight-sums across field layouts (a doc in
-    * the fused top-k need not be in any single field's top-k, so the
-    * field scorer must not truncate). Same pruned read, same
-    * (doc_id, micros) exchanges. */
-  /** The per-(doc, term) contribution frame every denormalized-layout
-    * scorer aggregates: bucket-pruned, term-IN-pushed, allow-filtered,
-    * tombstone-masked posting rows with the 1-row stats broadcast in
-    * and [[bm25Micros]] evaluated — (doc_id, term, tf, df, len,
-    * micros). ONE definition feeds [[scoreLexical]]'s sum AND
-    * [[explainScore]]'s decomposition, so the explanation is the
-    * score's own code path, not a parallel reimplementation. */
+  // ---- search pipeline -------------------------------------------------
+  //
+  // Every search, explain and batch verb below composes four stages,
+  // each defined once (README "Lexical search pipeline"):
+  //   1. postings — [[prunedPostings]], then `where`, the allowlist and
+  //      the tombstone mask ([[postings]], [[live]]);
+  //   2. score — [[bm25]] over the stats literals, and
+  //      [[weightedMicros]] for every weighted or boosted sum;
+  //   3. phrase slots — [[positionalSlots]], the rarest-first
+  //      [[slotJoin]] and the adjacency or span predicate
+  //      ([[phraseFrame]]);
+  //   4. rank — [[rankTop]] for one query, [[rankPerQuery]] for a
+  //      batch, both numbering through [[numbered]].
+
+  /** Stage 1, the read: the postings of `terms` pruned to their
+    * buckets' directories, with a pushed `term IN (...)` row-group
+    * filter. A layout with no postings left (every document deleted
+    * and compacted away) fails here by name, from directory listings,
+    * before any job. */
+  private def prunedPostings(spark: SparkSession, path: String,
+                             terms: Seq[String]): DataFrame = {
+    require(!holdsNoPostings(spark, path),
+      s"lexical layout at $path holds no documents: every document was " +
+        "deleted and compacted away")
+    val ts = terms.distinct
+    Relations.parquet(spark, path)
+      .filter(col("bucket").isin(ts.map(bucketOf).distinct.map(Integer.valueOf): _*) &&
+        col("term").isin(ts: _*))
+  }
+
+  /** True when the layout at `path` has no partition directory left,
+    * or, segmented, none left under any `seg=` directory. */
+  private def holdsNoPostings(spark: SparkSession, path: String): Boolean =
+    Relations.partitionDirs(spark, path).exists(_.forall(d =>
+      d.getPath.getName.startsWith("seg=") && holdsNoPostings(spark, d.getPath.toString)))
+
+  /** `rows` minus the tombstoned doc ids — the one tombstone mask of
+    * every search read and of the maintenance survivors. */
+  private def live(spark: SparkSession, path: String, rows: DataFrame): DataFrame =
+    tombstones(spark, path).fold(rows)(t => rows.join(t, Seq("doc_id"), "left_anti"))
+
+  /** Stage 1: the pruned read, then the optional `where` (a predicate
+    * over the posting columns), the optional id allowlist and the
+    * tombstone mask — all beneath the rank, so a top-k is exact over
+    * the filtered set. */
+  private def postings(spark: SparkSession, path: String, terms: Seq[String],
+                       where: Option[Column] = None,
+                       allow: Option[DataFrame] = None): DataFrame = {
+    val pruned = prunedPostings(spark, path, terms)
+    live(spark, path, allowFilter(where.fold(pruned)(pruned.filter), allow))
+  }
+
   /** The `_stats` sidecar's single (n_docs, sum_len) row as driver
-    * literals. Every denormalized-layout scorer used to crossJoin the
-    * broadcast 1-row frame into its plan — a sidecar scan plus a
-    * broadcast-exchange job PER QUERY for two constants the driver
-    * can hold (guide §2.4); the collectCached read pays one one-task
-    * job per layout VERSION instead, invalidated by the sidecar's
-    * listing signature on every rewrite. Missing `_stats` still fails
-    * loudly (the crash-window contract) — the uncached fallback read
-    * throws the same missing-path error at the same verb-call point. */
+    * literals: a collectCached read pays one one-task job per layout
+    * VERSION instead of a sidecar scan plus broadcast per query
+    * (guide §2.4). Missing `_stats` still fails loudly (the
+    * crash-window contract). */
   private def statsLits(spark: SparkSession, path: String)
       : (Column, Column) = {
     val r = Relations.collectCached(spark, s"$path/_stats").head
@@ -1006,26 +1016,62 @@ object LexicalStore {
       lit(r.getLong(r.fieldIndex("sum_len"))))
   }
 
+  /** Stage 2: [[bm25Micros]] of a posting row's `tf`, `df` and `len`
+    * under the layout-wide (n_docs, sum_len) `stats`. */
+  private def bm25(stats: (Column, Column), df: Column = col("df")): Column =
+    bm25Micros(col("tf"), df, col("len"), stats._1, stats._2)
+
+  /** Stage 2, weights: the exact ⌊w·m / 1e6⌋ of SQL operands `w` (a
+    * weight in micros) and `m` (micros). With w ≤ 1e6 and m ≤ 2.2e16
+    * (see [[ScoreScale]]), w·m can pass 2^63, so both engines compute
+    * the floor by the split w·(m div 1e6) + (w·(m mod 1e6)) div 1e6 —
+    * each part ≤ 2.2e16, all non-negative, identical integer ops
+    * everywhere. */
+  private def weightedMicros(w: String, m: String): Column =
+    expr(s"$w * ($m div 1000000L) + ($w * ($m % 1000000L)) div 1000000L")
+
+  /** Stage 4: `rankCol` numbers rows 1.. in `w`'s order. */
+  private def numbered(df: DataFrame, w: WindowSpec, rankCol: String): DataFrame =
+    df.withColumn(rankCol, row_number().over(w))
+
+  /** Stage 4, one query: the top `k` of `scored` in `order`, numbered
+    * as `rankCol`, projected to `out`. */
+  private def rankTop(scored: DataFrame, order: Seq[Column], k: Int,
+                      rankCol: String, out: String*): DataFrame =
+    numbered(scored.orderBy(order: _*).limit(k), Window.orderBy(order: _*), rankCol)
+      .select(out.map(col): _*)
+
+  /** Stage 4, a batch: [[rankTop]] per `query_id`. */
+  private def rankPerQuery(scored: DataFrame, order: Seq[Column], k: Int,
+                           rankCol: String, out: String*): DataFrame =
+    numbered(scored, Window.partitionBy(col("query_id")).orderBy(order: _*), rankCol)
+      .filter(col(rankCol) <= k)
+      .select(out.map(col): _*)
+
+  /** Score DESC, doc_id ASC — the total order of every scored rank. */
+  private def desc(score: String): Seq[Column] = Seq(col(score).desc, col("doc_id"))
+
+  /** Distance ASC, doc_id ASC — the positional ranks' order. */
+  private def asc(dist: String): Seq[Column] = Seq(col(dist).asc, col("doc_id"))
+
+  /** The per-(doc, term) contribution frame every denormalized-layout
+    * scorer aggregates — (doc_id, term, tf, df, len, micros). ONE
+    * definition feeds [[scoreLexical]]'s sum AND [[explainScore]]'s
+    * decomposition, so the explanation is the score's own code path. */
   private def contributions(spark: SparkSession, path: String,
                             terms: Seq[String],
                             where: Option[Column] = None,
                             allow: Option[DataFrame] = None): DataFrame = {
     require(terms.nonEmpty, "lexical search needs at least one term")
-    val buckets = terms.map(bucketOf).distinct
-    val (nDocs, sumLen) = statsLits(spark, path)
-    val post = Relations.parquet(spark, path)
-      .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*) &&
-        col("term").isin(terms: _*))
-      .filter(where.getOrElse(lit(true)))
-      .transform(p => allowFilter(p, allow))
-      .transform(p => tombstones(spark, path)
-        .fold(p)(t => p.join(t, Seq("doc_id"), "left_anti")))
-    post
+    postings(spark, path, terms, where, allow)
       .select(col("doc_id"), col("term"), col("tf"), col("df"), col("len"),
-        bm25Micros(col("tf"), col("df"), col("len"),
-          nDocs, sumLen).as("micros"))
+        bm25(statsLits(spark, path)).as("micros"))
   }
 
+  /** UNRANKED exact BM25 scores (doc_id, lex_micros) of every matching
+    * doc — what [[searchTopKLexical]] ranks and [[searchTopKFields]]
+    * weight-sums across field layouts (a doc in the fused top-k need
+    * not be in any single field's top-k, so it must not truncate). */
   private def scoreLexical(spark: SparkSession, path: String,
                            terms: Seq[String],
                            where: Option[Column] = None,
@@ -1052,13 +1098,11 @@ object LexicalStore {
     * ([[contributions]] / [[contributionsSegmented]]), so the
     * explanation is the score's code path, not a parallel
     * reimplementation; the segmented frame's df is the merged
-    * global value the scorer used. Same bucket-pruned read as the
-    * rank path with the candidate spine filtered beneath it;
-    * ≤ |cands|·|terms| rows out, ordered (doc_id, term). */
+    * global value the scorer used. ≤ |cands|·|terms| rows out,
+    * ordered (doc_id, term). */
   def explainScore(spark: SparkSession, path: String,
                    queryTerms: Seq[String], cands: DataFrame): DataFrame = {
-    val terms = foldQueryTerms(queryTerms, analyzerOf(spark, path))
-      .filter(_.nonEmpty).distinct
+    val terms = analyzedTerms(spark, path, queryTerms)
     val contrib =
       if (isSegmented(spark, path))
         contributionsSegmented(spark, path, terms, Some(cands))
@@ -1073,9 +1117,8 @@ object LexicalStore {
     * `field` is the 0-based position in `fields` (the caller's own
     * ordering); rows carry the UNWEIGHTED micros plus the field's
     * weight, because the field scorer applies its weight to the
-    * per-(field, doc) SUBTOTAL through the overflow-safe integer
-    * split `w·(S div 1e6) + (w·(S mod 1e6)) div 1e6` — a floor that
-    * does NOT distribute over terms, so per-term weighted rows
+    * per-(field, doc) SUBTOTAL S through [[weightedMicros]] — a
+    * floor that does NOT distribute over terms, so per-term weighted rows
     * could not sum exactly. The recombination IS exact and pinned
     * (LexicalSpec): group by (field, doc), S = Σ micros, apply the
     * split, sum over fields == field_micros to the last digit. A
@@ -1085,20 +1128,12 @@ object LexicalStore {
                          fields: Seq[(String, Long)],
                          queryTerms: Seq[String],
                          cands: DataFrame): DataFrame = {
-    require(fields.nonEmpty, "multi-field explain needs at least one field")
-    require(fields.forall(_._2 > 0), s"field weights must be positive")
     // fold per field FIRST (driver-side, no jobs): the all-fields-
     // empty require must fire BEFORE any page execution, and the
     // page-sized checkpoint below is only worth its materialization
     // job when >= 2 fields will actually re-read the page (r22,
     // ADVICE item)
-    val folded = fields.zipWithIndex.flatMap { case ((path, w), i) =>
-      val terms = foldQueryTerms(queryTerms, analyzerOf(spark, path))
-        .filter(_.nonEmpty).distinct
-      if (terms.isEmpty) None else Some((path, w, i, terms))
-    }
-    require(folded.nonEmpty,
-      s"query $queryTerms folds to nothing under every field's analyzer")
+    val folded = foldFields(spark, fields, queryTerms)
     // page-sized checkpoint: each field's contribution read gates on
     // `cands`, and a lazy search page handed in as cands would
     // otherwise re-execute once PER CONTRIBUTING FIELD (q229 ran its
@@ -1107,7 +1142,7 @@ object LexicalStore {
     val page =
       if (folded.sizeIs > 1 && !isMaterialized(cands)) cands.localCheckpoint()
       else cands
-    val perField = folded.map { case (path, w, i, terms) =>
+    val perField = folded.map { case ((path, w), i, terms) =>
       contributions(spark, path, terms, allow = Some(page))
         .select(lit(i).as("field"), lit(w).as("weight"), col("doc_id"),
           col("term"), col("tf"), col("df"), col("len"), col("micros"))
@@ -1116,6 +1151,12 @@ object LexicalStore {
       .orderBy(col("field"), col("doc_id"), col("term"))
   }
 
+  /** Lexical top-`k`: (doc_id, lex_rank, lex_micros) for the documents
+    * best matching `queryTerms` under the quantized BM25 above. Reads
+    * ONLY the buckets of the query's terms; the TakeOrdered heap and
+    * every exchange after the pruned scan carry (doc_id, micros)
+    * pairs. `where` (a predicate over the posting columns, i.e.
+    * doc_id) and `allow` filter candidates BENEATH the rank. */
   def searchTopKLexical(spark: SparkSession, path: String,
                         queryTerms: Seq[String], k: Int = 10,
                         where: Option[Column] = None,
@@ -1142,14 +1183,9 @@ object LexicalStore {
   private[graft] def rankAnalyzed(spark: SparkSession, path: String,
                                   terms: Seq[String], k: Int,
                                   where: Option[Column] = None,
-                                  allow: Option[DataFrame] = None): DataFrame = {
-    val scored = scoreLexical(spark, path,
-      terms.filter(_.nonEmpty).distinct, where, allow)
-    scored.orderBy(col("lex_micros").desc, col("doc_id")).limit(k)
-      .withColumn("lex_rank", row_number().over(
-        Window.orderBy(col("lex_micros").desc, col("doc_id"))))
-      .select(col("doc_id"), col("lex_rank"), col("lex_micros"))
-  }
+                                  allow: Option[DataFrame] = None): DataFrame =
+    rankTop(scoreLexical(spark, path, terms.filter(_.nonEmpty).distinct, where, allow),
+      desc("lex_micros"), k, "lex_rank", "doc_id", "lex_rank", "lex_micros")
 
   /** Keyset pagination — Lucene's IndexSearcher.searchAfter: the
     * page AFTER a (score, doc_id) cursor in the total order
@@ -1168,15 +1204,11 @@ object LexicalStore {
   def searchAfter(spark: SparkSession, path: String,
                   queryTerms: Seq[String], k: Int,
                   afterMicros: Long, afterDocId: Any): DataFrame = {
-    val terms = foldQueryTerms(queryTerms, analyzerOf(spark, path))
-      .filter(_.nonEmpty).distinct
+    val terms = analyzedTerms(spark, path, queryTerms)
     val scored = scoreLexical(spark, path, terms)
       .filter(col("lex_micros") < afterMicros ||
         (col("lex_micros") === afterMicros && col("doc_id") > lit(afterDocId)))
-    scored.orderBy(col("lex_micros").desc, col("doc_id")).limit(k)
-      .withColumn("page_rank", row_number().over(
-        Window.orderBy(col("lex_micros").desc, col("doc_id"))))
-      .select(col("doc_id"), col("page_rank"), col("lex_micros"))
+    rankTop(scored, desc("lex_micros"), k, "page_rank", "doc_id", "page_rank", "lex_micros")
   }
 
   /** Facet counts — Lucene faceting's contract over the MATCH SET
@@ -1192,8 +1224,7 @@ object LexicalStore {
   def facetCounts(spark: SparkSession, path: String,
                   queryTerms: Seq[String], facets: DataFrame,
                   facetCol: String = "facet"): DataFrame = {
-    val terms = foldQueryTerms(queryTerms, analyzerOf(spark, path))
-      .filter(_.nonEmpty).distinct
+    val terms = analyzedTerms(spark, path, queryTerms)
     val matched = scoreLexical(spark, path, terms).select(col("doc_id"))
     // distinct AFTER the join, over the match-set-sized output (the
     // matched spine is already duplicate-free out of the groupBy):
@@ -1218,39 +1249,39 @@ object LexicalStore {
     * most_fields family actually computes, and it composes from the
     * per-field layouts already built). `fields` = (layout path,
     * weight in micros; 1e6 = neutral, 2e6 = counts double). Each
-    * field scores UNRANKED over its own bucket-pruned read (its own
-    * analyzer, its own stats — a short title field normalizes against
-    * title lengths, exactly why the fields stay separate layouts); a
-    * doc's fused score is Σ ⌊w_f·micros_f/1e6⌋ via the overflow-safe
-    * split, missing fields contribute 0 (outer union — a title-only
-    * hit still surfaces). Exchanges carry (doc_id, micros) pairs
-    * only; the fan-in is |fields| k-free aggregates, never a corpus
-    * join. */
+    * field scores UNRANKED under its own analyzer and stats (a short
+    * title field normalizes against title lengths, exactly why the
+    * fields stay separate layouts); a doc's fused score is
+    * Σ [[weightedMicros]](w_f, micros_f), missing fields contribute 0
+    * (outer union — a title-only hit still surfaces). The fan-in is
+    * |fields| k-free aggregates, never a corpus join. */
   def searchTopKFields(spark: SparkSession,
                        fields: Seq[(String, Long)],
                        queryTerms: Seq[String], k: Int = 10): DataFrame = {
-    require(fields.nonEmpty, "multi-field search needs at least one field")
-    require(fields.forall(_._2 > 0), s"field weights must be positive")
-    // a field whose analyzer folds the whole query away contributes 0
-    // (it drops out of the union) — it must not fail the search while
-    // another field can still match the raw form
-    val perField = fields.flatMap { case (path, w) =>
-      val terms = foldQueryTerms(queryTerms, analyzerOf(spark, path))
-        .filter(_.nonEmpty).distinct
-      if (terms.isEmpty) None
-      else Some(scoreLexical(spark, path, terms)
-        .select(col("doc_id"),
-          expr(s"${w}L * (lex_micros div 1000000L) + " +
-            s"(${w}L * (lex_micros % 1000000L)) div 1000000L").as("wm")))
+    val perField = foldFields(spark, fields, queryTerms).map { case ((path, w), _, terms) =>
+      scoreLexical(spark, path, terms)
+        .select(col("doc_id"), weightedMicros(s"${w}L", "lex_micros").as("wm"))
     }
-    require(perField.nonEmpty,
-      s"query $queryTerms folds to nothing under every field's analyzer")
     val fused = perField.reduce(_.union(_))
       .groupBy(col("doc_id")).agg(sum(col("wm")).as("field_micros"))
-    fused.orderBy(col("field_micros").desc, col("doc_id")).limit(k)
-      .withColumn("field_rank", row_number().over(
-        Window.orderBy(col("field_micros").desc, col("doc_id"))))
-      .select(col("doc_id"), col("field_rank"), col("field_micros"))
+    rankTop(fused, desc("field_micros"), k, "field_rank",
+      "doc_id", "field_rank", "field_micros")
+  }
+
+  /** The (field, position, analyzed terms) of every field whose
+    * analyzer leaves some of `queryTerms` — a field that folds the
+    * whole query away contributes 0 and must not fail the search while
+    * another field can still match. Fails when no field is left. */
+  private def foldFields(spark: SparkSession, fields: Seq[(String, Long)],
+                         queryTerms: Seq[String]): Seq[((String, Long), Int, Seq[String])] = {
+    require(fields.nonEmpty, "multi-field search needs at least one field")
+    require(fields.forall(_._2 > 0), s"field weights must be positive")
+    val folded = fields.zipWithIndex.flatMap { case (f, i) =>
+      Some(analyzedTerms(spark, f._1, queryTerms)).filter(_.nonEmpty).map((f, i, _))
+    }
+    require(folded.nonEmpty,
+      s"query $queryTerms folds to nothing under every field's analyzer")
+    folded
   }
 
   /** Weight an expansion term carries in [[searchTopKPrf]]'s final
@@ -1281,25 +1312,43 @@ object LexicalStore {
     * both stages read |term buckets| directories, never the corpus.
     * Driver round-trips are metadata-bounded: fbDocs ids, the
     * feedback docs' distinct candidate terms, fbTerms weights — the
-    * "query rows" convention.
-    *
-    * Weighted scoring is overflow-safe without DECIMAL: with w ≤ 1e6
-    * and a contribution m ≤ 2.2e16 (see [[ScoreScale]]), w·m can pass
-    * 2^63, so both engines compute the EXACT floor((w·m)/1e6) by the
-    * split w·(m div 1e6) + (w·(m mod 1e6)) div 1e6 — each part ≤
-    * 2.2e16, all non-negative, identical integer ops everywhere. */
+    * "query rows" convention. Weights apply through the overflow-safe
+    * [[weightedMicros]] split. */
   def searchTopKPrf(spark: SparkSession, path: String, docs: DataFrame,
                     queryTerms: Seq[String], k: Int = 10, fbDocs: Int = 5,
                     fbTerms: Int = 5, idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = {
-    val scored = scoreWeightedTerms(spark, path,
-        prfWeights(spark, path, docs, queryTerms, fbDocs, fbTerms,
-          idCol, textCol))
-      .withColumnRenamed("micros", "prf_micros")
-    scored.orderBy(col("prf_micros").desc, col("doc_id")).limit(k)
-      .withColumn("prf_rank", row_number().over(
-        Window.orderBy(col("prf_micros").desc, col("doc_id"))))
-      .select(col("doc_id"), col("prf_rank"), col("prf_micros"))
+                    textCol: String = "text"): DataFrame =
+    rankPrf(spark, path, prfWeights(spark, path, docs, queryTerms, fbDocs, fbTerms,
+      idCol, textCol), k)
+
+  /** The weighted final pass of [[searchTopKPrf]], ranked. */
+  private def rankPrf(spark: SparkSession, path: String,
+                      weighted: Seq[(String, Long)], k: Int): DataFrame =
+    rankTop(scoreWeightedTerms(spark, path, weighted).withColumnRenamed("micros", "prf_micros"),
+      desc("prf_micros"), k, "prf_rank", "doc_id", "prf_rank", "prf_micros")
+
+  /** The indexed df of candidate `terms` — (term, df) from their
+    * pruned postings (unmasked: df counts deleted docs until a
+    * compact, like the stored value). */
+  private def indexedDf(spark: SparkSession, path: String,
+                        terms: Seq[String]): DataFrame =
+    prunedPostings(spark, path, terms)
+      .groupBy(col("term")).agg(max(col("df")).as("df"))
+
+  /** The `n` best of the (term, tf, len) rows' terms by the quantized
+    * Robertson selection value — per term, Σ [[bm25]] with the rows'
+    * tf/len and the INDEX's df and stats; ranked (value DESC, term
+    * ASC). The term selection of [[searchTopKPrf]] and
+    * [[moreLikeThis]]; the per-row micros are integers, so the sum is
+    * reduction-order-free. */
+  private def selectTerms(spark: SparkSession, path: String, rows: DataFrame,
+                          cands: Seq[String], n: Int): Seq[String] = {
+    val stats = statsLits(spark, path)
+    rows.join(indexedDf(spark, path, cands), "term")
+      .select(col("term"), bm25(stats).as("m"))
+      .groupBy(col("term")).agg(sum(col("m")).as("w"))
+      .orderBy(col("w").desc, col("term")).limit(n)
+      .collect().map(_.getString(0)).toSeq
   }
 
   /** The Rocchio rewrite itself — seed rank, feedback-doc mining,
@@ -1316,8 +1365,7 @@ object LexicalStore {
     // mined candidate terms live in the same folded vocabulary the
     // postings index (searchTopKLexical folds the seed query itself)
     val analyzer = analyzerOf(spark, path)
-    val qTerms = foldQueryTerms(queryTerms, analyzer)
-      .filter(_.nonEmpty).distinct
+    val qTerms = analyzedTerms(spark, path, queryTerms)
     // qTerms are folded HERE (the weighted final pass needs them in
     // indexed form) — the seed search takes them pre-analyzed, not
     // through searchTopKLexical's second fold (see [[rankAnalyzed]])
@@ -1338,33 +1386,16 @@ object LexicalStore {
       .map { case (id, rs) => id -> rs.map(_.getLong(2)).sum }
     val cands = fbRows.iterator.map(_.getString(1)).toSeq.distinct
       .filterNot(qTerms.contains)
-    val (nDocs, sumLen) = statsLits(spark, path)
     val expansion: Seq[String] =
       if (cands.isEmpty) Seq.empty
-      else {
-        val dfTbl = Relations.parquet(spark, path)
-          .filter(col("bucket").isin(
-              cands.map(bucketOf).distinct.map(Integer.valueOf): _*) &&
-            col("term").isin(cands: _*))
-          .groupBy(col("term")).agg(max(col("df")).as("df"))
-        // the same (doc, term, tf, len) row multiset the r20 join
-        // chain produced, now a broadcast-sized local relation; the
-        // per-row bm25 micros are integers, so the per-term sum is
-        // reduction-order-free
-        val fbLocal = spark.createDataFrame(
-            fbRows.toSeq.collect {
-              case r if !qTerms.contains(r.getString(1)) =>
-                (r.getString(1), r.getLong(2), lenOf(r.get(0)))
-            })
-          .toDF("term", "tf", "len")
-        fbLocal.join(dfTbl, "term")
-          .select(col("term"),
-            bm25Micros(col("tf"), col("df"), col("len"),
-              nDocs, sumLen).as("m"))
-          .groupBy(col("term")).agg(sum(col("m")).as("w"))
-          .orderBy(col("w").desc, col("term")).limit(fbTerms)
-          .collect().map(_.getString(0)).toSeq
-      }
+      // the feedback docs' (term, tf, len) rows as a broadcast-sized
+      // local relation
+      else selectTerms(spark, path,
+        spark.createDataFrame(fbRows.toSeq.collect {
+            case r if !qTerms.contains(r.getString(1)) =>
+              (r.getString(1), r.getLong(2), lenOf(r.get(0)))
+          }).toDF("term", "tf", "len"),
+        cands, fbTerms)
     qTerms.map((_, 1000000L)) ++ expansion.map((_, PrfExpandMicros))
   }
 
@@ -1399,11 +1430,8 @@ object LexicalStore {
                                     textCol: String = "text"): DataFrame = {
     val weighted = prfWeights(spark, path, docs, queryTerms, fbDocs,
       fbTerms, idCol, textCol)
-    val scored = scoreWeightedTerms(spark, path, weighted)
-      .withColumnRenamed("micros", "prf_micros")
-    val page = scored.orderBy(col("prf_micros").desc, col("doc_id")).limit(k)
-      .select(col("doc_id"))
-    explainScoreWeighted(spark, path, weighted, page)
+    explainScoreWeighted(spark, path, weighted,
+      rankPrf(spark, path, weighted, k).select(col("doc_id")))
   }
 
   /** Build a POSITIONAL postings layout: one row per (doc, term) with
@@ -1494,17 +1522,6 @@ object LexicalStore {
       writePositional(spark, _, path, _))
   }
 
-  /** Exact phrase search over a [[buildPositional]] layout: a doc
-    * matches where the phrase's terms occur at CONSECUTIVE offsets,
-    * `phrase_tf` counts the occurrences, ranking is (phrase_tf DESC,
-    * doc_id) — all integers. Each phrase slot reads only its term's
-    * bucket directory; the m−1 doc_id equi-joins intersect candidate
-    * sets that are bounded by the rarest term's document frequency
-    * (AQE broadcast-sizes them at runtime), and the adjacency test is
-    * a scan-side higher-order filter over the joined position arrays
-    * — offsets never explode into rows. A repeated-word phrase
-    * ("the the") works unchanged: both slots read the same rows and
-    * the filter counts overlapping runs. */
   /** Slot indices in ascending document frequency of their term
     * (ties by phrase position) — Lucene's conjunction ordering: the
     * FIRST intersection should be the rarest-vs-next-rarest pair, so
@@ -1520,19 +1537,14 @@ object LexicalStore {
                                    df: Map[String, Long]): Seq[Int] =
     terms.indices.sortBy(i => (df.getOrElse(terms(i), 0L), i))
 
-  /** The bucket-pruned, tombstone-masked positional read for a term
-    * set, plus per-term df from those same rows — one tiny aggregate
-    * (|terms| rows to the driver) that buys the rarest-first join
-    * order in [[searchPhrase]]/[[searchSpanNear]]. */
+  /** Stage 3: one slot `p<i>` (doc_id, positions) per phrase term
+    * from the positional postings, plus per-term df from those same
+    * rows — one tiny aggregate (|terms| rows to the driver) that buys
+    * the rarest-first join order. */
   private def positionalSlots(spark: SparkSession, path: String,
                               terms: Seq[String])
       : (Seq[DataFrame], Map[String, Long]) = {
-    val post = Relations.parquet(spark, path)
-      .filter(col("bucket").isin(
-          terms.distinct.map(bucketOf).distinct.map(Integer.valueOf): _*) &&
-        col("term").isin(terms.distinct: _*))
-      .transform(p => tombstones(spark, path)
-        .fold(p)(t => p.join(t, Seq("doc_id"), "left_anti")))
+    val post = postings(spark, path, terms)
     // df per query term from the already-pruned read (positions stay
     // unread: column pruning keeps this ids-free and positions-free).
     // With <= 2 distinct terms the rarest-first ordering cannot change
@@ -1551,50 +1563,67 @@ object LexicalStore {
     (slots, dfByTerm)
   }
 
-  /** The exact-adjacency phrase count over slots p0..pm — ONE
-    * definition for [[searchPhrase]] and [[phraseMatchSet]], so the
-    * parsed-query phrase gate provably matches the ranked verb. */
-  private def phraseTfExpr(n: Int): Column = {
-    val adjacency = (1 until n)
-      .map(i => s"array_contains(p$i, x + $i)").mkString(" AND ")
-    expr(s"size(filter(p0, x -> $adjacency))")
+  /** Stage 3: the slots of `terms` intersected on doc_id, rarest
+    * first; the predicates reference slots by PHRASE position
+    * (p0..pm), so join order is free. */
+  private def slotJoin(spark: SparkSession, path: String,
+                       terms: Seq[String]): DataFrame = {
+    val (slots, dfByTerm) = positionalSlots(spark, path, terms)
+    slotOrderByDf(terms, dfByTerm).map(slots).reduce((a, b) => a.join(b, "doc_id"))
   }
 
-  /** The minimum ordered-span gap over slots p0..pm — ONE definition
-    * for [[searchSpanNear]] and [[phraseMatchSet]] (see
-    * searchSpanNear's Scaladoc for the greedy-chain argument). */
-  private def spanGapExpr(n: Int): Column = {
-    val chainEnd = (1 until n).foldLeft("x0") { (prev, i) =>
-      s"array_min(filter(p$i, y$i -> y$i > $prev))"
+  /** Stage 3: the docs matching `terms` as a phrase — (doc_id,
+    * phrase_tf), the count of exact-adjacency runs, for `slop` None;
+    * (doc_id, span_gap), the minimum ordered-span gap, for Some(slop)
+    * (see [[searchSpanNear]] for the greedy-chain argument). ONE
+    * definition for [[searchPhrase]], [[searchSpanNear]] and
+    * [[phraseMatchSet]], so the parsed-query phrase gate provably
+    * matches the ranked verbs. */
+  private def phraseFrame(spark: SparkSession, path: String, terms: Seq[String],
+                          slop: Option[Int]): DataFrame = {
+    val n = terms.size
+    val joined = slotJoin(spark, path, terms)
+    slop match {
+      case None =>
+        val adjacency = (1 until n)
+          .map(i => s"array_contains(p$i, x + $i)").mkString(" AND ")
+        joined.select(col("doc_id"), expr(s"size(filter(p0, x -> $adjacency))").as("phrase_tf"))
+          .filter(col("phrase_tf") > 0)
+      case Some(maxGap) =>
+        val chainEnd = (1 until n).foldLeft("x0") { (prev, i) =>
+          s"array_min(filter(p$i, y$i -> y$i > $prev))"
+        }
+        joined.select(col("doc_id"),
+            expr(s"array_min(transform(p0, x0 -> $chainEnd - x0 - ${n - 1}))").as("span_gap"))
+          .filter(col("span_gap") <= maxGap)
     }
-    expr(s"array_min(transform(p0, x0 -> $chainEnd - x0 - ${n - 1}))")
   }
 
+  /** Exact phrase search over a [[buildPositional]] layout: a doc
+    * matches where the phrase's terms occur at CONSECUTIVE offsets,
+    * `phrase_tf` counts the occurrences, ranking is (phrase_tf DESC,
+    * doc_id) — all integers. Each phrase slot reads only its term's
+    * bucket directory; the m−1 doc_id equi-joins intersect candidate
+    * sets that are bounded by the rarest term's document frequency
+    * (AQE broadcast-sizes them at runtime), and the adjacency test is
+    * a scan-side higher-order filter over the joined position arrays
+    * — offsets never explode into rows. A repeated-word phrase
+    * ("the the") works unchanged: both slots read the same rows and
+    * the filter counts overlapping runs. */
   def searchPhrase(spark: SparkSession, path: String,
                    phrase: Seq[String], k: Int = 10): DataFrame = {
     val terms = foldQueryTerms(phrase.filter(_.nonEmpty),
       analyzerOf(spark, path))
     require(terms.size >= 2, "a phrase needs at least two terms")
-    val (slots, dfByTerm) = positionalSlots(spark, path, terms)
-    // rarest-first intersection; the adjacency filter references the
-    // slots by PHRASE position (p0..pm), so join order is free
-    val joined = slotOrderByDf(terms, dfByTerm).map(slots)
-      .reduce((a, b) => a.join(b, "doc_id"))
-    joined
-      .select(col("doc_id"), phraseTfExpr(terms.size).as("phrase_tf"))
-      .filter(col("phrase_tf") > 0)
-      .orderBy(col("phrase_tf").desc, col("doc_id")).limit(k)
-      .withColumn("phrase_rank", row_number().over(
-        Window.orderBy(col("phrase_tf").desc, col("doc_id"))))
-      .select(col("doc_id"), col("phrase_rank"), col("phrase_tf"))
+    rankTop(phraseFrame(spark, path, terms, None), desc("phrase_tf"), k,
+      "phrase_rank", "doc_id", "phrase_rank", "phrase_tf")
   }
 
   /** Pairwise proximity search — the NEAR/slop operator, the other
     * positional query [[buildPositional]] unlocks: docs where `a` and
     * `b` occur within `slop` tokens of each other IN ANY ORDER,
     * scored by the minimum absolute offset distance (1 = adjacent
-    * somewhere, in either order). Same bucket-pruned read as
-    * [[searchPhrase]]; the distance is a scan-side nested
+    * somewhere, in either order). The distance is a scan-side nested
     * higher-order fold over the two position arrays — O(tf_a · tf_b)
     * per doc on in-row arrays, no row explosion, nothing pairwise in
     * the corpus. Ranking (min_dist ASC, doc_id) is all integers. */
@@ -1611,25 +1640,12 @@ object LexicalStore {
     require(a.nonEmpty && b.nonEmpty && a != b,
       "NEAR takes two distinct non-empty terms")
     require(slop >= 1, s"slop must be >= 1, got $slop")
-    val post = Relations.parquet(spark, path)
-      .filter(col("bucket").isin(
-          Seq(a, b).map(bucketOf).distinct.map(Integer.valueOf): _*) &&
-        col("term").isin(a, b))
-      .transform(p => tombstones(spark, path)
-        .fold(p)(t => p.join(t, Seq("doc_id"), "left_anti")))
-    val pa = post.filter(col("term") === a)
-      .select(col("doc_id"), col("positions").as("pa"))
-    val pb = post.filter(col("term") === b)
-      .select(col("doc_id"), col("positions").as("pb"))
-    pa.join(pb, "doc_id")
+    val near = slotJoin(spark, path, Seq(a, b))
       .select(col("doc_id"), expr(
-        "array_min(transform(pa, x -> array_min(transform(pb, y -> abs(x - y)))))")
+        "array_min(transform(p0, x -> array_min(transform(p1, y -> abs(x - y)))))")
         .as("min_dist"))
       .filter(col("min_dist") <= slop)
-      .orderBy(col("min_dist").asc, col("doc_id")).limit(k)
-      .withColumn("near_rank", row_number().over(
-        Window.orderBy(col("min_dist").asc, col("doc_id"))))
-      .select(col("doc_id"), col("near_rank"), col("min_dist"))
+    rankTop(near, asc("min_dist"), k, "near_rank", "doc_id", "near_rank", "min_dist")
   }
 
   /** ORDERED sloppy span search — Lucene SpanNearQuery's
@@ -1650,8 +1666,7 @@ object LexicalStore {
     * the min over anchors is the doc's true minimum gap, and a
     * missing link folds to NULL which `array_min` skips and the
     * slop filter drops. O(m · Σ|p_i|) per doc over in-row arrays —
-    * no row explosion, nothing pairwise. Same bucket-pruned read
-    * and rarest-first doc_id intersection as [[searchPhrase]]. */
+    * no row explosion, nothing pairwise. */
   def searchSpanNear(spark: SparkSession, path: String,
                      span: Seq[String], slop: Int,
                      k: Int = 10): DataFrame = {
@@ -1659,27 +1674,18 @@ object LexicalStore {
       analyzerOf(spark, path))
     require(terms.size >= 2, "a span query needs at least two terms")
     require(slop >= 0, s"slop must be >= 0, got $slop")
-    val (slots, dfByTerm) = positionalSlots(spark, path, terms)
-    val joined = slotOrderByDf(terms, dfByTerm).map(slots)
-      .reduce((a, b) => a.join(b, "doc_id"))
-    joined
-      .select(col("doc_id"), spanGapExpr(terms.size).as("span_gap"))
-      .filter(col("span_gap") <= slop)
-      .orderBy(col("span_gap").asc, col("doc_id")).limit(k)
-      .withColumn("span_rank", row_number().over(
-        Window.orderBy(col("span_gap").asc, col("doc_id"))))
-      .select(col("doc_id"), col("span_rank"), col("span_gap"))
+    rankTop(phraseFrame(spark, path, terms, Some(slop)), asc("span_gap"), k,
+      "span_rank", "doc_id", "span_rank", "span_gap")
   }
 
   /** Boolean query — Lucene's BooleanQuery shape over the scoring
     * layout: candidates must contain EVERY `must` term, no `mustNot`
     * term, and rank by summed [[bm25Micros]] over the must+should
     * terms (a should term matched adds score; a must term both gates
-    * and scores — the standard semantics). One bucket-pruned read
-    * serves all three clauses; the must gate is a (doc_id,
+    * and scores — the standard semantics). One postings read serves
+    * all three clauses; the must gate is a (doc_id,
     * distinct-term-count) partial agg equal-to-|must| filter, the
-    * mustNot gate an anti-join, both ids-only. Tombstoned docs never
-    * surface, like every search verb on this layout. */
+    * mustNot gate an anti-join, both ids-only. */
   def searchBoolean(spark: SparkSession, path: String,
                     must: Seq[String], should: Seq[String] = Seq.empty,
                     mustNot: Seq[String] = Seq.empty,
@@ -1687,10 +1693,7 @@ object LexicalStore {
     val scored = booleanContributions(spark, path, must, should, mustNot,
         minShouldMatch)
       .groupBy(col("doc_id")).agg(sum(col("micros")).as("lex_micros"))
-    scored.orderBy(col("lex_micros").desc, col("doc_id")).limit(k)
-      .withColumn("bool_rank", row_number().over(
-        Window.orderBy(col("lex_micros").desc, col("doc_id"))))
-      .select(col("doc_id"), col("bool_rank"), col("lex_micros"))
+    rankTop(scored, desc("lex_micros"), k, "bool_rank", "doc_id", "bool_rank", "lex_micros")
   }
 
   /** The gated per-(doc, term) frame [[searchBoolean]] aggregates
@@ -1727,15 +1730,7 @@ object LexicalStore {
     require(notT.intersect(mustT ++ shouldT).isEmpty,
       s"terms cannot be both required/scored and excluded: " +
         notT.intersect(mustT ++ shouldT).mkString(", "))
-    val allTerms = (mustT ++ shouldT ++ notT).distinct
-    val (nDocs, sumLen) = statsLits(spark, path)
-    val post = Relations.parquet(spark, path)
-      .filter(col("bucket").isin(
-          allTerms.map(bucketOf).distinct.map(Integer.valueOf): _*) &&
-        col("term").isin(allTerms: _*))
-      .transform(p => allowFilter(p, allow))
-      .transform(p => tombstones(spark, path)
-        .fold(p)(t => p.join(t, Seq("doc_id"), "left_anti")))
+    val post = postings(spark, path, mustT ++ shouldT ++ notT, allow = allow)
       .localCheckpoint() // one pruned read feeds all three clauses
     val gated0 = post.filter(col("term").isin((mustT ++ shouldT): _*))
     val gated1 =
@@ -1763,8 +1758,7 @@ object LexicalStore {
         Seq("doc_id"), "left_anti")
     gated
       .select(col("doc_id"), col("term"), col("tf"), col("df"), col("len"),
-        bm25Micros(col("tf"), col("df"), col("len"),
-          nDocs, sumLen).as("micros"))
+        bm25(statsLits(spark, path)).as("micros"))
   }
 
   /** [[explainScore]] for [[searchBoolean]]: the per-(doc, term)
@@ -1784,16 +1778,6 @@ object LexicalStore {
         minShouldMatch, Some(cands))
       .orderBy(col("doc_id"), col("term"))
 
-  /** Prefix query — Lucene's PrefixQuery with its maxExpansions
-    * guard: expand `prefix` against the `_vocab` term dictionary
-    * (vocabulary-sized scan, the honest cost of a hash-bucketed
-    * layout that CANNOT prune a prefix), keep the `maxExpansions`
-    * highest-df matches (df DESC, term ASC — the rewrite cap that
-    * stops `a%` from becoming a thousand-term query), then score the
-    * expanded terms through [[searchTopKLexical]]'s bucket-pruned
-    * path. The expansion round-trips the driver (bounded by
-    * maxExpansions — the query-rows convention) because the final
-    * search prunes buckets from literal terms. */
   /** True when `path` holds the SEGMENTED layout (its `_segstats`
     * sidecar is the discriminator — the layouts share no other
     * structure a probe could race on). */
@@ -1801,6 +1785,14 @@ object LexicalStore {
     val p = new org.apache.hadoop.fs.Path(s"$path/_segstats")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
+
+  /** Fail fast, by name, before any dictionary walk: the weighted
+    * scorer reads the denormalized layout's `_stats`, which a
+    * segmented layout does not have. */
+  private def requireDenormalized(spark: SparkSession, path: String,
+                                  what: String): Unit =
+    require(!isSegmented(spark, path),
+      s"$what needs the denormalized layout's _stats — compactSegments($path) first")
 
   /** The layout's term dictionary as (term, df) with GLOBAL df:
     * `_vocab` verbatim for the denormalized layout; for the
@@ -1867,6 +1859,16 @@ object LexicalStore {
       rankAnalyzedSegmented(spark, path, terms, k)
     else rankAnalyzed(spark, path, terms, k)
 
+  /** Prefix query — Lucene's PrefixQuery with its maxExpansions
+    * guard: expand `prefix` against the `_vocab` term dictionary
+    * (vocabulary-sized scan, the honest cost of a hash-bucketed
+    * layout that CANNOT prune a prefix), keep the `maxExpansions`
+    * highest-df matches (df DESC, term ASC — the rewrite cap that
+    * stops `a%` from becoming a thousand-term query), then score the
+    * expanded terms through the layout's own rank path
+    * ([[routeScore]]). The expansion round-trips the driver (bounded
+    * by maxExpansions — the query-rows convention) because the final
+    * search prunes buckets from literal terms. */
   def searchPrefix(spark: SparkSession, path: String, prefix: String,
                    k: Int = 10, maxExpansions: Int = 16): DataFrame = {
     // the prefix folds like any query text (an analyzed layout's
@@ -1912,12 +1914,11 @@ object LexicalStore {
     * exclusive per side), keep the `maxExpansions` highest-df
     * matches (df DESC, term ASC — the same rewrite cap the prefix/
     * wildcard family carries), then score the expansions through
-    * the layout's own bucket-pruned rank path. Serves both layout
-    * families through [[routeScore]] (the dictionary is `_vocab` or
-    * the merged `_segvocab`). The vocabulary-sized dictionary walk
-    * is the honest cost of a hash-bucketed layout that cannot prune
-    * a lexicographic range; the search itself prunes buckets from
-    * the literal expansions. */
+    * the layout's own rank path. Serves both layout families through
+    * [[routeScore]] (the dictionary is `_vocab` or the merged
+    * `_segvocab`). The vocabulary-sized dictionary walk is the honest
+    * cost of a hash-bucketed layout that cannot prune a
+    * lexicographic range. */
   def searchTermRange(spark: SparkSession, path: String,
                       lo: String, hi: String,
                       inclLo: Boolean = true, inclHi: Boolean = true,
@@ -1934,17 +1935,16 @@ object LexicalStore {
     * window can always start at a term occurrence, so anchors are the
     * occurrence positions themselves, and the (count, start) argmax
     * is a scan-side fold over in-row arrays — O(m·occ²) per doc on
-    * query-term occurrences only, no row explosion. Reads the
-    * positional layout pruned to the query terms' buckets, semi-joins
-    * the candidate spine (broadcast-sized by construction), and never
-    * touches the corpus text — the caller renders the winning
+    * query-term occurrences only, no row explosion. The candidate
+    * spine (page-sized by construction) gates the positional read as
+    * a broadcast semi-join, and the verb never touches the corpus
+    * text — the caller renders the winning
     * [start, start+w) slice from its forward table. Returns
     * (doc_id, win_start, n_terms). */
   def snippetBest(spark: SparkSession, path: String,
                   queryTerms: Seq[String], cands: DataFrame,
                   w: Int): DataFrame = {
-    val terms = foldQueryTerms(queryTerms.filter(_.nonEmpty),
-      analyzerOf(spark, path)).distinct
+    val terms = analyzedTerms(spark, path, queryTerms)
     require(terms.nonEmpty, "snippets need at least one query term")
     require(w >= 1, s"window must be >= 1 token, got $w")
     // page-sized checkpoint: `cands` feeds both the postings gate and
@@ -1957,15 +1957,10 @@ object LexicalStore {
     val spine0 = cands.select(col("doc_id"))
     val page =
       if (isMaterialized(cands)) spine0 else spine0.localCheckpoint()
-    val post = Relations.parquet(spark, path)
-      .filter(col("bucket").isin(
-          terms.map(bucketOf).distinct.map(Integer.valueOf): _*) &&
-        col("term").isin(terms: _*))
-      .join(broadcast(page), Seq("doc_id"), "left_semi")
-      .transform(p => tombstones(spark, path)
-        .fold(p)(t => p.join(t, Seq("doc_id"), "left_anti")))
-    val spine = page
-    val slotted = terms.zipWithIndex.foldLeft(spine) { case (acc, (t, i)) =>
+    // the page gates the pruned read as a broadcast semi-join
+    val post = live(spark, path, prunedPostings(spark, path, terms)
+      .join(broadcast(page), Seq("doc_id"), "left_semi"))
+    val slotted = terms.zipWithIndex.foldLeft(page) { case (acc, (t, i)) =>
       acc.join(post.filter(col("term") === t)
           .select(col("doc_id"), col("positions").as(s"p$i")),
         Seq("doc_id"), "left_outer")
@@ -2005,19 +2000,15 @@ object LexicalStore {
                    maxDist: Int = 2, k: Int = 5): DataFrame = {
     require(maxDist >= 0 && k >= 1, s"bad maxDist=$maxDist / k=$k")
     val term = foldSuggestProbe(spark, path, term0)
-    rankTail(editCandidates(spark, path, term, maxDist, k))
+    rankSuggestions(distScored(termDictionary(spark, path), term, maxDist), k)
   }
 
   /** Weighted multi-term scoring shared by [[searchTopKPrf]],
     * [[searchFuzzy]] and every verb that rewrites to a
-    * term-with-weight OR (Lucene's rewritten BooleanQuery): one
-    * bucket-pruned, tombstone-masked read of the weighted terms'
-    * postings, each contribution scaled by its term's weight in
-    * micros via the overflow-safe split
-    * `w·(m div 1e6) + (w·(m mod 1e6)) div 1e6` (see
-    * [[searchTopKPrf]]'s Scaladoc for the 2^63 headroom argument),
-    * summed per doc. Returns (doc_id, micros) unranked — callers
-    * rank under their own column names. */
+    * term-with-weight OR (Lucene's rewritten BooleanQuery): each
+    * contribution scaled by its term's weight, summed per doc.
+    * Returns (doc_id, micros) unranked — callers rank under their own
+    * column names. */
   private def scoreWeightedTerms(spark: SparkSession, path: String,
                                  weighted: Seq[(String, Long)]): DataFrame =
     contributionsWeighted(spark, path, weighted)
@@ -2026,34 +2017,20 @@ object LexicalStore {
 
   /** The per-(doc, term) frame the weighted-OR scorer aggregates and
     * [[explainScoreWeighted]] decomposes ([[contributions]]' weighted
-    * sibling — one definition, so the explanation is the score's own
-    * code path): bucket-pruned, tombstone-masked posting rows with
-    * the weight table and 1-row stats broadcast in, the raw
-    * contribution `m` evaluated, and the weighted contribution `wm`
-    * computed by the scorer's own overflow-safe split — which, unlike
-    * the multi-field fusion's, applies PER POSTING ROW before the doc
-    * sum, so the weighted explain is distributive and sum-exact. */
+    * sibling): the weight table broadcast in, the raw contribution `m`
+    * and the weighted `wm` — which, unlike the multi-field fusion's,
+    * applies PER POSTING ROW before the doc sum, so the weighted
+    * explain is distributive and sum-exact. */
   private def contributionsWeighted(spark: SparkSession, path: String,
                                     weighted: Seq[(String, Long)],
                                     allow: Option[DataFrame] = None)
       : DataFrame = {
-    val (nDocs, sumLen) = statsLits(spark, path)
-    val terms = weighted.map(_._1)
-    val post = Relations.parquet(spark, path)
-      .filter(col("bucket").isin(
-          terms.map(bucketOf).distinct.map(Integer.valueOf): _*) &&
-        col("term").isin(terms: _*))
-      .transform(p => allowFilter(p, allow))
-      .transform(p => tombstones(spark, path)
-        .fold(p)(t => p.join(t, Seq("doc_id"), "left_anti")))
+    val post = postings(spark, path, weighted.map(_._1), allow = allow)
     val wdf = spark.createDataFrame(weighted).toDF("term", "w")
     post.join(broadcast(wdf), Seq("term"))
       .select(col("doc_id"), col("term"), col("tf"), col("df"),
-        col("len"), col("w"),
-        bm25Micros(col("tf"), col("df"), col("len"),
-          nDocs, sumLen).as("m"))
-      .withColumn("wm",
-        expr("w * (m div 1000000L) + (w * (m % 1000000L)) div 1000000L"))
+        col("len"), col("w"), bm25(statsLits(spark, path)).as("m"))
+      .withColumn("wm", weightedMicros("w", "m"))
   }
 
   /** [[explainScore]] for the weighted-OR family — every verb that
@@ -2089,9 +2066,7 @@ object LexicalStore {
                    maxExpansions: Int = 16): DataFrame = {
     require(maxDist >= 1 && maxExpansions >= 1,
       s"bad maxDist=$maxDist / maxExpansions=$maxExpansions")
-    require(!isSegmented(spark, path),
-      s"explainFuzzy needs the denormalized layout's _stats — " +
-        s"compactSegments($path) first")
+    requireDenormalized(spark, path, "explainFuzzy")
     val term = foldProbe(spark, path, term0, "fuzzy probe")
     explainScoreWeighted(spark, path,
       fuzzyWeights(
@@ -2253,8 +2228,8 @@ object LexicalStore {
     require(maxDist <= builtDist,
       s"index built for maxDist $builtDist, queried with $maxDist")
     val term = foldSuggestProbe(spark, path, term0)
-    rankTail(distRanked(symspellCollisions(spark, path, term, maxDist),
-      term, maxDist, k))
+    rankSuggestions(distScored(symspellCollisions(spark, path, term, maxDist),
+      term, maxDist), k)
   }
 
   /** The symmetric-delete candidate read: the probe's deletion
@@ -2293,29 +2268,31 @@ object LexicalStore {
         sys.error(s"'$term0' folds to nothing under this layout's analyzer"))
   }
 
-  /** (term, df) candidates → distance-verified, (dist ASC, df DESC,
-    * term ASC)-ranked, capped (term, df, dist) — the shared ranking
-    * of every edit-distance verb; the indexed path feeding its
-    * collision set here is what makes it provably byte-identical to
-    * the scan. */
-  private def distRanked(cands: DataFrame, term: String, maxDist: Int,
-                         limit: Int): DataFrame =
+  /** (term, df) candidates → distance-verified (term, df, dist) —
+    * the shared head of every edit-distance verb; the indexed path
+    * feeding its collision set here is what makes it provably
+    * byte-identical to the scan. */
+  private def distScored(cands: DataFrame, term: String, maxDist: Int): DataFrame =
     cands
       .select(col("term"), col("df"),
         levenshtein(col("term"), lit(term)).as("dist"))
       .filter(col("dist") <= maxDist)
-      .orderBy(col("dist").asc, col("df").desc, col("term")).limit(limit)
 
-  /** The suggestion output shape over an already-ranked candidate
-    * frame. */
-  private def rankTail(ranked: DataFrame): DataFrame =
-    ranked.withColumn("sugg_rank", row_number().over(
-        Window.orderBy(col("dist").asc, col("df").desc, col("term"))))
-      .select(col("sugg_rank"), col("term"), col("dist"), col("df"))
+  /** Dist ASC, df DESC, term ASC — the edit-distance verbs' order. */
+  private def byDist: Seq[Column] = Seq(col("dist").asc, col("df").desc, col("term"))
+
+  /** [[distScored]] candidates ranked by [[byDist]] and capped. */
+  private def distRanked(cands: DataFrame, term: String, maxDist: Int,
+                         limit: Int): DataFrame =
+    distScored(cands, term, maxDist).orderBy(byDist: _*).limit(limit)
+
+  /** The suggestion page: the top `k` by [[byDist]], numbered. */
+  private def rankSuggestions(scored: DataFrame, k: Int): DataFrame =
+    rankTop(scored, byDist, k, "sugg_rank", "sugg_rank", "term", "dist", "df")
 
   /** Dictionary candidates within `maxDist` edits of `term`, ranked
     * (distance ASC, df DESC, term ASC) and capped — the shared middle
-    * of [[suggestTerms]] and [[searchFuzzy]]'s rewrite. */
+    * of the scan-path fuzzy rewrites. */
   private def editCandidates(spark: SparkSession, path: String,
                              term: String, maxDist: Int,
                              limit: Int): DataFrame =
@@ -2330,7 +2307,7 @@ object LexicalStore {
     * (an exact term scores full weight, a 2-edit cousin a third at
     * maxDist 2 — Lucene boosts by `1−dist/len`, a float; this is the
     * quantized, engine-independent stand-in), and score the weighted
-    * OR through one bucket-pruned read. The dictionary scan is
+    * OR. The dictionary scan is
     * vocabulary-sized (the [[suggestTerms]] SymSpell note applies);
     * the driver round-trip is maxExpansions rows. Denormalized
     * layouts only: the weighted scorer reads `_stats`, so a segmented
@@ -2343,9 +2320,7 @@ object LexicalStore {
       s"bad maxDist=$maxDist / k=$k / maxExpansions=$maxExpansions")
     // fail BEFORE the dictionary walk, not in an unrelated-looking
     // _stats read after it: the weighted scorer is denormalized-only
-    require(!isSegmented(spark, path),
-      s"searchFuzzy needs the denormalized layout's _stats — " +
-        s"compactSegments($path) first")
+    requireDenormalized(spark, path, "searchFuzzy")
     // fuzzy is a rewritten MULTI-TERM query (Lucene FuzzyQuery
     // bypasses the analysis chain like Prefix/Wildcard/Regexp): the
     // probe folds lowercase-only on an `english` layout, so a probe
@@ -2392,10 +2367,7 @@ object LexicalStore {
     val scored = scoreWeightedTerms(spark, path,
       fuzzyWeights(ranked, term, maxDist))
       .withColumnRenamed("micros", "fuzzy_micros")
-    scored.orderBy(col("fuzzy_micros").desc, col("doc_id")).limit(k)
-      .withColumn("fuzzy_rank", row_number().over(
-        Window.orderBy(col("fuzzy_micros").desc, col("doc_id"))))
-      .select(col("doc_id"), col("fuzzy_rank"), col("fuzzy_micros"))
+    rankTop(scored, desc("fuzzy_micros"), k, "fuzzy_rank", "doc_id", "fuzzy_rank", "fuzzy_micros")
   }
 
   /** [[searchFuzzy]] answered from the `_symspell` index: the
@@ -2410,9 +2382,7 @@ object LexicalStore {
                          maxExpansions: Int = 16): DataFrame = {
     require(maxDist >= 1 && maxDist <= 2 && k >= 1 && maxExpansions >= 1,
       s"bad maxDist=$maxDist / k=$k / maxExpansions=$maxExpansions")
-    require(!isSegmented(spark, path),
-      s"searchFuzzyIndexed needs the denormalized layout's _stats — " +
-        s"compactSegments($path) first")
+    requireDenormalized(spark, path, "searchFuzzyIndexed")
     val builtDist = symspellDist(spark, path)
     require(maxDist <= builtDist,
       s"index built for maxDist $builtDist, queried with $maxDist")
@@ -2497,12 +2467,9 @@ object LexicalStore {
       } yield (p :+ t, df + tdf, dist + tdist)
     }.map { case (ts, df, dist) => (ts.mkString(" "), dist, df) }
     import spark.implicits._
-    val ord = Seq(col("total_df").desc, col("total_dist").asc, col("phrase"))
-    combos.toDF("phrase", "total_dist", "total_df")
-      .orderBy(ord: _*).limit(k)
-      .withColumn("sugg_rank", row_number().over(Window.orderBy(ord: _*)))
-      .select(col("sugg_rank"), col("phrase"), col("total_dist"),
-        col("total_df"))
+    rankTop(combos.toDF("phrase", "total_dist", "total_df"),
+      Seq(col("total_df").desc, col("total_dist").asc, col("phrase")), k,
+      "sugg_rank", "sugg_rank", "phrase", "total_dist", "total_df")
   }
 
   /** Wildcard (infix-contains) search — Lucene's WildcardQuery for
@@ -2513,7 +2480,7 @@ object LexicalStore {
     * vocabulary-sized `_vocab`/`_segvocab` scan (Zipf-bounded
     * metadata, never the corpus), capped by the same df-ranked
     * maxExpansions rewrite as [[searchPrefix]], then scored through
-    * the layout's own bucket-pruned rank path. */
+    * the layout's own rank path. */
   def searchWildcard(spark: SparkSession, path: String, needle0: String,
                      k: Int = 10, maxExpansions: Int = 16): DataFrame = {
     val needle = foldProbe(spark, path, needle0, "wildcard needle")
@@ -2546,7 +2513,7 @@ object LexicalStore {
     * — and walks the `_vocab`/`_segvocab` dictionary with `rlike`:
     * the same vocabulary-sized scan (no engine can prune a leading
     * wildcard), the same df-ranked `maxExpansions` rewrite cap, then
-    * the layout's own bucket-pruned rank path. On an `english`
+    * the layout's own rank path. On an `english`
     * layout the dictionary holds stems and the pattern matches them
     * verbatim (a glob cannot be stemmed — Lucene's multi-term
     * queries likewise bypass the analysis chain). */
@@ -2598,7 +2565,7 @@ object LexicalStore {
     * hash-bucketed — or sorted — terms index can prune a general
     * regexp; Lucene intersects its FST the same way), the same
     * df-ranked `maxExpansions` rewrite cap, and the layout's own
-    * bucket-pruned rank path with pre-analyzed expansions. On an
+    * rank path with pre-analyzed expansions. On an
     * `english` layout the dictionary holds stems and the pattern
     * matches them verbatim (the multi-term analysis-chain bypass). */
   def searchRegexp(spark: SparkSession, path: String, pattern0: String,
@@ -2675,18 +2642,9 @@ object LexicalStore {
     val cands = docTf.select(col("term")).distinct()
       .collect().map(_.getString(0)).toSeq
     require(cands.nonEmpty, s"doc $docId has no indexed terms")
-    val (nDocs, sumLen) = statsLits(spark, path)
-    val dfTbl = Relations.parquet(spark, path)
-      .filter(col("bucket").isin(
-          cands.map(bucketOf).distinct.map(Integer.valueOf): _*) &&
-        col("term").isin(cands: _*))
-      .groupBy(col("term")).agg(max(col("df")).as("df"))
-    val selected = docTf.join(docLen, "doc_id").join(dfTbl, "term")
-      .select(col("term"),
-        bm25Micros(col("tf"), col("df"), col("len"),
-          nDocs, sumLen).as("w"))
-      .orderBy(col("w").desc, col("term")).limit(maxTerms)
-      .select(col("term")).collect().map(_.getString(0)).toSeq
+    val selected = selectTerms(spark, path,
+      docTf.join(docLen, "doc_id").select(col("term"), col("tf"), col("len")),
+      cands, maxTerms)
     // mined terms came out of termFreqs under the layout analyzer —
     // already stems on an `english` layout, so they must not fold
     // again (rankAnalyzed's Porter-non-idempotence argument)
@@ -2711,40 +2669,16 @@ object LexicalStore {
         .distinct.map(qid -> _)
     }
     require(qTerms.nonEmpty, "batch lexical search needs at least one term")
-    val terms = qTerms.map(_._2).distinct
-    val buckets = terms.map(bucketOf).distinct
-    val (nDocs, sumLen) = statsLits(spark, path)
-    val post = Relations.parquet(spark, path)
-      .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*) &&
-        col("term").isin(terms: _*))
-      .filter(where.getOrElse(lit(true)))
-      .transform(p => allowFilter(p, allow))
-      .transform(p => tombstones(spark, path)
-        .fold(p)(t => p.join(t, Seq("doc_id"), "left_anti")))
+    val post = postings(spark, path, qTerms.map(_._2), where, allow)
     import spark.implicits._
-    val qt = qTerms.toDF("query_id", "term")
-    val scored = post.join(broadcast(qt), Seq("term"))
-      .select(col("query_id"), col("doc_id"),
-        bm25Micros(col("tf"), col("df"), col("len"),
-          nDocs, sumLen).as("micros"))
+    val scored = post.join(broadcast(qTerms.toDF("query_id", "term")), Seq("term"))
+      .select(col("query_id"), col("doc_id"), bm25(statsLits(spark, path)).as("micros"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("micros")).as("lex_micros"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("lex_micros").desc, col("doc_id"))
-    scored.withColumn("lex_rank", row_number().over(w))
-      .filter(col("lex_rank") <= k)
-      .select(col("query_id"), col("doc_id"), col("lex_rank"), col("lex_micros"))
+    rankPerQuery(scored, desc("lex_micros"), k, "lex_rank",
+      "query_id", "doc_id", "lex_rank", "lex_micros")
   }
 
-  /** Reciprocal-rank fusion of a lexical and a vector rank list
-    * (Cormack/Clarke/Buettcher 2009: score = sum 1/(K + rank)) —
-    * quantized to exact integer units (floor(1e9/(K+rank)), a
-    * division of small integers: deterministic, engine-independent).
-    * Inputs need (doc_id, lex_rank) / (doc_id, vec_rank); a doc
-    * missing from one list contributes 0 from it (full outer join —
-    * both lists are k-row, so this is a driver-trivial merge at any
-    * corpus size). Output: top-`k` (rank, doc_id, lex_rank, vec_rank,
-    * rrf_micros), ranks NULL where a side didn't surface the doc. */
   // ---- parsed query execution (Lucene QueryParser subset) -----------
 
   /** The doc_id MATCH SET of a phrase over a positional layout —
@@ -2760,15 +2694,7 @@ object LexicalStore {
                              terms: Seq[String], slop: Int): DataFrame = {
     require(terms.size >= 2, "a phrase needs at least two terms")
     require(slop >= 0, s"slop must be >= 0, got $slop")
-    val (slots, dfByTerm) = positionalSlots(spark, path, terms)
-    val joined = slotOrderByDf(terms, dfByTerm).map(slots)
-      .reduce((a, b) => a.join(b, "doc_id"))
-    if (slop == 0)
-      joined.select(col("doc_id"), phraseTfExpr(terms.size).as("phrase_tf"))
-        .filter(col("phrase_tf") > 0).select(col("doc_id"))
-    else
-      joined.select(col("doc_id"), spanGapExpr(terms.size).as("span_gap"))
-        .filter(col("span_gap") <= slop).select(col("doc_id"))
+    phraseFrame(spark, path, terms, Some(slop).filter(_ > 0)).select(col("doc_id"))
   }
 
   /** Execute a [[QueryParser.Parsed]] query — the engine's answer to
@@ -2851,10 +2777,8 @@ object LexicalStore {
     val scored = scoring.map(_._3).reduce(_.union(_))
       .join(cand, Seq("doc_id"), "left_semi")
       .groupBy(col("doc_id")).agg(sum(col("wm")).as("parsed_micros"))
-    scored.orderBy(col("parsed_micros").desc, col("doc_id")).limit(k)
-      .withColumn("parsed_rank", row_number().over(
-        Window.orderBy(col("parsed_micros").desc, col("doc_id"))))
-      .select(col("doc_id"), col("parsed_rank"), col("parsed_micros"))
+    rankTop(scored, desc("parsed_micros"), k, "parsed_rank",
+      "doc_id", "parsed_rank", "parsed_micros")
   }
 
   /** The shared fail-fast entry checks of [[searchParsed]] /
@@ -2877,14 +2801,12 @@ object LexicalStore {
     }
   }
 
-  /** The overflow-safe integer boost split, applied at the
-    * per-(clause, doc) SUBTOTAL (the [[searchTopKFields]] rule; for
-    * a group clause the subtotal is the group's own Σ, so the split
-    * floors once per group, never per inner clause). */
+  /** The boost split ([[weightedMicros]]), applied at the per-(clause,
+    * doc) SUBTOTAL (the [[searchTopKFields]] rule; for a group clause
+    * the subtotal is the group's own Σ, so the split floors once per
+    * group, never per inner clause). */
   private def boostedWm(frame: DataFrame, w: Long): DataFrame =
-    frame.select(col("doc_id"),
-      expr(s"${w}L * (m div 1000000L) + " +
-        s"(${w}L * (m % 1000000L)) div 1000000L").as("wm"))
+    frame.select(col("doc_id"), weightedMicros(s"${w}L", "m").as("wm"))
 
   /** [[searchBoolean]]'s candidate rule over built clause frames:
     * every MUST match set intersected (ids-only semi-joins) minus
@@ -3002,8 +2924,7 @@ object LexicalStore {
     val analyzer = analyzerOf(spark, path)
     atom match {
       case TermAtom(t) =>
-        val terms = foldQueryTerms(Seq(t), analyzer)
-          .filter(_.nonEmpty).distinct
+        val terms = analyzedTerms(spark, path, Seq(t))
         if (terms.isEmpty) None else Some(RTerms(path, terms))
       case PhraseAtom(words, slop) =>
         val posPath = positional.getOrElse(fieldName, sys.error(
@@ -3059,9 +2980,7 @@ object LexicalStore {
         Some(RTerms(path, expandTermRange(spark, path, lo, hi, inclLo,
           inclHi, maxExpansions)))
       case FuzzyAtom(t, d) =>
-        require(!isSegmented(spark, path),
-          s"fuzzy clause needs the denormalized layout's _stats — " +
-            s"compactSegments($path) first")
+        requireDenormalized(spark, path, "fuzzy clause")
         val term = foldProbe(spark, path, t, "fuzzy probe")
         Some(RWeighted(path, fuzzyWeights(
           editCandidates(spark, path, term, d, maxExpansions), term, d)))
@@ -3100,9 +3019,7 @@ object LexicalStore {
         .join(broadcast(wdf), Seq("term"))
         // micros here IS contributionsWeighted's per-row `m`; the
         // weighted split applies PER POSTING ROW before the doc sum
-        .select(col("doc_id"), expr(
-          "w * (micros div 1000000L) + " +
-            "(w * (micros % 1000000L)) div 1000000L").as("wm"))
+        .select(col("doc_id"), weightedMicros("w", "micros").as("wm"))
         .groupBy(col("doc_id")).agg(sum(col("wm")).as("m"))
       (m.select(col("doc_id")), m)
   }
@@ -3183,8 +3100,8 @@ object LexicalStore {
         }
         (i, c, rs)
       }})
-    // phase 2 — ONE bucket-pruned, tombstone-masked read per layout
-    // over the UNION of every clause's resolved terms, checkpointed
+    // phase 2 — ONE contribution read per layout over the UNION of
+    // every clause's resolved terms, checkpointed
     // ([[booleanContributions]]'s one-read discipline, applied across
     // clauses): without this, Catalyst pushes the fuse's candidate
     // gate down into every scoring branch and each duplicate re-runs
@@ -3374,36 +3291,34 @@ object LexicalStore {
       .orderBy(col("doc_id"), col("arm"))
   }
 
+  /** Reciprocal-rank fusion of a lexical and a vector rank list
+    * (Cormack/Clarke/Buettcher 2009: score = sum 1/(K + rank)) —
+    * quantized to exact integer units (floor(1e9/(K+rank)), a
+    * division of small integers: deterministic, engine-independent).
+    * Inputs need (doc_id, lex_rank) / (doc_id, vec_rank); a doc
+    * missing from one list contributes 0 from it (full outer join —
+    * both lists are k-row, so this is a driver-trivial merge at any
+    * corpus size). Output: top-`k` (rank, doc_id, lex_rank, vec_rank,
+    * rrf_micros), ranks NULL where a side didn't surface the doc. */
   def rrfFuse(lex: DataFrame, vec: DataFrame, k: Int,
-              rrfK: Int = DefaultRrfK): DataFrame = {
-    def part(r: Column): Column = rrfPart(r, rrfK)
-    val fused = lex.select(col("doc_id"), col("lex_rank"))
-      .join(vec.select(col("doc_id"), col("vec_rank")), Seq("doc_id"), "full_outer")
-      .select(col("doc_id"), col("lex_rank"), col("vec_rank"),
-        (part(col("lex_rank")) + part(col("vec_rank"))).as("rrf_micros"))
-    fused.orderBy(col("rrf_micros").desc, col("doc_id")).limit(k)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("rrf_micros").desc, col("doc_id"))))
-      .select(col("rank"), col("doc_id"), col("lex_rank"),
-        col("vec_rank"), col("rrf_micros"))
-  }
+              rrfK: Int = DefaultRrfK): DataFrame =
+    rankTop(rrfJoin(lex, vec, Seq("doc_id"), rrfK), desc("rrf_micros"), k, "rank",
+      "rank", "doc_id", "lex_rank", "vec_rank", "rrf_micros")
 
   /** [[rrfFuse]] per query: inputs additionally carry `query_id`, the
     * merge keys on (query_id, doc_id), and ranks window per query —
     * two (batch × k)-row lists in, one ranked list per query out. */
   def rrfFuseBatch(lex: DataFrame, vec: DataFrame, k: Int,
-                   rrfK: Int = DefaultRrfK): DataFrame = {
-    def part(r: Column): Column = rrfPart(r, rrfK)
-    val fused = lex.select(col("query_id"), col("doc_id"), col("lex_rank"))
-      .join(vec.select(col("query_id"), col("doc_id"), col("vec_rank")),
-        Seq("query_id", "doc_id"), "full_outer")
-      .select(col("query_id"), col("doc_id"), col("lex_rank"), col("vec_rank"),
-        (part(col("lex_rank")) + part(col("vec_rank"))).as("rrf_micros"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf_micros").desc, col("doc_id"))
-    fused.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("doc_id"),
-        col("lex_rank"), col("vec_rank"), col("rrf_micros"))
-  }
+                   rrfK: Int = DefaultRrfK): DataFrame =
+    rankPerQuery(rrfJoin(lex, vec, Seq("query_id", "doc_id"), rrfK), desc("rrf_micros"),
+      k, "rank", "query_id", "rank", "doc_id", "lex_rank", "vec_rank", "rrf_micros")
+
+  /** The full outer merge of two rank lists on `keys`, with
+    * rrf_micros = the two arms' [[rrfPart]]s. */
+  private def rrfJoin(lex: DataFrame, vec: DataFrame, keys: Seq[String],
+                      rrfK: Int): DataFrame =
+    lex.select((keys :+ "lex_rank").map(col): _*)
+      .join(vec.select((keys :+ "vec_rank").map(col): _*), keys, "full_outer")
+      .select((keys ++ Seq("lex_rank", "vec_rank")).map(col) :+
+        (rrfPart(col("lex_rank"), rrfK) + rrfPart(col("vec_rank"), rrfK)).as("rrf_micros"): _*)
 }

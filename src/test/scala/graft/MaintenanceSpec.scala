@@ -376,7 +376,36 @@ class MaintenanceSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](IndexStore.upsertBucketed(spark, docsOf(corpus), ivf))
     intercept[IllegalArgumentException](IndexStore.upsertDocs(spark, docsOf(corpus), lex))
     intercept[IllegalArgumentException](IndexStore.upsertBucketed(spark, docsOf(corpus), lex))
+    // an emptied vector layout counts 0 and skips updates (no identity is present)
+    for (p <- Seq(src, ivf, hnsw)) assert(IndexStore.count(spark, p) == 0L, s"count of $p")
+    IndexStore.updateDocs(spark, docsOf(corpus), src)
+    IndexStore.updateIvf(spark, docsOf(corpus), ivf)
+    IndexStore.updateHnsw(spark, docsOf(corpus), hnsw)
     for ((p, names) <- before) assert(listing(p) == names, s"$p was written to")
+    // a scoring layout compacted to nothing: `_stats` holds (0, 0), a
+    // search fails by name, and a second compact only clears tombstones
+    val stats = spark.read.parquet(s"$lex/_stats").head()
+    assert(stats.getAs[Long]("n_docs") == 0L)
+    assert(!stats.isNullAt(stats.fieldIndex("sum_len")) && stats.getAs[Long]("sum_len") == 0L)
+    val noDocs = intercept[IllegalArgumentException](
+      LexicalStore.searchTopKLexical(spark, lex, Seq("alpha")))
+    assert(noDocs.getMessage.contains(lex) && noDocs.getMessage.contains("no documents"))
+    LexicalStore.deleteLexical(spark, lex, {
+      import spark.implicits._
+      Seq(1L).toDF("doc_id")
+    })
+    assert(listing(lex).contains("_tombstones"))
+    LexicalStore.compactLexical(spark, lex)
+    assert(listing(lex) == before(lex))
+    // so does a segmented layout merged down to nothing
+    val seg = fresh("e-seg")
+    LexicalStore.appendLexicalSegment(spark, docsOf(corpus.filter(_._1 < 6L)), seg)
+    LexicalStore.appendLexicalSegment(spark, docsOf(corpus.filter(_._1 >= 6L)), seg)
+    LexicalStore.deleteLexical(spark, seg, corpus.keys.toSeq)
+    LexicalStore.compactSegments(spark, seg)
+    val noSegDocs = intercept[IllegalArgumentException](
+      LexicalStore.searchTopKSegmented(spark, seg, Seq("alpha")))
+    assert(noSegDocs.getMessage.contains(seg) && noSegDocs.getMessage.contains("no documents"))
     // the matching family still inserts
     IndexStore.upsertDocs(spark, docsOf(corpus), src)
     assert(partitionListings(src).nonEmpty)

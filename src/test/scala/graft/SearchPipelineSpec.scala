@@ -7,14 +7,18 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Embed
-import graft.sources.IndexStore
+import graft.sources.{IndexStore, LexicalStore}
 
 /** Differential checks of the shared search pipeline (probe ->
   * candidates -> pre-rank -> rerank-and-present): a family whose
   * approximation is switched off (every cell probed, an overfetch cut
   * wider than the corpus) must return exactly the exact search's page,
   * a batch must return each query's single-search page, and every text
-  * form must equal `Embed.embed` followed by its vector form. */
+  * form must equal `Embed.embed` followed by its vector form. The
+  * lexical pipeline (postings -> BM25 -> rank) is held to the same
+  * equalities: a segmented layout scores like one build of its union,
+  * a batch like its single queries, and no read verb ever returns a
+  * tombstoned document. */
 class SearchPipelineSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -117,6 +121,131 @@ class SearchPipelineSpec extends AnyFunSuite {
       val t = rows(text(q))
       assert(t.nonEmpty, s"$name returned nothing for '$q'")
       assert(t == rows(vec(Embed.embed(q, Embed.DefaultDim))), s"$name for '$q'")
+    }
+  }
+
+  // ---- lexical layouts -------------------------------------------------
+
+  private def lexDocs(ds: Seq[(Long, String)]): DataFrame = {
+    import spark.implicits._
+    ds.toDF("doc_id", "text")
+  }
+
+  private def corpus(n: Int, seed: Long): Seq[(Long, String)] =
+    texts(n, seed).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+
+  test("searchTopKSegmented over appended segments equals searchTopKLexical over one build") {
+    for (nSegs <- Seq(2, 3); analyzer <- Seq("raw", "english")) {
+      val seed = 20L + nSegs
+      val docs = corpus(nDocs, seed)
+      // seeded cut points: segments of unequal, non-empty sizes
+      val cuts = Gen.pick(nSegs - 1, 1 until nDocs)(Gen.Parameters.default, Seed(seed))
+        .get.toSeq.sorted
+      val bounds = (0 +: cuts) :+ nDocs
+      val (seg, one) = (s"$root/seg-$nSegs-$analyzer", s"$root/one-$nSegs-$analyzer")
+      for (Seq(lo, hi) <- bounds.sliding(2))
+        LexicalStore.appendLexicalSegment(spark, lexDocs(docs.slice(lo, hi)), seg,
+          analyzer = analyzer)
+      LexicalStore.build(spark, lexDocs(docs), one, analyzer = analyzer)
+      for (q <- queries) {
+        val terms = q.split(' ').toSeq
+        val got = rows(LexicalStore.searchTopKSegmented(spark, seg, terms, k = 12)
+          .select("doc_id", "lex_rank", "lex_micros"))
+        val want = rows(LexicalStore.searchTopKLexical(spark, one, terms, k = 12))
+        assert(want.nonEmpty)
+        assert(got == want, s"$nSegs segments, $analyzer, '$q'")
+      }
+    }
+  }
+
+  test("searchTopKLexicalBatch equals per-query searchTopKLexical on a tombstoned layout") {
+    import spark.implicits._
+    val docs = corpus(nDocs, 40L)
+    val path = s"$root/lex-batch"
+    LexicalStore.build(spark, lexDocs(docs), path, analyzer = "folded")
+    val ids = docs.map(_._1)
+    LexicalStore.deleteLexical(spark, path,
+      Gen.pick(8, ids)(Gen.Parameters.default, Seed(41L)).get.toSeq)
+    val allow = ids.filter(_ % 3 != 0).toDF("doc_id")
+    val batch = queries.zipWithIndex.map { case (q, i) => (i.toLong, q) }
+    val filters = Seq("where" -> (Some(col("doc_id") % 2 === 0), None),
+      "allow" -> (None, Some(allow)))
+    for ((name, (w, a)) <- filters) {
+      val got = rows(LexicalStore.searchTopKLexicalBatch(spark, path, batch, k = 6,
+        where = w, allow = a))
+      for ((qid, q) <- batch) {
+        val single = rows(LexicalStore.searchTopKLexical(spark, path, q.split(' ').toSeq,
+          k = 6, where = w, allow = a)).sortBy(_.getInt(1))
+        val mine = got.filter(_.getLong(0) == qid).map(r => Row(r.toSeq.tail: _*))
+          .sortBy(_.getInt(1))
+        assert(single.nonEmpty)
+        assert(mine == single, s"query $qid '$q' ($name)")
+      }
+    }
+  }
+
+  test("no lexical read verb returns a document deleted with deleteLexical") {
+    import spark.implicits._
+    // three strong matches for every query below; the first two are deleted
+    val targets = Seq(900L -> "alpha beta gamma alpha beta gamma",
+      901L -> "alpha beta alpha beta alpha beta",
+      902L -> "alpha beta gamma delta alpha beta")
+    val gone = Seq(900L, 901L)
+    val docs = corpus(nDocs, 50L) ++ targets
+    val forward = lexDocs(docs)
+    // every deleted document carries a facet value of its own
+    val facets = docs.map { case (id, _) =>
+      (id, if (gone.contains(id)) s"gone$id" else s"f${id % 4}")
+    }.toDF("doc_id", "facet")
+    val l = Seq("scoring", "scoring2", "positional", "segmented")
+      .map(n => n -> s"$root/deleted-$n").toMap
+    LexicalStore.build(spark, forward, l("scoring"), analyzer = "folded")
+    LexicalStore.build(spark, forward, l("scoring2"))
+    LexicalStore.buildPositional(spark, forward, l("positional"), analyzer = "folded")
+    val (first, second) = docs.partition { case (id, _) => id % 2 == 0 }
+    for (seg <- Seq(first, second))
+      LexicalStore.appendLexicalSegment(spark, lexDocs(seg), l("segmented"))
+    val q = Seq("alpha", "beta")
+    val k = 10
+    def ids(df: DataFrame): Set[Any] = df.select("doc_id").collect().map(_.get(0)).toSet
+    val verbs: Seq[(String, () => Set[Any])] = Seq(
+      "searchTopKLexical" -> (() => ids(LexicalStore.searchTopKLexical(spark, l("scoring"), q, k))),
+      "searchTopKLexicalBatch" -> (() => ids(LexicalStore.searchTopKLexicalBatch(spark,
+        l("scoring"), Seq(0L -> "alpha beta", 1L -> "gamma alpha"), k))),
+      "searchAfter" -> (() => ids(LexicalStore.searchAfter(spark, l("scoring"), q, k,
+        Long.MaxValue, -1L))),
+      "facetCounts" -> (() => LexicalStore.facetCounts(spark, l("scoring"), q, facets)
+        .collect().map(_.get(0)).toSet),
+      "searchTopKFields" -> (() => ids(LexicalStore.searchTopKFields(spark,
+        Seq(l("scoring") -> 1000000L, l("scoring2") -> 2000000L), q, k))),
+      "searchTopKPrf" -> (() => ids(LexicalStore.searchTopKPrf(spark, l("scoring"),
+        forward, q, k))),
+      "searchBoolean" -> (() => ids(LexicalStore.searchBoolean(spark, l("scoring"),
+        must = Seq("alpha"), should = Seq("beta"), k = k))),
+      "searchPrefix" -> (() => ids(LexicalStore.searchPrefix(spark, l("scoring"), "alph", k))),
+      "searchFuzzy" -> (() => ids(LexicalStore.searchFuzzy(spark, l("scoring"), "alpah", k = k))),
+      "searchPhrase" -> (() => ids(LexicalStore.searchPhrase(spark, l("positional"), q, k))),
+      "searchNear" -> (() => ids(LexicalStore.searchNear(spark, l("positional"),
+        "alpha", "beta", slop = 2, k = k))),
+      "searchSpanNear" -> (() => ids(LexicalStore.searchSpanNear(spark, l("positional"),
+        Seq("alpha", "beta", "gamma"), slop = 3, k = k))),
+      "snippetBest" -> (() => ids(LexicalStore.snippetBest(spark, l("positional"), q,
+        docs.map(_._1).toDF("doc_id"), w = 3))),
+      "moreLikeThis" -> (() => ids(LexicalStore.moreLikeThis(spark, l("scoring"), forward,
+        902L, k = k))),
+      "searchQueryString" -> (() => ids(LexicalStore.searchQueryString(spark,
+        "alpha \"alpha beta\"", Map("text" -> l("scoring")), "text",
+        positional = Map("text" -> l("positional")), k = k))),
+      "searchTopKSegmented" -> (() => ids(LexicalStore.searchTopKSegmented(spark,
+        l("segmented"), q, k))))
+    val marks: Set[Any] = gone.toSet ++ gone.map(id => s"gone$id")
+    // before the delete every verb surfaces a target, so the check below bites
+    for ((name, run) <- verbs) assert(run().exists(marks), s"$name before the delete")
+    for (p <- l.values) LexicalStore.deleteLexical(spark, p, gone)
+    for ((name, run) <- verbs) {
+      val after = run()
+      assert(after.nonEmpty, s"$name after the delete")
+      assert(!after.exists(marks), s"$name returned a deleted document: ${after.filter(marks)}")
     }
   }
 }
