@@ -3695,9 +3695,8 @@ object Hybrid {
     * q231 CTE chain as labeled rows over the re-derived page. */
   private def q239(s: SparkSession, d: String): DataFrame = {
     val (fields, positional, q) = q231Setup(s, d)
-    // one set of clause frames feeds the page AND its decomposition
-    // (r21: the two-verb composition paid the parse-resolve-checkpoint
-    // pipeline twice for byte-identical frames)
+    // one aggregate feeds the page AND its decomposition (the
+    // two-verb composition would resolve and read the query twice)
     LexicalStore.explainParsedTopK(s, graft.sources.QueryParser.parse(q),
       fields, "body", positional, k = 10, maxExpansions = Q231MaxExp)
   }

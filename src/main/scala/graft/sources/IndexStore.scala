@@ -225,6 +225,7 @@ object IndexStore {
     * vector of another width would silently probe the wrong cells. */
   private def quantizer(spark: SparkSession, path: String,
                         queries: Seq[(String, Array[Float])]): Quantizer = {
+    requireRows(spark, path)
     val (ids, cents) = Relations.centroids(spark, s"$path/_centroids")
     queries.foreach { case (what, qvec) =>
       require(qvec.length == cents.head.length,
@@ -255,6 +256,7 @@ object IndexStore {
     * filtered search is exact over the filter's survivors. */
   private def candidates(spark: SparkSession, path: String, where: Option[Column],
                          source: DataFrame => DataFrame = identity): DataFrame = {
+    requireRows(spark, path)
     val rows = source(Relations.parquet(spark, path))
     where.fold(rows)(rows.filter)
   }
@@ -1470,6 +1472,7 @@ object IndexStore {
     val getIncludes = QueryIncludes - "distances"
     require(include.forall(getIncludes),
       s"get include must be among ${getIncludes.mkString(", ")}, got $include")
+    requireRows(spark, path)
     val all = Relations.parquet(spark, path)
     val byIds =
       if (ids.isEmpty) all
@@ -1503,6 +1506,14 @@ object IndexStore {
     * directory left — the maintenance cores' predicate. */
   private def emptied(spark: SparkSession, path: String): Boolean =
     Relations.partitionDirs(spark, path).exists(_.isEmpty)
+
+  /** Fail by name, from a directory listing before any job or pin
+    * load, on a layout whose every partition was deleted: the read
+    * stages (probe, candidates, the HNSW pin) and [[get]] have no
+    * rows to infer a schema from. */
+  private def requireRows(spark: SparkSession, path: String): Unit =
+    require(!emptied(spark, path),
+      s"layout at $path holds no rows: every partition was deleted")
 
   /** Per-source chunk inventory of a layout — the maintenance gates'
     * shared observable (q108 batch upsert, q113 streaming upsert): a
@@ -2408,6 +2419,7 @@ object IndexStore {
         else false
     }
   private def hnswPin(spark: SparkSession, path: String): HnswPin = {
+    requireRows(spark, path)
     val slot = hnswPinCache.synchronized {
       val key = (sessionKey(spark), path)
       val hit = hnswPinCache.get(key)

@@ -582,13 +582,17 @@ object LexicalStore {
     ids.select(col(ids.columns.head).as("doc_id")).distinct()
       .coalesce(1).write.mode(SaveMode.Append).parquet(tombDir(path))
 
-  /** [[deleteLexical]] for a driver-sized id list. */
-  def deleteLexical(spark: SparkSession, path: String, ids: Seq[Any]): Unit = {
-    import spark.implicits._
-    deleteLexical(spark, path,
-      ids.map(_.toString).toDF("doc_id")
-        .select(col("doc_id").cast(idType(spark, path))))
-  }
+  /** [[deleteLexical]] for a driver-sized id list. A no-op on a
+    * layout with no postings left (every document deleted and
+    * compacted away): there is no row for a tombstone to mask, and no
+    * data file to read the id type from. */
+  def deleteLexical(spark: SparkSession, path: String, ids: Seq[Any]): Unit =
+    if (!holdsNoPostings(spark, path)) {
+      import spark.implicits._
+      deleteLexical(spark, path,
+        ids.map(_.toString).toDF("doc_id")
+          .select(col("doc_id").cast(idType(spark, path))))
+    }
 
   private def idType(spark: SparkSession, path: String) =
     Relations.parquet(spark, path).schema("doc_id").dataType
@@ -1682,36 +1686,29 @@ object LexicalStore {
     * layout: candidates must contain EVERY `must` term, no `mustNot`
     * term, and rank by summed [[bm25Micros]] over the must+should
     * terms (a should term matched adds score; a must term both gates
-    * and scores — the standard semantics). One postings read serves
-    * all three clauses; the must gate is a (doc_id,
-    * distinct-term-count) partial agg equal-to-|must| filter, the
-    * mustNot gate an anti-join, both ids-only. */
+    * and scores — the standard semantics). Each folded term is one
+    * clause of the [[clauseCore]]: one postings read, one per-doc
+    * aggregate, the gates one predicate over its presence counts. */
   def searchBoolean(spark: SparkSession, path: String,
                     must: Seq[String], should: Seq[String] = Seq.empty,
                     mustNot: Seq[String] = Seq.empty,
-                    k: Int = 10, minShouldMatch: Int = 0): DataFrame = {
-    val scored = booleanContributions(spark, path, must, should, mustNot,
-        minShouldMatch)
-      .groupBy(col("doc_id")).agg(sum(col("micros")).as("lex_micros"))
-    rankTop(scored, desc("lex_micros"), k, "bool_rank", "doc_id", "bool_rank", "lex_micros")
-  }
+                    k: Int = 10, minShouldMatch: Int = 0): DataFrame =
+    rankTop(booleanCore(spark, path, must, should, mustNot, minShouldMatch),
+      desc("lex_micros"), k, "bool_rank", "doc_id", "bool_rank", "lex_micros")
 
-  /** The gated per-(doc, term) frame [[searchBoolean]] aggregates
-    * and [[explainBoolean]] decomposes — one definition, the
-    * [[contributions]] discipline applied to BooleanQuery: rows are
-    * the SCORED clauses' (must + should) postings of documents that
-    * pass all three gates (every must term, ≥ msm distinct should
-    * terms, no excluded term), with the factors and [[bm25Micros]]
-    * evaluated per row. `allow` narrows whose rows come back — each
-    * doc's gates depend only on its OWN postings, so filtering the
-    * pruned read early is equivalent and keeps the checkpoint
-    * candidate-sized when explaining a page. */
-  private def booleanContributions(spark: SparkSession, path: String,
-                                   must: Seq[String], should: Seq[String],
-                                   mustNot: Seq[String],
-                                   minShouldMatch: Int,
-                                   allow: Option[DataFrame] = None)
-      : DataFrame = {
+  /** [[searchBoolean]] compiled onto the [[clauseCore]]: one term
+    * clause per distinct folded term, with the term-set semantics — a
+    * term named in both must and should scores once, through its must
+    * clause. Such a term is present in every document the must gate
+    * admits, so it counts toward `minShouldMatch` without a clause of
+    * its own: the core's should count starts that much lower. `allow`
+    * narrows whose rows come back — each doc's gates depend only on
+    * its OWN postings, so filtering the read early is equivalent. */
+  private def booleanCore(spark: SparkSession, path: String,
+                          must: Seq[String], should: Seq[String],
+                          mustNot: Seq[String], minShouldMatch: Int,
+                          allow: Option[DataFrame] = None): DataFrame = {
+    import QueryParser._
     val analyzer = analyzerOf(spark, path)
     def fold(ts: Seq[String]) =
       foldQueryTerms(ts.filter(_.nonEmpty), analyzer).distinct
@@ -1730,35 +1727,12 @@ object LexicalStore {
     require(notT.intersect(mustT ++ shouldT).isEmpty,
       s"terms cannot be both required/scored and excluded: " +
         notT.intersect(mustT ++ shouldT).mkString(", "))
-    val post = postings(spark, path, mustT ++ shouldT ++ notT, allow = allow)
-      .localCheckpoint() // one pruned read feeds all three clauses
-    val gated0 = post.filter(col("term").isin((mustT ++ shouldT): _*))
-    val gated1 =
-      if (mustT.isEmpty) gated0
-      else gated0.join(
-        post.filter(col("term").isin(mustT: _*))
-          .groupBy(col("doc_id"))
-          .agg(countDistinct(col("term")).as("nmust"))
-          .filter(col("nmust") === mustT.size)
-          .select(col("doc_id")),
-        Seq("doc_id"), "left_semi")
-    val gated2 =
-      if (minShouldMatch == 0) gated1
-      else gated1.join(
-        post.filter(col("term").isin(shouldT: _*))
-          .groupBy(col("doc_id"))
-          .agg(countDistinct(col("term")).as("nshould"))
-          .filter(col("nshould") >= minShouldMatch)
-          .select(col("doc_id")),
-        Seq("doc_id"), "left_semi")
-    val gated =
-      if (notT.isEmpty) gated2
-      else gated2.join(
-        post.filter(col("term").isin(notT: _*)).select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
-    gated
-      .select(col("doc_id"), col("term"), col("tf"), col("df"), col("len"),
-        bm25(statsLits(spark, path)).as("micros"))
+    def clauses(o: Occur, ts: Seq[String]) =
+      ts.map(t => CoreClause(o, 1000000L, Seq(Should -> RTerms(path, Seq(t)))))
+    clauseCore(spark,
+      clauses(Must, mustT) ++ clauses(Should, shouldT.diff(mustT)) ++ clauses(MustNot, notT),
+      "lex_micros", minShouldMatch - shouldT.count(mustT.contains), allow,
+      withRows = allow.isDefined)
   }
 
   /** [[explainScore]] for [[searchBoolean]]: the per-(doc, term)
@@ -1767,15 +1741,18 @@ object LexicalStore {
     * should) of documents that pass every gate — the gates are
     * boolean admission, not score factors, which is exactly how
     * Lucene's Explanation reports a BooleanQuery (scoring clauses
-    * only; a non-matching doc explains as no-match). Per-doc
-    * Σ micros equals searchBoolean's lex_micros exactly
-    * (LexicalSpec pins it; q226 gates the decomposition). */
+    * only; a non-matching doc explains as no-match). The rows are the
+    * search's own gated aggregate, unnested, so per-doc Σ micros
+    * equals searchBoolean's lex_micros exactly (LexicalSpec pins it;
+    * q226 gates the decomposition). */
   def explainBoolean(spark: SparkSession, path: String, cands: DataFrame,
                      must: Seq[String], should: Seq[String] = Seq.empty,
                      mustNot: Seq[String] = Seq.empty,
                      minShouldMatch: Int = 0): DataFrame =
-    booleanContributions(spark, path, must, should, mustNot,
-        minShouldMatch, Some(cands))
+    booleanCore(spark, path, must, should, mustNot, minShouldMatch, Some(cands))
+      .select(col("doc_id"), explode(col("rows")).as("r"))
+      .select(col("doc_id"), col("r.term").as("term"), col("r.tf").as("tf"),
+        col("r.df").as("df"), col("r.len").as("len"), col("r.micros").as("micros"))
       .orderBy(col("doc_id"), col("term"))
 
   /** True when `path` holds the SEGMENTED layout (its `_segstats`
@@ -2699,7 +2676,7 @@ object LexicalStore {
 
   /** Execute a [[QueryParser.Parsed]] query — the engine's answer to
     * Lucene's `QueryParser.parse(...)` + `IndexSearcher.search(...)`
-    * pair: every clause routes through the SAME internals its
+    * pair: every clause resolves through the SAME internals its
     * standalone verb uses (one analyzer fold per clause at entry;
     * dictionary atoms fold with the lowercase-only probe rule — the
     * r18 multi-term bypass; expansion caps and loud empty-expansion
@@ -2713,22 +2690,21 @@ object LexicalStore {
     * loudly — position data cannot be conjured from a frequency
     * layout). Semantics per [[QueryParser]]'s contract:
     *
-    *  - each clause yields a MATCH SET and (unless MUST_NOT) a
-    *    per-doc integer score: a term's [[bm25Micros]] sum; a
-    *    dictionary atom's expansion scored like its verb (prefix/
-    *    glob: df-ranked cap then plain sum; fuzzy: similarity-
-    *    weighted split sum); a phrase GATES on the positional match
-    *    set ([[phraseMatchSet]]) and scores its terms' ordinary BM25
-    *    over the scoring layout restricted to that set — one scale
-    *    (micros of the shared kernel) for every clause, which is
-    *    what makes the fused sum meaningful and exact (Lucene's
-    *    phraseFreq saturation is a different curve; documented
-    *    divergence, chosen for the integer-exact contract);
-    *  - a GROUP clause `(...)` combines its inner clauses by the
-    *    same candidate rule ([[parsedCandidates]] — the nested
-    *    boolean), scores as the Σ of inner scoring subtotals over
-    *    its own match set, and then gates/boosts in the outer query
-    *    as ONE clause; a RANGE clause `[lo TO hi]` expands through
+    *  - each clause has a MATCH SET and (unless MUST_NOT) a per-doc
+    *    integer subtotal: a term's [[bm25Micros]] sum; a dictionary
+    *    atom's expansion scored like its verb (prefix/glob: df-ranked
+    *    cap then plain sum; fuzzy: similarity-weighted split sum); a
+    *    phrase GATES on the positional match set ([[phraseMatchSet]])
+    *    and scores its terms' ordinary BM25 over the scoring layout —
+    *    one scale (micros of the shared kernel) for every clause,
+    *    which is what makes the fused sum meaningful and exact
+    *    (Lucene's phraseFreq saturation is a different curve;
+    *    documented divergence, chosen for the integer-exact contract);
+    *  - a GROUP clause `(...)` combines its inner clauses by the same
+    *    candidate rule ([[candidateRule]] — the nested boolean),
+    *    scores as the Σ of inner scoring subtotals over its own match
+    *    set, and then gates/boosts in the outer query as ONE clause;
+    *    a RANGE clause `[lo TO hi]` expands through
     *    [[expandTermRange]] exactly like [[searchTermRange]];
     *  - a clause whose text folds away under its field's analyzer
     *    DROPS silently (Lucene's stopword-clause behavior) — even a
@@ -2736,50 +2712,26 @@ object LexicalStore {
     *  - `^n` boosts floor at the per-(clause, doc) SUBTOTAL via the
     *    overflow-safe split (the [[searchTopKFields]] rule; a
     *    group's subtotal is the group Σ, floored once per group);
-    *  - candidates: every MUST set intersected (ids-only semi-joins)
-    *    minus every MUST_NOT set; no musts → union of SHOULD sets
-    *    (minShouldMatch=1, [[searchBoolean]]'s rule);
+    *  - candidates: every MUST set intersected minus every MUST_NOT
+    *    set; no musts → union of SHOULD sets (minShouldMatch=1,
+    *    [[searchBoolean]]'s rule); a candidate ranks only if some
+    *    scoring clause is present for it;
     *  - score: Σ boosted clause subtotals over must+should clauses,
     *    ranked (parsed_micros DESC, doc_id), top-k.
     *
-    * Scale shape: clause reads are bucket-pruned postings or
-    * vocabulary-sized dictionary walks (each clause exactly its
-    * standalone verb's read); gates and the fuse exchange (doc_id,
-    * micros) pairs only. Driver work is the parse plus the
-    * query-sized expansion round-trips. */
+    * Execution is the [[clauseCore]]: one bucket-pruned postings read
+    * per scoring layout over the union of every clause's terms, one
+    * aggregate per doc carrying every clause's presence count and
+    * subtotal (and each phrase's match flag), the candidate rule as
+    * one predicate over them, and the rank. Driver work is the parse
+    * plus the query-sized expansion round-trips. */
   def searchParsed(spark: SparkSession, parsed: QueryParser.Parsed,
                    fields: Map[String, String], defaultField: String,
                    positional: Map[String, String] = Map.empty,
-                   k: Int = 10, maxExpansions: Int = 16): DataFrame = {
-    parsedEntryChecks(spark, parsed, fields, defaultField)
-    rankParsedFrames(parsedClauseFrames(spark, parsed, fields, defaultField,
-      positional, maxExpansions), k)
-  }
-
-  /** The fuse-and-rank tail of [[searchParsed]] over already-built
-    * clause frames — split out so a search-plus-explain composition
-    * ([[explainParsedTopK]]) builds the frames (and their shared
-    * checkpointed reads) ONCE instead of once per verb. */
-  private def rankParsedFrames(
-      frames: Seq[(Int, QueryParser.Clause, Option[(DataFrame, DataFrame)])],
-      k: Int): DataFrame = {
-    import QueryParser._
-    val built = frames
-      .flatMap { case (_, c, fr) =>
-        fr.map { case (matches, m) =>
-          (c.occur, matches, boostedWm(m, c.boostMicros))
-        }
-      }
-    val scoring = built.filter(_._1 != MustNot)
-    require(scoring.nonEmpty,
-      "every scoring clause folded away under its field's analyzer")
-    val cand = parsedCandidates(built)
-    val scored = scoring.map(_._3).reduce(_.union(_))
-      .join(cand, Seq("doc_id"), "left_semi")
-      .groupBy(col("doc_id")).agg(sum(col("wm")).as("parsed_micros"))
-    rankTop(scored, desc("parsed_micros"), k, "parsed_rank",
-      "doc_id", "parsed_rank", "parsed_micros")
-  }
+                   k: Int = 10, maxExpansions: Int = 16): DataFrame =
+    rankTop(parsedCore(spark, parsed, fields, defaultField, positional,
+        maxExpansions)._1,
+      desc("parsed_micros"), k, "parsed_rank", "doc_id", "parsed_rank", "parsed_micros")
 
   /** The shared fail-fast entry checks of [[searchParsed]] /
     * [[explainParsed]]: fail BEFORE any clause work, by name (the
@@ -2801,44 +2753,19 @@ object LexicalStore {
     }
   }
 
-  /** The boost split ([[weightedMicros]]), applied at the per-(clause,
-    * doc) SUBTOTAL (the [[searchTopKFields]] rule; for a group clause
-    * the subtotal is the group's own Σ, so the split floors once per
-    * group, never per inner clause). */
-  private def boostedWm(frame: DataFrame, w: Long): DataFrame =
-    frame.select(col("doc_id"), weightedMicros(s"${w}L", "m").as("wm"))
+  // ---- the boolean clause core ---------------------------------------
+  //
+  // Every multi-clause lexical verb ([[searchBoolean]],
+  // [[explainBoolean]], [[searchParsed]], [[explainParsed]],
+  // [[explainParsedTopK]]) compiles to a list of [[CoreClause]]s and
+  // runs [[clauseCore]]: resolve (driver side, by the caller) → one
+  // postings read per scoring layout → one per-doc aggregate → the
+  // candidate rule as one predicate → Σ boosted subtotals → rank.
 
-  /** [[searchBoolean]]'s candidate rule over built clause frames:
-    * every MUST match set intersected (ids-only semi-joins) minus
-    * every MUST_NOT set; no musts → union of SHOULD sets
-    * (minShouldMatch=1). One definition for the outer query
-    * ([[searchParsed]]/[[explainParsed]]) AND each group's inner
-    * combination, so a group provably gates like a nested boolean
-    * query. */
-  private def parsedCandidates(
-      built: Seq[(QueryParser.Occur, DataFrame, DataFrame)]): DataFrame = {
-    import QueryParser._
-    val musts = built.filter(_._1 == Must)
-    val base =
-      if (musts.nonEmpty)
-        musts.map(_._2.distinct())
-          .reduce((a, b) => a.join(b, Seq("doc_id"), "left_semi"))
-      else built.filter(_._1 != MustNot).map(_._2)
-        .reduce(_.union(_)).distinct()
-    built.filter(_._1 == MustNot).map(_._2)
-      .foldLeft(base)((acc, n) =>
-        acc.join(n.distinct(), Seq("doc_id"), "left_anti"))
-  }
-
-  /** One SIMPLE (non-group) atom RESOLVED to its read requirements —
-    * the driver-side folding/expansion half of the old
-    * simpleClauseFrame, split out so [[parsedClauseFrames]] can issue
-    * ONE pruned read per layout over the union of every clause's
-    * terms instead of one scan per clause. Resolution is byte-for-
-    * byte the standalone verbs' (same folds, same expansion caps,
-    * same loud empty-expansion failures). None = the clause folded
-    * away under its field's analyzer (Lucene's stopword-clause
-    * drop). */
+  /** One atom RESOLVED to its read requirements — the driver-side
+    * folding/expansion half of a clause. Resolution is byte-for-byte
+    * the standalone verbs' (same folds, same expansion caps, same loud
+    * empty-expansion failures). */
   private sealed trait ResolvedAtom { def path: String }
   /** Plain term set (term / prefix / wildcard / range expansions) —
     * scores as an unweighted BM25 sum. */
@@ -2854,9 +2781,129 @@ object LexicalStore {
   private case class RPhrase(path: String, scoreTerms: Seq[String],
                              matches: DataFrame) extends ResolvedAtom
 
-  /** Bounded daemon pool for the parsed path's independent driver
-    * round-trips (dictionary expansions, shared-read checkpoints) —
-    * each thunk fires its own query-sized jobs; the scheduler
+  /** One clause of the core: its `occur` and `boost` (micros) in the
+    * outer query, over `atoms`, each with its inner occur. A simple
+    * clause is one SHOULD atom; a group holds its inner clauses, which
+    * combine by the same [[candidateRule]] as the outer query. */
+  private case class CoreClause(occur: QueryParser.Occur, boost: Long,
+                                atoms: Seq[(QueryParser.Occur, ResolvedAtom)])
+
+  private def termsOf(a: ResolvedAtom): Seq[String] = a match {
+    case RTerms(_, ts) => ts
+    case RWeighted(_, w) => w.map(_._1)
+    case RPhrase(_, ts, _) => ts
+  }
+
+  /** THE boolean candidate rule over per-doc match flags: every MUST
+    * flag, no MUST_NOT flag, and at least `minShouldMatch` SHOULD
+    * flags — at least one when there is no MUST (the union of the
+    * SHOULDs). One definition for [[searchBoolean]], the outer parsed
+    * query and each group's inner combination, so a group provably
+    * gates like a nested boolean query. */
+  private def candidateRule(flags: Seq[(QueryParser.Occur, Column)],
+                            minShouldMatch: Int): Column = {
+    import QueryParser._
+    def of(o: Occur) = flags.collect { case (`o`, f) => f }
+    val need = if (of(Must).isEmpty) math.max(minShouldMatch, 1) else minShouldMatch
+    val should =
+      if (need <= 0) lit(true)
+      else if (need == 1) of(Should).reduce(_ || _)
+      else of(Should).map(f => when(f, 1).otherwise(0)).reduce(_ + _) >= need
+    (of(Must) :+ should).reduce(_ && _) && !of(MustNot).foldLeft(lit(false))(_ || _)
+  }
+
+  /** The clause core. One [[contributions]] read per scoring layout
+    * over the union of its clauses' terms (bucket prune, tombstone
+    * mask, `allow`, [[bm25]]), and each phrase clause's
+    * [[phraseMatchSet]] as rows of the same union, feed ONE
+    * `groupBy(doc_id)`: per atom a presence count `n` and a subtotal
+    * `s` (per-posting [[weightedMicros]] for a fuzzy expansion), per
+    * phrase a match count `f`. Presence is a row count, not `s > 0`:
+    * a BM25 contribution can floor to 0. Over those columns the
+    * candidate rule is one predicate (groups included), a document
+    * ranks only if some scoring clause is present for it, and `score`
+    * is Σ [[weightedMicros]](boost, subtotal) over the scoring
+    * clauses. Out: doc_id; per scoring clause k (the k-th non-
+    * MUST_NOT clause) its presence `p<k>` and boosted subtotal
+    * `wm<k>`; with `withRows`, the scoring posting rows as `rows`
+    * ([[explainBoolean]]'s decomposition); then `score`. */
+  private def clauseCore(spark: SparkSession, clauses: Seq[CoreClause], score: String,
+                         minShouldMatch: Int = 0, allow: Option[DataFrame] = None,
+                         withRows: Boolean = false): DataFrame = {
+    import QueryParser._
+    val atoms = clauses.flatMap(_.atoms.map(_._2)).zipWithIndex
+    atoms.foreach { case (a, _) =>
+      require(termsOf(a).nonEmpty, "lexical search needs at least one term")
+    }
+    val layouts = atoms.map(_._1.path).distinct
+    val reads = layouts.zipWithIndex.map { case (p, l) =>
+      contributions(spark, p, atoms.filter(_._1.path == p).flatMap(a => termsOf(a._1)).distinct,
+        allow = allow).withColumn("src", lit(l))
+    }
+    val phraseRows = atoms.collect { case (RPhrase(_, _, m), j) =>
+      m.select(col("doc_id"), lit(j).as("phrase"))
+    }
+    val input = atoms.foldLeft((reads ++ phraseRows).reduce(_.unionByName(_, true))) {
+      case (in, (RWeighted(_, w), j)) => in.withColumn(s"w$j", element_at(typedLit(w.toMap), col("term")))
+      case (in, _) => in
+    }
+    def rowOf(a: ResolvedAtom) =
+      col("src") === layouts.indexOf(a.path) && col("term").isin(termsOf(a): _*)
+    val perAtom = atoms.flatMap { case (a, j) =>
+      val v = when(rowOf(a), a match {
+        case _: RWeighted => weightedMicros(s"w$j", "micros")
+        case _ => col("micros")
+      })
+      Seq(count(v).as(s"n$j"), sum(v).as(s"s$j")) ++ (a match {
+        case _: RPhrase => Seq(count(when(col("phrase") === j, 1)).as(s"f$j"))
+        case _ => Nil
+      })
+    }
+    val scoringAtoms = clauses.filter(_.occur != MustNot)
+      .flatMap(_.atoms.filter(_._1 != MustNot).map(_._2))
+    val rows =
+      if (!withRows) Nil
+      else Seq(collect_list(when(scoringAtoms.map(rowOf).reduce(_ || _),
+        struct(col("term"), col("tf"), col("df"), col("len"), col("micros")))).as("rows"))
+    val agg = input.groupBy(col("doc_id")).agg(perAtom.head, perAtom.tail ++ rows: _*)
+    val keepRows = if (withRows) Seq(col("rows")) else Nil
+    // per atom: matched (its match set holds the doc) and present
+    // (matched, with scoring rows)
+    val j0 = clauses.scanLeft(0)(_ + _.atoms.size)
+    def matched(a: ResolvedAtom, j: Int) = a match {
+      case _: RPhrase => col(s"f$j") > 0
+      case _ => col(s"n$j") > 0
+    }
+    def present(a: ResolvedAtom, j: Int) = matched(a, j) && col(s"n$j") > 0
+    val perClause = clauses.zip(j0).map { case (c, j) =>
+      val inner = c.atoms.zipWithIndex.map { case ((o, a), d) => (o, a, j + d) }
+      val scoring = inner.filter(_._1 != MustNot)
+      val m = candidateRule(inner.map { case (o, a, ja) => o -> matched(a, ja) }, 0)
+      val p = m && scoring.map { case (_, a, ja) => present(a, ja) }.reduce(_ || _)
+      val sub = scoring.map { case (_, a, ja) =>
+        when(present(a, ja), col(s"s$ja")).otherwise(0L)
+      }.reduce(_ + _)
+      (m, p, sub)
+    }
+    val flagged = agg.select(Seq(col("doc_id")) ++
+      perClause.zipWithIndex.flatMap { case ((m, p, sub), i) =>
+        Seq(m.as(s"m$i"), p.as(s"q$i"), sub.as(s"t$i"))
+      } ++ keepRows: _*)
+    // scoring clause k (position i among all clauses) → p<k>, wm<k>
+    val scoring = clauses.indices.filter(clauses(_).occur != MustNot).zipWithIndex
+    val gate = candidateRule(clauses.zipWithIndex.map { case (c, i) => c.occur -> col(s"m$i") },
+        minShouldMatch) && scoring.map { case (i, _) => col(s"q$i") }.reduce(_ || _)
+    flagged.filter(gate)
+      .select(Seq(col("doc_id")) ++ scoring.flatMap { case (i, k) =>
+          Seq(col(s"q$i").as(s"p$k"), when(col(s"q$i"),
+            weightedMicros(s"${clauses(i).boost}L", s"t$i")).otherwise(0L).as(s"wm$k"))
+        } ++ keepRows: _*)
+      .withColumn(score, scoring.map { case (_, k) => col(s"wm$k") }.reduce(_ + _))
+  }
+
+  /** Bounded daemon pool for independent driver round-trips (the
+    * parsed path's dictionary expansions, the write path's
+    * materializations) — each thunk fires its own jobs; the scheduler
     * back-fills them concurrently (guide §2.6). */
   private lazy val prepPool: java.util.concurrent.ExecutorService =
     java.util.concurrent.Executors.newFixedThreadPool(8,
@@ -2955,15 +3002,10 @@ object LexicalStore {
               .filter(_.nonEmpty).distinct
             if (scoreTerms.isEmpty) None else Some(RTerms(path, scoreTerms))
           case _ =>
-            // checkpoint the ids-only adjacency set: it feeds BOTH the
-            // clause gate and the scoring allow-filter, and the fuse's
-            // gate pushdown would otherwise re-run the positional read
-            // inside every union branch it lands in
-            val matches = phraseMatchSet(spark, posPath, posTerms, slop)
-              .localCheckpoint()
             val scoreTerms = foldQueryTerms(words, analyzer)
               .filter(_.nonEmpty).distinct
-            Some(RPhrase(path, scoreTerms, matches))
+            Some(RPhrase(path, scoreTerms,
+              phraseMatchSet(spark, posPath, posTerms, slop)))
         }
       case PrefixAtom(p0) =>
         val p = foldProbe(spark, path, p0, "prefix")
@@ -2990,89 +3032,42 @@ object LexicalStore {
     }
   }
 
-  /** One SIMPLE atom's MATCH SET and UNboosted score frame
-    * (doc_id, m), sliced from the query's shared per-layout read
-    * (`shared(path)` = the checkpointed (doc_id, term, micros)
-    * contribution frame over the UNION of the query's terms on that
-    * layout). Slicing by `term IN (clause terms)` recovers exactly
-    * the rows the clause's own pruned scan would have produced —
-    * the bucket filter is a superset prune, the term filter is
-    * decisive — and the integer sums are partition-order-free, so
-    * each frame is bit-identical to its pre-r21 per-clause-scan
-    * form (QueryParserSpec pins the searchBoolean equivalence; q231/
-    * q236/q238/q239 gate it against the oracle). */
-  private def frameFromResolved(spark: SparkSession,
-                                shared: Map[String, DataFrame],
-                                r: ResolvedAtom)
-      : (DataFrame, DataFrame) = r match {
-    case RTerms(p, terms) =>
-      val m = slicePlain(shared(p), terms)
-      (m.select(col("doc_id")), m)
-    case RPhrase(p, scoreTerms, matches) =>
-      require(scoreTerms.nonEmpty, "lexical search needs at least one term")
-      val m = slicePlain(shared(p), scoreTerms, allow = Some(matches))
-      (matches, m)
-    case RWeighted(p, weighted) =>
-      val wdf = spark.createDataFrame(weighted).toDF("term", "w")
-      val m = shared(p)
-        .filter(col("term").isin(weighted.map(_._1): _*))
-        .join(broadcast(wdf), Seq("term"))
-        // micros here IS contributionsWeighted's per-row `m`; the
-        // weighted split applies PER POSTING ROW before the doc sum
-        .select(col("doc_id"), weightedMicros("w", "micros").as("wm"))
-        .groupBy(col("doc_id")).agg(sum(col("wm")).as("m"))
-      (m.select(col("doc_id")), m)
-  }
-
-  /** Unweighted BM25 sum of a clause's terms over the shared
-    * contribution frame — [[scoreLexical]]'s aggregation with the
-    * read already done. */
-  private def slicePlain(sharedRead: DataFrame, terms: Seq[String],
-                         allow: Option[DataFrame] = None): DataFrame = {
-    require(terms.nonEmpty, "lexical search needs at least one term")
-    sharedRead.filter(col("term").isin(terms: _*))
-      .transform(p => allowFilter(p, allow))
-      .select(col("doc_id"), col("micros"))
-      .groupBy(col("doc_id")).agg(sum(col("micros")).as("m"))
-  }
-
-  /** Per-clause execution frames, shared by [[searchParsed]] and
-    * [[explainParsed]] (so the explain decomposes the search's own
-    * frames, not a parallel reimplementation): for each clause in
-    * parse order, (index, clause, None when analyzer-consumed, else
-    * (match set, UNboosted (doc_id, m) score frame)). A GROUP clause
-    * builds each inner clause through [[simpleClauseFrame]] and
-    * combines: match set = [[parsedCandidates]] over the inner
-    * frames (the nested-boolean rule), score = Σ inner scoring
-    * subtotals restricted to that set — the group then boosts/gates
-    * in the outer query as ONE clause. Also prices the exact-integer
-    * headroom per clause: boost × innerScoringClauses ×
-    * maxExpansions ≤ 256 (= 2^63 / the standing ~2.2e16 per-term
-    * micros bound, with margin) — the parser's ^16 cap assumed the
-    * default maxExpansions=16 and one clause; the product is the
-    * real invariant (r19 advisor note). */
-  private def parsedClauseFrames(spark: SparkSession,
-                                 parsed: QueryParser.Parsed,
-                                 fields: Map[String, String],
-                                 defaultField: String,
-                                 positional: Map[String, String],
-                                 maxExpansions: Int)
-      : Seq[(Int, QueryParser.Clause, Option[(DataFrame, DataFrame)])] = {
+  /** [[searchParsed]]'s resolve step and [[clauseCore]] run: the
+    * entry checks, then every clause in parse order resolved to a
+    * [[CoreClause]] — a GROUP clause resolves each inner clause the
+    * same way — and the gated per-doc aggregate with `parsed_micros`.
+    * Returns the aggregate and, per scoring clause position of the
+    * core, its explain label (parse-order ordinal, occur, field). A
+    * clause whose atoms all fold away (for a group: whose scoring
+    * atoms all do — folded-away exclusions never gate) drops like a
+    * stopword clause. Also prices the exact-integer headroom per
+    * clause: boost × innerScoringClauses × maxExpansions ≤ 256
+    * (= 2^63 / the standing ~2.2e16 per-term micros bound, with
+    * margin) — the parser's ^16 cap assumed the default
+    * maxExpansions=16 and one clause; the product is the real
+    * invariant (r19 advisor note). */
+  private def parsedCore(spark: SparkSession,
+                         parsed: QueryParser.Parsed,
+                         fields: Map[String, String],
+                         defaultField: String,
+                         positional: Map[String, String],
+                         maxExpansions: Int,
+                         allow: Option[DataFrame] = None)
+      : (DataFrame, Seq[(Int, String, String)]) = {
     import QueryParser._
+    parsedEntryChecks(spark, parsed, fields, defaultField)
     def pathOf(fieldName: String): String =
       fields.getOrElse(fieldName, sys.error(
         s"unknown field '$fieldName' — fields: " +
           fields.keys.toSeq.sorted.mkString(", ")))
-    // phase 1 — resolve every clause's read requirements (all the
-    // driver-side folding, dictionary expansion and positional-gate
-    // work, unchanged from the per-clause form — same caps, same
-    // loud failures). The expansions are independent query-sized
-    // round-trips, so they run CONCURRENTLY (guide §2.6: overlap
-    // independent jobs — the scheduler back-fills, wall time ≈ the
-    // slowest expansion instead of the sum); awaiting in clause
+    // resolve every clause's read requirements (all the driver-side
+    // folding, dictionary expansion and positional-gate work — same
+    // caps, same loud failures). The expansions are independent
+    // query-sized round-trips, so they run CONCURRENTLY (guide §2.6:
+    // overlap independent jobs — the scheduler back-fills, wall time
+    // ≈ the slowest expansion instead of the sum); awaiting in clause
     // order keeps failure reporting identical to the serial form.
-    val resolved: Seq[(Int, QueryParser.Clause,
-        Seq[(QueryParser.Occur, ResolvedAtom)])] =
+    val resolved: Seq[(Int, Clause, Option[CoreClause])] =
       awaitInOrder(parsed.clauses.zipWithIndex.map { case (c, i) => () => {
         val innerScoring = c.atom match {
           case g: GroupAtom => g.clauses.count(_.occur != MustNot)
@@ -3087,7 +3082,7 @@ object LexicalStore {
             "micros; the boosted subtotal must stay under 2^63) — lower " +
             "the boost or maxExpansions")
         val fieldName = c.field.getOrElse(defaultField)
-        val rs = c.atom match {
+        val atoms = c.atom match {
           case g: GroupAtom =>
             g.clauses.flatMap { ic =>
               val f = ic.field.getOrElse(defaultField)
@@ -3096,65 +3091,18 @@ object LexicalStore {
             }
           case a =>
             resolveSimpleAtom(spark, fieldName, pathOf(fieldName),
-              positional, a, maxExpansions).map(c.occur -> _).toSeq
+              positional, a, maxExpansions).map(Should -> _).toSeq
         }
-        (i, c, rs)
+        (i, c, Some(CoreClause(c.occur, c.boostMicros, atoms))
+          .filter(_.atoms.exists(_._1 != MustNot)))
       }})
-    // phase 2 — ONE contribution read per layout over the UNION of
-    // every clause's resolved terms, checkpointed
-    // ([[booleanContributions]]'s one-read discipline, applied across
-    // clauses): without this, Catalyst pushes the fuse's candidate
-    // gate down into every scoring branch and each duplicate re-runs
-    // its own parquet scans — the r20 plan re-read the postings 76
-    // times for a 7-clause query. The checkpoint is term-postings-
-    // sized (exactly the rows the per-clause scans read), so the
-    // 100 TB bound is unchanged. Per-layout reads are independent —
-    // they materialize concurrently too.
-    val shared: Map[String, DataFrame] = {
-      val byPath = resolved
-        .flatMap(_._3.map(_._2))
-        .flatMap {
-          case RTerms(p, ts) => ts.map(p -> _)
-          case RWeighted(p, w) => w.map { case (t, _) => p -> t }
-          case RPhrase(p, ts, _) => ts.map(p -> _)
-        }
-        .groupBy(_._1).toSeq.sortBy(_._1)
-      byPath.map(_._1).zip(awaitInOrder(byPath.map { case (p, xs) => () =>
-        contributions(spark, p, xs.map(_._2).distinct)
-          .select(col("doc_id"), col("term"), col("micros"))
-          .localCheckpoint()
-      })).toMap
+    val kept = resolved.collect { case (i, c, Some(cc)) => (i, c, cc) }
+    require(kept.exists(_._3.occur != MustNot),
+      "every scoring clause folded away under its field's analyzer")
+    val labels = kept.collect { case (i, c, cc) if cc.occur != MustNot =>
+      (i, if (cc.occur == Must) "must" else "should", c.field.getOrElse(defaultField))
     }
-    // phase 3 — slice each clause's (match set, m) frame from the
-    // shared read; a group combines its inner slices by the same
-    // nested-boolean rule as before
-    resolved.map { case (i, c, rs) =>
-      val frames: Option[(DataFrame, DataFrame)] = c.atom match {
-        case _: GroupAtom =>
-          val inner = rs.map { case (occ, r) =>
-            val (mt, m) = frameFromResolved(spark, shared, r)
-            (occ, mt, m)
-          }
-          val scoring = inner.filter(_._1 != MustNot)
-          // the whole group analyzer-consumed → drops like a
-          // stopword clause (even the inner must-nots: exclusion
-          // without a scoring clause is not a group the parser
-          // admits, and folded-away exclusions never gate)
-          if (scoring.isEmpty) None
-          else {
-            val matches = parsedCandidates(inner)
-            val m = scoring.map(_._3).reduce(_.union(_))
-              .join(matches, Seq("doc_id"), "left_semi")
-              .groupBy(col("doc_id")).agg(sum(col("m")).as("m"))
-            Some((matches, m))
-          }
-        case _ =>
-          rs.headOption.map { case (_, r) =>
-            frameFromResolved(spark, shared, r)
-          }
-      }
-      (i, c, frames)
-    }
+    (clauseCore(spark, kept.map(_._3), "parsed_micros", allow = allow), labels)
   }
 
   /** Relevance explain for [[searchParsed]] — the per-(clause, doc)
@@ -3165,32 +3113,28 @@ object LexicalStore {
     * doc that matches it AND passes every gate, carrying the clause's
     * parse-order ordinal, its occur, its field, and `wm` — the
     * BOOSTED per-(clause, doc) subtotal through the same
-    * overflow-safe split the fuse applies ([[boostedWm]], which
-    * floors at the clause subtotal and does not distribute over
-    * terms — the q229 recombination discipline, already folded in
-    * here). Because the fuse IS Σ of exactly these subtotals, the
-    * explanation is SUM-EXACT by construction: per-doc Σ wm ==
+    * overflow-safe split the score applies (which floors at the
+    * clause subtotal and does not distribute over terms — the q229
+    * recombination discipline, already folded in here). The rows are
+    * the search's own gated aggregate ([[clauseCore]]) unpivoted, so
+    * the explanation is SUM-EXACT by construction: per-doc Σ wm ==
     * parsed_micros to the last digit (QueryParserSpec pins it; q239
-    * gates it against the oracle). Same clause frames as the search
-    * ([[parsedClauseFrames]] — one definition), same candidate gate,
-    * with the page spine semi-joined beneath each clause read;
-    * ≤ |cands|·|clauses| rows out, ordered (doc_id, clause). */
+    * gates it against the oracle). The page narrows the postings
+    * reads; ≤ |cands|·|clauses| rows out, ordered (doc_id, clause). */
   def explainParsed(spark: SparkSession, parsed: QueryParser.Parsed,
                     fields: Map[String, String], defaultField: String,
                     cands: DataFrame,
                     positional: Map[String, String] = Map.empty,
                     maxExpansions: Int = 16): DataFrame = {
-    parsedEntryChecks(spark, parsed, fields, defaultField)
-    explainParsedFrames(parsedClauseFrames(spark, parsed, fields,
-      defaultField, positional, maxExpansions), defaultField, cands)
+    val (gated, labels) = parsedCore(spark, parsed, fields, defaultField,
+      positional, maxExpansions, Some(cands))
+    unpivotClauses(gated, labels)
   }
 
   /** [[searchParsed]]'s top-k page AND its [[explainParsed]]
-    * decomposition from ONE set of clause frames — the seam the q239
-    * gate composes: both verbs are deterministic, so running the
-    * frame construction (dictionary expansions, shared checkpointed
-    * reads) twice could only reproduce identical frames at double
-    * cost. Returns exactly
+    * decomposition from ONE aggregate — the seam the q239 gate
+    * composes: the ranked aggregate unpivoted, so the page and its
+    * explanation come from one resolve and one read. Returns exactly
     * `explainParsed(..., searchParsed(...).select("doc_id"), ...)`. */
   private[graft] def explainParsedTopK(spark: SparkSession,
                                        parsed: QueryParser.Parsed,
@@ -3200,42 +3144,28 @@ object LexicalStore {
                                          Map.empty,
                                        k: Int = 10,
                                        maxExpansions: Int = 16): DataFrame = {
-    parsedEntryChecks(spark, parsed, fields, defaultField)
-    val frames = parsedClauseFrames(spark, parsed, fields, defaultField,
+    val (gated, labels) = parsedCore(spark, parsed, fields, defaultField,
       positional, maxExpansions)
-    explainParsedFrames(frames, defaultField,
-      rankParsedFrames(frames, k).select(col("doc_id")))
+    val perClause = labels.indices.flatMap(i => Seq(s"p$i", s"wm$i"))
+    unpivotClauses(rankTop(gated, desc("parsed_micros"), k, "parsed_rank",
+      "doc_id" +: perClause: _*), labels)
   }
 
-  /** The decomposition tail of [[explainParsed]] over already-built
-    * clause frames (see [[rankParsedFrames]]). */
-  private def explainParsedFrames(
-      built: Seq[(Int, QueryParser.Clause, Option[(DataFrame, DataFrame)])],
-      defaultField: String, cands: DataFrame): DataFrame = {
-    import QueryParser._
-    val frames = built
-      .flatMap { case (i, c, fr) => fr.map { case (mt, m) => (i, c, mt, m) } }
-    val scoring = frames.filter(_._2.occur != MustNot)
-    require(scoring.nonEmpty,
-      "every scoring clause folded away under its field's analyzer")
-    val cand = parsedCandidates(frames.map(f => (f._2.occur, f._3, f._4)))
-    val gate = cand.join(cands.select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
-    scoring.map { case (i, c, _, m) =>
-        boostedWm(m, c.boostMicros)
-          .join(gate, Seq("doc_id"), "left_semi")
-          .select(lit(i).as("clause"),
-            lit(c.occur match {
-              case Must => "must"
-              case Should => "should"
-              case MustNot => "must_not"
-            }).as("occur"),
-            lit(c.field.getOrElse(defaultField)).as("field"),
-            col("doc_id"), col("wm"))
-      }
-      .reduce(_.union(_))
+  /** The per-(clause, doc) rows of a [[clauseCore]] aggregate: one
+    * per scoring clause present for the doc, labelled (clause, occur,
+    * field), in one pass (an explode, not a per-clause union, so a
+    * lazy aggregate runs once). */
+  private def unpivotClauses(gated: DataFrame,
+                             labels: Seq[(Int, String, String)]): DataFrame =
+    gated.select(col("doc_id"), explode(array(labels.zipWithIndex.map {
+        case ((i, occur, field), k) =>
+          struct(lit(i).as("clause"), lit(occur).as("occur"), lit(field).as("field"),
+            col(s"p$k").as("present"), col(s"wm$k").as("wm"))
+      }: _*)).as("x"))
+      .filter(col("x.present"))
+      .select(col("x.clause").as("clause"), col("x.occur").as("occur"),
+        col("x.field").as("field"), col("doc_id"), col("x.wm").as("wm"))
       .orderBy(col("doc_id"), col("clause"))
-  }
 
   /** [[QueryParser.parse]] + [[searchParsed]] in one call — the
     * search-box entry point. */

@@ -5,10 +5,13 @@ package graft.sources
   * boxes everywhere) — the q223 discipline applied to a whole query
   * language: parse what the engine's verbs can honor EXACTLY, reject
   * everything else loudly by name. The output AST routes to
-  * [[LexicalStore.searchParsed]], which executes each clause through
+  * [[LexicalStore.searchParsed]], which resolves each clause through
   * the existing verb internals (one fold per clause, the multi-term
-  * analysis-chain bypass for dictionary atoms, integer-exact scoring
-  * everywhere).
+  * analysis-chain bypass for dictionary atoms) and runs them all on
+  * one clause core: one postings read per layout, one per-document
+  * aggregate of clause presences and subtotals, the candidate rule
+  * below as one predicate over them, integer-exact scoring
+  * everywhere.
   *
   * Supported grammar (whitespace-separated clauses; parsing is pure
   * string work on the driver — query-sized, no Spark):

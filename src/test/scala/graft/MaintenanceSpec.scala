@@ -382,6 +382,16 @@ class MaintenanceSpec extends AnyFunSuite {
     IndexStore.updateIvf(spark, docsOf(corpus), ivf)
     IndexStore.updateHnsw(spark, docsOf(corpus), hnsw)
     for ((p, names) <- before) assert(listing(p) == names, s"$p was written to")
+    // ...and its reads fail by name instead of inferring a schema from no file
+    val reads: Seq[(String, () => Any)] = Seq(
+      src -> (() => IndexStore.searchTopK(spark, src, "alpha")),
+      ivf -> (() => IndexStore.searchTopKIvf(spark, ivf, "alpha")),
+      hnsw -> (() => IndexStore.searchTopKHnsw(spark, hnsw, "alpha"))) ++
+      Seq(src, ivf, hnsw).map(p => p -> (() => IndexStore.get(spark, p)))
+    for ((p, read) <- reads) {
+      val e = intercept[IllegalArgumentException](read())
+      assert(e.getMessage.contains(p) && e.getMessage.contains("holds no rows"), e.getMessage)
+    }
     // a scoring layout compacted to nothing: `_stats` holds (0, 0), a
     // search fails by name, and a second compact only clears tombstones
     val stats = spark.read.parquet(s"$lex/_stats").head()
@@ -396,6 +406,9 @@ class MaintenanceSpec extends AnyFunSuite {
     })
     assert(listing(lex).contains("_tombstones"))
     LexicalStore.compactLexical(spark, lex)
+    assert(listing(lex) == before(lex))
+    // deleting ids from it is a no-op: there is no row left to mask
+    LexicalStore.deleteLexical(spark, lex, Seq(1L))
     assert(listing(lex) == before(lex))
     // so does a segmented layout merged down to nothing
     val seg = fresh("e-seg")

@@ -199,65 +199,40 @@ class QueryParserSpec extends AnyFunSuite {
 
   test("every clause's postings read is bucket-pruned to its own terms") {
     buildStores()
-    // r21: the parsed path issues ONE bucket-pruned read per layout
-    // over the union of the query's terms and checkpoints it; the
-    // clause/gate branches then re-read memory, not parquet. The
-    // layout scans therefore live in the checkpoint EXECUTIONS, not
-    // the final ranked plan — capture them with a listener.
-    val captured = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = captured.add(qe.executedPlan)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
+    // the parsed path issues ONE bucket-pruned read per scoring layout
+    // over the union of the query's terms, plus the phrase clause's
+    // positional slot reads (one per phrase term, the phrase stage
+    // searchPhrase shares), all inside the one ranked plan — no
+    // checkpoint, and no clause or gate branch re-reads a layout.
+    // Groups and ranges included: a group's inner clauses and a
+    // range's dictionary expansions route through the same shared
+    // bucket-pruned reads
+    val res = LexicalStore.searchQueryString(spark,
+      "+alpha title:gamma^2 \"alpha beta\" -banned " +
+        "(delta OR epsilon) [banned TO delta]",
+      fields = Map("body" -> bodyP, "title" -> titleP),
+      defaultField = "body", positional = Map("body" -> posP))
+    res.collect()
+    // postings scans only — the `_stats`/`_vocab`/`_tombstones`
+    // sidecars are metadata-sized and legitimately unpartitioned
+    val scans = PlanScans.leafScans(res.queryExecution.executedPlan)
+      .filter(_.relation.location.rootPaths.exists { p =>
+        p.toString.contains("test_qp_") && !p.toString.contains("/_")
+      })
+    def reads(layout: String) = scans.count(
+      _.relation.location.rootPaths.exists(_.toString.endsWith(layout)))
+    assert(reads(bodyP) == 1 && reads(titleP) == 1,
+      s"one read per scoring layout: ${scans.map(_.relation.location.rootPaths)}")
+    assert(reads(posP) == 2, s"one positional read per phrase term: " +
+      scans.map(_.relation.location.rootPaths))
+    // every layout read carries a bucket partition filter — the
+    // shared read is pruned to the union of the query's terms
+    // (the searchTopKLexical discipline, now one read per layout)
+    scans.foreach { sc =>
+      assert(sc.partitionFilters.exists(
+          _.references.exists(_.name == "bucket")),
+        s"unpruned layout read in parsed-query path: $sc")
     }
-    spark.listenerManager.register(listener)
-    try {
-      // groups and ranges included: a group's inner clauses and a
-      // range's dictionary expansions route through the same shared
-      // bucket-pruned reads
-      val res = LexicalStore.searchQueryString(spark,
-        "+alpha title:gamma^2 \"alpha beta\" -banned " +
-          "(delta OR epsilon) [banned TO delta]",
-        fields = Map("body" -> bodyP, "title" -> titleP),
-        defaultField = "body", positional = Map("body" -> posP))
-      res.collect()
-      // postings scans only — the `_stats`/`_vocab`/`_tombstones`
-      // sidecars are metadata-sized and legitimately unpartitioned
-      def layoutScans(ps: Seq[org.apache.spark.sql.execution.SparkPlan]) =
-        ps.flatMap(PlanScans.leafScans)
-          .filter(_.relation.location.rootPaths.exists { p =>
-            p.toString.contains("test_qp_") && !p.toString.contains("/_")
-          })
-      // the listener bus is async — wait for the checkpoint
-      // executions' plans to arrive
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var scans = layoutScans(captured.toArray(
-        Array.empty[org.apache.spark.sql.execution.SparkPlan]).toSeq)
-      while (scans.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(50)
-        scans = layoutScans(captured.toArray(
-          Array.empty[org.apache.spark.sql.execution.SparkPlan]).toSeq)
-      }
-      assert(scans.nonEmpty,
-        "expected checkpointed layout scans for the parsed query")
-      // every layout read carries a bucket partition filter — the
-      // shared read is pruned to the union of the query's terms
-      // (the searchTopKLexical discipline, now one read per layout)
-      scans.foreach { sc =>
-        assert(sc.partitionFilters.exists(
-            _.references.exists(_.name == "bucket")),
-          s"unpruned layout read in parsed-query path: $sc")
-      }
-      // and the final ranked plan re-reads the checkpoints, never the
-      // parquet layouts — the gate/score branches Catalyst duplicates
-      // cost memory re-reads, not repeated scans
-      assert(layoutScans(Seq(res.queryExecution.executedPlan)).isEmpty,
-        "final parsed plan must read the shared checkpoints, not parquet")
-    } finally spark.listenerManager.unregister(listener)
   }
 
   // ---- executor routing equivalences ----------------------------------

@@ -7,7 +7,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Embed
-import graft.sources.{IndexStore, LexicalStore}
+import graft.sources.{IndexStore, LexicalStore, QueryParser}
 
 /** Differential checks of the shared search pipeline (probe ->
   * candidates -> pre-rank -> rerank-and-present): a family whose
@@ -246,6 +246,157 @@ class SearchPipelineSpec extends AnyFunSuite {
       val after = run()
       assert(after.nonEmpty, s"$name after the delete")
       assert(!after.exists(marks), s"$name returned a deleted document: ${after.filter(marks)}")
+    }
+  }
+
+  // ---- the boolean clause core ------------------------------------------
+
+  /** A generated query clause: occur ('+', ' ', '-'), atom, boost. */
+  private sealed trait QAtom
+  private case class QTerm(w: String) extends QAtom
+  private case class QPrefix(p: String) extends QAtom
+  private case class QPhrase(a: String, b: String, slop: Int) extends QAtom
+  private case class QGroup(inner: Seq[(Char, QAtom)]) extends QAtom
+  private case class QClause(occur: Char, atom: QAtom, boost: Int)
+
+  private def render(c: QClause): String = {
+    def atom(a: QAtom): String = a match {
+      case QTerm(w) => w
+      case QPrefix(p) => s"$p*"
+      case QPhrase(x, y, 0) => s"\"$x $y\""
+      case QPhrase(x, y, s) => s"\"$x $y\"~$s"
+      case QGroup(in) => in.map { case (o, a) => s"${o.toString.trim}${atom(a)}" }
+        .mkString("(", " ", ")")
+    }
+    s"${c.occur.toString.trim}${atom(c.atom)}" + (if (c.boost > 1) s"^${c.boost}" else "")
+  }
+
+  private val queryGen: Gen[Seq[QClause]] = {
+    val word = Gen.oneOf(vocab)
+    val occur = Gen.frequency(2 -> '+', 4 -> ' ', 1 -> '-')
+    val atom: Gen[QAtom] = Gen.frequency(
+      5 -> word.map(QTerm(_)),
+      1 -> word.map(w => QPrefix(w.take(2))),
+      2 -> (for (a <- word; b <- word; s <- Gen.oneOf(0, 1)) yield QPhrase(a, b, s)))
+    // a group needs a non-negative inner clause, a query a non-negative clause
+    def scoring[A](xs: List[A], occ: A => Char, fix: A => A) =
+      if (xs.forall(occ(_) == '-')) fix(xs.head) :: xs.tail else xs
+    val group = Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, Gen.zip(occur, atom)))
+      .map(in => QGroup(scoring[(Char, QAtom)](in, _._1, x => (' ', x._2))))
+    val clause = for (o <- occur; a <- Gen.frequency(4 -> atom, 1 -> group);
+                      b <- Gen.oneOf(1, 1, 2, 3)) yield QClause(o, a, b)
+    Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, clause))
+      .map(cs => scoring[QClause](cs, _.occur, _.copy(occur = ' ')))
+  }
+
+  test("the clause core: parsed and boolean pages equal a model over explainScore rows") {
+    import spark.implicits._
+    val k = 8
+    // the exact split every boost applies
+    def wm(w: Long, m: Long) = w * (m / 1000000L) + (w * (m % 1000000L)) / 1000000L
+    def rule(flags: Seq[(Char, Boolean)], msm: Int): Boolean = {
+      val musts = flags.filter(_._1 == '+').map(_._2)
+      val need = if (musts.isEmpty) math.max(msm, 1) else msm
+      musts.forall(identity) && flags.count(f => f._1 == ' ' && f._2) >= need &&
+        !flags.exists(f => f._1 == '-' && f._2)
+    }
+    for (analyzer <- Seq("raw", "english")) {
+      val docs = corpus(nDocs, 70L)
+      val (lex, pos) = (s"$root/core-$analyzer", s"$root/core-pos-$analyzer")
+      LexicalStore.build(spark, lexDocs(docs), lex, analyzer = analyzer)
+      LexicalStore.buildPositional(spark, lexDocs(docs), pos, analyzer = analyzer)
+      val gone = Gen.pick(8, docs.map(_._1)).pureApply(Gen.Parameters.default, Seed(71L)).toSet
+      for (p <- Seq(lex, pos)) LexicalStore.deleteLexical(spark, p, gone.toSeq)
+      def fold(ws: String*): Set[String] = LexicalStore.foldQueryTerms(ws, analyzer).toSet
+      // (doc, term) -> micros over every term, from the scorer's own rows
+      val micros: Map[Long, Map[String, Long]] = LexicalStore.explainScore(spark, lex, vocab,
+          docs.map(_._1).toDF("doc_id")).collect()
+        .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("term"), r.getAs[Long]("micros")))
+        .groupBy(_._1).map { case (d, rs) => d -> rs.map(r => r._2 -> r._3).toMap }
+      val live = docs.map(_._1).filterNot(gone)
+      val indexed = docs.flatMap(_._2.split(' ')).flatMap(fold(_)).toSet
+      val positions = docs.map { case (d, t) => d -> t.split(' ').toSeq.flatMap(fold(_)) }.toMap
+      def rows(d: Long, terms: Set[String]) = micros.getOrElse(d, Map.empty).filter(r => terms(r._1))
+      def page(score: Long => Option[Long]): Seq[(Long, Long)] =
+        live.flatMap(d => score(d).map(d -> _)).sortBy { case (d, s) => (-s, d) }.take(k)
+      // per atom: (matched, present, subtotal) of a doc
+      def atom(a: QAtom): Long => (Boolean, Boolean, Long) = a match {
+        case QGroup(in) =>
+          val inner = in.map { case (o, x) => o -> atom(x) }
+          d => {
+            val r = inner.map { case (o, f) => o -> f(d) }
+            val m = rule(r.map { case (o, x) => o -> x._1 }, 0)
+            val scoring = r.filter(_._1 != '-').map(_._2)
+            (m, m && scoring.exists(_._2), scoring.filter(_._2).map(_._3).sum)
+          }
+        case _ =>
+          val (terms, matches): (Set[String], Long => Boolean) = a match {
+            case QTerm(w) => (fold(w), d => rows(d, fold(w)).nonEmpty)
+            case QPrefix(p) =>
+              val ex = indexed.filter(_.startsWith(p))
+              (ex, d => rows(d, ex).nonEmpty)
+            case QPhrase(x, y, slop) =>
+              val Seq(fx, fy) = Seq(x, y).map(w => fold(w).head)
+              (fold(x, y), d => {
+                val ps = positions(d)
+                ps.indices.filter(ps(_) == fx).exists(i =>
+                  ps.indices.find(j => j > i && ps(j) == fy).exists(_ - i - 1 <= slop))
+              })
+            case _: QGroup => sys.error("unreachable")
+          }
+          d => {
+            val rs = rows(d, terms)
+            val m = matches(d)
+            (m, m && rs.nonEmpty, rs.values.sum)
+          }
+      }
+      var ranked = 0
+      for (i <- 0 until 12) {
+        val q = queryGen.pureApply(Gen.Parameters.default, Seed(700L + i))
+        val text = q.map(render).mkString(" ")
+        val clauses = q.map(c => (c, atom(c.atom)))
+        val want = page { d =>
+          val r = clauses.map { case (c, f) => c -> f(d) }
+          val scoring = r.filter(_._1.occur != '-')
+          if (!rule(r.map { case (c, x) => c.occur -> x._1 }, 0) || !scoring.exists(_._2._2)) None
+          else Some(scoring.filter(_._2._2).map { case (c, x) => wm(c.boost * 1000000L, x._3) }.sum)
+        }
+        val parsed = QueryParser.parse(text)
+        val got = LexicalStore.searchParsed(spark, parsed, Map("body" -> lex), "body",
+          positional = Map("body" -> pos), k = k)
+        assert(got.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq ==
+          want.zipWithIndex.map { case ((d, s), r) => (d, r + 1, s) }, s"$analyzer: '$text'")
+        // the explanation of the page sums to its scores, per doc
+        val sums = LexicalStore.explainParsed(spark, parsed, Map("body" -> lex), "body",
+            got.select("doc_id"), Map("body" -> pos))
+          .collect().groupBy(_.getLong(3)).map { case (d, rs) => d -> rs.map(_.getLong(4)).sum }
+        assert(sums == want.toMap, s"$analyzer: explainParsed of '$text'")
+        ranked += want.size
+      }
+      for (i <- 0 until 8; msm <- 0 to 2) {
+        val ws = Gen.pick(5, vocab).pureApply(Gen.Parameters.default, Seed(800L + i)).toSeq
+        // a must term also named should scores once and counts for msm
+        val (must, should, not) = (ws.take(i % 3), ws.slice(2, 4) ++ ws.take(i % 2), ws.drop(4))
+        val (mustT, shouldT, notT) = (fold(must: _*), fold(should: _*), fold(not: _*))
+        if (msm <= shouldT.size && (mustT ++ shouldT).nonEmpty) {
+          val want = page { d =>
+            val has = rows(d, mustT ++ shouldT ++ notT).keySet
+            val flags = mustT.toSeq.map(t => '+' -> has(t)) ++ shouldT.toSeq.map(t => ' ' -> has(t)) ++
+              notT.toSeq.map(t => '-' -> has(t))
+            if (!rule(flags, msm)) None else Some(rows(d, mustT ++ shouldT).values.sum)
+          }
+          val got = LexicalStore.searchBoolean(spark, lex, must, should, not, k, msm)
+          val tag = s"$analyzer: must=$must should=$should not=$not msm=$msm"
+          assert(got.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq ==
+            want.zipWithIndex.map { case ((d, s), r) => (d, r + 1, s) }, tag)
+          val sums = LexicalStore.explainBoolean(spark, lex, got.select("doc_id"), must, should,
+              not, msm)
+            .collect().groupBy(_.getLong(0)).map { case (d, rs) => d -> rs.map(_.getLong(5)).sum }
+          assert(sums == want.toMap, s"explainBoolean, $tag")
+          ranked += want.size
+        }
+      }
+      assert(ranked > 20 * k, s"$analyzer: only $ranked documents ranked over every query")
     }
   }
 }
