@@ -755,17 +755,17 @@ object Hybrid {
     "/root/repo/target/q157_lex_segments/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
-  /** q157: the lexical layout's INCREMENTAL answer — the denormalized
-    * layout (q115/q151) rewrites per corpus version; the segmented
-    * layout appends each batch as a new segment (per-segment df,
+  /** q157: the lexical layout's INCREMENTAL answer — a build or
+    * upsert (q115/q151) rewrites the layout per corpus version; an
+    * append adds each batch as a new segment (per-segment df,
     * per-segment stats row, old segments byte-untouched —
     * LexicalSpec pins the no-rewrite claim on the files themselves)
     * and merges term statistics at query time, the Lucene
     * IndexReader model. The gate appends the corpus in two batches
     * (doc_id%3≠2, then %3=2) and searches doc-0's terms: the oracle
     * scores a from-scratch single-corpus build — hash-equality IS the
-    * proof that merged-stats scoring equals the rebuild the
-    * denormalized layout would have paid. */
+    * proof that merged-stats scoring equals the rebuild a build
+    * would have paid. */
   private val q157Built = scala.collection.concurrent.TrieMap
     .empty[(String, String), Unit]
 
@@ -2226,7 +2226,7 @@ object Hybrid {
 
   /** q200: [[LexicalStore.searchPrefix]] over the q115 layout —
     * PrefixQuery with the maxExpansions rewrite cap: 's%' expands
-    * against the `_vocab` sidecar to the 8 highest-df terms, which
+    * against the term dictionary to the 8 highest-df terms, which
     * then score through the ordinary bucket-pruned BM25 path. The
     * oracle re-derives dictionary, df ranking, the cap and the
     * scoring from the raw table. */
@@ -2599,11 +2599,17 @@ object Hybrid {
     * time (df sums across disjoint segments). The oracle derives the
     * expansion from GLOBAL df over the whole corpus and scores with
     * global stats — hash-equality proves the merged dictionary and
-    * the merged-stats scoring both equal the from-scratch build. */
+    * the merged-stats scoring both equal the from-scratch build. The
+    * prefix page is (doc_id, lex_rank, lex_micros) on every layout;
+    * each hit's `seg` is the append batch [[ensureSegStore]] put it
+    * in (doc_id % 3 = 2 → 1, else 0). */
   private def q207(s: SparkSession, d: String): DataFrame = {
     val path = ensureSegStore(s, d)
     LexicalStore.searchPrefix(s, path, "s", k = 10,
       maxExpansions = PrefixMaxExp)
+      .select(col("lex_rank"), col("doc_id"),
+        when(pmod(col("doc_id"), lit(3)) === 2, 1).otherwise(0).as("seg"),
+        col("lex_micros"))
       .orderBy(col("lex_rank"))
   }
 
@@ -2638,7 +2644,7 @@ object Hybrid {
   /** q208: [[LexicalStore.suggestTerms]] against the segmented store
     * — the q203 oracle VERBATIM (global df over the whole corpus):
     * hash-equality is the proof that the merged per-segment
-    * dictionaries reproduce the single-layout `_vocab` exactly. */
+    * dictionaries reproduce the single-build dictionary exactly. */
   private def q208(s: SparkSession, d: String): DataFrame = {
     val path = ensureSegStore(s, d)
     LexicalStore.suggestTerms(s, path, "streem", maxDist = 2, k = 5)
@@ -2653,7 +2659,7 @@ object Hybrid {
 
   /** q209: [[LexicalStore.searchFuzzy]] over the q115 layout — the
     * index-backed FuzzyQuery (q164 is the corpus-join sibling): the
-    * misspelling 'streem' expands against the `_vocab` dictionary
+    * misspelling 'streem' expands against the term dictionary
     * (distance ASC, df DESC, term ASC, capped), each candidate
     * weighted by the integer similarity ⌊1e6·(maxDist+1−dist)/
     * (maxDist+1)⌋, and the weighted OR scores through one
@@ -2817,7 +2823,7 @@ object Hybrid {
 
   /** q211: [[LexicalStore.searchWildcard]] — the `*ind*` query
     * including Lucene's dreaded leading wildcard: a full term-
-    * dictionary walk in ANY engine, here the Zipf-bounded `_vocab`
+    * dictionary walk in ANY engine, here the Zipf-bounded `_segvocab`
     * scan with the df-ranked maxExpansions cap, then the ordinary
     * bucket-pruned scoring. Oracle re-derives dictionary, contains
     * matching, cap and scoring. */
@@ -3479,7 +3485,7 @@ object Hybrid {
   private val Q237MaxExp = 6
 
   /** q237: [[LexicalStore.searchTermRange]] — Lucene's
-    * TermRangeQuery over the `_vocab` term dictionary: a
+    * TermRangeQuery over the term dictionary: a
     * MIXED-bracket range (`[merge TO sort}` — inclusive lower,
     * exclusive upper) whose 8 in-range dictionary terms exceed the
     * maxExpansions=6 cap, so the df-ranked rewrite (df DESC, term

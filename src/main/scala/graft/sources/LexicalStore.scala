@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -14,18 +14,23 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * partitioned-parquet idiom as the IVF/HNSW layouts in
   * [[IndexStore]]:
   *
-  *   path/bucket=&lt;b&gt;/part-....parquet  postings: (term, doc_id, tf, df, len)
-  *   path/_stats/part-....parquet       (n_docs, sum_len)
+  *   path/bucket=&lt;b&gt;/seg=&lt;s&gt;/part-....parquet  postings: (term, doc_id, tf, df, len)
+  *   path/_segstats/part-....parquet              (seg, n_docs, sum_len)
+  *   path/_segvocab/seg=&lt;s&gt;/part-....parquet    (term, df)
   *
   * `bucket = pmod(xxhash64(term), NumBuckets)` — the term dictionary
   * is hash-partitioned, so a query's posting reads PRUNE to the
   * buckets of its terms at plan time (the Lucene term-dictionary
   * segment seek, expressed as parquet partition pruning; LexicalSpec
-  * pins it). `df` (document frequency) and `len` (document token
-  * count) are denormalized into the posting row — Lucene likewise
-  * stores docFreq with the term and norms per doc — so scoring is a
-  * single pruned scan plus a broadcast of the 1-row `_stats` table:
-  * no join against a corpus-sized side at query time.
+  * pins it). A segment is one written batch: a build or rewrite
+  * writes segment 0, [[appendLexicalSegment]] adds the next one
+  * beside it. `df` (the segment's document frequency) and `len`
+  * (document token count) are denormalized into the posting row —
+  * Lucene likewise stores docFreq with the term and norms per doc —
+  * so scoring is a single pruned scan plus the summed `_segstats`
+  * rows as literals: no join against a corpus-sized side at query
+  * time. With several segments the read sums the segments' dfs of
+  * the query terms from the pruned rows themselves.
   *
   * Scoring is BM25 (k1 = 1.2, b = 0.75) with a RATIONAL idf:
   * `(N - df + 0.5) / (df + 0.5)` — the classic Robertson-Sparck Jones
@@ -285,11 +290,11 @@ object LexicalStore {
     floor(lit(ScoreScale) * (idf * tfn)).cast(LongType)
   }
 
-  /** Build the inverted index from a (id, text) document set. Full
-    * rebuild (static overwrite) — the df/len/stats denormalization
-    * makes incremental append a re-aggregation, so this layout is
-    * rebuilt per corpus version, like a Lucene force-merge; build
-    * cost is two aggregations over one tokenize pass. A fresh build
+  /** Build the inverted index from a (id, text) document set as one
+    * segment: a full rebuild (static overwrite), like a Lucene
+    * force-merge; build cost is two aggregations over one tokenize
+    * pass. [[appendLexicalSegment]] grows the layout by further
+    * segments without a rewrite. A fresh build
     * also clears any `_tombstones` left by [[deleteLexical]] — the
     * new corpus version starts with nothing deleted. */
   def build(spark: SparkSession, docs: DataFrame, path: String,
@@ -315,7 +320,7 @@ object LexicalStore {
     * w_f·len_f(d), df(t) = #docs containing t in ANY field, and the
     * ordinary kernel runs on the combined quantities. With integer
     * field weights every combined quantity is an exact integer, so
-    * the layout is literally the standard denormalized layout built
+    * the layout is literally the standard scoring layout built
     * from transformed tf rows — [[writePostings]] re-aggregates
     * df/len/stats from them, and EVERY existing search verb
     * (top-k, boolean, prefix/fuzzy/regexp expansion, explain, batch,
@@ -447,28 +452,29 @@ object LexicalStore {
       .select(col("doc_id"), col("term"), col("tf"), col("df"), col("len"))
   }
 
-  /** Shared write path: (doc_id, term, tf) rows — already
+  /** THE postings writer: (doc_id, term, tf) rows — already
     * materialized, so overwriting a layout they were read from is
-    * safe — re-aggregated to df/len/stats and written as the
-    * bucket-partitioned layout + `_stats` sidecar.
+    * safe — aggregated to df/len ([[withDfLen]]) and written as one
+    * segment of the bucket-major layout, then its sidecars.
+    *
+    * `append` None: the rows are the whole corpus, written as segment
+    * 0 with a STATIC overwrite of the whole path (every build, rewrite
+    * and upsert), which also removes every previous sidecar, so an
+    * absent one needs no delete. `append` Some(s): the rows are one
+    * new batch, written as segment `s` with a DYNAMIC overwrite that
+    * replaces only its own `bucket=b/seg=s` directories — every
+    * existing segment file stays byte-untouched (LexicalSpec pins it).
     *
     * `fields`: Some(descriptor) marks the layout BM25F — its tf rows
     * are combined-field quantities, so plain (id, text) maintenance
     * must not union single-field rows into them ([[upsertLexical]]'s
-    * guard reads this sidecar). Written FIRST among the sidecars,
-    * before even `_analyzer`: the missing-`_stats` loudness below
-    * protects search but NOT maintenance (upsert never reads
-    * `_stats`), so any crash window that left combined postings
-    * unmarked would let a plain upsert pass the guard silently;
-    * fields-first means an interrupted BM25F rewrite either carries
-    * its mark or has no `_analyzer` — and analyzerOf fails loudly on
-    * every verb. None on a plain rewrite; the static postings
-    * overwrite has already cleared any previous sidecar, so absence
-    * needs no delete. */
+    * guard reads this sidecar). */
   private def writePostings(spark: SparkSession, tf: DataFrame,
                             path: String, analyzer: String,
-                            fields: Option[Seq[(String, Long)]] = None): Unit = {
-    // `_symspell` derives from the vocabulary this rewrite replaces:
+                            fields: Option[Seq[(String, Long)]] = None,
+                            append: Option[Int] = None): Unit = {
+    val seg = append.getOrElse(0)
+    // `_symspell` derives from the vocabulary this write changes:
     // invalidate it FIRST (memo bump, then meta, then index — the
     // meta-present-implies-index-present invariant), so the indexed
     // suggest/fuzzy verbs fail loudly with the named "buildSymSpell
@@ -476,19 +482,22 @@ object LexicalStore {
     // previous build's deletion dictionary (the r16 silent-drift
     // defect) or an obscure missing-path read through a stale memo.
     invalidateSymSpell(spark, path)
-    writeBuckets(withDfLen(tf), path, "static")
-    // `_analyzer` is written FIRST among the sidecars (the static
-    // postings overwrite above clears the whole path, so every
-    // sidecar is gone here): a crash after any later sidecar write
-    // then leaves `_stats`/`_vocab` missing — a LOUD missing-path
-    // read — whereas analyzer-last left a complete-looking folded
-    // layout that silently read back as `raw` and misranked every
-    // query with no error.
+    withDfLen(tf).withColumn("bucket", bucketCol(col("term")))
+      .withColumn("seg", lit(seg))
+      // one task, so one file, per bucket, sorted by (term, doc_id)
+      .repartition(NumBuckets, col("bucket"))
+      .sortWithinPartitions(col("term"), col("doc_id"))
+      .write.mode(SaveMode.Overwrite)
+      // explicit either way: a session-level conf (the q83 stream sets
+      // dynamic) must not leave a rebuild's phantom buckets behind
+      .option("partitionOverwriteMode", if (append.isEmpty) "static" else "dynamic")
+      .partitionBy("bucket", "seg")
+      .parquet(path)
     // `_fields` lands FIRST among the sidecars on a BM25F rewrite —
-    // BEFORE `_analyzer` (self-review r19): the missing-`_stats`
-    // loudness argument below protects SEARCH but not MAINTENANCE
+    // BEFORE `_analyzer` (self-review r19): a missing `_segstats`
+    // makes every SEARCH fail loudly, but not MAINTENANCE
     // (upsertLexical reads fieldsOf + analyzerOf + postings, never
-    // `_stats`), so a crash that left combined postings UNMARKED
+    // `_segstats`), so a crash that left combined postings UNMARKED
     // would let a later plain upsert pass the BM25F guard and
     // silently corrupt the layout. Fields-first closes every window:
     // crash before `_fields` leaves no `_analyzer` either, and
@@ -500,38 +509,33 @@ object LexicalStore {
         .coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$path/_fields")
     }
-    writeAnalyzer(spark, path, analyzer)
-    // `_stats` and `_vocab` both derive from the checkpointed tf and
-    // are ordered only AFTER `_analyzer` (the crash-window discipline
-    // above needs analyzer-first; between these two the order is
-    // immaterial — a crash leaving either missing is a LOUD
+    // `_analyzer` next: a crash after any later sidecar write then
+    // leaves `_segstats` or `_segvocab` missing — a LOUD missing-path
+    // read — whereas analyzer-last left a complete-looking folded
+    // layout that silently read back as `raw` and misranked every
+    // query with no error. An append onto an existing layout keeps the
+    // sidecar it was checked against: rewriting it would open a window
+    // in which the layout has `_segstats` but no `_analyzer`.
+    if (seg == 0) writeAnalyzer(spark, path, analyzer)
+    // `_segstats` and `_segvocab` both derive from the checkpointed tf
+    // and are ordered only AFTER `_analyzer` (between these two the
+    // order is immaterial — a crash leaving either missing is a LOUD
     // missing-path read) — so the two little aggregate+write jobs
-    // overlap instead of queueing (guide §2.6).
-    // `_vocab` sidecar (term, df) — the term dictionary prefix/
-    // wildcard expansion reads (Lucene's terms index): bucket =
+    // overlap instead of queueing (guide §2.6). `_segvocab/seg=s` is
+    // the segment's term dictionary (term, df) that prefix/wildcard/
+    // fuzzy expansion reads (Lucene's terms index): bucket =
     // hash(term) makes the postings unprunable BY DESIGN for a
-    // prefix, so [[searchPrefix]] scans this vocabulary-sized
-    // sidecar instead of the corpus-sized postings. Rewritten by
-    // every postings rewrite (build/compact/upsert), so dictionary
-    // and postings can't drift.
+    // prefix, so [[searchPrefix]] scans this vocabulary-sized sidecar
+    // instead of the corpus-sized postings.
     awaitInOrder(Seq(
       () => statsRow(tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("len")))
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/_stats"),
+        .select(lit(seg).as("seg"), col("n_docs"), col("sum_len"))
+        .coalesce(1).write.mode(if (append.isEmpty) SaveMode.Overwrite else SaveMode.Append)
+        .parquet(s"$path/_segstats"),
       () => tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/_vocab")))
+        .coalesce(1).write.mode(SaveMode.Overwrite)
+        .parquet(s"$path/_segvocab/seg=$seg")))
   }
-
-  /** Postings rows bucket-partitioned under `dir` — one task, so one
-    * file, per bucket, sorted by (term, doc_id) — replacing the
-    * partitions `overwriteMode` names (static: all of them). */
-  private def writeBuckets(rows: DataFrame, dir: String, overwriteMode: String): Unit =
-    rows.withColumn("bucket", bucketCol(col("term")))
-      .repartition(NumBuckets, col("bucket"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", overwriteMode)
-      .partitionBy("bucket")
-      .parquet(dir)
 
   /** The one-row (n_docs, sum_len) stats of a (doc_id, len) frame;
     * `sum_len` is 0, not null, when there are no documents. */
@@ -550,10 +554,10 @@ object LexicalStore {
   // (LexicalSpec pins this). `compactLexical` is the expungeDeletes:
   // rebuild postings from survivors with re-aggregated stats.
   // `upsertLexical` is compact-with-adds: replaced ids drop, new
-  // (id, text) rows tokenize in, one rewrite. At 100 TB the rewrite
-  // is the honest cost of a layout that denormalizes df into the
-  // posting row for single-scan scoring; per-segment layouts trade
-  // that write cost for a per-query stats merge.
+  // (id, text) rows tokenize in, one rewrite to a single segment. At
+  // 100 TB the rewrite is the honest cost of denormalizing df into the
+  // posting row for single-scan scoring; [[appendLexicalSegment]]
+  // trades that write cost for a per-query df merge.
 
   private def tombDir(path: String) = s"$path/_tombstones"
 
@@ -627,7 +631,7 @@ object LexicalStore {
     val analyzer = analyzerOf(spark, path)
     // a layout compacted down to no rows has nothing to read, but an
     // upsert still inserts into it (a missing path still fails on the read)
-    lazy val emptied = Relations.partitionDirs(spark, path).exists(_.isEmpty)
+    lazy val emptied = holdsNoPostings(spark, path)
     val out = adds(analyzer) match {
       case None if emptied => None
       case None => Some(survivorRows(spark, path, cols))
@@ -641,10 +645,10 @@ object LexicalStore {
     clearTombstones(spark, path)
   }
 
-  /** Rewrite the layout from surviving postings with freshly
-    * re-aggregated df/len/stats, then drop the tombstones — after
-    * this, scores equal a from-scratch build over the survivors
-    * (LexicalSpec compares byte-for-value). */
+  /** Rewrite the layout — any segment count — from surviving postings
+    * as one segment with freshly re-aggregated df/len/stats, then drop
+    * the tombstones — after this, scores equal a from-scratch build
+    * over the survivors (LexicalSpec compares byte-for-value). */
   def compactLexical(spark: SparkSession, path: String): Unit = {
     // a BM25F layout compacts legitimately (survivor tf rows are
     // already combined-field quantities) — but the rewrite must
@@ -662,21 +666,26 @@ object LexicalStore {
     * reappears in `docs` is live again with its new text. */
   def upsertLexical(spark: SparkSession, path: String, docs: DataFrame,
                     idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    // the wrong-family-verb guard, lexical edition: on a BM25F layout
-    // the survivor tf rows are COMBINED-field quantities — unioning a
-    // plain single-field tokenize into them would score revised docs
-    // BM25 while survivors score BM25F, a silent ranking corruption
-    // with no error anywhere downstream
-    require(fieldsOf(spark, path).isEmpty,
-      s"$path is a BM25F combined-field layout — a plain (id, text) " +
-        "upsert would mix single-field tf rows into combined-field " +
-        "postings; use upsertBm25F (it routes the batch through the " +
-        "stored field/weight transform)")
+    requirePlainLayout(spark, path)
     val base = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     rewriteLexical(spark, path, TfCols,
       a => Some((termFreqs(base, a), base.select(col("doc_id")).distinct())),
       writePostings(spark, _, path, _))
   }
+
+  /** The wrong-family-verb guard, lexical edition, of every verb that
+    * tokenizes plain (id, text) documents into an existing layout
+    * ([[upsertLexical]], [[appendLexicalSegment]]): on a BM25F layout
+    * the stored tf rows are COMBINED-field quantities — adding a plain
+    * single-field tokenize to them would score new docs BM25 while the
+    * others score BM25F, a silent ranking corruption with no error
+    * anywhere downstream. */
+  private def requirePlainLayout(spark: SparkSession, path: String): Unit =
+    require(fieldsOf(spark, path).isEmpty,
+      s"$path is a BM25F combined-field layout — a plain (id, text) " +
+        "batch would mix single-field tf rows into combined-field " +
+        "postings; use upsertBm25F (it routes the batch through the " +
+        "stored field/weight transform)")
 
   /** [[upsertLexical]] for a BM25F layout: the batch's documents
     * carry the SAME field columns the layout was built from — the
@@ -703,73 +712,62 @@ object LexicalStore {
       writePostings(spark, _, path, _, fields = Some(fields)))
   }
 
-  // ---- segmented layout: append WITHOUT rewrite ---------------------
+  // ---- segments: append WITHOUT rewrite ------------------------------
   //
-  // The denormalized layout above rewrites per corpus version; this is
-  // Lucene's other answer, made explicit: each append writes a NEW
-  // SEGMENT (its own postings with PER-SEGMENT df, its own stats row),
-  // old segments stay byte-untouched (LexicalSpec pins it), and query
-  // time merges the term statistics — global df(term) = Σ segments'
-  // df, global n_docs/sum_len = Σ stats rows — exactly how a Lucene
-  // IndexReader sums docFreq across its segment readers. The trade vs
-  // the denormalized layout: append is O(batch) instead of O(corpus),
-  // search pays a |query-terms|-row stats merge (vocabulary-pruned,
-  // never corpus-sized). Layout:
-  //
-  //   path/seg=<s>/bucket=<b>/part-*.parquet  (term, doc_id, tf, df, len)
-  //   path/_segstats/part-*.parquet           (seg, n_docs, sum_len)
-  //
-  // df in-row is the SEGMENT's df; a doc lives in exactly one segment,
-  // so len is exact and the merged scoring equals a from-scratch build
-  // over the union corpus (the q157 gate proves it hash-exact).
-
-  /** Per-segment (doc_id, term, tf, df, len) rows of one document
-    * batch — the build() aggregation scoped to the batch. */
-  private def segmentRows(docs: DataFrame, idCol: String, textCol: String,
-                          analyzer: String): DataFrame = {
-    val base = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-    val tf = termFreqs(base, analyzer)
-      .localCheckpoint() // one tokenize pass feeds the df/len joins
-    withDfLen(tf)
-  }
-
-  private def segIds(spark: SparkSession, path: String): Seq[Int] =
-    Relations.partitionDirs(spark, path).getOrElse(Nil).map(_.getPath.getName)
-      .filter(_.startsWith("seg=")).map(_.stripPrefix("seg=").toInt).sorted
+  // Lucene's answer to O(corpus) rewrites, made explicit: each append
+  // writes a NEW SEGMENT (its own postings with PER-SEGMENT df, its own
+  // `_segstats` row and `_segvocab` dictionary), old segments stay
+  // byte-untouched (LexicalSpec pins it), and every read merges the
+  // term statistics — global df(term) = Σ segments' df, global
+  // n_docs/sum_len = Σ `_segstats` rows — exactly how a Lucene
+  // IndexReader sums docFreq across its segment readers. A doc lives
+  // in exactly one segment, so len is exact and the merged scoring
+  // equals a from-scratch build over the union corpus (the q157 gate
+  // proves it hash-exact). Deleted docs keep counting in df until a
+  // merge rewrites their segment — Lucene's docFreq-until-merge
+  // semantics, the same staleness a tombstone leaves in one segment.
 
   /** Append `docs` as the next segment: one batch-sized aggregation
-    * and write; no existing segment file is touched. Caller contract
-    * (as in Lucene): a doc id appears in at most one segment —
-    * upsert into a segmented layout is therefore delete, then
-    * [[compactSegments]] (which expunges the dead rows and clears
-    * the tombstones), then append: a tombstoned id cannot be
-    * re-appended directly, because this append-only path cannot
-    * touch the old segment holding its dead rows (the guard below
-    * fails loudly with exactly that message; it deliberately also
-    * rejects ids that were tombstoned without ever being indexed —
-    * distinguishing those would cost a corpus probe per append for
-    * a caller mistake better surfaced than absorbed). */
+    * and write; no existing segment file is touched. Onto a fresh path
+    * this writes segment 0; onto any layout (built, rewritten or
+    * appended) segment max(`_segstats`.seg) + 1, after checking the
+    * batch folds under the layout's analyzer and the layout is not
+    * BM25F ([[requirePlainLayout]]) — both fail before any write.
+    * Caller contract (as in Lucene): a doc id appears in at most one
+    * segment — upsert into a segmented layout is therefore delete,
+    * then [[compactSegments]] (which expunges the dead rows and clears
+    * the tombstones), then append, or simply [[upsertLexical]]: a
+    * tombstoned id cannot be re-appended directly, because this
+    * append-only path cannot touch the old segment holding its dead
+    * rows (the guard below fails loudly with exactly that message; it
+    * deliberately also rejects ids that were tombstoned without ever
+    * being indexed — distinguishing those would cost a corpus probe per
+    * append for a caller mistake better surfaced than absorbed). */
   def appendLexicalSegment(spark: SparkSession, docs: DataFrame, path: String,
                            idCol: String = "doc_id",
                            textCol: String = "text",
                            analyzer: String = AnalyzerRaw): Unit = {
     requireAnalyzer(analyzer)
-    val existing = segIds(spark, path)
-    // a second batch must fold exactly like the first — a segmented
-    // index whose segments disagree on the analyzer is two indexes
+    // an existing path is a layout: its `_segstats` names the segments
+    // (a layout without one fails loudly here, before any write)
+    val existing =
+      if (Relations.partitionDirs(spark, path).isEmpty) Nil
+      else segStats(spark, path).map(r => r.getInt(r.fieldIndex("seg"))).toSeq
     if (existing.nonEmpty) {
+      requirePlainLayout(spark, path)
+      // a second batch must fold exactly like the first — an index
+      // whose segments disagree on the analyzer is two indexes
       val built = analyzerOf(spark, path)
       require(built == analyzer,
         s"layout at $path was built with analyzer '$built', append got '$analyzer'")
     }
-    val seg = existing.lastOption.fold(0)(_ + 1)
     // a tombstoned id cannot be re-appended: its dead rows sit in an
     // old segment this append-only path must not touch, so clearing
     // the tombstone would resurrect them alongside the new rows (a
-    // doc in two segments — double-counted everywhere). The
-    // denormalized upsert CAN resurrect because it rewrites; here the
-    // honest answer is a loud compact-first message. Ids-only check,
-    // batch-sized, only when tombstones exist at all.
+    // doc in two segments — double-counted everywhere). The upsert CAN
+    // resurrect because it rewrites; here the honest answer is a loud
+    // compact-first message. Ids-only check, batch-sized, only when
+    // tombstones exist at all.
     tombstones(spark, path).foreach { t =>
       val clash = docs.select(col(idCol).as("doc_id"))
         .join(t, Seq("doc_id"), "left_semi").limit(1).count()
@@ -777,137 +775,36 @@ object LexicalStore {
         s"batch re-appends tombstoned doc ids — the append-only " +
           s"layout cannot resurrect them: compactSegments($path) first")
     }
-    // an append grows the vocabulary, so any `_symspell` index over
-    // the merged dictionary is stale the moment the segment lands —
-    // same delete-first invalidation as the denormalized rewrites
-    invalidateSymSpell(spark, path)
-    val rows = segmentRows(docs, idCol, textCol, analyzer).localCheckpoint()
-    writeBuckets(rows, s"$path/seg=$seg", "dynamic") // only this seg's dirs
-    // first segment: the analyzer sidecar lands BEFORE `_segstats`
-    // (the writePostings ordering argument): a crash between the two
-    // leaves a layout without its `_segstats` discriminator, whose
-    // next read fails loudly on the missing `_vocab` path — never a
-    // complete-looking layout silently reading back as `raw`
-    if (existing.isEmpty) writeAnalyzer(spark, path, analyzer)
-    // `_segstats` and `_segvocab` both derive from the checkpointed
-    // rows and are ordered only after `_analyzer` (the writePostings
-    // sidecar discipline) — overlap the two small aggregate+write jobs
-    // (guide §2.6); per-segment term dictionary: one (term, df) row
-    // per segment term in the SEGMENT's own `_segvocab` directory so
-    // the append-only contract holds (query-time merge sums disjoint
-    // dfs — the searchTopKSegmented gdf argument).
-    awaitInOrder(Seq(
-      () => statsRow(rows.select(col("doc_id"), col("len")).distinct())
-        .select(lit(seg).as("seg"), col("n_docs"), col("sum_len"))
-        .coalesce(1).write.mode(SaveMode.Append).parquet(s"$path/_segstats"),
-      () => rows.select(col("term"), col("df")).distinct()
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$path/_segvocab/seg=$seg")))
-    ()
+    val tf = termFreqs(docs.select(col(idCol).as("doc_id"), col(textCol).as("text")),
+        analyzer)
+      .localCheckpoint() // one tokenize pass feeds the postings and sidecars
+    writePostings(spark, tf, path, analyzer,
+      append = Some(existing.reduceOption(_ max _).fold(0)(_ + 1)))
   }
 
-  /** Merge all segments back into one (the Lucene forceMerge):
-    * re-aggregate (doc_id, term, tf) across segments into a single
-    * seg=0 with fresh per-segment(=global) df and one stats row.
-    * Scores are unchanged by construction — the merge computes
-    * exactly the statistics the query-time merge was deriving
-    * (LexicalSpec pins it); what it buys is one directory level of
-    * fan-in and the smallest possible stats-merge at query time.
-    * Amortization policy (when to merge) is the caller's, as in
-    * Lucene. */
-  def compactSegments(spark: SparkSession, path: String): Unit = {
-    val analyzer = analyzerOf(spark, path) // read BEFORE the delete
-    // the merge is the segmented layout's expungeDeletes: tombstoned
-    // docs drop HERE (search masked them since the delete; the merged
-    // segment's re-aggregated df/stats finally stop counting them —
-    // Lucene's docFreq-until-merge semantics end at the merge too).
-    // One survivor definition with the denormalized compact/upsert;
-    // the whole-path delete below also removes the `_tombstones`
-    // sidecar, so the rewritten layout starts with nothing deleted.
-    val tf = survivorRows(spark, path, TfCols)
-    // the merge rewrites the dictionary the `_symspell` index mirrors
-    // (per-segment dfs collapse into global ones): invalidate meta-
-    // first BEFORE the whole-path delete, so no crash state and no
-    // stale memo can leave the indexed suggest/fuzzy verbs answering
-    // from the pre-merge deletion dictionary
-    invalidateSymSpell(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    writeBuckets(withDfLen(tf), s"$path/seg=0", "dynamic")
-    // analyzer sidecar FIRST among the sidecars (the writePostings
-    // ordering argument): any later crash leaves `_segstats` missing
-    // — the segmented discriminator — so the next read fails loudly
-    // instead of silently folding under the wrong rule
-    writeAnalyzer(spark, path, analyzer)
-    // both sidecars derive from the checkpointed tf — overlap the two
-    // small aggregate+write jobs (guide §2.6); the merged dictionary's
-    // global df comes straight from tf (rows would re-run the df/len
-    // joins a second time)
-    awaitInOrder(Seq(
-      () => statsRow(tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("len")))
-        .select(lit(0).as("seg"), col("n_docs"), col("sum_len"))
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$path/_segstats"),
-      () => tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$path/_segvocab/seg=0")))
-    ()
-  }
+  /** Merge all segments back into one (the Lucene forceMerge): the
+    * [[compactLexical]] rewrite — survivors re-aggregated into a single
+    * segment 0 with fresh df and one stats row, tombstones expunged.
+    * Scores of live documents are unchanged by the merge itself (it
+    * computes exactly the statistics the read-time merge was deriving,
+    * minus the deleted docs; LexicalSpec pins it); what it buys is one
+    * segment and no read-time df merge. Amortization policy (when to
+    * merge) is the caller's, as in Lucene. */
+  def compactSegments(spark: SparkSession, path: String): Unit =
+    compactLexical(spark, path)
 
-  /** Segmented top-`k`: the denormalized search with global df merged
-    * from the pruned rows and global stats summed from `_segstats`
-    * ([[contributionsSegmented]]). Scores equal a from-scratch
-    * single-layout build over the union corpus (q157 pins it
-    * hash-exact). */
+  /** Top-`k` with each hit's segment: (lex_rank, doc_id, seg,
+    * lex_micros) — [[searchTopKLexical]]'s scores, through the same
+    * stages, on a layout of any segment count (a built layout is
+    * segment 0). Scores equal a from-scratch build over the union
+    * corpus (q157 pins it hash-exact). */
   def searchTopKSegmented(spark: SparkSession, path: String,
-                          queryTerms: Seq[String], k: Int = 10): DataFrame =
-    rankAnalyzedSegmented(spark, path,
-      foldQueryTerms(queryTerms, analyzerOf(spark, path)), k)
-
-  /** [[rankAnalyzed]]'s segmented sibling — the post-fold body of
-    * [[searchTopKSegmented]], reachable with PRE-ANALYZED terms (the
-    * dictionary-expansion verbs route here on segmented layouts; see
-    * rankAnalyzed's Scaladoc for why a second fold is wrong). */
-  private[graft] def rankAnalyzedSegmented(spark: SparkSession, path: String,
-                                           terms0: Seq[String],
-                                           k: Int): DataFrame = {
-    val scored = contributionsSegmented(spark, path,
-        terms0.filter(_.nonEmpty).distinct)
+                          queryTerms: Seq[String], k: Int = 10): DataFrame = {
+    val scored = contributions(spark, path, analyzedTerms(spark, path, queryTerms))
       .groupBy(col("doc_id"), col("seg"))
       .agg(sum(col("micros")).as("lex_micros"))
     rankTop(scored, desc("lex_micros"), k, "lex_rank",
       "lex_rank", "doc_id", "seg", "lex_micros")
-  }
-
-  /** [[contributions]]' segmented sibling: the per-(doc, term)
-    * frame [[rankAnalyzedSegmented]] aggregates and
-    * [[explainScore]] decomposes. Returns (doc_id, seg, term, tf, df,
-    * len, micros) with df already the MERGED global value. */
-  private def contributionsSegmented(spark: SparkSession, path: String,
-                                     terms: Seq[String],
-                                     allow: Option[DataFrame] = None)
-      : DataFrame = {
-    require(terms.nonEmpty, "lexical search needs at least one term")
-    val post = prunedPostings(spark, path, terms)
-    // summed driver-side from the collectCached segment-stats rows —
-    // per-segment longs, order-free, no per-query scan
-    val segRows = Relations.collectCached(spark, s"$path/_segstats")
-    val stats = (lit(segRows.map(r => r.getLong(r.fieldIndex("n_docs"))).sum),
-      lit(segRows.map(r => r.getLong(r.fieldIndex("sum_len"))).sum))
-    // global df: per-segment dfs are disjoint doc sets, so they sum;
-    // one distinct (seg, term, df) row per segment contributes once.
-    // Computed BEFORE the allow filter and the tombstone mask — a
-    // candidate filter narrows whose scores are explained, never the
-    // corpus statistics, and docFreq counts deleted docs until
-    // segments merge (Lucene's semantics, this layout's `_vocab`
-    // convention)
-    val gdf = post.select(col("seg"), col("term"), col("df")).distinct()
-      .groupBy(col("term")).agg(sum(col("df")).as("gdf"))
-    live(spark, path, allowFilter(post, allow))
-      .join(broadcast(gdf), "term")
-      .select(col("doc_id"), col("seg"), col("term"), col("tf"),
-        col("gdf").as("df"), col("len"), bm25(stats, col("gdf")).as("micros"))
   }
 
   // key includes the LAYOUT KIND: the scoring and positional builders
@@ -972,25 +869,38 @@ object LexicalStore {
 
   /** Stage 1, the read: the postings of `terms` pruned to their
     * buckets' directories, with a pushed `term IN (...)` row-group
-    * filter. A layout with no postings left (every document deleted
-    * and compacted away) fails here by name, from directory listings,
-    * before any job. */
+    * filter. On a scoring layout of several segments `df` becomes the
+    * GLOBAL df: per-segment dfs count disjoint doc sets, so one
+    * distinct (seg, term, df) row per segment sums, from the pruned
+    * rows themselves — before any `where`, allowlist or tombstone mask
+    * (a candidate filter narrows whose scores are computed, never the
+    * corpus statistics, and docFreq counts deleted docs until their
+    * segment is rewritten). With one segment the in-row df already is
+    * the global df and the read is the plain scan. A layout with no
+    * postings left (every document deleted and compacted away) fails
+    * here by name, from directory listings, before any job. */
   private def prunedPostings(spark: SparkSession, path: String,
                              terms: Seq[String]): DataFrame = {
     require(!holdsNoPostings(spark, path),
       s"lexical layout at $path holds no documents: every document was " +
         "deleted and compacted away")
     val ts = terms.distinct
-    Relations.parquet(spark, path)
+    val pruned = Relations.parquet(spark, path)
       .filter(col("bucket").isin(ts.map(bucketOf).distinct.map(Integer.valueOf): _*) &&
         col("term").isin(ts: _*))
+    // positional layouts carry no segments (and no df)
+    if (!pruned.columns.contains("seg") || segStats(spark, path).length <= 1) pruned
+    else {
+      val gdf = pruned.select(col("seg"), col("term"), col("df")).distinct()
+        .groupBy(col("term")).agg(sum(col("df")).as("gdf"))
+      pruned.join(broadcast(gdf), "term")
+        .withColumn("df", col("gdf")).drop("gdf")
+    }
   }
 
-  /** True when the layout at `path` has no partition directory left,
-    * or, segmented, none left under any `seg=` directory. */
+  /** True when the layout at `path` has no partition directory left. */
   private def holdsNoPostings(spark: SparkSession, path: String): Boolean =
-    Relations.partitionDirs(spark, path).exists(_.forall(d =>
-      d.getPath.getName.startsWith("seg=") && holdsNoPostings(spark, d.getPath.toString)))
+    Relations.partitionDirs(spark, path).exists(_.isEmpty)
 
   /** `rows` minus the tombstoned doc ids — the one tombstone mask of
     * every search read and of the maintenance survivors. */
@@ -1008,16 +918,21 @@ object LexicalStore {
     live(spark, path, allowFilter(where.fold(pruned)(pruned.filter), allow))
   }
 
-  /** The `_stats` sidecar's single (n_docs, sum_len) row as driver
-    * literals: a collectCached read pays one one-task job per layout
-    * VERSION instead of a sidecar scan plus broadcast per query
-    * (guide §2.4). Missing `_stats` still fails loudly (the
-    * crash-window contract). */
+  /** The `_segstats` rows (seg, n_docs, sum_len), one per segment:
+    * a collectCached read pays one one-task job per layout VERSION
+    * instead of a sidecar scan per query (guide §2.4). A missing
+    * `_segstats` fails loudly (the crash-window contract) — so does a
+    * layout written before segments were the only form. */
+  private def segStats(spark: SparkSession, path: String): Array[Row] =
+    Relations.collectCached(spark, s"$path/_segstats")
+
+  /** The layout-wide (n_docs, sum_len) — the segments' rows summed,
+    * per-segment longs, order-free — as driver literals. */
   private def statsLits(spark: SparkSession, path: String)
       : (Column, Column) = {
-    val r = Relations.collectCached(spark, s"$path/_stats").head
-    (lit(r.getLong(r.fieldIndex("n_docs"))),
-      lit(r.getLong(r.fieldIndex("sum_len"))))
+    val rs = segStats(spark, path)
+    (lit(rs.map(r => r.getLong(r.fieldIndex("n_docs"))).sum),
+      lit(rs.map(r => r.getLong(r.fieldIndex("sum_len"))).sum))
   }
 
   /** Stage 2: [[bm25Micros]] of a posting row's `tf`, `df` and `len`
@@ -1058,17 +973,17 @@ object LexicalStore {
   /** Distance ASC, doc_id ASC — the positional ranks' order. */
   private def asc(dist: String): Seq[Column] = Seq(col(dist).asc, col("doc_id"))
 
-  /** The per-(doc, term) contribution frame every denormalized-layout
-    * scorer aggregates — (doc_id, term, tf, df, len, micros). ONE
-    * definition feeds [[scoreLexical]]'s sum AND [[explainScore]]'s
-    * decomposition, so the explanation is the score's own code path. */
+  /** The per-(doc, term) contribution frame every scorer aggregates —
+    * (doc_id, seg, term, tf, df, len, micros). ONE definition feeds
+    * [[scoreLexical]]'s sum AND [[explainScore]]'s decomposition, so
+    * the explanation is the score's own code path. */
   private def contributions(spark: SparkSession, path: String,
                             terms: Seq[String],
                             where: Option[Column] = None,
                             allow: Option[DataFrame] = None): DataFrame = {
     require(terms.nonEmpty, "lexical search needs at least one term")
     postings(spark, path, terms, where, allow)
-      .select(col("doc_id"), col("term"), col("tf"), col("df"), col("len"),
+      .select(col("doc_id"), col("seg"), col("term"), col("tf"), col("df"), col("len"),
         bm25(statsLits(spark, path)).as("micros"))
   }
 
@@ -1095,26 +1010,18 @@ object LexicalStore {
     * `micros` itself; because scores are exact integers, the
     * explanation is SUM-EXACT: per-doc Σ micros equals the rank
     * path's lex_micros to the last digit (LexicalSpec pins it for
-    * BOTH layout families, and q222/q224 gate it against the
-    * oracle), a promise float-BM25 explain APIs cannot make. Serves
-    * the denormalized AND the segmented layout — each through the
-    * contribution frame its OWN scorer aggregates
-    * ([[contributions]] / [[contributionsSegmented]]), so the
-    * explanation is the score's code path, not a parallel
-    * reimplementation; the segmented frame's df is the merged
-    * global value the scorer used. ≤ |cands|·|terms| rows out,
-    * ordered (doc_id, term). */
+    * one build and for appended segments, and q222/q224 gate it
+    * against the oracle), a promise float-BM25 explain APIs cannot
+    * make. The rows come from the contribution frame the scorer
+    * itself aggregates ([[contributions]]), so the explanation is the
+    * score's code path, not a parallel reimplementation; on several
+    * segments its df is the merged global value the scorer used.
+    * ≤ |cands|·|terms| rows out, ordered (doc_id, term). */
   def explainScore(spark: SparkSession, path: String,
-                   queryTerms: Seq[String], cands: DataFrame): DataFrame = {
-    val terms = analyzedTerms(spark, path, queryTerms)
-    val contrib =
-      if (isSegmented(spark, path))
-        contributionsSegmented(spark, path, terms, Some(cands))
-      else contributions(spark, path, terms, allow = Some(cands))
-    contrib.select(col("doc_id"), col("term"), col("tf"), col("df"),
-        col("len"), col("micros"))
+                   queryTerms: Seq[String], cands: DataFrame): DataFrame =
+    contributions(spark, path, analyzedTerms(spark, path, queryTerms), allow = Some(cands))
+      .select(col("doc_id"), col("term"), col("tf"), col("df"), col("len"), col("micros"))
       .orderBy(col("doc_id"), col("term"))
-  }
 
   /** [[explainScore]] for [[searchTopKFields]]: the per-(field,
     * doc, term) decomposition of a weighted multi-field score.
@@ -1755,33 +1662,16 @@ object LexicalStore {
         col("r.df").as("df"), col("r.len").as("len"), col("r.micros").as("micros"))
       .orderBy(col("doc_id"), col("term"))
 
-  /** True when `path` holds the SEGMENTED layout (its `_segstats`
-    * sidecar is the discriminator — the layouts share no other
-    * structure a probe could race on). */
-  private def isSegmented(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_segstats")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  /** The layout's term dictionary as (term, df) with GLOBAL df: the
+    * per-segment `_segvocab` dictionaries with df summed across
+    * segments (disjoint doc sets — the [[prunedPostings]] global-df
+    * argument, applied to the dictionary); with one segment its
+    * dictionary as it is. Vocabulary-sized, never corpus-sized. */
+  private def termDictionary(spark: SparkSession, path: String): DataFrame = {
+    val vocab = Relations.parquet(spark, s"$path/_segvocab")
+    if (segStats(spark, path).length <= 1) vocab.select(col("term"), col("df"))
+    else vocab.groupBy(col("term")).agg(sum(col("df")).as("df"))
   }
-
-  /** Fail fast, by name, before any dictionary walk: the weighted
-    * scorer reads the denormalized layout's `_stats`, which a
-    * segmented layout does not have. */
-  private def requireDenormalized(spark: SparkSession, path: String,
-                                  what: String): Unit =
-    require(!isSegmented(spark, path),
-      s"$what needs the denormalized layout's _stats — compactSegments($path) first")
-
-  /** The layout's term dictionary as (term, df) with GLOBAL df:
-    * `_vocab` verbatim for the denormalized layout; for the
-    * segmented layout, the per-segment `_segvocab` dictionaries with
-    * df summed across segments (disjoint doc sets — the
-    * [[searchTopKSegmented]] gdf argument, applied to the
-    * dictionary). Vocabulary-sized either way, never corpus-sized. */
-  private def termDictionary(spark: SparkSession, path: String): DataFrame =
-    if (isSegmented(spark, path))
-      Relations.parquet(spark, s"$path/_segvocab")
-        .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    else Relations.parquet(spark, s"$path/_vocab")
 
   /** Fold a dictionary probe (prefix/needle) to its single token —
     * the shared head of every dictionary-expansion verb. Multi-term
@@ -1824,26 +1714,14 @@ object LexicalStore {
     expanded
   }
 
-  /** Route expanded terms to the layout's own rank path. Dictionary
-    * terms are ALREADY analyzed (they come out of `_vocab`), so they
-    * enter through the pre-analyzed rankers — re-folding them through
-    * the layout analyzer would re-stem stems on an `english` layout
-    * (Porter is not idempotent) and silently match nothing; see
-    * [[rankAnalyzed]]. */
-  private def routeScore(spark: SparkSession, path: String,
-                         terms: Seq[String], k: Int): DataFrame =
-    if (isSegmented(spark, path))
-      rankAnalyzedSegmented(spark, path, terms, k)
-    else rankAnalyzed(spark, path, terms, k)
-
   /** Prefix query — Lucene's PrefixQuery with its maxExpansions
-    * guard: expand `prefix` against the `_vocab` term dictionary
+    * guard: expand `prefix` against the term dictionary
     * (vocabulary-sized scan, the honest cost of a hash-bucketed
     * layout that CANNOT prune a prefix), keep the `maxExpansions`
     * highest-df matches (df DESC, term ASC — the rewrite cap that
     * stops `a%` from becoming a thousand-term query), then score the
-    * expanded terms through the layout's own rank path
-    * ([[routeScore]]). The expansion round-trips the driver (bounded
+    * expanded terms through [[rankAnalyzed]] (dictionary terms are
+    * already analyzed). The expansion round-trips the driver (bounded
     * by maxExpansions — the query-rows convention) because the final
     * search prunes buckets from literal terms. */
   def searchPrefix(spark: SparkSession, path: String, prefix: String,
@@ -1854,7 +1732,7 @@ object LexicalStore {
     val expanded = expandDictionary(spark, path,
       col("term").startsWith(p), maxExpansions,
       s"no indexed term starts with '$p' — nothing to search")
-    routeScore(spark, path, expanded, k)
+    rankAnalyzed(spark, path, expanded, k)
   }
 
   /** The term-range dictionary expansion shared by [[searchTermRange]]
@@ -1891,16 +1769,14 @@ object LexicalStore {
     * exclusive per side), keep the `maxExpansions` highest-df
     * matches (df DESC, term ASC — the same rewrite cap the prefix/
     * wildcard family carries), then score the expansions through
-    * the layout's own rank path. Serves both layout families through
-    * [[routeScore]] (the dictionary is `_vocab` or the merged
-    * `_segvocab`). The vocabulary-sized dictionary walk is the honest
+    * [[rankAnalyzed]]. The vocabulary-sized dictionary walk is the honest
     * cost of a hash-bucketed layout that cannot prune a
     * lexicographic range. */
   def searchTermRange(spark: SparkSession, path: String,
                       lo: String, hi: String,
                       inclLo: Boolean = true, inclHi: Boolean = true,
                       k: Int = 10, maxExpansions: Int = 16): DataFrame =
-    routeScore(spark, path,
+    rankAnalyzed(spark, path,
       expandTermRange(spark, path, lo, hi, inclLo, inclHi, maxExpansions), k)
 
   /** Best snippet window per candidate doc — the highlighter half of
@@ -1960,7 +1836,7 @@ object LexicalStore {
         col("best.n").as("n_terms"))
   }
 
-  /** Did-you-mean — term suggestion against the `_vocab` dictionary
+  /** Did-you-mean — term suggestion against the term dictionary
     * (Lucene's DirectSpellChecker contract): candidates within
     * `maxDist` Levenshtein edits of `term`, ranked (distance ASC,
     * df DESC, term ASC) so the closest, most-attested correction
@@ -2043,7 +1919,6 @@ object LexicalStore {
                    maxExpansions: Int = 16): DataFrame = {
     require(maxDist >= 1 && maxExpansions >= 1,
       s"bad maxDist=$maxDist / maxExpansions=$maxExpansions")
-    requireDenormalized(spark, path, "explainFuzzy")
     val term = foldProbe(spark, path, term0, "fuzzy probe")
     explainScoreWeighted(spark, path,
       fuzzyWeights(
@@ -2056,7 +1931,7 @@ object LexicalStore {
   //
   // The billion-term scale path the dictionary verbs' Scaladocs have
   // been NAMING since r15, now built: suggest/fuzzy scan the whole
-  // `_vocab` per call (Zipf-bounded, fine at fixture scale; a web
+  // dictionary per call (Zipf-bounded, fine at fixture scale; a web
   // corpus's dictionary is 1e8-1e9 terms and a full scan per
   // keystroke is not a product). SymSpell (Garbe's symmetric-delete
   // algorithm, public domain): precompute every ≤maxDist-DELETION
@@ -2162,7 +2037,7 @@ object LexicalStore {
     * One dictionary pass: explode each term's deletion neighborhood,
     * hash-partition by variant. Rebuild after compact/upsert changes
     * the vocabulary (it derives from [[termDictionary]], so it serves
-    * both layout families). */
+    * any segment count). */
   def buildSymSpell(spark: SparkSession, path: String,
                     maxDist: Int = 2): Unit = {
     import spark.implicits._
@@ -2286,18 +2161,12 @@ object LexicalStore {
     * quantized, engine-independent stand-in), and score the weighted
     * OR. The dictionary scan is
     * vocabulary-sized (the [[suggestTerms]] SymSpell note applies);
-    * the driver round-trip is maxExpansions rows. Denormalized
-    * layouts only: the weighted scorer reads `_stats`, so a segmented
-    * store fails fast with a compact-first message instead of an
-    * obscure missing-path error after the dictionary walk. */
+    * the driver round-trip is maxExpansions rows. */
   def searchFuzzy(spark: SparkSession, path: String, term0: String,
                   maxDist: Int = 2, k: Int = 10,
                   maxExpansions: Int = 16): DataFrame = {
     require(maxDist >= 1 && k >= 1 && maxExpansions >= 1,
       s"bad maxDist=$maxDist / k=$k / maxExpansions=$maxExpansions")
-    // fail BEFORE the dictionary walk, not in an unrelated-looking
-    // _stats read after it: the weighted scorer is denormalized-only
-    requireDenormalized(spark, path, "searchFuzzy")
     // fuzzy is a rewritten MULTI-TERM query (Lucene FuzzyQuery
     // bypasses the analysis chain like Prefix/Wildcard/Regexp): the
     // probe folds lowercase-only on an `english` layout, so a probe
@@ -2359,7 +2228,6 @@ object LexicalStore {
                          maxExpansions: Int = 16): DataFrame = {
     require(maxDist >= 1 && maxDist <= 2 && k >= 1 && maxExpansions >= 1,
       s"bad maxDist=$maxDist / k=$k / maxExpansions=$maxExpansions")
-    requireDenormalized(spark, path, "searchFuzzyIndexed")
     val builtDist = symspellDist(spark, path)
     require(maxDist <= builtDist,
       s"index built for maxDist $builtDist, queried with $maxDist")
@@ -2454,7 +2322,7 @@ object LexicalStore {
     * docs warn about: a hash-bucketed postings layout cannot prune
     * any wildcard, and neither can Lucene's sorted terms index — both
     * pay a full dictionary walk. Here that walk is the
-    * vocabulary-sized `_vocab`/`_segvocab` scan (Zipf-bounded
+    * vocabulary-sized `_segvocab` scan (Zipf-bounded
     * metadata, never the corpus), capped by the same df-ranked
     * maxExpansions rewrite as [[searchPrefix]], then scored through
     * the layout's own rank path. */
@@ -2464,7 +2332,7 @@ object LexicalStore {
     val expanded = expandDictionary(spark, path,
       col("term").contains(needle), maxExpansions,
       s"no indexed term contains '$needle' — nothing to search")
-    routeScore(spark, path, expanded, k)
+    rankAnalyzed(spark, path, expanded, k)
   }
 
   /** Lowercase a dictionary pattern through the SAME Catalyst Lower
@@ -2487,7 +2355,7 @@ object LexicalStore {
     * literal characters are restricted to `[a-z0-9]`, which are
     * never regex-special, so the translation needs no escaping and
     * Spark's and any oracle engine's regex semantics provably agree
-    * — and walks the `_vocab`/`_segvocab` dictionary with `rlike`:
+    * — and walks the `_segvocab` dictionary with `rlike`:
     * the same vocabulary-sized scan (no engine can prune a leading
     * wildcard), the same df-ranked `maxExpansions` rewrite cap, then
     * the layout's own rank path. On an `english`
@@ -2499,7 +2367,7 @@ object LexicalStore {
     val (lowered, pred) = globTermPred(pattern0)
     val expanded = expandDictionary(spark, path, pred, maxExpansions,
       s"no indexed term matches glob '$lowered' — nothing to search")
-    routeScore(spark, path, expanded, k)
+    rankAnalyzed(spark, path, expanded, k)
   }
 
   /** Validate + translate a glob to its anchored dictionary-match
@@ -2586,7 +2454,7 @@ object LexicalStore {
     val expanded = expandDictionary(spark, path,
       col("term").rlike(rx), maxExpansions,
       s"no indexed term matches regexp '$lowered' — nothing to search")
-    routeScore(spark, path, expanded, k)
+    rankAnalyzed(spark, path, expanded, k)
   }
 
   /** More-like-this — Lucene's MoreLikeThisQuery: mine the best
@@ -2733,25 +2601,6 @@ object LexicalStore {
         maxExpansions)._1,
       desc("parsed_micros"), k, "parsed_rank", "doc_id", "parsed_rank", "parsed_micros")
 
-  /** The shared fail-fast entry checks of [[searchParsed]] /
-    * [[explainParsed]]: fail BEFORE any clause work, by name (the
-    * searchFuzzy discipline) — the clause scorers aggregate through
-    * the denormalized layout's `_stats`/`_vocab`, so a segmented
-    * field would otherwise die in an unrelated-looking missing-path
-    * read halfway through clause 3. */
-  private def parsedEntryChecks(spark: SparkSession,
-                                parsed: QueryParser.Parsed,
-                                fields: Map[String, String],
-                                defaultField: String): Unit = {
-    require(fields.contains(defaultField),
-      s"defaultField '$defaultField' is not in fields " +
-        fields.keys.toSeq.sorted.mkString("{", ", ", "}"))
-    fields.foreach { case (f, p) =>
-      require(!isSegmented(spark, p),
-        s"field '$f' ($p) is a segmented layout — parsed queries " +
-          s"serve the denormalized family; compactSegments($p) first")
-    }
-  }
 
   // ---- the boolean clause core ---------------------------------------
   //
@@ -3022,7 +2871,6 @@ object LexicalStore {
         Some(RTerms(path, expandTermRange(spark, path, lo, hi, inclLo,
           inclHi, maxExpansions)))
       case FuzzyAtom(t, d) =>
-        requireDenormalized(spark, path, "fuzzy clause")
         val term = foldProbe(spark, path, t, "fuzzy probe")
         Some(RWeighted(path, fuzzyWeights(
           editCandidates(spark, path, term, d, maxExpansions), term, d)))
@@ -3055,7 +2903,10 @@ object LexicalStore {
                          allow: Option[DataFrame] = None)
       : (DataFrame, Seq[(Int, String, String)]) = {
     import QueryParser._
-    parsedEntryChecks(spark, parsed, fields, defaultField)
+    // fail BEFORE any clause work, by name
+    require(fields.contains(defaultField),
+      s"defaultField '$defaultField' is not in fields " +
+        fields.keys.toSeq.sorted.mkString("{", ", ", "}"))
     def pathOf(fieldName: String): String =
       fields.getOrElse(fieldName, sys.error(
         s"unknown field '$fieldName' — fields: " +

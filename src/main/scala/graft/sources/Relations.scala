@@ -79,8 +79,10 @@ object Relations {
   /** The partition directories (`col=value` children) of a layout, or
     * None when `path` does not exist. A layout whose every partition
     * emptied is `Some(Nil)`: both maintenance cores decide "emptied"
-    * by this one predicate, whatever the partition column or nesting
-    * (a segmented lexical layout's `seg=` level counts). */
+    * by this one predicate, whatever the partition column. Only the
+    * top level is listed — a lexical layout's `seg=` directories sit
+    * under its `bucket=` ones, so a bucket directory exists exactly
+    * while some segment holds postings in it. */
   private[graft] def partitionDirs(spark: SparkSession, path: String)
       : Option[Seq[org.apache.hadoop.fs.FileStatus]] = {
     val p = new org.apache.hadoop.fs.Path(path)

@@ -542,22 +542,26 @@ class LexicalSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, d)
     LexicalStore.appendLexicalSegment(spark,
       docs.filter(pmod(col("doc_id"), lit(2)) === 0), segPath)
-    def files(dir: String): Map[String, (Long, Long)] = {
-      val it = fs.listFiles(new Path(dir), true)
+    // the layout is bucket-major: segment s's postings live under
+    // every bucket=b/seg=s directory
+    def files(seg: Int): Map[String, (Long, Long)] = {
+      val it = fs.listFiles(p, true)
       val b = Map.newBuilder[String, (Long, Long)]
       while (it.hasNext) {
         val f = it.next()
-        b += f.getPath.toString -> ((f.getLen, f.getModificationTime))
+        if (f.getPath.getParent.getName == s"seg=$seg" &&
+            f.getPath.getParent.getParent.getName.startsWith("bucket="))
+          b += f.getPath.toString -> ((f.getLen, f.getModificationTime))
       }
       b.result()
     }
-    val before = files(s"$segPath/seg=0")
+    val before = files(0)
     assert(before.nonEmpty)
     LexicalStore.appendLexicalSegment(spark,
       docs.filter(pmod(col("doc_id"), lit(2)) === 1), segPath)
-    assert(files(s"$segPath/seg=0") == before,
+    assert(files(0) == before,
       "append must not touch existing segment files")
-    assert(fs.exists(new Path(s"$segPath/seg=1")))
+    assert(files(1).nonEmpty)
     // merged-stats scoring equals a from-scratch denormalized build
     val freshPath = "/root/repo/target/test_lex_seg_fresh"
     LexicalStore.build(spark, docs, freshPath)
@@ -568,7 +572,6 @@ class LexicalSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(seg == fresh, "segment-merged scores must equal the rebuild's")
     // segmented search still prunes on the bucket partition column
-    // (bucket is the second partition level under seg=)
     val narrow = LexicalStore.searchTopKSegmented(spark, segPath, qt.take(2), 5)
     narrow.collect()
     val scans = leafScans(narrow.queryExecution.executedPlan).filter(
@@ -580,8 +583,7 @@ class LexicalSpec extends AnyFunSuite {
       "segmented postings scan must carry a bucket partition filter")
     // forceMerge: one segment left, scores identical
     LexicalStore.compactSegments(spark, segPath)
-    assert(fs.listStatus(new Path(segPath)).map(_.getPath.getName)
-      .count(_.startsWith("seg=")) == 1)
+    assert(files(1).isEmpty && files(0).nonEmpty)
     val merged = LexicalStore.searchTopKSegmented(spark, segPath, qt, 50)
       .collect().map(r => r.getLong(1) -> r.getLong(3)).toMap
     assert(merged == fresh, "forceMerge must not move scores")
@@ -1056,10 +1058,9 @@ class LexicalSpec extends AnyFunSuite {
       docs.filter(col("doc_id") <= 2), segP)
     LexicalStore.appendLexicalSegment(spark,
       docs.filter(col("doc_id") > 2), segP)
-    val seg = LexicalStore.searchWildcard(spark, segP, "ind", k = 10)
-    assert(seg.columns.contains("seg"), "segmented schema expected")
-    assert(seg.collect().map(_.getAs[Long]("doc_id")).toSet
-      == Set(1L, 2L, 3L))
+    // one rank path for any segment count: the page equals the build's
+    assert(LexicalStore.searchWildcard(spark, segP, "ind", k = 10).collect().toSeq ==
+      LexicalStore.searchWildcard(spark, p, "ind", k = 10).collect().toSeq)
     intercept[IllegalArgumentException] {
       LexicalStore.searchWildcard(spark, p, "zzz")
     }
@@ -1152,18 +1153,24 @@ class LexicalSpec extends AnyFunSuite {
     }
   }
 
-  test("searchFuzzy fails fast on a segmented layout") {
+  test("searchFuzzy on appended segments equals one build of the union") {
     import spark.implicits._
     val p = "/root/repo/target/test_lex_fuzzy_seg"
-    val fs = new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(p), true)
-    LexicalStore.appendLexicalSegment(spark,
-      Seq((1L, "stream things")).toDF("doc_id", "text"), p)
-    val e = intercept[IllegalArgumentException] {
-      LexicalStore.searchFuzzy(spark, p, "streem")
+    val one = s"${p}_one"
+    deleteDir(p)
+    val segs = Seq(Seq((1L, "stream things")), Seq((2L, "steam streams stream")))
+    for (seg <- segs) LexicalStore.appendLexicalSegment(spark, seg.toDF("doc_id", "text"), p)
+    LexicalStore.build(spark, segs.flatten.toDF("doc_id", "text"), one)
+    def fuzzy(path: String) = {
+      LexicalStore.buildSymSpell(spark, path)
+      val page = LexicalStore.searchFuzzy(spark, path, "streem")
+      Seq(page, LexicalStore.searchFuzzyIndexed(spark, path, "streem"),
+          LexicalStore.explainFuzzy(spark, path, "streem", page.select(col("doc_id"))))
+        .map(_.collect().toSeq)
     }
-    assert(e.getMessage.contains("compactSegments"), e.getMessage)
+    val want = fuzzy(one)
+    assert(want.head.nonEmpty)
+    assert(fuzzy(p) == want)
   }
 
   // ---- r16: symspell deletion index ---------------------------------------

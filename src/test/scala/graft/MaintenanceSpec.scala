@@ -334,6 +334,43 @@ class MaintenanceSpec extends AnyFunSuite {
     assertLexicalMatchesScratch(f, path, segs.reduce(_ ++ _) ++ up, "upsert into segments")
   }
 
+  /** relative path -> size of every file under `path`. */
+  private def allFiles(path: String): Map[String, Long] =
+    Files.walk(Paths.get(path)).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => Paths.get(path).relativize(f).toString -> Files.size(f)).toMap
+
+  test("appendLexicalSegment onto a built layout: one build of the union, or refused unwritten") {
+    val (a, b) = ((0L until 12L), (12L until 20L))
+    val (corpusA, corpusB) = (a.map(i => i -> text(7000L + i)).toMap, b.map(i => i -> text(7000L + i)).toMap)
+    val (path, scratch) = (fresh("append-built"), fresh("append-built-scratch"))
+    LexicalStore.build(spark, docsOf(corpusA), path, analyzer = "english")
+    LexicalStore.appendLexicalSegment(spark, docsOf(corpusB), path, analyzer = "english")
+    LexicalStore.build(spark, docsOf(corpusA ++ corpusB), scratch, analyzer = "english")
+    for (q <- queries) {
+      val terms = q.split(' ').toSeq
+      val want = rows(LexicalStore.searchTopKLexical(spark, scratch, terms, k = 50))
+      assert(want.nonEmpty)
+      assert(rows(LexicalStore.searchTopKLexical(spark, path, terms, k = 50)) == want, q)
+      assert(rows(LexicalStore.explainScore(spark, path, terms, docsOf(corpusA ++ corpusB))) ==
+        rows(LexicalStore.explainScore(spark, scratch, terms, docsOf(corpusA ++ corpusB))), q)
+    }
+    // an analyzer mismatch is refused by name, before any write
+    val before = allFiles(path)
+    val mismatch = intercept[IllegalArgumentException](
+      LexicalStore.appendLexicalSegment(spark, docsOf(Map(30L -> "alpha")), path))
+    assert(mismatch.getMessage.contains("'english'") && mismatch.getMessage.contains("'raw'"),
+      mismatch.getMessage)
+    assert(allFiles(path) == before)
+    // so is a plain append onto a BM25F layout
+    val bm = fresh("append-bm25f")
+    LexicalStore.buildBm25F(spark, docsOf(corpusA), bm, Seq("title" -> 2L, "text" -> 1L))
+    val bmBefore = allFiles(bm)
+    val bm25f = intercept[IllegalArgumentException](
+      LexicalStore.appendLexicalSegment(spark, docsOf(corpusB), bm))
+    assert(bm25f.getMessage.contains("BM25F"), bm25f.getMessage)
+    assert(allFiles(bm) == bmBefore)
+  }
+
   test("maintenance guards: wrong family, lexical layouts, BM25F pair") {
     import spark.implicits._
     val corpus: Corpus = (0L until 12L).map(i => i -> text(900L + i)).toMap
@@ -392,9 +429,10 @@ class MaintenanceSpec extends AnyFunSuite {
       val e = intercept[IllegalArgumentException](read())
       assert(e.getMessage.contains(p) && e.getMessage.contains("holds no rows"), e.getMessage)
     }
-    // a scoring layout compacted to nothing: `_stats` holds (0, 0), a
-    // search fails by name, and a second compact only clears tombstones
-    val stats = spark.read.parquet(s"$lex/_stats").head()
+    // a scoring layout compacted to nothing: `_segstats` holds one
+    // segment of (0, 0), a search fails by name, and a second compact
+    // only clears tombstones
+    val stats = spark.read.parquet(s"$lex/_segstats").head()
     assert(stats.getAs[Long]("n_docs") == 0L)
     assert(!stats.isNullAt(stats.fieldIndex("sum_len")) && stats.getAs[Long]("sum_len") == 0L)
     val noDocs = intercept[IllegalArgumentException](

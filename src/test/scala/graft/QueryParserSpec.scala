@@ -373,19 +373,27 @@ class QueryParserSpec extends AnyFunSuite {
     assert(e.getMessage.contains("folded away"), e.getMessage)
   }
 
-  test("segmented layouts are rejected loudly at entry") {
+  test("segmented layouts score parsed queries like one build") {
     import spark.implicits._
     val sp = "/root/repo/target/test_qp_seg"
+    val one = s"${sp}_one"
     val fs = new org.apache.hadoop.fs.Path(sp)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(sp), true)
-    LexicalStore.appendLexicalSegment(spark,
-      Seq((1L, "alpha beta")).toDF("doc_id", "text"), sp)
-    val e = intercept[IllegalArgumentException] {
-      LexicalStore.searchQueryString(spark, "alpha",
-        fields = Map("body" -> sp), defaultField = "body")
+    val segs = Seq(Seq((1L, "alpha beta")),
+      Seq((2L, "alpha gamma alpha"), (3L, "beta gamma delta")))
+    for (seg <- segs) LexicalStore.appendLexicalSegment(spark, seg.toDF("doc_id", "text"), sp)
+    LexicalStore.build(spark, segs.flatten.toDF("doc_id", "text"), one)
+    val q = QueryParser.parse("+alpha beta^2 -delta (gamma OR bet*) alpah~2")
+    def parsed(p: String) = {
+      val fields = Map("body" -> p)
+      val page = LexicalStore.searchParsed(spark, q, fields, "body")
+      Seq(page, LexicalStore.explainParsed(spark, q, fields, "body", page.select(col("doc_id"))))
+        .map(_.collect().toSeq)
     }
-    assert(e.getMessage.contains("segmented layout"), e.getMessage)
+    val want = parsed(one)
+    assert(want.head.nonEmpty)
+    assert(parsed(sp) == want)
   }
 
   test("no-must query requires at least one should match (msm=1)") {

@@ -16,7 +16,8 @@ import graft.sources.{IndexStore, LexicalStore, QueryParser}
   * a batch must return each query's single-search page, and every text
   * form must equal `Embed.embed` followed by its vector form. The
   * lexical pipeline (postings -> BM25 -> rank) is held to the same
-  * equalities: a segmented layout scores like one build of its union,
+  * equalities: every read verb on appended segments answers like one
+  * build of their union (deletes included),
   * a batch like its single queries, and no read verb ever returns a
   * tombstoned document. */
 class SearchPipelineSpec extends AnyFunSuite {
@@ -134,26 +135,75 @@ class SearchPipelineSpec extends AnyFunSuite {
   private def corpus(n: Int, seed: Long): Seq[(Long, String)] =
     texts(n, seed).zipWithIndex.map { case (t, i) => (i.toLong, t) }
 
-  test("searchTopKSegmented over appended segments equals searchTopKLexical over one build") {
-    for (nSegs <- Seq(2, 3); analyzer <- Seq("raw", "english")) {
-      val seed = 20L + nSegs
-      val docs = corpus(nDocs, seed)
-      // seeded cut points: segments of unequal, non-empty sizes
-      val cuts = Gen.pick(nSegs - 1, 1 until nDocs)(Gen.Parameters.default, Seed(seed))
-        .get.toSeq.sorted
-      val bounds = (0 +: cuts) :+ nDocs
-      val (seg, one) = (s"$root/seg-$nSegs-$analyzer", s"$root/one-$nSegs-$analyzer")
-      for (Seq(lo, hi) <- bounds.sliding(2))
-        LexicalStore.appendLexicalSegment(spark, lexDocs(docs.slice(lo, hi)), seg,
-          analyzer = analyzer)
-      LexicalStore.build(spark, lexDocs(docs), one, analyzer = analyzer)
-      for (q <- queries) {
+  /** A frame's rows as sorted strings: equality up to row order (every
+    * ranked verb carries its rank column, so order is still compared). */
+  private def canon(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("lexical read verbs on segments equal one build") {
+    import spark.implicits._
+    val seed = 22L
+    val docs = corpus(nDocs, seed)
+    val forward = lexDocs(docs)
+    val facets = docs.map { case (id, _) => (id, s"f${id % 4}") }.toDF("doc_id", "facet")
+    val batch = queries.zipWithIndex.map { case (q, i) => (i.toLong, q) }
+    val qs = "+alpha beta^2 -pivot (gamma OR sheet) ra* alpah~2"
+    val parsed = QueryParser.parse(qs)
+    val gone = Gen.pick(8, docs.map(_._1))(Gen.Parameters.default, Seed(seed + 1)).get.toSeq
+    for (analyzer <- Seq("raw", "english")) {
+      val one = s"$root/one-$analyzer"
+      LexicalStore.build(spark, forward, one, analyzer = analyzer)
+      // 1, 2 and 3 appended segments of seeded, unequal, non-empty sizes
+      val segs = Seq(1, 2, 3).map { n =>
+        val cuts = Gen.pick(n - 1, 1 until nDocs)(Gen.Parameters.default, Seed(seed + n))
+          .get.toSeq.sorted
+        val p = s"$root/seg-$n-$analyzer"
+        for (Seq(lo, hi) <- ((0 +: cuts) :+ nDocs).sliding(2))
+          LexicalStore.appendLexicalSegment(spark, lexDocs(docs.slice(lo, hi)), p,
+            analyzer = analyzer)
+        n -> p
+      }
+      val verbs: Seq[(String, String => DataFrame)] = queries.take(2).flatMap { q =>
         val terms = q.split(' ').toSeq
-        val got = rows(LexicalStore.searchTopKSegmented(spark, seg, terms, k = 12)
-          .select("doc_id", "lex_rank", "lex_micros"))
-        val want = rows(LexicalStore.searchTopKLexical(spark, one, terms, k = 12))
-        assert(want.nonEmpty)
-        assert(got == want, s"$nSegs segments, $analyzer, '$q'")
+        // a cursor and a page taken from the one build, shared by every layout
+        val first = LexicalStore.searchTopKLexical(spark, one, terms, k = 12).collect()
+        val cands = first.map(_.getLong(0)).toSeq.toDF("doc_id")
+        Seq(
+          s"searchTopKLexical '$q'" -> ((p: String) =>
+            LexicalStore.searchTopKLexical(spark, p, terms, k = 12)),
+          s"searchTopKSegmented '$q'" -> ((p: String) =>
+            LexicalStore.searchTopKSegmented(spark, p, terms, k = 12)
+              .select("doc_id", "lex_rank", "lex_micros")),
+          s"searchAfter '$q'" -> ((p: String) => LexicalStore.searchAfter(spark, p, terms, 6,
+            first(2).getLong(2), first(2).get(0))),
+          s"facetCounts '$q'" -> ((p: String) => LexicalStore.facetCounts(spark, p, terms, facets)),
+          s"explainScore '$q'" -> ((p: String) => LexicalStore.explainScore(spark, p, terms, cands)),
+          s"searchTopKPrf '$q'" -> ((p: String) =>
+            LexicalStore.searchTopKPrf(spark, p, forward, terms, k = 8)))
+      } ++ Seq(
+        "searchTopKLexicalBatch" -> ((p: String) =>
+          LexicalStore.searchTopKLexicalBatch(spark, p, batch, k = 6)),
+        "moreLikeThis" -> ((p: String) => LexicalStore.moreLikeThis(spark, p, forward, 3L, k = 8))
+      ) ++ Seq(0, 1, 2).map(msm => s"searchBoolean msm=$msm" -> ((p: String) =>
+        LexicalStore.searchBoolean(spark, p, must = Seq("alpha"),
+          should = Seq("beta", "gamma", "sheet", "range", "column"), mustNot = Seq("pivot"),
+          k = 12, minShouldMatch = msm))) ++ Seq(
+        "searchQueryString" -> ((p: String) =>
+          LexicalStore.searchQueryString(spark, qs, Map("text" -> p), "text", k = 12)),
+        "explainParsed" -> ((p: String) => LexicalStore.explainParsed(spark, parsed,
+          Map("text" -> p), "text", docs.map(_._1).toDF("doc_id"))),
+        "searchPrefix" -> ((p: String) => LexicalStore.searchPrefix(spark, p, "ra", k = 12)),
+        "searchWildcard" -> ((p: String) => LexicalStore.searchWildcard(spark, p, "lt", k = 12)),
+        "searchFuzzy" -> ((p: String) => LexicalStore.searchFuzzy(spark, p, "alpah", k = 12)),
+        "suggestTerms" -> ((p: String) => LexicalStore.suggestTerms(spark, p, "alpah")))
+      for (deleted <- Seq(false, true)) {
+        if (deleted) for (p <- one +: segs.map(_._2)) LexicalStore.deleteLexical(spark, p, gone)
+        for ((name, verb) <- verbs) {
+          val want = canon(verb(one))
+          assert(want.nonEmpty, s"$name returned nothing")
+          for ((n, p) <- segs)
+            assert(canon(verb(p)) == want, s"$name: $n segments, $analyzer, deletes=$deleted")
+        }
       }
     }
   }
