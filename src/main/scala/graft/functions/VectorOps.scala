@@ -33,8 +33,10 @@ object VectorOps {
     * zero (which ANSI mode raises), and leaves every non-zero pair's
     * quotient bit-identical: two non-zero float vectors' norm product
     * is at least ~2e-90. */
-  def vecCosine(a: Column, b: Column): Column =
-    vecDot(a, b) / greatest(vecNorm(a) * vecNorm(b), lit(Double.MinPositiveValue))
+  def vecCosine(a: Column, b: Column): Column = cosine(a, b, vecNorm(b))
+
+  private def cosine(a: Column, b: Column, bNorm: Column): Column =
+    vecDot(a, b) / greatest(vecNorm(a) * bNorm, lit(Double.MinPositiveValue))
 
   /** Dot product against a plan-time constant query vector. */
   def vecDotConst(a: Column, q: Array[Float]): Column =
@@ -43,8 +45,15 @@ object VectorOps {
   def vecL2Const(a: Column, q: Array[Float]): Column =
     vecL2(a, lit(q))
 
+  /** [[vecCosine]] against a constant query: the query's norm is
+    * computed once on the driver with the kernel and sqrt the optimizer
+    * would fold `vecNorm(lit(q))` with (so every double is
+    * bit-identical) and reaches generated code by reference
+    * ([[QueryConst]]), so each new query vector reuses the compiled
+    * classes of its plan shape. */
   def vecCosineConst(a: Column, q: Array[Float]): Column =
-    vecCosine(a, lit(q))
+    cosine(a, lit(q), exprs.queryConst(math.sqrt(VecKernels.normSq(
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(q)))))
 
   /** The three chromadb collection spaces (`hnsw:space` metadata
     * values; chromadb 0.4.x hnswlib config). */

@@ -2,9 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, LeafExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.types._
@@ -184,6 +184,25 @@ case class EmbedText(child: Expression, dim: Int,
   override protected def withNewChildInternal(c: Expression): EmbedText = copy(c)
 }
 
+/** A driver-computed per-query double (a query vector's norm, its SQ8
+  * factor) that reaches generated code by reference
+  * (`ctx.addReferenceObj`) instead of as an inlined Java literal. It is
+  * not foldable, so the optimizer cannot turn it back into a literal:
+  * two searches of one plan shape generate the same source and share
+  * its compiled classes, since Spark's codegen cache is keyed by the
+  * source text. The value is whatever the caller computed, bit for bit. */
+case class QueryConst(value: Double) extends LeafExpression {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("queryConst", value, "java.lang.Double")
+    ev.copy(code = code"final double ${ev.value} = $ref.doubleValue();",
+      isNull = FalseLiteral)
+  }
+}
+
 /** Optimizer rule: cancel A1 codec roundtrips —
   * a1_index(a1_col(x)) => x and a1_col(a1_index(s)) => s. Arises when
   * provenance written with letters is re-parsed for range predicates
@@ -208,6 +227,7 @@ object exprs {
 
   def a1Col(c: Column): Column = shims.toColumn(A1Col(shims.toExpression(c)))
   def a1Index(c: Column): Column = shims.toColumn(A1Index(shims.toExpression(c)))
+  def queryConst(v: Double): Column = shims.toColumn(QueryConst(v))
   def chunkText(c: Column, size: Int = Chunker.DefaultSize,
                 overlap: Int = Chunker.DefaultOverlap): Column =
     shims.toColumn(ChunkText(shims.toExpression(c),

@@ -104,26 +104,19 @@ object IndexStore {
     * before the sidecar existed (every pre-existing layout is a
     * default-space collection, so absence is meaningful, not an
     * error — unlike the HNSW `_meta` build parameters). The dict is
-    * memoized by the sidecar directory's modification time, so a
-    * non-default collection pays the parquet read once per
-    * (re)write, not once per search — and a metadata overwrite is
-    * picked up by the very next search (the mtime moves). */
-  private val collMetaCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Map[String, String]]
+    * read through [[Relations.collectCached]], so a non-default
+    * collection pays the parquet read once per (re)write, not once per
+    * search, and a metadata overwrite is picked up by the very next
+    * search: the sidecar's part-file names change with every write,
+    * whatever its modification time. */
   def collectionMetadata(spark: SparkSession, path: String): Map[String, String] = {
     val p = new org.apache.hadoop.fs.Path(s"$path/_collmeta")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Map.empty
     else try {
-      val mtime = fs.getFileStatus(p).getModificationTime
-      collMetaCache.getOrElseUpdate((path, mtime), {
-        // drop entries for older writes of this path — the cache
-        // holds live sidecars, not collection history
-        collMetaCache.keys.filter(k => k._1 == path && k._2 != mtime)
-          .foreach(collMetaCache.remove)
-        Relations.parquet(spark, s"$path/_collmeta").collect()
-          .map(r => r.getString(0) -> r.getString(1)).toMap
-      })
+      Relations.collectCached(spark, s"$path/_collmeta")
+        .map(r => r.getString(r.fieldIndex("key")) -> r.getString(r.fieldIndex("value")))
+        .toMap
     } catch {
       // a concurrent deleteCollection/modify-to-clear between the
       // exists probe and the read: the sidecar is gone, which MEANS
@@ -196,14 +189,18 @@ object IndexStore {
   //      probed cell partitions (IVF, IVF-PQ), the HNSW traversal's
   //      ids, or the probed bucket partitions (bucketed LSH);
   //   3. pre-rank — the overfetch cut on a compressed score: SQ8 codes
-  //      (SQ8, IVF) or the PQ-ADC lookup (IVF-PQ); the other families
-  //      go straight to the rerank;
+  //      (SQ8, IVF) or the PQ-ADC lookup (IVF-PQ). For one query it is
+  //      a top-k inside the plan that feeds stage 4 directly, so the
+  //      search is one Spark job; the other families go straight to
+  //      the rerank;
   //   4. rerank-and-present — exact similarity in the collection's
   //      space, top-k per query, and the chroma result projection with
   //      the deep link.
-  // Single-query verbs keep the query vector a plan literal, so the
-  // optimizer folds its norm; batch verbs carry their queries as a
-  // broadcast column. The explain verbs run the search's own stages.
+  // Single-query verbs keep the query vector a plan literal, and its
+  // scalars (norm, SQ8 factor) reach generated code by reference, so a
+  // new query reuses the compiled classes of its plan shape; batch
+  // verbs carry their queries as a broadcast column. The explain verbs
+  // run the search's own stages.
 
   /** The reference's per-hit deep link (app.py:50-78): the chunk's sheet row. */
   private def deepLink: Column =
@@ -267,19 +264,24 @@ object IndexStore {
     _.filter(col("cell").isin(cells: _*))
 
   /** Stage 3, pre-rank: keep the top-`overfetch` candidates by a
-    * compressed `score` (ties to the smaller chunk_id), so only they
-    * read their float embedding. The cut is a broadcast join back onto
-    * the candidates; `rankCol` adds each survivor's cut position (the
-    * explain verbs). */
+    * compressed `score` (as column `name`; ties to the smaller
+    * chunk_id), so only they reach the exact rerank. The cut is a
+    * top-k inside the plan: each scan partition keeps its best
+    * `overfetch` rows, one single-partition merge keeps the best of
+    * those, and stage 4 reads the survivors from it — the probed rows
+    * are scanned once, in the search's one job. Rows with a null
+    * chunk_id take their place in the cut and are then dropped.
+    * `rankCol` adds each survivor's cut position (the explain verbs);
+    * numbering the single-partition cut adds no exchange. */
   private def preRank(rows: DataFrame, score: Column, overfetch: Int,
                       name: String = "approx",
                       rankCol: Option[String] = None): DataFrame = {
-    val cut = rows.select(col("chunk_id").as("cid"), score.as(name))
-      .orderBy(col(name).desc, col("cid"))
+    val cut = rows.withColumn(name, score)
+      .orderBy(col(name).desc, col("chunk_id"))
       .limit(overfetch)
-    val ranked = rankCol.fold(cut)(r => cut.withColumn(r,
-      row_number().over(Window.orderBy(col(name).desc, col("cid")))))
-    rows.join(broadcast(ranked), col("chunk_id") === col("cid"))
+    rankCol.fold(cut)(r => cut.withColumn(r,
+        row_number().over(Window.orderBy(col(name).desc, col("chunk_id")))))
+      .filter(col("chunk_id").isNotNull)
   }
 
   /** [[preRank]] for a batch: `probeTable` fans each row out to the
@@ -300,11 +302,12 @@ object IndexStore {
     graft.functions.vecIndexExprs.sq8Dot(col("sq8_code"), qCode) *
       col("sq8_factor") * qFac
 
-  /** [[sq8Score]] with the query's code and factor as plan literals. */
+  /** [[sq8Score]] for one query: its code is a plan literal, its
+    * factor reaches generated code by reference. */
   private def sq8Score(qvec: Array[Float]): Column = {
     val q = new org.apache.spark.sql.catalyst.util.GenericArrayData(qvec)
     sq8Score(lit(graft.functions.VecIndex.sq8Code(q)),
-      lit(graft.functions.VecIndex.sq8Factor(q)))
+      exprs.queryConst(graft.functions.VecIndex.sq8Factor(q)))
   }
 
   /** The PQ-ADC pre-rank score: m LUT lookups + adds per row, in
@@ -409,25 +412,23 @@ object IndexStore {
 
   /** The IVF-family explain tail: the search's own pre-rank (its cut
     * position as `<name>_rank`) and rerank, then per hit the stored
-    * cell, the probe position that found it, `score` (the pre-rank
-    * score as presented) and ⌊1e6·sim⌋; k rows, ordered by rank. */
+    * cell, the probe position that found it (its 1-based position in
+    * the `cells` literal), `score` (the pre-rank score as presented)
+    * and ⌊1e6·sim⌋; k rows, ordered by rank, in the search's one job. */
   private def explainIvfFamily(spark: SparkSession, path: String, rows: DataFrame,
                                cells: Seq[Long], qvec: Array[Float], k: Int,
                                overfetch: Int, preScore: Column, name: String,
-                               score: Column): DataFrame = {
-    import spark.implicits._
-    val probeDf = cells.zipWithIndex
-      .map { case (c, i) => (c, i + 1) }.toDF("pcell", "probe_pos")
+                               score: Column): DataFrame =
     rerank(preRank(rows, preScore, overfetch, name, Some(s"${name}_rank")),
         collectionSpace(spark, path), qvec, k)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("sim").desc, col("chunk_id"))))
-      .join(broadcast(probeDf), col("cell").cast("long") === col("pcell"))
       .select(col("rank"), col("chunk_id"), col("cell").cast("long").as("cell"),
-        col("probe_pos"), col(s"${name}_rank"), score,
+        array_position(typedlit(cells), col("cell").cast("long")).cast("int")
+          .as("probe_pos"),
+        col(s"${name}_rank"), score,
         floor(lit(1000000.0d) * col("sim")).cast("long").as("sim_micros"))
       .orderBy(col("rank"))
-  }
 
   /** Exact top-k for a free-text query, with deep links: the search
     * pipeline over a full scan, no pre-rank. `where` is chroma's
@@ -1947,7 +1948,7 @@ object IndexStore {
     * (an SQ8 inversion the exact rerank corrected is VISIBLE here —
     * approx_rank and rank disagree). Same pruned read, candidate
     * generation and rerank expressions as the search verb, with the
-    * probe-position join (a probes-sized broadcast) the only
+    * probe-position lookup (in the probed-cells literal) the only
     * addition; k rows out, ordered by rank. */
   def explainSearchIvf(spark: SparkSession, path: String, queryText: String,
                        k: Int = 10, probes: Int = 3, overfetch: Int = 32,

@@ -460,9 +460,9 @@ class PlanAuditSpec extends AnyFunSuite {
       val read = f.metrics("numPartitions").value
       assert(read > 0 && read <= 3,
         s"probe must open at most `probes`=3 of 16 cell directories, read $read: $f")
-      // column pruning: the SQ8 pre-rank branch reads codes, the
-      // rerank branch reads embeddings — neither needs the LSH
-      // bucket arrays also persisted in the layout
+      // column pruning: the one scan of the probed cells reads codes
+      // for the SQ8 pre-rank and embeddings for the rerank — never
+      // the LSH bucket arrays also persisted in the layout
       assert(!f.requiredSchema.fieldNames.contains("lsh_buckets"),
         s"index scan must prune the unused lsh_buckets column: ${f.requiredSchema}")
     }

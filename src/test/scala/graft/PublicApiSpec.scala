@@ -721,6 +721,23 @@ class PublicApiSpec extends AnyFunSuite {
     IndexStore.modifyCollectionMetadata(spark, path, Map.empty)
   }
 
+  test("collection metadata: a rewrite that keeps the old mtime is still served") {
+    import graft.sources.IndexStore
+    val path = java.nio.file.Files.createTempDirectory("collmeta-mtime").toString
+    IndexStore.writeCollectionMetadata(spark, path, Map("hnsw:space" -> "l2"))
+    val dir = new org.apache.hadoop.fs.Path(s"$path/_collmeta")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mtime = fs.getFileStatus(dir).getModificationTime
+    assert(IndexStore.collectionSpace(spark, path) == "l2")
+    // two writes inside one mtime tick look like this: the directory's
+    // modification time is all a time-keyed memo would see
+    IndexStore.modifyCollectionMetadata(spark, path, Map("hnsw:space" -> "ip"))
+    fs.setTimes(dir, mtime, -1)
+    assert(fs.getFileStatus(dir).getModificationTime == mtime)
+    assert(IndexStore.collectionMetadata(spark, path) == Map("hnsw:space" -> "ip"))
+    assert(IndexStore.collectionSpace(spark, path) == "ip")
+  }
+
   test("space family edges: tiny corpora, k overshoot, filter kills all") {
     import spark.implicits._
     import graft.sources.IndexStore
