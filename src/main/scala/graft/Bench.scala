@@ -1,9 +1,18 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.obs.Profile
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // optional comma-separated query-name filter for local profiling;
+    // a name no query has would bench nothing, so it is refused
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val unknown = only.getOrElse(Set.empty).diff(SparkEntry.queries.keySet).toSeq.sorted
+    if (unknown.nonEmpty) {
+      System.err.println(s"[bench] SPARK_GRAFT_ONLY names no query: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -45,21 +54,21 @@ object Bench {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start().awaitTermination()
     } catch { case _: Throwable => }
-    // optional comma-separated query-name filter for local profiling
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // a crashed query must fail the bench loudly (an error entry in the
-    // JSON + nonzero exit), never silently bench as a fast no-op
-    def runAll(): Seq[(String, Double, Option[String])] =
+    // JSON + nonzero exit), never silently bench as a fast no-op; its
+    // seconds are its profile's wall time, failures included
+    def runAll(): Seq[(String, Double, Option[String], Profile)] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(_.contains(name)) }
         .map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val err = try { fn(spark, sfDir).count(); None } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName))
+        val (err, prof) = Profile.of(spark, name) {
+          try { fn(spark, sfDir).count(); None } catch {
+            case e: Throwable =>
+              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+              Some(Option(e.getMessage).getOrElse(e.getClass.getName))
+          }
         }
-        (name, (System.nanoTime() - t0) / 1e9, err)
+        (name, prof.wallMs / 1e3, err, prof)
       }
     // SPARK_GRAFT_RUNS repeats the whole loop in the same JVM: the
     // first pass is the binding cold number, later passes are warm
@@ -110,11 +119,11 @@ object Bench {
     val loadEnd = loadavg()
     val stealTotal = stealPct(ticksStart, cpuTicks())
     val results = allRuns.head
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
+    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
       .replaceAll("[\\x00-\\x1f]", " ").take(200) + "\""
-    val errs = results.collect { case (k, _, Some(e)) => s"\"" + k + "\":" + jstr(e) }
+    val errs = results.collect { case (k, _, Some(e), _) => s"\"" + k + "\":" + jstr(e) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // "total_full" (not "total"): the authoritative per-query record.
@@ -128,17 +137,21 @@ object Bench {
     def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", v)
     // The harness that captures this output retains only a bounded tail
     // of stdout, which truncates the full per-query line above. Persist
-    // the complete record — EVERY run's per-query times plus that run's
-    // own loadavg bracket, cold and warm in ONE file — so a regressed
-    // query can be separated into plan cost (warm moved too) vs box
-    // load (warm flat, loadavg high) from the artifact alone. End
+    // the complete record — EVERY run's per-query times and profiles
+    // (graft.obs.Profile: jobs, stages, tasks, bytes, driver/job/
+    // planning ms) plus that run's own loadavg bracket, cold and warm
+    // in ONE file — so a regressed query can be separated into plan
+    // cost (warm moved too) vs box load (warm flat, loadavg high) from
+    // the artifact alone. End
     // stdout with a compact summary line (headline total + slowest
     // queries) that fits whole inside a 2000-char tail.
     val runsJson = allRuns.zipWithIndex.map { case (rr, i) =>
-      val rq = rr.map { case (k, v, _) => s"\"" + k + "\":" + f3(v) }
+      val rq = rr.map { case (k, v, _, _) => s"\"" + k + "\":" + f3(v) }
+        .mkString("{", ",", "}")
+      val profiles = rr.map { case (k, _, _, p) => s"\"" + k + "\":" + p.json }
         .mkString("{", ",", "}")
       val (l0, l1, st) = runLoads(i)
-      s"""{"run":${i + 1},"kind":"${if (i == 0) "cold" else "warm"}","total":${f3(rr.map(_._2).sum)},"loadavg_start":"$l0","loadavg_end":"$l1","steal_pct":$st,"queries":$rq}"""
+      s"""{"run":${i + 1},"kind":"${if (i == 0) "cold" else "warm"}","total":${f3(rr.map(_._2).sum)},"loadavg_start":"$l0","loadavg_end":"$l1","steal_pct":$st,"queries":$rq,"profiles":$profiles}"""
     }.mkString("[", ",", "]")
     val fullRecord =
       s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"loadavg_start":"$loadStart","loadavg_end":"$loadEnd","steal_pct":$stealTotal,"runs":$runsJson,"sf":"$sfDir"}"""
@@ -157,14 +170,14 @@ object Bench {
       println(s"""{"metric":"total_rerun","run":${i + 1},"value":${f3(rr.map(_._2).sum)},"unit":"sec","n_queries":${rr.size},"loadavg":"${runLoads(i)._1} -> ${runLoads(i)._2}","steal_pct":${runLoads(i)._3},"sf":"$sfDir"}""")
     }
     val slowest = results.sortBy(-_._2).take(15)
-      .map { case (k, v, _) => s"\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
+      .map { case (k, v, _, _) => s"\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
     // cap the compact line's errors object so a mass failure can't
     // grow it past the harness's 2000-char stdout tail (the full
     // errors stay in the total_full line / bench_last.json)
     // gate on EVERY run's failures: a query that only crashes on the
     // warm pass must still surface in the compact line and exit code
     val errList = allRuns.zipWithIndex.flatMap { case (rr, i) =>
-      rr.collect { case (k, _, Some(e)) =>
+      rr.collect { case (k, _, Some(e), _) =>
         (if (i == 0) k else s"$k(run${i + 1})", e) }
     }
     val errsCompact = (errList.take(5).map { case (k, e) => s"\"" + k + "\":" + jstr(e) } ++
@@ -180,9 +193,9 @@ object Bench {
     // the queries a regression hunt starts from
     val slowestWarm =
       if (allRuns.size > 1) {
-        val warmBy = allRuns.last.map { case (k, v, _) => k -> v }.toMap
+        val warmBy = allRuns.last.map { case (k, v, _, _) => k -> v }.toMap
         results.sortBy(-_._2).take(10)
-          .map { case (k, _, _) => s"\"" + k + "\":" + f3(warmBy.getOrElse(k, -1.0)) }
+          .map { case (k, _, _, _) => s"\"" + k + "\":" + f3(warmBy.getOrElse(k, -1.0)) }
           .mkString("{", ",", "}")
       } else "null"
     println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","warm_total":$warmTotal,"loadavg_start":"$loadStart","loadavg_end":"$loadEnd","steal_pct":$stealTotal,"n_queries":${results.size},"slowest":$slowest,"slowest_warm":$slowestWarm,"errors":$errsCompact,"queries_full":"target/bench_last.json","sf":"$sfDir"}""")

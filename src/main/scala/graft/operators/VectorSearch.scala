@@ -135,7 +135,9 @@ object VectorSearch {
     * corpora) the declarative higher-order fold; both are the same
     * left-to-right double arithmetic, so results are bit-identical
     * to each other and to the DuckDB oracle mirrors. MEASURED
-    * (graft.dev.SpaceBench, 100k x 64-dim x 8 queries, sf0.1 warm):
+    * (graft.dev.SpaceBench, 100k x 64-dim x 8 queries, sf0.1 warm;
+    * the program was removed with the dev probes and is at commit
+    * 86e4c01):
     * float kernels 0.39-0.65 s per space, double HOF folds
     * 0.57-0.99 s — the kernel path is ~1.2-1.9x faster, so float
     * storage is the right default; the double path exists for

@@ -2790,7 +2790,9 @@ object LexicalStore {
 
   /** Run independent thunks concurrently, return results in input
     * order; the first failure IN INPUT ORDER rethrows, so error
-    * reporting is indistinguishable from the serial form. */
+    * reporting is indistinguishable from the serial form. Each task
+    * runs under the submitting thread's local properties, so its jobs
+    * carry the caller's job group and profile marker. */
   private[graft] def awaitInOrder[A](thunks: Seq[() => A]): Seq[A] =
     // caller-runs fallback when already inside a prepPool task: a
     // nested awaitInOrder would park this pool thread in f.get()
@@ -2798,7 +2800,8 @@ object LexicalStore {
     if (thunks.size <= 1 || inPrepTask.get) thunks.map(_())
     else thunks
       .map(th => prepPool.submit(new java.util.concurrent.Callable[A] {
-        override def call(): A = {
+        private val props = org.apache.spark.graft.LocalProperties.capture()
+        override def call(): A = org.apache.spark.graft.LocalProperties.runWith(props) {
           inPrepTask.set(true)
           try th() finally inPrepTask.set(false)
         }

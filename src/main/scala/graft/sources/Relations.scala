@@ -11,8 +11,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * seconds each under ambient contention — the r21 driver bench's
   * many-small-jobs lifecycles (q181, q206, the maintenance gates)
   * inflated 10-25x while single-plan queries inflated ~2x, and the
-  * job-count probe (graft.dev.JobProbe) attributes most of their
-  * waves to exactly these re-resolutions. A production engine
+  * job-count probe (graft.dev.JobProbe, removed with the dev probes
+  * and at commit 86e4c01; graft.Bench's per-query profiles now give
+  * the same counts) attributed most of their waves to exactly these
+  * re-resolutions. A production engine
   * resolves a table once in a catalog; this memo is that catalog for
   * the engine's path-addressed layouts.
   *

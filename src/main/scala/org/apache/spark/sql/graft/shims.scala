@@ -23,4 +23,15 @@ object shims {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Milliseconds the ended execution's QueryPlanningTracker spent in
+    * analysis, optimization and physical planning (0 when the event
+    * carries no QueryExecution); the event's `qe` is private[sql]. */
+  def planningMs(end: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd): Long = {
+    import org.apache.spark.sql.catalyst.QueryPlanningTracker._
+    Option(end.qe).map { qe =>
+      val phases = qe.tracker.phases
+      Seq(ANALYSIS, OPTIMIZATION, PLANNING).flatMap(phases.get).map(_.durationMs).sum
+    }.getOrElse(0L)
+  }
 }

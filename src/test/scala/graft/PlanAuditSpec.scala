@@ -5,6 +5,8 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, Spark
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.Profile
+
 /** Physical-plan property assertions — the scale invariants that
   * matter at 100 TB, enforced instead of eyeballed (.explain):
   * dimension joins broadcast, filters reach the parquet scan, scans
@@ -594,20 +596,11 @@ class PlanAuditSpec extends AnyFunSuite {
     // rewrite derives the whole meter from one scored scan + two
     // traversal broadcasts. Pin the job count well under the old
     // shape (AQE stage materializations each count as a job here).
-    val sc = spark.sparkContext
     // pay the shared q103 build + shard pin OUTSIDE the counted window
     SparkEntry.queries("q103_hnsw_search")(spark, d).collect()
-    sc.setJobGroup("q105_audit", "q105 job-count audit")
-    try SparkEntry.queries("q105_filtered_recall")(spark, d).collect()
-    finally sc.clearJobGroup()
-    // the status store is listener-fed — give it a beat to drain
-    val deadline = System.nanoTime() + 10e9.toLong
-    var n = sc.statusTracker.getJobIdsForGroup("q105_audit").length
-    while (n == 0 && System.nanoTime() < deadline) {
-      Thread.sleep(100)
-      n = sc.statusTracker.getJobIdsForGroup("q105_audit").length
-    }
-    assert(n > 0, "audit saw no jobs — job-group attribution broke")
+    val n = Profile.of(spark, "q105_audit")(
+      SparkEntry.queries("q105_filtered_recall")(spark, d).collect())._2.jobs
+    assert(n > 0, "audit saw no jobs — profile attribution broke")
     // observed: 19 with AQE on local[4] (2 traversal broadcasts + the
     // meter's exchange materializations); the old driver-loop shape
     // dispatched ~40 and scaled with selectivities x searches
@@ -616,20 +609,15 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("q114: the probe curve is one plan and no vector rides its rank exchanges") {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    val sc = spark.sparkContext
     // pay the shared q98 build OUTSIDE the counted window
     SparkEntry.queries("q98_ivf_search")(spark, d).collect()
-    sc.setJobGroup("q114_audit", "q114 job-count audit")
-    val df = SparkEntry.queries("q114_ivf_probe_curve")(spark, d)
-    try df.collect()
-    finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 10e9.toLong
-    var n = sc.statusTracker.getJobIdsForGroup("q114_audit").length
-    while (n == 0 && System.nanoTime() < deadline) {
-      Thread.sleep(100)
-      n = sc.statusTracker.getJobIdsForGroup("q114_audit").length
+    val (df, audit) = Profile.of(spark, "q114_audit") {
+      val df = SparkEntry.queries("q114_ivf_probe_curve")(spark, d)
+      df.collect()
+      df
     }
-    assert(n > 0, "audit saw no jobs — job-group attribution broke")
+    val n = audit.jobs
+    assert(n > 0, "audit saw no jobs — profile attribution broke")
     // observed: 17 with AQE on local[4] (one scored scan + broadcast/
     // exchange materializations); a per-budget search loop would scale
     // jobs with the ladder (3 budgets x ~10 jobs each)

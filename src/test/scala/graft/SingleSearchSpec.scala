@@ -1,15 +1,12 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.graft.ListenerBus
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Embed
+import graft.obs.Profile
 import graft.sources.IndexStore
 
 /** The serving floor of one vector search: a single search with a
@@ -57,27 +54,6 @@ class SingleSearchSpec extends AnyFunSuite {
   private val qb = vec("pivot chart gamma range")
   private val where = Some(col("source") === "sheet1")
 
-  /** The Spark jobs `f` runs: a listener counts the jobs carrying this
-    * call's marker (a thread-local property every job of the call
-    * inherits, broadcasts included), read after the bus drained. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val marker = java.util.UUID.randomUUID.toString
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("single.search.spec") == marker))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setLocalProperty("single.search.spec", marker)
-    try f
-    finally sc.setLocalProperty("single.search.spec", null)
-    ListenerBus.drain(sc)
-    sc.removeSparkListener(l)
-    n.get
-  }
-
   private val singles: Seq[(String, (Array[Float], Option[Column]) => DataFrame)] = Seq(
     "exact" -> ((v, w) => IndexStore.searchTopKVec(spark, layouts("exact"), v, k, w)),
     "sq8" -> ((v, w) => IndexStore.searchTopKSq8Vec(spark, layouts("exact"), v, k, where = w)),
@@ -87,7 +63,7 @@ class SingleSearchSpec extends AnyFunSuite {
   test("a single exact, SQ8, IVF or IVF-PQ search runs exactly one Spark job") {
     for ((name, search) <- singles; w <- Seq(None, where)) {
       search(qa, w).collect() // sidecar memos and layout resolution
-      val n = jobsOf(search(qb, w).collect())
+      val n = Profile.of(spark, name)(search(qb, w).collect())._2.jobs
       assert(n == 1, s"$name (where=$w) ran $n jobs")
     }
   }
