@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.obs.Profile
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -13,25 +12,7 @@ object Bench {
       System.err.println(s"[bench] SPARK_GRAFT_ONLY names no query: ${unknown.mkString(", ")}")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Let AQE coalesce each small shuffle to the advisory partition
-      // size instead of preserving `cpus`-way parallelism: with the
-      // default (parallelismFirst=true) every tiny exchange fans out
-      // into `cpus` near-empty tasks and the run pays pure scheduling
-      // — a 20-query mixed probe measured 81 s cold / 47 s warm with
-      // the default vs 57/34 with this set (guide §2.2; the Spark SQL
-      // tuning docs themselves recommend false in production, where
-      // the advisory target sizes reducers to the data instead of the
-      // core count). Scale-safe by construction: real shuffles exceed
-      // the advisory size and coalesce identically either way.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (codegen, parquet footer reads, JIT) so the
     // first measured query isn't charged ~2s of one-off setup
@@ -157,7 +138,7 @@ object Bench {
       s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"loadavg_start":"$loadStart","loadavg_end":"$loadEnd","steal_pct":$stealTotal,"runs":$runsJson,"sf":"$sfDir"}"""
     // the persistence side channel must never kill the stdout summary
     try {
-      val p = java.nio.file.Paths.get("/root/repo/target/bench_last.json")
+      val p = java.nio.file.Paths.get(s"${Sessions.workDir}/bench_last.json")
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.writeString(p, fullRecord + "\n")
     } catch { case e: Throwable =>

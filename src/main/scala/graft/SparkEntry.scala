@@ -2,12 +2,18 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Aggregates the per-module query catalogs; each module owns its
   * Spark implementations and their DuckDB oracle SQL.
   */
 object SparkEntry {
+
+  /** Where each oracle SQL reads the kernel outputs that
+    * `graft.Verify` dumps; Verify rewrites it to the dump's actual
+    * directory. A placeholder, never a path the engine writes to, so
+    * `oracle_sql.json` does not depend on its value. */
+  final val AuxToken = "<verify_aux>"
 
   private def modules: Seq[Query] =
     operators.Relational.queries ++

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Parquet fixture loaders (see /root/repo/TESTDATA.md, FIXTURES.md).
+/** Parquet fixture loaders (see TESTDATA.md, FIXTURES.md).
   *
   * All engine queries take an `sfDir` so the same plan runs at any scale
   * factor; at cluster scale these would be external tables (ideally
@@ -36,7 +36,7 @@ object Tables {
     * carrying the same wall-clock values DuckDB reads from the same
     * file, so `unix_micros`/watermarks/window() downstream see one
     * type regardless of fixture vintage (the session timezone is
-    * pinned to UTC by Verify/Bench, making the NTZ→LTZ cast an
+    * pinned to UTC by Sessions.local, making the NTZ→LTZ cast an
     * identical-instant relabeling). */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,19 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same AQE coalescing as Bench (see its Scaladoc): small
-      // shuffles collapse to the advisory size instead of `cpus`
-      // near-empty tasks — results are partitioning-independent,
-      // the dump just stops paying pure scheduling per query
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Custom-kernel outputs materialized for the DuckDB oracles: the
@@ -30,9 +17,8 @@ object Verify {
     // verify output directory — same filesystem the driver's DuckDB
     // demonstrably reads parquet from, but not a subdirectory a
     // result-dir scan would trip over — and the oracle SQL (authored
-    // against the canonical /root/repo/target/verify_aux path) is
-    // rewritten to the actual absolute location at dump time below.
-    val canonicalAux = "/root/repo/target/verify_aux"
+    // against the SparkEntry.AuxToken placeholder) is rewritten to the
+    // actual absolute location at dump time below.
     val auxDir = new java.io.File(outDir).getAbsolutePath + "_aux"
     // dev-only single-query iteration (same knob as Bench); the driver
     // never sets it, so a driver run always dumps the full catalog and
@@ -188,7 +174,7 @@ object Verify {
     } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace(canonicalAux, auxDir))}" }
+      .map { case (k, v) => s"${q(k)}: ${q(v.replace(SparkEntry.AuxToken, auxDir))}" }
       .mkString("{", ",", "}")
     // a SPARK_GRAFT_ONLY dev run must not clobber the full catalog in
     // oracle_sql.json — every other query in that outDir would be

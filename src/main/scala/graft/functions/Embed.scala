@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
 
 import scala.util.hashing.MurmurHash3
 

@@ -187,12 +187,12 @@ object Corpus {
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$auxDir/q145_token_buckets.parquet")
 
-  private val q145Sql = """
+  private val q145Sql = s"""
     WITH toks AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
     cnt AS (SELECT term, COUNT(*) AS n FROM toks
             WHERE length(term) > 0 GROUP BY term),
     tb AS (SELECT term, j, b FROM
-      read_parquet('/root/repo/target/verify_aux/q145_token_buckets.parquet/*.parquet')),
+      read_parquet('${graft.SparkEntry.AuxToken}/q145_token_buckets.parquet/*.parquet')),
     counters AS (
       SELECT tb.j, tb.b, CAST(SUM(cnt.n) AS BIGINT) AS c
       FROM cnt JOIN tb USING (term) GROUP BY tb.j, tb.b),
@@ -393,7 +393,7 @@ object Corpus {
   private val q156Sql = s"""
     WITH RECURSIVE sigs AS (
       SELECT doc_id, mb, sg FROM
-      read_parquet('/root/repo/target/verify_aux/dedup_sigs.parquet/*.parquet')),
+      read_parquet('${graft.SparkEntry.AuxToken}/dedup_sigs.parquet/*.parquet')),
     banded AS (SELECT doc_id, unnest(mb) AS band FROM sigs),
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -892,16 +892,16 @@ object Corpus {
       .parquet(s"$auxDir/q154_bloom_pos.parquet")
   }
 
-  private val q154Sql = """
+  private val q154Sql = s"""
     WITH b AS (
       SELECT doc_id,
              (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
            + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) AS bucket
       FROM documents),
     sigs AS (SELECT doc_id, sg
-             FROM read_parquet('/root/repo/target/verify_aux/dedup_sigs.parquet/*.parquet')),
+             FROM read_parquet('${graft.SparkEntry.AuxToken}/dedup_sigs.parquet/*.parquet')),
     hp AS (SELECT h, j, pos FROM
-      read_parquet('/root/repo/target/verify_aux/q154_bloom_pos.parquet/*.parquet')),
+      read_parquet('${graft.SparkEntry.AuxToken}/q154_bloom_pos.parquet/*.parquet')),
     test_h AS (
       SELECT DISTINCT h FROM (
         SELECT unnest(s.sg) AS h
@@ -946,14 +946,14 @@ object Corpus {
       .orderBy("doc_id")
   }
 
-  private val q96Sql = """
+  private val q96Sql = s"""
     WITH b AS (
       SELECT doc_id,
              (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
            + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) AS bucket
       FROM documents),
     sigs AS (SELECT doc_id, sg
-             FROM read_parquet('/root/repo/target/verify_aux/dedup_sigs.parquet/*.parquet')),
+             FROM read_parquet('${graft.SparkEntry.AuxToken}/dedup_sigs.parquet/*.parquet')),
     test_h AS (
       SELECT DISTINCT h FROM (
         SELECT unnest(s.sg) AS h
@@ -985,7 +985,7 @@ object Corpus {
       .select(col("doc_id"), col("split"))
       .orderBy("doc_id")
 
-  private val q97Sql = """
+  private val q97Sql = s"""
     WITH RECURSIVE q AS (
       SELECT doc_id FROM documents
       WHERE len(regexp_split_to_array(trim(text), ' +')) BETWEEN 5 AND 100000
@@ -993,7 +993,7 @@ object Corpus {
         AND CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE) / length(text) <= 0.3),
     sigs AS (
       SELECT s.doc_id, s.mb, s.sg
-      FROM read_parquet('/root/repo/target/verify_aux/dedup_sigs.parquet/*.parquet') s
+      FROM read_parquet('${graft.SparkEntry.AuxToken}/dedup_sigs.parquet/*.parquet') s
       JOIN q ON q.doc_id = s.doc_id),
     banded AS (SELECT doc_id, unnest(mb) AS band FROM sigs),
     cand AS (
@@ -1825,7 +1825,7 @@ object Corpus {
     * -> weights -> per-doc scores) — q186 and q189 both build on it,
     * so the gate/oracle gram and smoothing definitions cannot drift
     * apart (the DefaultShingleMaxDf lesson, SQL side). */
-  private[graft] val DsirScoredCte = """ws AS (
+  private[graft] val DsirScoredCte = s"""ws AS (
       SELECT doc_id, lang,
              list_filter(string_split(text, ' '), w -> length(w) > 0) AS fw
       FROM documents),
@@ -1838,7 +1838,7 @@ object Corpus {
     grams AS (
       SELECT g.doc_id, g.lang, gb.bucket
       FROM (SELECT * FROM uni UNION ALL SELECT * FROM big) g
-      JOIN read_parquet('/root/repo/target/verify_aux/q186_gram_buckets.parquet/*.parquet') gb
+      JOIN read_parquet('${graft.SparkEntry.AuxToken}/q186_gram_buckets.parquet/*.parquet') gb
         ON g.gram = gb.gram),
     wts AS (
       SELECT bucket,

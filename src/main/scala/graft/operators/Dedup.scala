@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -62,7 +62,7 @@ object Dedup {
       .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/dedup_sigs.parquet")
 
   private val AuxSigs =
-    "read_parquet('/root/repo/target/verify_aux/dedup_sigs.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/dedup_sigs.parquet/*.parquet')"
 
   /** MinHash-LSH near-dup pairs over any (id, text) frame: `nHashes`
     * minhashes of word `shingleK`-shingles in `nBands` LSH bands for

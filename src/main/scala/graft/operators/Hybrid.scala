@@ -43,7 +43,7 @@ object Hybrid {
         )) AS BIGINT)"""
 
   private def lexPath(d: String): String =
-    "/root/repo/target/q115_lex_index/" +
+    s"${graft.Sessions.workDir}/q115_lex_index/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   private val KLex = 20
@@ -153,7 +153,7 @@ object Hybrid {
   // ---- q118: hybrid over the PERSISTED index families ---------------
 
   private def lexChunksPath(d: String): String =
-    "/root/repo/target/q118_lex_chunks/" +
+    s"${graft.Sessions.workDir}/q118_lex_chunks/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   private val Q118Probes = 3
@@ -240,11 +240,11 @@ object Hybrid {
   }
 
   private val AuxQ98Index =
-    "read_parquet('/root/repo/target/verify_aux/q98_index.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q98_index.parquet/*.parquet')"
   private val AuxQ98Cents =
-    "read_parquet('/root/repo/target/verify_aux/q98_cents.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q98_cents.parquet/*.parquet')"
   private val AuxQ118Query =
-    "read_parquet('/root/repo/target/verify_aux/q118_query.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q118_query.parquet/*.parquet')"
 
   /** The full hybrid mirror: lexical BM25 micros over the dumped
     * chunk corpus (the q115 expression tree, chunk-level), the IVF
@@ -434,7 +434,7 @@ object Hybrid {
   }
 
   private val AuxQ119Queries =
-    "read_parquet('/root/repo/target/verify_aux/q119_queries.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q119_queries.parquet/*.parquet')"
 
   private val q119Sql = s"""
     WITH cents AS (SELECT cent_id, cvec FROM $AuxQ98Cents),
@@ -599,9 +599,9 @@ object Hybrid {
 
   private val q150Sql = s"""
     WITH toks AS (SELECT doc_id, tokvec FROM
-      read_parquet('/root/repo/target/verify_aux/q150_tokvecs.parquet/*.parquet')),
+      read_parquet('${graft.SparkEntry.AuxToken}/q150_tokvecs.parquet/*.parquet')),
     qs AS (SELECT qtok_id, qvec FROM
-      read_parquet('/root/repo/target/verify_aux/q150_qtoks.parquet/*.parquet')),
+      read_parquet('${graft.SparkEntry.AuxToken}/q150_qtoks.parquet/*.parquet')),
     maxsim AS (
       SELECT t.doc_id, q.qtok_id,
              MAX(CAST(floor(1000000.0 *
@@ -621,7 +621,7 @@ object Hybrid {
   // ---- q151: lexical-index maintenance lifecycle --------------------
 
   private def lexMaintPath(d: String): String =
-    "/root/repo/target/q151_lex_maint/" +
+    s"${graft.Sessions.workDir}/q151_lex_maint/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   private val Q151K = 10
@@ -752,7 +752,7 @@ object Hybrid {
   // ---- q157: segmented lexical append (no-rewrite increments) -------
 
   private def lexSegPath(d: String): String =
-    "/root/repo/target/q157_lex_segments/" +
+    s"${graft.Sessions.workDir}/q157_lex_segments/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   /** q157: the lexical layout's INCREMENTAL answer — a build or
@@ -825,7 +825,7 @@ object Hybrid {
   // ---- q153: PERSISTED late-interaction layout (ColBERT at scale) ----
 
   private def colbertPath(d: String): String =
-    "/root/repo/target/q153_colbert_index/" +
+    s"${graft.Sessions.workDir}/q153_colbert_index/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   private val Q153Cells = 16
@@ -1233,7 +1233,7 @@ object Hybrid {
       HAVING COUNT(*) = (SELECT COUNT(*) FROM qs))"""
 
   private def auxPq(name: String) =
-    s"read_parquet('/root/repo/target/verify_aux/$name.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/$name.parquet/*.parquet')"
 
   private val q153Sql = s"""
     WITH ${colbertScoredCte(auxPq("q150_tokvecs"), auxPq("q153_cents"),
@@ -1245,7 +1245,7 @@ object Hybrid {
   // ---- q181: late-interaction takedown lifecycle ---------------------
 
   private def colbertTdPath(d: String): String =
-    "/root/repo/target/q181_colbert_td/" +
+    s"${graft.Sessions.workDir}/q181_colbert_td/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   private val Q181Docs = 120L
@@ -1485,9 +1485,9 @@ object Hybrid {
     * dumped query vector at `depth` → `veck(doc_id, vec_rank)`) —
     * shared with q193. */
   private def vecRankCte(depth: Int) = s"""demb AS (SELECT doc_id, embedding FROM
-      read_parquet('/root/repo/target/verify_aux/q139_demb.parquet/*.parquet')
+      read_parquet('${graft.SparkEntry.AuxToken}/q139_demb.parquet/*.parquet')
     ), qv AS (SELECT qvec FROM
-      read_parquet('/root/repo/target/verify_aux/q158_query.parquet/*.parquet')
+      read_parquet('${graft.SparkEntry.AuxToken}/q158_query.parquet/*.parquet')
     ), veck AS (
       SELECT doc_id, vec_rank FROM (
         SELECT doc_id,
@@ -1500,11 +1500,11 @@ object Hybrid {
 
   private val q158Sql = s"""
     WITH ${lexRankCte(Q158Depth)}, ${vecRankCte(Q158Depth)}, toks AS (SELECT doc_id, tpos, tokvec FROM
-      read_parquet('/root/repo/target/verify_aux/q150_tokvecs.parquet/*.parquet')
+      read_parquet('${graft.SparkEntry.AuxToken}/q150_tokvecs.parquet/*.parquet')
     ), qs AS (SELECT qtok_id, qvec FROM
-      read_parquet('/root/repo/target/verify_aux/q150_qtoks.parquet/*.parquet')
+      read_parquet('${graft.SparkEntry.AuxToken}/q150_qtoks.parquet/*.parquet')
     ), cents AS (SELECT cent_id, cvec FROM
-      read_parquet('/root/repo/target/verify_aux/q153_cents.parquet/*.parquet')
+      read_parquet('${graft.SparkEntry.AuxToken}/q153_cents.parquet/*.parquet')
     ), assign AS (
       SELECT t.doc_id, t.tpos, c.cent_id,
              row_number() OVER (PARTITION BY t.doc_id, t.tpos
@@ -1786,8 +1786,6 @@ object Hybrid {
 
   // ---- q193: ranker-agreement profile (prefix overlap + RBO) ---------
 
-  private val RboP = 0.9
-
   /** Truncated rank-biased-overlap weights (1−p)·p^(d−1) in micros,
     * p = 0.9 (Webber, Moffat & Zobel 2010, "A similarity measure for
     * indefinite rankings", TOIS 28(4)). Computed ONCE driver-side and
@@ -2021,7 +2019,7 @@ object Hybrid {
   // ---- q197: exact phrase search over positional postings ------------
 
   private def posPath(d: String): String =
-    "/root/repo/target/q197_pos_index/" +
+    s"${graft.Sessions.workDir}/q197_pos_index/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   /** q197: [[LexicalStore.searchPhrase]] over a positional layout of
@@ -2356,7 +2354,7 @@ object Hybrid {
   // ---- q204: analyzed (normalized) lexical search ---------------------
 
   private def lexAnaPath(d: String): String =
-    "/root/repo/target/q204_lex_analyzed/" +
+    s"${graft.Sessions.workDir}/q204_lex_analyzed/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   /** q204: the `folded` analyzer end to end — the r15 "query one"
@@ -2471,7 +2469,7 @@ object Hybrid {
   // ---- q206: positional-layout maintenance lifecycle ------------------
 
   private def posMaintPath(d: String): String =
-    "/root/repo/target/q206_pos_maint/" +
+    s"${graft.Sessions.workDir}/q206_pos_maint/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   /** q206: the V10 maintenance-verb family for the POSITIONAL layout
@@ -2910,7 +2908,7 @@ object Hybrid {
   // ---- q213: multi-field weighted search (title^2 + body) -------------
 
   private def titlePath(d: String): String =
-    "/root/repo/target/q213_title_index/" +
+    s"${graft.Sessions.workDir}/q213_title_index/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   private val TitleTokens = 5
@@ -3017,7 +3015,7 @@ object Hybrid {
   // ---- q227: BM25F combined-field layout -------------------------------
 
   private def bm25fPath(d: String): String =
-    "/root/repo/target/q227_bm25f_index/" +
+    s"${graft.Sessions.workDir}/q227_bm25f_index/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   private val Bm25fTitleW = 3L
@@ -3087,7 +3085,7 @@ object Hybrid {
   // ---- q230: BM25F maintenance lifecycle --------------------------------
 
   private def bm25fMaintPath(d: String): String =
-    "/root/repo/target/q230_bm25f_maint/" +
+    s"${graft.Sessions.workDir}/q230_bm25f_maint/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   private val Q230Docs = 1000
@@ -3521,7 +3519,7 @@ object Hybrid {
   // ---- q238: one-call query-string → hybrid ----------------------------
 
   private def docIvfPath(d: String): String =
-    "/root/repo/target/q238_doc_ivf/" +
+    s"${graft.Sessions.workDir}/q238_doc_ivf/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   private val Q238Cells = 8
@@ -3629,11 +3627,11 @@ object Hybrid {
   }
 
   private val AuxQ238Index =
-    "read_parquet('/root/repo/target/verify_aux/q238_index.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q238_index.parquet/*.parquet')"
   private val AuxQ238Cents =
-    "read_parquet('/root/repo/target/verify_aux/q238_cents.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q238_cents.parquet/*.parquet')"
   private val AuxQ238Query =
-    "read_parquet('/root/repo/target/verify_aux/q238_query.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q238_query.parquet/*.parquet')"
 
   private val q238Sql = s"""
     WITH $parsedBodyCtes, $parsedTitleCtes, $q231ClauseCtes,
@@ -4072,7 +4070,7 @@ object Hybrid {
   // ---- q219: english analyzer (stopwords + porter stemming) -----------
 
   private def lexEngPath(d: String): String =
-    "/root/repo/target/q219_lex_english/" +
+    s"${graft.Sessions.workDir}/q219_lex_english/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   /** The q219 corpus: documents deterministically INFLECTED (docs
@@ -4159,7 +4157,7 @@ object Hybrid {
       WHERE length(tok) > 0 AND tok NOT IN ($stopListSql)
     ), smap AS (
       SELECT tok, stem FROM
-      read_parquet('/root/repo/target/verify_aux/q219_stems.parquet/*.parquet')
+      read_parquet('${graft.SparkEntry.AuxToken}/q219_stems.parquet/*.parquet')
     ), tf AS (
       SELECT doc_id, stem AS term, COUNT(*) AS tf
       FROM filt JOIN smap USING (tok) GROUP BY doc_id, stem

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -121,11 +120,11 @@ object Multimodal {
         (sum(col("byte_sum")) / sum(col("n_bytes"))).as("avg_byte"))
       .orderBy("format")
 
-  private val q90Sql = """
+  private val q90Sql = s"""
     SELECT format, COUNT(*) AS n_media,
            CAST(SUM(n_bytes) AS BIGINT) AS total_bytes,
            CAST(SUM(byte_sum) AS BIGINT) / CAST(SUM(n_bytes) AS BIGINT) AS avg_byte
-    FROM read_parquet('/root/repo/target/verify_aux/media_features.parquet/*.parquet')
+    FROM read_parquet('${graft.SparkEntry.AuxToken}/media_features.parquet/*.parquet')
     GROUP BY format ORDER BY format"""
 
   /** q91: resize + frame-sample the blobs, explode frames with index,
@@ -138,10 +137,10 @@ object Multimodal {
         sum(col("byte_sum")).as("total_byte_sum"))
       .orderBy("format")
 
-  private val q91Sql = """
+  private val q91Sql = s"""
     SELECT format, COUNT(*) AS n_frames, COUNT(DISTINCT media_id) AS n_media,
            CAST(SUM(byte_sum) AS BIGINT) AS total_byte_sum
-    FROM read_parquet('/root/repo/target/verify_aux/media_frames.parquet/*.parquet')
+    FROM read_parquet('${graft.SparkEntry.AuxToken}/media_frames.parquet/*.parquet')
     GROUP BY format ORDER BY format"""
 
   // ---- perceptual-hash near-duplicate detection ---------------------
@@ -245,7 +244,7 @@ object Multimodal {
   private val q160Sql = s"""
     WITH p AS (
       SELECT media_id, plane, CAST(list_sum(plane) AS BIGINT) AS psum
-      FROM read_parquet('/root/repo/target/verify_aux/q160_planes.parquet/*.parquet')
+      FROM read_parquet('${graft.SparkEntry.AuxToken}/q160_planes.parquet/*.parquet')
     ), b AS (
       SELECT media_id,
              list_transform(plane,
@@ -455,7 +454,7 @@ object Multimodal {
   }
 
   private def auxT(name: String) =
-    s"read_parquet('/root/repo/target/verify_aux/$name.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/$name.parquet/*.parquet')"
 
   private val q177Sql = VectorSearch.ivfSearchMirrorSqlFor(
     auxT("q177_index"), auxT("q177_cents"), auxT("q177_query"),

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -481,7 +481,7 @@ object Relational {
   private def q26(s: SparkSession, d: String): DataFrame = {
     val suffix = math.abs(d.hashCode).toString
     val liT = s"graft_li_b$suffix"; val oT = s"graft_o_b$suffix"
-    val base = s"/root/repo/target/bucketed"
+    val base = s"${graft.Sessions.workDir}/bucketed"
     // The layout cost is paid ONCE at layout time — that's the whole
     // point of bucketing for repeated big-big joins. If a previous
     // session already wrote the bucketed files, re-register them as

@@ -82,11 +82,11 @@ object TextOps {
         exprs.chunkText(col("text"), 120, 24).as(Seq("pos", "chunk")))
       .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/q41_chunks.parquet")
 
-  private val q41Sql = """
+  private val q41Sql = s"""
     SELECT doc_id, n_chars, COUNT(*) AS n_chunks,
            MAX(length(chunk)) AS max_chunk_len,
            CAST(SUM(length(chunk)) AS BIGINT) AS total_chunk_chars
-    FROM read_parquet('/root/repo/target/verify_aux/q41_chunks.parquet/*.parquet')
+    FROM read_parquet('${graft.SparkEntry.AuxToken}/q41_chunks.parquet/*.parquet')
     GROUP BY doc_id, n_chars ORDER BY doc_id"""
 
   /** Type inference over strings rendered identically in both engines. */
@@ -273,7 +273,7 @@ object TextOps {
     * directly). (fixture text is single-line; the CSV writer's
     * quoting covers embedded commas/quotes). */
   private def q49(s: SparkSession, d: String): DataFrame = {
-    val base = s"/root/repo/target/srcfmt/${math.abs(d.hashCode)}"
+    val base = s"${graft.Sessions.workDir}/srcfmt/${math.abs(d.hashCode)}"
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
     docs.write.mode("overwrite").option("header", "true").csv(s"$base/csv")

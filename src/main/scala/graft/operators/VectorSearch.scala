@@ -232,7 +232,7 @@ object VectorSearch {
   private def q122(s: SparkSession, d: String): DataFrame = {
     import graft.sources.IndexStore
     val emb = Tables.embeddings(s, d)
-    val path = "/root/repo/target/q122_l2_coll/" +
+    val path = s"${graft.Sessions.workDir}/q122_l2_coll/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
     val rows = emb.select(
       concat(lit("v"), lpad(col("vec_id").cast("string"), 6, "0")).as("chunk_id"),
@@ -611,9 +611,9 @@ object VectorSearch {
   }
 
   private val AuxAnn =
-    "read_parquet('/root/repo/target/verify_aux/ann_sigs.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/ann_sigs.parquet/*.parquet')"
   private val AuxCents =
-    "read_parquet('/root/repo/target/verify_aux/q65_cents.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q65_cents.parquet/*.parquet')"
 
   /** Exact-cosine SQL fragment between embeddings-view rows `a` and
     * `b` — the q61-proven double-arithmetic mirror of vecCosine. */
@@ -790,7 +790,7 @@ object VectorSearch {
     * monotone-enough proxy for cosine on roughly centered embeddings
     * that a modest overfetch recovers exact top-k. Built-in HOF +
     * shift/or only — whole-stage-codegen friendly, no UDF. */
-  private def binaryCode(vecCol: String, dim: Int = 64): Column = {
+  private def binaryCode(vecCol: String, dim: Int): Column = {
     require(dim >= 1 && dim <= 64, s"binary code packs into one long, got dim=$dim")
     expr(s"aggregate(sequence(0, ${dim - 1}), 0L, (acc, i) -> " +
       s"acc | IF(element_at($vecCol, i + 1) > 0F, shiftleft(1L, i), 0L))")
@@ -909,7 +909,7 @@ object VectorSearch {
     * mirrorable arithmetic; the subtraction is float, identical IEEE
     * on both engines. */
   private def binaryResidualCode(vecCol: String, centCol: String,
-                                 dim: Int = 64): Column = {
+                                 dim: Int): Column = {
     require(dim >= 1 && dim <= 64, s"binary code packs into one long, got dim=$dim")
     expr(s"aggregate(sequence(0, ${dim - 1}), 0L, (acc, i) -> " +
       s"acc | IF(element_at($vecCol, i + 1) - element_at($centCol, i + 1) > 0F, " +
@@ -1112,11 +1112,11 @@ object VectorSearch {
   }
 
   private val AuxQ98Index =
-    "read_parquet('/root/repo/target/verify_aux/q98_index.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q98_index.parquet/*.parquet')"
   private val AuxQ98Cents =
-    "read_parquet('/root/repo/target/verify_aux/q98_cents.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q98_cents.parquet/*.parquet')"
   private val AuxQ98Query =
-    "read_parquet('/root/repo/target/verify_aux/q98_query.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q98_query.parquet/*.parquet')"
 
   /** Generic exact-cosine SQL between two array-column expressions
     * (the [[cosSql]] arithmetic over arbitrary columns). */
@@ -1291,13 +1291,13 @@ object VectorSearch {
 
   private val q105Sql = s"""
     WITH q AS (SELECT qvec
-               FROM read_parquet('/root/repo/target/verify_aux/q103_query.parquet/*.parquet')),
+               FROM read_parquet('${graft.SparkEntry.AuxToken}/q103_query.parquet/*.parquet')),
     idx AS (SELECT chunk_id, doc_id, embedding
-            FROM read_parquet('/root/repo/target/verify_aux/q103_index.parquet/*.parquet')),
+            FROM read_parquet('${graft.SparkEntry.AuxToken}/q103_index.parquet/*.parquet')),
     candw AS (SELECT cid
-              FROM read_parquet('/root/repo/target/verify_aux/q105_cands.parquet/*.parquet')),
+              FROM read_parquet('${graft.SparkEntry.AuxToken}/q105_cands.parquet/*.parquet')),
     candn AS (SELECT cid
-              FROM read_parquet('/root/repo/target/verify_aux/q105_cands_naive.parquet/*.parquet')),
+              FROM read_parquet('${graft.SparkEntry.AuxToken}/q105_cands_naive.parquet/*.parquet')),
     scored AS (
       SELECT chunk_id, doc_id, ${cosColsSql("idx.embedding", "q.qvec")} AS sim
       FROM idx, q),
@@ -1405,7 +1405,7 @@ object VectorSearch {
   // ---- q107/q108: delete-by-id and upsert lifecycles ----------------
 
   private[graft] def idxPath(prefix: String, d: String): String =
-    s"/root/repo/target/$prefix/" +
+    s"${graft.Sessions.workDir}/$prefix/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   /** Build→mutate lifecycles execute at most once per (session, sf):
@@ -1480,9 +1480,9 @@ object VectorSearch {
       limit = 25, offset = 5)
   }
 
-  private val q109Sql = """
+  private val q109Sql = s"""
     SELECT chunk_id, doc_id, source, chunk
-    FROM read_parquet('/root/repo/target/verify_aux/q107_index.parquet/*.parquet')
+    FROM read_parquet('${graft.SparkEntry.AuxToken}/q107_index.parquet/*.parquet')
     WHERE doc_id % 3 = 1 AND chunk LIKE '%the%'
     ORDER BY chunk_id LIMIT 25 OFFSET 5"""
 
@@ -1491,7 +1491,6 @@ object VectorSearch {
     * deterministic chunk+embed kernel, never from the layout the
     * query mutated and searches. */
   def materializeDeleteAux(s: SparkSession, d: String, auxDir: String): Unit = {
-    import graft.sources.IndexStore
     subsetRows(s, d).filter(col("doc_id") % 10 =!= 7)
       .select(col("chunk_id"), col("doc_id"), col("source"), col("chunk"),
         col("embedding"))
@@ -1517,8 +1516,8 @@ object VectorSearch {
     FROM scored ORDER BY sim DESC, chunk_id LIMIT 10"""
 
   private val q107Sql = exactSearchMirrorSql(
-    "read_parquet('/root/repo/target/verify_aux/q107_index.parquet/*.parquet')",
-    "read_parquet('/root/repo/target/verify_aux/q107_query.parquet/*.parquet')")
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q107_index.parquet/*.parquet')",
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q107_query.parquet/*.parquet')")
 
   /** The shared revision transform of the upsert gates (q108 batch,
     * q113 streaming): re-author a doc as ONE short chunk, so the
@@ -1566,11 +1565,11 @@ object VectorSearch {
       .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/q108_chunks.parquet")
   }
 
-  private val q108Sql = """
+  private val q108Sql = s"""
     SELECT source, COUNT(*) AS n_chunks, COUNT(DISTINCT doc_id) AS n_docs,
            CAST(SUM(length(chunk)) AS BIGINT) AS sum_chunk_chars,
            MAX(length(chunk)) AS max_chunk_len
-    FROM read_parquet('/root/repo/target/verify_aux/q108_chunks.parquet/*.parquet')
+    FROM read_parquet('${graft.SparkEntry.AuxToken}/q108_chunks.parquet/*.parquet')
     GROUP BY source ORDER BY source"""
 
   // ---- q117: chroma collection.update (existing-ids-only) -----------
@@ -1623,11 +1622,11 @@ object VectorSearch {
       .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/q117_chunks.parquet")
   }
 
-  private val q117Sql = """
+  private val q117Sql = s"""
     SELECT source, COUNT(*) AS n_chunks, COUNT(DISTINCT doc_id) AS n_docs,
            CAST(SUM(length(chunk)) AS BIGINT) AS sum_chunk_chars,
            MAX(length(chunk)) AS max_chunk_len
-    FROM read_parquet('/root/repo/target/verify_aux/q117_chunks.parquet/*.parquet')
+    FROM read_parquet('${graft.SparkEntry.AuxToken}/q117_chunks.parquet/*.parquet')
     GROUP BY source ORDER BY source"""
 
   // ---- q111: append→compact→search lifecycle ------------------------
@@ -1679,7 +1678,6 @@ object VectorSearch {
     * (the one artifact legitimately shared — the mirror re-derives
     * every assignment from it), and the query vector+code. */
   def materializeCompactAux(s: SparkSession, d: String, auxDir: String): Unit = {
-    import graft.sources.IndexStore
     val path = q111Lifecycle(s, d)
     subsetRows(s, d)
       .select(col("chunk_id"), col("doc_id"), col("source"), col("chunk"),
@@ -1699,9 +1697,9 @@ object VectorSearch {
   }
 
   private val q111Sql = ivfSearchMirrorSqlFor(
-    "read_parquet('/root/repo/target/verify_aux/q111_index.parquet/*.parquet')",
-    "read_parquet('/root/repo/target/verify_aux/q111_cents.parquet/*.parquet')",
-    "read_parquet('/root/repo/target/verify_aux/q111_query.parquet/*.parquet')",
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q111_index.parquet/*.parquet')",
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q111_cents.parquet/*.parquet')",
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q111_query.parquet/*.parquet')",
     probes = 3, overfetch = 32, wherePred = "TRUE")
 
   // ---- q112: batch search over the IVF layout -----------------------
@@ -1746,7 +1744,7 @@ object VectorSearch {
   private val q112Sql = s"""
     WITH cents AS (SELECT cent_id, cvec FROM $AuxQ98Cents),
     qs AS (SELECT query_id, qvec, qcode, qfac
-           FROM read_parquet('/root/repo/target/verify_aux/q112_queries.parquet/*.parquet')),
+           FROM read_parquet('${graft.SparkEntry.AuxToken}/q112_queries.parquet/*.parquet')),
     idx AS (SELECT * FROM $AuxQ98Index),
     assign AS (
       SELECT x.chunk_id, c.cent_id,
@@ -2051,7 +2049,7 @@ object VectorSearch {
   private val q67Sql = recallMirrorSql("embeddings",
     Seq("lsh" -> q62Sql, "ivf" -> q65Sql, "sq8" -> q69Sql,
       "hnsw" -> ("SELECT query_id, vec_id, n_candidates FROM " +
-        "read_parquet('/root/repo/target/verify_aux/q67_hnsw.parquet/*.parquet')")))
+        s"read_parquet('${graft.SparkEntry.AuxToken}/q67_hnsw.parquet/*.parquet')")))
 
   // ---- q67b: the same meter on a CLUSTERED corpus -------------------
 
@@ -2294,7 +2292,7 @@ object VectorSearch {
     }
 
   private def auxHnsw(ef: Int) =
-    s"read_parquet('/root/repo/target/verify_aux/q102_hnsw_ef$ef.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q102_hnsw_ef$ef.parquet/*.parquet')"
 
   /** Deterministic on-disk location of the q103 index for an sf dir —
     * one physical build per (session, sf), shared by the query, the
@@ -2343,11 +2341,11 @@ object VectorSearch {
       .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/q103_query.parquet")
   }
 
-  private val q103Sql = """
+  private val q103Sql = s"""
     WITH q AS (SELECT qvec
-               FROM read_parquet('/root/repo/target/verify_aux/q103_query.parquet/*.parquet')),
+               FROM read_parquet('${graft.SparkEntry.AuxToken}/q103_query.parquet/*.parquet')),
     cand AS (SELECT cid
-             FROM read_parquet('/root/repo/target/verify_aux/q103_cands.parquet/*.parquet')),
+             FROM read_parquet('${graft.SparkEntry.AuxToken}/q103_cands.parquet/*.parquet')),
     scored AS (
       SELECT chunk_id, doc_id, source, chunk,
         list_sum(list_transform(generate_series(1, len(embedding)),
@@ -2356,7 +2354,7 @@ object VectorSearch {
              i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))))
          * sqrt(list_sum(list_transform(generate_series(1, len(qvec)),
              i -> CAST(qvec[i] AS DOUBLE) * CAST(qvec[i] AS DOUBLE))))) AS sim
-      FROM read_parquet('/root/repo/target/verify_aux/q103_index.parquet/*.parquet') idx,
+      FROM read_parquet('${graft.SparkEntry.AuxToken}/q103_index.parquet/*.parquet') idx,
            cand, q
       WHERE idx.chunk_id = cand.cid
     )
@@ -2408,14 +2406,14 @@ object VectorSearch {
 
   private val q106Sql = s"""
     WITH qs AS (SELECT query_id, qvec
-                FROM read_parquet('/root/repo/target/verify_aux/q106_queries.parquet/*.parquet')),
+                FROM read_parquet('${graft.SparkEntry.AuxToken}/q106_queries.parquet/*.parquet')),
     cand AS (SELECT query_id, cid
-             FROM read_parquet('/root/repo/target/verify_aux/q106_cands.parquet/*.parquet')),
+             FROM read_parquet('${graft.SparkEntry.AuxToken}/q106_cands.parquet/*.parquet')),
     scored AS (
       SELECT c.query_id, x.chunk_id, x.doc_id, x.source, x.chunk,
              ${cosColsSql("x.embedding", "q.qvec")} AS sim
       FROM cand c
-      JOIN read_parquet('/root/repo/target/verify_aux/q103_index.parquet/*.parquet') x
+      JOIN read_parquet('${graft.SparkEntry.AuxToken}/q103_index.parquet/*.parquet') x
         ON x.chunk_id = c.cid
       JOIN qs q ON q.query_id = c.query_id),
     ranked AS (
@@ -2447,9 +2445,9 @@ object VectorSearch {
   }
 
   private val AuxQ67bCorpus =
-    "read_parquet('/root/repo/target/verify_aux/q67b_corpus.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q67b_corpus.parquet/*.parquet')"
   private val AuxQ67bCents =
-    "read_parquet('/root/repo/target/verify_aux/q67b_cents.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q67b_cents.parquet/*.parquet')"
 
   private val q67bSql = recallMirrorSql(AuxQ67bCorpus,
     Seq("ivf" -> ivfMirrorSql(AuxQ67bCorpus, AuxQ67bCents, Q67bProbes),
@@ -2506,10 +2504,10 @@ object VectorSearch {
     SELECT label, COUNT(*) AS n, round(${graft.util.Num.sqlDavg("dist")}, 4) AS avg_dist
     FROM dists GROUP BY label ORDER BY label"""
 
-  private val q64Sql = """
+  private val q64Sql = s"""
     SELECT source, COUNT(*) AS n_chunks, COUNT(DISTINCT doc_id) AS n_docs,
            CAST(SUM(length(chunk)) AS BIGINT) AS sum_chunk_chars
-    FROM read_parquet('/root/repo/target/verify_aux/q63_chunks.parquet/*.parquet')
+    FROM read_parquet('${graft.SparkEntry.AuxToken}/q63_chunks.parquet/*.parquet')
     GROUP BY source ORDER BY source"""
 
   private val E2EQueryText = "spark window aggregation over sorted batches"
@@ -2540,9 +2538,9 @@ object VectorSearch {
       .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/q63_query.parquet")
   }
 
-  private val q63Sql = """
+  private val q63Sql = s"""
     WITH q AS (SELECT qvec
-               FROM read_parquet('/root/repo/target/verify_aux/q63_query.parquet/*.parquet')),
+               FROM read_parquet('${graft.SparkEntry.AuxToken}/q63_query.parquet/*.parquet')),
     scored AS (
       SELECT chunk_id, doc_id, source, chunk,
         list_sum(list_transform(generate_series(1, len(embedding)),
@@ -2551,7 +2549,7 @@ object VectorSearch {
              i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))))
          * sqrt(list_sum(list_transform(generate_series(1, len(qvec)),
              i -> CAST(qvec[i] AS DOUBLE) * CAST(qvec[i] AS DOUBLE))))) AS sim
-      FROM read_parquet('/root/repo/target/verify_aux/q63_chunks.parquet/*.parquet'), q
+      FROM read_parquet('${graft.SparkEntry.AuxToken}/q63_chunks.parquet/*.parquet'), q
     )
     SELECT row_number() OVER (ORDER BY sim DESC, chunk_id) AS rank,
            chunk_id, doc_id, source, chunk,
@@ -2653,13 +2651,13 @@ object VectorSearch {
   }
 
   private val AuxQ123Index =
-    "read_parquet('/root/repo/target/verify_aux/q123_index.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q123_index.parquet/*.parquet')"
   private val AuxQ123Cents =
-    "read_parquet('/root/repo/target/verify_aux/q123_cents.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q123_cents.parquet/*.parquet')"
   private val AuxQ123Books =
-    "read_parquet('/root/repo/target/verify_aux/q123_books.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q123_books.parquet/*.parquet')"
   private val AuxQ123Query =
-    "read_parquet('/root/repo/target/verify_aux/q123_query.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q123_query.parquet/*.parquet')"
 
   /** The ADC LUT mirror: micro-quantized dot of each codebook entry
     * with its query subvector slice (the [[pqLut]] integers,
@@ -2762,7 +2760,7 @@ object VectorSearch {
   private val q127Sql = s"""
     WITH cents AS (SELECT cent_id, cvec FROM $AuxQ123Cents),
     qs AS (SELECT query_id, qvec
-           FROM read_parquet('/root/repo/target/verify_aux/q127_queries.parquet/*.parquet')),
+           FROM read_parquet('${graft.SparkEntry.AuxToken}/q127_queries.parquet/*.parquet')),
     books AS (SELECT sub, code_id, cvec FROM $AuxQ123Books),
     idx AS (SELECT * FROM $AuxQ123Index),
     assign AS (
@@ -3229,7 +3227,7 @@ object VectorSearch {
   }
 
   private val AuxQ125Query =
-    "read_parquet('/root/repo/target/verify_aux/q125_query.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q125_query.parquet/*.parquet')"
 
   /** The MMR mirror: candidate fetch (micro-quantized cosine cut),
     * the pairwise-sim table, then the greedy selection UNROLLED as
@@ -3350,11 +3348,11 @@ object VectorSearch {
   }
 
   private val q126Sql = {
-    val q = "read_parquet('/root/repo/target/verify_aux/q126_query.parquet/*.parquet')"
+    val q = s"read_parquet('${graft.SparkEntry.AuxToken}/q126_query.parquet/*.parquet')"
     val orig = exactSearchMirrorSql(
-      "read_parquet('/root/repo/target/verify_aux/q126_orig.parquet/*.parquet')", q)
+      s"read_parquet('${graft.SparkEntry.AuxToken}/q126_orig.parquet/*.parquet')", q)
     val fork = exactSearchMirrorSql(
-      "read_parquet('/root/repo/target/verify_aux/q126_fork.parquet/*.parquet')", q)
+      s"read_parquet('${graft.SparkEntry.AuxToken}/q126_fork.parquet/*.parquet')", q)
     s"""
     SELECT 'orig' AS side, * FROM ($orig)
     UNION ALL
@@ -3428,7 +3426,7 @@ object VectorSearch {
     }.mkString(",\n    ")
     s"""
     WITH qs AS MATERIALIZED (SELECT query_id, qvec FROM
-      read_parquet('/root/repo/target/verify_aux/q141_queries.parquet/*.parquet')),
+      read_parquet('${graft.SparkEntry.AuxToken}/q141_queries.parquet/*.parquet')),
     idx AS (SELECT chunk_id, doc_id, source, chunk, embedding FROM $AuxQ98Index),
     cand AS MATERIALIZED (
       SELECT * FROM (
@@ -3472,7 +3470,7 @@ object VectorSearch {
     * from the q67b corpus dump. */
   private def q129(s: SparkSession, d: String): DataFrame = {
     import graft.functions.vecIndexExprs
-    import graft.sources.IndexStore.{PqM, PqKsub}
+    import graft.sources.IndexStore.PqM
     val cl = clusteredEmb(s, d)
     val books = pqBooksClusteredCached(s, d)
     val qvec = cl.filter(col("vec_id") === 0)
@@ -3572,9 +3570,9 @@ object VectorSearch {
   }
 
   private val AuxQ129Books =
-    "read_parquet('/root/repo/target/verify_aux/q129_books.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q129_books.parquet/*.parquet')"
   private val AuxQ129Query =
-    "read_parquet('/root/repo/target/verify_aux/q129_query.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q129_query.parquet/*.parquet')"
 
   /** q129 mirror: query vector = corpus row 0; PQ codes re-derived
     * per (row, subspace) from the dumped books (the q123 subcodes
@@ -3776,7 +3774,7 @@ object VectorSearch {
   }
 
   private val AuxQ142Books =
-    "read_parquet('/root/repo/target/verify_aux/q142_books.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q142_books.parquet/*.parquet')"
 
   /** q142 mirror: the q129 re-derivation (codes from dumped books,
     * LUT, ADC cut, exact rerank, hit count) generalized over the
@@ -3982,7 +3980,7 @@ object VectorSearch {
   }
 
   private val AuxQ176Cents =
-    "read_parquet('/root/repo/target/verify_aux/q176_cents.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q176_cents.parquet/*.parquet')"
 
   /** The retrain-policy mirror, shared by q176 and q180 (which runs
     * the SAME quantizer against a different sample slice through the
@@ -4294,7 +4292,7 @@ object VectorSearch {
   }
 
   private val AuxQ133Books =
-    "read_parquet('/root/repo/target/verify_aux/q133_books.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q133_books.parquet/*.parquet')"
 
   /** q133 mirror: assignment re-derived from the q67b centroid dump,
     * residuals re-derived as FLOAT subtraction, both code families
@@ -4464,13 +4462,13 @@ object VectorSearch {
   }
 
   private val AuxQ138Index =
-    "read_parquet('/root/repo/target/verify_aux/q138_index.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q138_index.parquet/*.parquet')"
   private val AuxQ138Cents =
-    "read_parquet('/root/repo/target/verify_aux/q138_cents.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q138_cents.parquet/*.parquet')"
   private val AuxQ138Books =
-    "read_parquet('/root/repo/target/verify_aux/q138_books.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q138_books.parquet/*.parquet')"
   private val AuxQ138Query =
-    "read_parquet('/root/repo/target/verify_aux/q138_query.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q138_query.parquet/*.parquet')"
 
   /** q138 mirror: the q123 mirror's shape with the residual pieces —
     * assignment re-derived from the centroid dump (and CHECKED
@@ -4625,9 +4623,9 @@ object VectorSearch {
   }
 
   private val AuxQ139Demb =
-    "read_parquet('/root/repo/target/verify_aux/q139_demb.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q139_demb.parquet/*.parquet')"
   private val AuxQ139Cents =
-    "read_parquet('/root/repo/target/verify_aux/q139_cents.parquet/*.parquet')"
+    s"read_parquet('${graft.SparkEntry.AuxToken}/q139_cents.parquet/*.parquet')"
 
   private val q139Sql = s"""
     WITH demb AS (SELECT doc_id, embedding FROM $AuxQ139Demb),
@@ -4931,7 +4929,7 @@ object VectorSearch {
   // still be null at that point
   private lazy val q174Sql = s"""
     WITH qs AS (SELECT query_id, qvec FROM
-      read_parquet('/root/repo/target/verify_aux/q174_queries.parquet/*.parquet')
+      read_parquet('${graft.SparkEntry.AuxToken}/q174_queries.parquet/*.parquet')
     ), demb AS (SELECT doc_id, embedding FROM $AuxQ139Demb
     ), ranked AS (
       SELECT q.query_id, d.doc_id,
@@ -5031,7 +5029,7 @@ object VectorSearch {
     val cum = w.drop(1).scanLeft(0L)(_ + _)
     s"""
     WITH qs AS (SELECT query_id, qvec FROM
-      read_parquet('/root/repo/target/verify_aux/q174_queries.parquet/*.parquet')
+      read_parquet('${graft.SparkEntry.AuxToken}/q174_queries.parquet/*.parquet')
     ), demb AS (SELECT doc_id, embedding FROM $AuxQ139Demb
     ), ranked AS (
       SELECT q.query_id, d.doc_id,

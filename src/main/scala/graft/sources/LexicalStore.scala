@@ -2677,7 +2677,7 @@ object LexicalStore {
     * `wm<k>`; with `withRows`, the scoring posting rows as `rows`
     * ([[explainBoolean]]'s decomposition); then `score`. */
   private def clauseCore(spark: SparkSession, clauses: Seq[CoreClause], score: String,
-                         minShouldMatch: Int = 0, allow: Option[DataFrame] = None,
+                         minShouldMatch: Int = 0, allow: Option[DataFrame],
                          withRows: Boolean = false): DataFrame = {
     import QueryParser._
     val atoms = clauses.flatMap(_.atoms.map(_._2)).zipWithIndex

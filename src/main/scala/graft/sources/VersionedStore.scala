@@ -443,7 +443,7 @@ object VersionedStore {
   // ---- q166: the time-travel gate -----------------------------------
 
   private def storePath(d: String): String =
-    "/root/repo/target/q166_versioned/" +
+    s"${graft.Sessions.workDir}/q166_versioned/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   /** q166: full versioned lifecycle, then EVERY version read back and
@@ -500,7 +500,7 @@ object VersionedStore {
   // ---- q167: zone-map pruned range read -----------------------------
 
   private def storePath167(d: String): String =
-    "/root/repo/target/q167_zonemap/" +
+    s"${graft.Sessions.workDir}/q167_zonemap/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   /** q167: the zone maps EXERCISED — the corpus lands in four id-range
@@ -564,7 +564,7 @@ object VersionedStore {
   // ---- q171: incremental aggregate maintenance ----------------------
 
   private def storePath171(d: String): String =
-    "/root/repo/target/q171_ivm/" +
+    s"${graft.Sessions.workDir}/q171_ivm/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   /** q171: the IVM lifecycle — create from half the corpus, refresh,
@@ -599,7 +599,7 @@ object VersionedStore {
   // ---- q184: describe every versioned store ---------------------------
 
   private def storePath184(d: String): String =
-    "/root/repo/target/q184_vacuumed/" +
+    s"${graft.Sessions.workDir}/q184_vacuumed/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
 
   /** A store whose history has been compacted and vacuumed down to one

@@ -44,7 +44,7 @@ object Streams {
     scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def stageInbox(d: String, file: String): String =
     stagedInboxes.getOrElseUpdate((d, file), {
-      val inbox = Paths.get(s"/root/repo/target/stream_tmp/${UUID.randomUUID}/inbox")
+      val inbox = Paths.get(s"${graft.Sessions.workDir}/stream_tmp/${UUID.randomUUID}/inbox")
       Files.createDirectories(inbox)
       Files.copy(Paths.get(s"$d/$file"), inbox.resolve(file),
         StandardCopyOption.REPLACE_EXISTING)
@@ -196,7 +196,7 @@ object Streams {
     // active stream/checkpoint). Bench/Verify/tests run one session
     // per JVM against a given sf, so the shared deterministic path is
     // safe there; a concurrent harness must key the dir per session.
-    val tmp = Paths.get("/root/repo/target/q83_stream/" +
+    val tmp = Paths.get(s"${graft.Sessions.workDir}/q83_stream/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_"))
     val index = tmp.resolve("index")
     def wipe(f: java.io.File): Unit = {
@@ -207,7 +207,6 @@ object Streams {
     Files.createDirectories(tmp)
     val inbox = stageInbox(d, "documents.parquet")
 
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val incoming = s.readStream.schema(docsSchema).parquet(inbox)
       .select(col("doc_id"), col("source"), col("text"))
     val q = incoming.writeStream
@@ -231,6 +230,7 @@ object Streams {
           .withColumn("embedding", graft.functions.Embed.embedCol(col("chunk")))
           .repartition(col("source"))
           .write.mode("overwrite").partitionBy("source")
+          .option("partitionOverwriteMode", "dynamic")
           .parquet(index.toString)
         ()
       }
@@ -258,11 +258,11 @@ object Streams {
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$auxDir/q83_chunks.parquet")
 
-  private val q83Sql = """
+  private val q83Sql = s"""
     SELECT source, COUNT(*) AS n_chunks, COUNT(DISTINCT doc_id) AS n_docs,
            CAST(SUM(length(chunk)) AS BIGINT) AS sum_chunk_chars,
            MAX(length(chunk)) AS max_chunk_len
-    FROM read_parquet('/root/repo/target/verify_aux/q83_chunks.parquet/*.parquet')
+    FROM read_parquet('${graft.SparkEntry.AuxToken}/q83_chunks.parquet/*.parquet')
     GROUP BY source ORDER BY source"""
 
   /** q84: streaming exactly-once ingest dedup — dropDuplicates on the
@@ -416,7 +416,7 @@ object Streams {
     * cleaning them. One streaming lifecycle runs per (session, sf),
     * like the other maintenance gates. */
   private def q113StreamBase(d: String): String =
-    "/root/repo/target/q113_stream/" +
+    s"${graft.Sessions.workDir}/q113_stream/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
   private val q113Done =
     scala.collection.concurrent.TrieMap.empty[(String, String), Unit]
@@ -482,11 +482,11 @@ object Streams {
       .parquet(s"$auxDir/q113_chunks.parquet")
   }
 
-  private val q113Sql = """
+  private val q113Sql = s"""
     SELECT source, COUNT(*) AS n_chunks, COUNT(DISTINCT doc_id) AS n_docs,
            CAST(SUM(length(chunk)) AS BIGINT) AS sum_chunk_chars,
            MAX(length(chunk)) AS max_chunk_len
-    FROM read_parquet('/root/repo/target/verify_aux/q113_chunks.parquet/*.parquet')
+    FROM read_parquet('${graft.SparkEntry.AuxToken}/q113_chunks.parquet/*.parquet')
     GROUP BY source ORDER BY source"""
 
   // ---- q131: streaming near-dup admission --------------------------
@@ -502,7 +502,7 @@ object Streams {
   }
 
   private def q131StreamBase(d: String): String =
-    "/root/repo/target/q131_stream/" +
+    s"${graft.Sessions.workDir}/q131_stream/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
   private val q131Done =
     scala.collection.concurrent.TrieMap.empty[(String, String), Unit]
@@ -576,11 +576,11 @@ object Streams {
     * are (band ∈ store, other id) ∪ (band ∈ batch, smaller id); the
     * admitted bands roll into the next store. MATERIALIZED CTEs —
     * every store is referenced by two successors. */
-  private val q131Sql = """
+  private val q131Sql = s"""
     WITH nn AS (SELECT MAX(doc_id) + 1 AS n FROM documents),
     bnd AS MATERIALIZED (
       SELECT doc_id, unnest(mb) AS band
-      FROM read_parquet('/root/repo/target/verify_aux/dedup_sigs.parquet/*.parquet')),
+      FROM read_parquet('${graft.SparkEntry.AuxToken}/dedup_sigs.parquet/*.parquet')),
     s0 AS MATERIALIZED (
       SELECT doc_id, band FROM bnd WHERE doc_id < (SELECT n // 2 FROM nn)),
     w1 AS MATERIALIZED (
@@ -622,7 +622,7 @@ object Streams {
   // ---- q148: streaming count-min sketch maintenance ------------------
 
   private def q148StreamBase(d: String): String =
-    "/root/repo/target/q148_stream/" +
+    s"${graft.Sessions.workDir}/q148_stream/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
   private val q148Done =
     scala.collection.concurrent.TrieMap.empty[(String, String), Unit]
@@ -684,12 +684,12 @@ object Streams {
 
   /** The q148 oracle IS the q145 mirror (same aux): sub-sketches
     * summed over batches must equal the one-pass corpus sketch. */
-  private val q148Sql = """
+  private val q148Sql = s"""
     WITH toks AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
     cnt AS (SELECT term, COUNT(*) AS n FROM toks
             WHERE length(term) > 0 GROUP BY term),
     tb AS (SELECT term, j, b FROM
-      read_parquet('/root/repo/target/verify_aux/q145_token_buckets.parquet/*.parquet')),
+      read_parquet('${graft.SparkEntry.AuxToken}/q145_token_buckets.parquet/*.parquet')),
     counters AS (
       SELECT tb.j, tb.b, CAST(SUM(cnt.n) AS BIGINT) AS c
       FROM cnt JOIN tb USING (term) GROUP BY tb.j, tb.b),
@@ -704,7 +704,7 @@ object Streams {
   // ---- q168: streaming ingest into the versioned store --------------
 
   private def q168Base(d: String): String =
-    "/root/repo/target/q168_stream_versioned/" +
+    s"${graft.Sessions.workDir}/q168_stream_versioned/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
   private val q168Done =
     scala.collection.concurrent.TrieMap.empty[(String, String), Unit]
@@ -771,7 +771,7 @@ object Streams {
   // ---- q180: streaming retrain trigger -------------------------------
 
   private def q180StreamBase(d: String): String =
-    "/root/repo/target/q180_stream/" +
+    s"${graft.Sessions.workDir}/q180_stream/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_")
   private val q180Done =
     scala.collection.concurrent.TrieMap.empty[(String, String), Unit]
@@ -1021,7 +1021,7 @@ object Streams {
       q214Lifecycle(s, d).localCheckpoint())
 
   private[graft] def q214Lifecycle(s: SparkSession, d: String): DataFrame = {
-    val tmp = Paths.get("/root/repo/target/q214_stream/" +
+    val tmp = Paths.get(s"${graft.Sessions.workDir}/q214_stream/" +
       d.stripPrefix("/").replaceAll("[^A-Za-z0-9.]", "_"))
     def wipe(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(wipe)

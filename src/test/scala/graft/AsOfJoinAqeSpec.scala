@@ -17,15 +17,15 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class AsOfJoinAqeSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "32") // tiny data, 32 -> AQE coalesces
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1KB")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
+
+  /** Tiny data over 32 shuffle partitions with a 1KB advisory size,
+    * so AQE has partitions to coalesce. */
+  private def aggressiveAqe[T](body: => T): T = WithConf(spark,
+    "spark.sql.shuffle.partitions" -> "32",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB")(body)
 
   private def ts(m: Int): Timestamp = new Timestamp(1700000000000L + m * 60000L)
 
@@ -64,24 +64,35 @@ class AsOfJoinAqeSpec extends AnyFunSuite {
   }
 
   test("AsOfJoinExec matches union+window under AQE with skew and coalescing") {
-    val (left, right) = fixture
-    val custom = graft.plans.AsOf.join(left, right, "user_id", "ts", "m")
-      .select(col("event_id"), col("m"))
-    val expected = viaWindow(left, right)
-    val got = custom.collect().map(r => (r.getLong(0), Option(r.get(1)))).toSet
-    val exp = expected.collect().map(r => (r.getLong(0), Option(r.get(1)))).toSet
-    assert(got == exp)
-    // and AQE actually wrapped the plan
-    val plan = custom.queryExecution.executedPlan.toString
-    assert(plan.contains("AdaptiveSparkPlan"), plan)
+    aggressiveAqe {
+      val (left, right) = fixture
+      val custom = graft.plans.AsOf.join(left, right, "user_id", "ts", "m")
+        .select(col("event_id"), col("m"))
+      val expected = viaWindow(left, right)
+      val got = custom.collect().map(r => (r.getLong(0), Option(r.get(1)))).toSet
+      val exp = expected.collect().map(r => (r.getLong(0), Option(r.get(1)))).toSet
+      assert(got == exp)
+      // and AQE actually wrapped the plan
+      val plan = custom.queryExecution.executedPlan.toString
+      assert(plan.contains("AdaptiveSparkPlan"), plan)
+    }
   }
 
   test("empty right side yields all-null matches") {
-    import spark.implicits._
-    val (left, _) = fixture
-    val right = Seq.empty[(Long, Timestamp)].toDF("user_id", "ts")
-    val out = graft.plans.AsOf.join(left, right, "user_id", "ts", "m")
-    assert(out.filter(col("m").isNotNull).count() == 0)
-    assert(out.count() == left.count())
+    aggressiveAqe {
+      import spark.implicits._
+      val (left, _) = fixture
+      val right = Seq.empty[(Long, Timestamp)].toDF("user_id", "ts")
+      val out = graft.plans.AsOf.join(left, right, "user_id", "ts", "m")
+      assert(out.filter(col("m").isNotNull).count() == 0)
+      assert(out.count() == left.count())
+    }
+  }
+
+  test("the AQE settings above do not outlive this spec's bodies") {
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    assert(spark.conf.get(advisory) ==
+      new org.apache.spark.sql.internal.SQLConf().getConfString(advisory))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 }

@@ -11,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BucketedJoinSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   test("q26 physical plan has no Exchange (bucket-aligned sort-merge join)") {
     val d = "/root/testdata/sf0.001"

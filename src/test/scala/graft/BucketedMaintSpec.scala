@@ -12,16 +12,10 @@ import graft.sources.IndexStore
   * probes. */
 class BucketedMaintSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private val d = "/root/testdata/sf0.001"
-  private val path = "/root/repo/target/test_bucketed_maint"
+  private val path = s"${Sessions.workDir}/test_bucketed_maint"
 
   test("deleteIdsBucketed removes every bucket row of the chunk; " +
        "upsertBucketed replaces all old rows with the revision's") {

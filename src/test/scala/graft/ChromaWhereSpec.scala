@@ -14,12 +14,7 @@ import graft.functions.ChromaWhere
   */
 class ChromaWhereSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private lazy val df: DataFrame = {
     import spark.implicits._

@@ -13,11 +13,7 @@ import scala.util.Random
   */
 class DedupSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private val rnd = new Random(123)
   private def doc(n: Int): String =

@@ -14,12 +14,7 @@ import graft.operators.{Dedup, VectorSearch}
   */
 class EdgeCasesSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private def docs(rows: (java.lang.Long, String)*) = {
     import spark.implicits._
@@ -170,15 +165,15 @@ class EdgeCasesSpec extends AnyFunSuite {
     val docs = (0L until 30L).map(i => (i, s"edge doc $i text body", "srcA"))
       .toDF("doc_id", "text", "source")
     val impossible = Some(col("doc_id") < 0)
-    val p1 = "/root/repo/target/test_edge_where_flat"
+    val p1 = s"${Sessions.workDir}/test_edge_where_flat"
     IndexStore.build(spark, docs, p1)
     assert(IndexStore.searchTopK(spark, p1, "edge doc", k = 5, where = impossible).count() == 0)
     assert(IndexStore.searchTopKAnn(spark, p1, "edge doc", k = 5, where = impossible).count() == 0)
     assert(IndexStore.searchTopKSq8(spark, p1, "edge doc", k = 5, where = impossible).count() == 0)
-    val p2 = "/root/repo/target/test_edge_where_ivf"
+    val p2 = s"${Sessions.workDir}/test_edge_where_ivf"
     IndexStore.buildIvf(spark, docs, p2, nCells = 4)
     assert(IndexStore.searchTopKIvf(spark, p2, "edge doc", k = 5, where = impossible).count() == 0)
-    val p3 = "/root/repo/target/test_edge_where_hnsw"
+    val p3 = s"${Sessions.workDir}/test_edge_where_hnsw"
     IndexStore.buildHnsw(spark, docs, p3)
     assert(IndexStore.searchTopKHnsw(spark, p3, "edge doc", k = 5, where = impossible).count() == 0)
   }
@@ -344,7 +339,7 @@ class EdgeCasesSpec extends AnyFunSuite {
           fs.listStatus(s.getPath)
             .count(_.getPath.getName.endsWith(".parquet"))).toMap
     }
-    val bounded = "/root/repo/target/test_skew_bounded"
+    val bounded = s"${Sessions.workDir}/test_skew_bounded"
     IndexStore.buildIvfFromRows(spark, rows, bounded, nCells = 4,
       maxRowsPerCellFile = 16)
     // partition-directory columns read back with inferred (integer)
@@ -364,7 +359,7 @@ class EdgeCasesSpec extends AnyFunSuite {
         s"hot cell $c: ${files(c)} files for $n rows (want 2..$maxFiles)")
     }
     // content is a file-layout decision only: same 72 ids either way
-    val unbounded = "/root/repo/target/test_skew_unbounded"
+    val unbounded = s"${Sessions.workDir}/test_skew_unbounded"
     IndexStore.buildIvfFromRows(spark, rows, unbounded, nCells = 4)
     assert(filesPerCell(unbounded).values.forall(_ == 1))
     assert(spark.read.parquet(bounded).select("chunk_id").collect().toSet ==

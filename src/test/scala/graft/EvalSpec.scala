@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins for the retrieval-evaluation family: q194's graded nDCG@k
@@ -10,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class EvalSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private def w = operators.VectorSearch.ndcgWeightsMicros(4)
 

@@ -8,12 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Integration of the native expressions inside real Spark plans. */
 class ExpressionsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   test("a1_col / a1_index as Catalyst expressions (codegen path)") {
     import spark.implicits._
@@ -127,7 +122,9 @@ class ExpressionsSpec extends AnyFunSuite {
     try {
       // (spark.sql.extensions=graft.GraftExtensions does the same at
       // cluster level; it is a static conf, so in-JVM we pass the
-      // instance through the builder instead)
+      // instance through the builder instead). The builder's
+      // withExtensions entry point is what this test covers, so this
+      // is the one session not opened through Sessions.local.
       val s2 = SparkSession.builder()
         .withExtensions(new GraftExtensions())
         .getOrCreate()

@@ -14,13 +14,7 @@ import graft.sources.IndexStore
   * byte-level isolation, sidecars included. */
 class ForkSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private val d = "/root/testdata/sf0.001"
 
@@ -48,8 +42,8 @@ class ForkSpec extends AnyFunSuite {
 
   test("fork copies the whole layout incl. sidecars; mutating the fork " +
        "leaves the original byte-identical") {
-    val orig = "/root/repo/target/test_fork_orig"
-    val fork = "/root/repo/target/test_fork_copy"
+    val orig = s"${Sessions.workDir}/test_fork_orig"
+    val fork = s"${Sessions.workDir}/test_fork_copy"
     rmIfExists(orig); rmIfExists(fork)
     val docs = Tables.documents(spark, d).limit(40)
     IndexStore.buildIvf(spark, docs, orig, nCells = 4)
@@ -98,8 +92,8 @@ class ForkSpec extends AnyFunSuite {
 
   test("on a local fs the fork HARDLINKS the files (no data-byte copy); " +
        "a fork-side rewrite un-shares only the touched partitions") {
-    val orig = "/root/repo/target/test_fork_ln_orig"
-    val fork = "/root/repo/target/test_fork_ln_copy"
+    val orig = s"${Sessions.workDir}/test_fork_ln_orig"
+    val fork = s"${Sessions.workDir}/test_fork_ln_copy"
     rmIfExists(orig); rmIfExists(fork)
     val docs = Tables.documents(spark, d).limit(40)
     IndexStore.build(spark, docs, orig)
@@ -136,10 +130,10 @@ class ForkSpec extends AnyFunSuite {
   }
 
   test("fork refuses a missing source or an existing destination") {
-    val orig = "/root/repo/target/test_fork_orig" // exists from the test above
+    val orig = s"${Sessions.workDir}/test_fork_orig" // exists from the test above
     intercept[IllegalArgumentException] {
-      IndexStore.forkCollection(spark, "/root/repo/target/no_such_coll",
-        "/root/repo/target/test_fork_x")
+      IndexStore.forkCollection(spark, s"${Sessions.workDir}/no_such_coll",
+        s"${Sessions.workDir}/test_fork_x")
     }
     intercept[IllegalArgumentException] {
       IndexStore.forkCollection(spark, orig, orig)

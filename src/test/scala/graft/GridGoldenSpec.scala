@@ -15,11 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GridGoldenSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private def grid = {
     import spark.implicits._

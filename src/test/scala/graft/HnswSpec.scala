@@ -15,12 +15,7 @@ import graft.operators.VectorSearch
   */
 class HnswSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private val d = "/root/testdata/sf0.001"
 
@@ -130,7 +125,7 @@ class HnswSpec extends AnyFunSuite {
 
   test("persisted HNSW index: search is deterministic and recovers the exact top-k") {
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_hnsw_idx"
+    val path = s"${Sessions.workDir}/test_hnsw_idx"
     IndexStore.buildHnsw(spark, Tables.documents(spark, d), path)
     val q = "spark window aggregation over sorted batches"
     val hnsw = IndexStore.searchTopKHnsw(spark, path, q, k = 5).collect()
@@ -145,7 +140,7 @@ class HnswSpec extends AnyFunSuite {
 
   test("persisted HNSW index: a different session searches the artifact cold") {
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_hnsw_idx"
+    val path = s"${Sessions.workDir}/test_hnsw_idx"
     IndexStore.buildHnsw(spark, Tables.documents(spark, d), path)
     val q = "spark window aggregation over sorted batches"
     val warm = IndexStore.searchTopKHnsw(spark, path, q, k = 5).collect()
@@ -159,7 +154,7 @@ class HnswSpec extends AnyFunSuite {
 
   test("legacy layout without _meta reconstructs its meta and persists it") {
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_hnsw_legacy"
+    val path = s"${Sessions.workDir}/test_hnsw_legacy"
     IndexStore.buildHnsw(spark, Tables.documents(spark, d), path)
     val before = IndexStore.readHnswMeta(spark, path)
     val expected = IndexStore.searchTopKHnsw(spark, path,
@@ -181,7 +176,7 @@ class HnswSpec extends AnyFunSuite {
       "spark window aggregation", k = 5).collect()
     assert(served.toSeq == expected.toSeq)
     // a non-HNSW directory still fails fast
-    val bogus = "/root/repo/target/test_hnsw_bogus"
+    val bogus = s"${Sessions.workDir}/test_hnsw_bogus"
     spark.range(3).toDF("id").write.mode("overwrite").parquet(bogus)
     val e = intercept[IllegalStateException](IndexStore.readHnswMeta(spark, bogus))
     assert(e.getMessage.contains("not a legacy graft HNSW layout"))
@@ -189,7 +184,7 @@ class HnswSpec extends AnyFunSuite {
 
   test("persisted HNSW index: rebuild is idempotent (same graph bits)") {
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_hnsw_idx2"
+    val path = s"${Sessions.workDir}/test_hnsw_idx2"
     IndexStore.buildHnsw(spark, Tables.documents(spark, d), path)
     val first = spark.read.parquet(path)
       .select("chunk_id", "shard", "hnsw_node", "hnsw_level", "hnsw_links")
@@ -203,7 +198,7 @@ class HnswSpec extends AnyFunSuite {
 
   test("persisted HNSW index: append rebuilds only the touched shards and finds new docs") {
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_hnsw_idx3"
+    val path = s"${Sessions.workDir}/test_hnsw_idx3"
     val docs = Tables.documents(spark, d)
     IndexStore.buildHnsw(spark, docs.filter(col("doc_id") < 40), path)
     val beforeByShard = spark.read.parquet(path)
@@ -249,8 +244,8 @@ class HnswSpec extends AnyFunSuite {
     // shard count the build picked (and persisted) scales with the
     // corpus, and the scaled-up layout still searches
     val docs = Tables.documents(spark, d)
-    val p1 = "/root/repo/target/test_hnsw_auto1"
-    val p2 = "/root/repo/target/test_hnsw_auto2"
+    val p1 = s"${Sessions.workDir}/test_hnsw_auto1"
+    val p2 = s"${Sessions.workDir}/test_hnsw_auto2"
     IndexStore.buildHnsw(spark, docs.filter(col("doc_id") < 60), p1,
       targetNodesPerShard = 10)
     IndexStore.buildHnsw(spark, docs.filter(col("doc_id") < 120), p2,
@@ -263,14 +258,14 @@ class HnswSpec extends AnyFunSuite {
     assert(m2.numShards > m1.numShards, s"corpus $n1->$n2 rows must raise shard count")
     assert(IndexStore.searchTopKHnsw(spark, p2, "document text", k = 5).collect().length == 5)
     // the default target keeps the small-fixture layout at the floor
-    val p3 = "/root/repo/target/test_hnsw_auto3"
+    val p3 = s"${Sessions.workDir}/test_hnsw_auto3"
     IndexStore.buildHnsw(spark, docs.filter(col("doc_id") < 40), p3)
     assert(IndexStore.readHnswMeta(spark, p3).numShards == IndexStore.HnswShards)
   }
 
   test("append uses the STORED layout params and reads existing rows before the overwrite") {
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_hnsw_idx_rbw"
+    val path = s"${Sessions.workDir}/test_hnsw_idx_rbw"
     val docs = Tables.documents(spark, d)
     IndexStore.buildHnsw(spark, docs.filter(col("doc_id") < 40), path)
     val meta = IndexStore.readHnswMeta(spark, path)
@@ -311,7 +306,7 @@ class HnswSpec extends AnyFunSuite {
 
   test("append-forever resharding grows the shard count geometrically, losing nothing") {
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_hnsw_reshard"
+    val path = s"${Sessions.workDir}/test_hnsw_reshard"
     val docs = Tables.documents(spark, d)
     IndexStore.buildHnsw(spark, docs.filter(col("doc_id") < 20), path,
       targetNodesPerShard = 10)
@@ -348,7 +343,7 @@ class HnswSpec extends AnyFunSuite {
 
   test("the shard pin cache is LRU-bounded and unpins on eviction") {
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_hnsw_idx_lru"
+    val path = s"${Sessions.workDir}/test_hnsw_idx_lru"
     IndexStore.buildHnsw(spark, Tables.documents(spark, d).filter(col("doc_id") < 20), path)
     // more distinct sessions than the bound, each pinning its own
     // shard view of the same artifact: the LRU must cap the live pin
@@ -376,7 +371,7 @@ class HnswSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.sources.IndexStore
     implicit val ctx = spark.sqlContext
-    val path = "/root/repo/target/test_hnsw_idx_stream"
+    val path = s"${Sessions.workDir}/test_hnsw_idx_stream"
     val docs = Tables.documents(spark, d)
     IndexStore.buildHnsw(spark, docs.filter(col("doc_id") < 30), path)
     val before = spark.read.parquet(path).count()
@@ -404,7 +399,7 @@ class HnswSpec extends AnyFunSuite {
 
   test("buildHnswOnce keys its memo on the build parameters, not just (session, path)") {
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_hnsw_once"
+    val path = s"${Sessions.workDir}/test_hnsw_once"
     val docs = Tables.documents(spark, d).filter(col("doc_id") < 25)
     IndexStore.buildHnswOnce(spark, docs, path, m = 8)
     assert(IndexStore.readHnswMeta(spark, path).m == 8)
@@ -425,7 +420,7 @@ class HnswSpec extends AnyFunSuite {
 
   test("edge cases: empty append is a no-op; batch-of-one equals the single-query search") {
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_hnsw_idx_edge"
+    val path = s"${Sessions.workDir}/test_hnsw_idx_edge"
     val docs = Tables.documents(spark, d)
     IndexStore.buildHnsw(spark, docs.filter(col("doc_id") < 30), path)
     val before = spark.read.parquet(path)

@@ -14,19 +14,13 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
   */
 class LexicalSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private val d = "/root/testdata/sf0.001"
 
   private def leafScans(p: SparkPlan): Seq[FileSourceScanExec] =
     PlanScans.leafScans(p)
-  private val path = "/root/repo/target/test_lex_index"
+  private val path = s"${Sessions.workDir}/test_lex_index"
 
   private def built(): Unit =
     LexicalStore.buildOnce(spark, Tables.documents(spark, d), path)
@@ -179,7 +173,7 @@ class LexicalSpec extends AnyFunSuite {
     assert(e.getMessage.contains("li_rank"), e.getMessage)
   }
 
-  private val maintPath = "/root/repo/target/test_lex_maint"
+  private val maintPath = s"${Sessions.workDir}/test_lex_maint"
 
   private def terms0: Seq[String] =
     Tables.documents(spark, d).filter(col("doc_id") === 0)
@@ -215,7 +209,7 @@ class LexicalSpec extends AnyFunSuite {
       docs.filter(pmod(col("doc_id"), lit(3)) === 0).select(col("doc_id")))
     LexicalStore.compactLexical(spark, maintPath)
     val survivors = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-    val freshPath = "/root/repo/target/test_lex_fresh"
+    val freshPath = s"${Sessions.workDir}/test_lex_fresh"
     LexicalStore.build(spark, survivors, freshPath)
     val compacted = top()
     val fresh = LexicalStore.searchTopKLexical(spark, freshPath, terms0, 50)
@@ -271,7 +265,7 @@ class LexicalSpec extends AnyFunSuite {
       (5L, "salmon salmon ladder")) ++
       (10L to 29L).map(i => (i, s"filler$i pad$i pad$i noise")))
       .toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_prf"
+    val p = s"${Sessions.workDir}/test_lex_prf"
     LexicalStore.build(spark, docs, p)
     val q = Seq("stream", "window")
     val plain = LexicalStore.searchTopKLexical(spark, p, q, 10)
@@ -299,7 +293,7 @@ class LexicalSpec extends AnyFunSuite {
       (1L, "window stream"),
       (2L, "stream"),
       (3L, "window window window")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_prf_empty"
+    val p = s"${Sessions.workDir}/test_lex_prf_empty"
     LexicalStore.build(spark, docs, p)
     val q = Seq("stream", "window")
     val plain = LexicalStore.searchTopKLexical(spark, p, q, 4)
@@ -320,7 +314,7 @@ class LexicalSpec extends AnyFunSuite {
       (4L, "x x x y"),          // overlapping run: "x x" counts 2
       (5L, "c z q")             // neither word
     ).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_pos"
+    val p = s"${Sessions.workDir}/test_lex_pos"
     LexicalStore.buildPositional(spark, docs, p)
     def run(phrase: String*) =
       LexicalStore.searchPhrase(spark, p, phrase, k = 10)
@@ -350,7 +344,7 @@ class LexicalSpec extends AnyFunSuite {
       (4L, "a z z z z b"),  // min 5 > slop 3: filtered out
       (5L, "a a a")         // no b: never joins
     ).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_near"
+    val p = s"${Sessions.workDir}/test_lex_near"
     LexicalStore.buildPositional(spark, docs, p)
     val got = LexicalStore.searchNear(spark, p, "a", "b", slop = 3, k = 10)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
@@ -370,7 +364,7 @@ class LexicalSpec extends AnyFunSuite {
       (4L, "alpha beta gamma toxic"), // both musts but banned
       (5L, "gamma gamma gamma")       // should-only doc: gated out
     ).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_bool"
+    val p = s"${Sessions.workDir}/test_lex_bool"
     LexicalStore.build(spark, docs, p)
     val got = LexicalStore.searchBoolean(spark, p,
         must = Seq("alpha", "beta"), should = Seq("gamma"),
@@ -397,7 +391,7 @@ class LexicalSpec extends AnyFunSuite {
       (3L, "steel stone gamma"),
       (4L, "alpha beta gamma")
     ).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_prefix"
+    val p = s"${Sessions.workDir}/test_lex_prefix"
     LexicalStore.build(spark, docs, p)
     // dfs: star 2, stone 2, steel 1 => cap 2 keeps (star, stone) —
     // df DESC then term ASC
@@ -431,7 +425,7 @@ class LexicalSpec extends AnyFunSuite {
       (2L, "z blue z z blue"),
       (3L, "z z z")
     ).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_snip"
+    val p = s"${Sessions.workDir}/test_lex_snip"
     LexicalStore.buildPositional(spark, docs, p)
     val cands = Seq(1L, 2L, 3L).toDF("doc_id")
     val got = LexicalStore.snippetBest(spark, p,
@@ -454,7 +448,7 @@ class LexicalSpec extends AnyFunSuite {
       (1L, "a b c"),
       (2L, "a b d"),
       (3L, "a z b")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_pos_tomb"
+    val p = s"${Sessions.workDir}/test_lex_pos_tomb"
     LexicalStore.buildPositional(spark, docs, p)
     LexicalStore.deleteLexical(spark, p, Seq(1L))
     def phraseIds() = LexicalStore.searchPhrase(spark, p, Seq("a", "b"))
@@ -476,7 +470,7 @@ class LexicalSpec extends AnyFunSuite {
       (1L, "stream stream stream steam"),
       (2L, "steam scream z"),
       (3L, "stream x y")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_sugg"
+    val p = s"${Sessions.workDir}/test_lex_sugg"
     LexicalStore.build(spark, docs, p)
     val got = LexicalStore.suggestTerms(spark, p, "streem", maxDist = 2)
       .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2))).toSeq
@@ -504,7 +498,7 @@ class LexicalSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Tables.documents(spark, d).filter(col("doc_id") < 30)
       .select(col("doc_id"), col("text"))
-    val upPath = "/root/repo/target/test_colbert_up"
+    val upPath = s"${Sessions.workDir}/test_colbert_up"
     graft.sources.VersionedStore.deleteTree(JPaths.get(upPath))
     Hybrid.buildColbert(spark, docs, upPath, maxToks = 16, kCells = 8)
     val retexted = docs.filter(col("doc_id").isin(3L, 7L))
@@ -516,7 +510,7 @@ class LexicalSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     Hybrid.upsertColbert(spark, retexted.unionByName(brandNew), upPath,
       maxToks = 16)
-    val freshPath = "/root/repo/target/test_colbert_up_fresh"
+    val freshPath = s"${Sessions.workDir}/test_colbert_up_fresh"
     graft.sources.VersionedStore.deleteTree(JPaths.get(freshPath))
     Hybrid.buildColbert(spark,
       docs.filter(!col("doc_id").isin(3L, 7L))
@@ -535,7 +529,7 @@ class LexicalSpec extends AnyFunSuite {
 
   test("segment append leaves existing segment files byte-untouched") {
     import org.apache.hadoop.fs.Path
-    val segPath = "/root/repo/target/test_lex_segments"
+    val segPath = s"${Sessions.workDir}/test_lex_segments"
     val p = new Path(segPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
@@ -563,7 +557,7 @@ class LexicalSpec extends AnyFunSuite {
       "append must not touch existing segment files")
     assert(files(1).nonEmpty)
     // merged-stats scoring equals a from-scratch denormalized build
-    val freshPath = "/root/repo/target/test_lex_seg_fresh"
+    val freshPath = s"${Sessions.workDir}/test_lex_seg_fresh"
     LexicalStore.build(spark, docs, freshPath)
     val qt = terms0
     val seg = LexicalStore.searchTopKSegmented(spark, segPath, qt, 50)
@@ -591,7 +585,7 @@ class LexicalSpec extends AnyFunSuite {
 
   test("colbert index: probing returns full-gather-exact scores and prunes partitions") {
     import operators.Hybrid
-    val path = "/root/repo/target/test_colbert_index"
+    val path = s"${Sessions.workDir}/test_colbert_index"
     Hybrid.buildColbert(spark, Tables.documents(spark, d), path,
       maxToks = 16, kCells = 8)
     val query = "stream window partition merge"
@@ -624,7 +618,7 @@ class LexicalSpec extends AnyFunSuite {
     // incremental append through the stored centroids: full-probe
     // results are centroid-independent, so incremental == rebuilt
     val docs = Tables.documents(spark, d)
-    val incPath = "/root/repo/target/test_colbert_inc"
+    val incPath = s"${Sessions.workDir}/test_colbert_inc"
     Hybrid.buildColbert(spark,
       docs.filter(pmod(col("doc_id"), lit(2)) === 0), incPath,
       maxToks = 16, kCells = 8)
@@ -640,7 +634,7 @@ class LexicalSpec extends AnyFunSuite {
   test("explainColbert: per-(doc, query-token) argmax rows are sum-exact " +
       "against searchColbert and name the winning token position") {
     import operators.Hybrid
-    val path = "/root/repo/target/test_colbert_index"
+    val path = s"${Sessions.workDir}/test_colbert_index"
     Hybrid.buildColbert(spark, Tables.documents(spark, d), path,
       maxToks = 16, kCells = 8)
     val query = "stream window partition merge"
@@ -677,7 +671,7 @@ class LexicalSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     import operators.Hybrid
     val docs = Tables.documents(spark, d).filter(col("doc_id") < 40)
-    val tdPath = "/root/repo/target/test_colbert_td"
+    val tdPath = s"${Sessions.workDir}/test_colbert_td"
     graft.sources.VersionedStore.deleteTree(JPaths.get(tdPath))
     Hybrid.buildColbert(spark, docs, tdPath, maxToks = 16, kCells = 8)
     val query = "window aggregation over sorted batches"
@@ -690,7 +684,7 @@ class LexicalSpec extends AnyFunSuite {
     // tombstoned search == fresh build over the survivors, EXACTLY:
     // MaxSim carries no corpus statistics, so unlike BM25 there is no
     // stale-stats caveat
-    val freshPath = "/root/repo/target/test_colbert_td_fresh"
+    val freshPath = s"${Sessions.workDir}/test_colbert_td_fresh"
     graft.sources.VersionedStore.deleteTree(JPaths.get(freshPath))
     Hybrid.buildColbert(spark,
       docs.filter(col("doc_id") =!= doomed), freshPath,
@@ -775,8 +769,8 @@ class LexicalSpec extends AnyFunSuite {
       (2L, "a quick, brown fix"),     // comma glued to 'quick'
       (3L, "nothing relevant here")
     ).toDF("doc_id", "text")
-    val folded = "/root/repo/target/test_lex_folded"
-    val raw = "/root/repo/target/test_lex_rawcase"
+    val folded = s"${Sessions.workDir}/test_lex_folded"
+    val raw = s"${Sessions.workDir}/test_lex_rawcase"
     LexicalStore.build(spark, docs, folded,
       analyzer = LexicalStore.AnalyzerFolded)
     LexicalStore.build(spark, docs, raw)
@@ -817,7 +811,7 @@ class LexicalSpec extends AnyFunSuite {
       (2L, "stream processing basics"),
       (3L, "batch processing stream")   // words present, not adjacent
     ).toDF("doc_id", "text")
-    val pos = "/root/repo/target/test_lex_folded_pos"
+    val pos = s"${Sessions.workDir}/test_lex_folded_pos"
     LexicalStore.buildPositional(spark, docs, pos,
       analyzer = LexicalStore.AnalyzerFolded)
     val phrased = LexicalStore.searchPhrase(spark, pos,
@@ -825,7 +819,7 @@ class LexicalSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(phrased == Set(1L, 2L),
       s"folded phrase must match 'Stream PROCESSING,' ($phrased)")
-    val scoring = "/root/repo/target/test_lex_folded_score"
+    val scoring = s"${Sessions.workDir}/test_lex_folded_score"
     LexicalStore.build(spark, docs, scoring,
       analyzer = LexicalStore.AnalyzerFolded)
     // dictionary terms are folded, so a mixed-case prefix expands
@@ -846,7 +840,7 @@ class LexicalSpec extends AnyFunSuite {
 
   test("segment appends must not mix analyzers") {
     import spark.implicits._
-    val p = "/root/repo/target/test_lex_seg_mixana"
+    val p = s"${Sessions.workDir}/test_lex_seg_mixana"
     val fs = new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(p), true)
@@ -882,7 +876,7 @@ class LexicalSpec extends AnyFunSuite {
     // become join order
     val docs = (1L to 200L).map(i => (i, "common1 common2 filler")) :+
       (201L, "common1 common2 needle")
-    val p = "/root/repo/target/test_lex_rarest"
+    val p = s"${Sessions.workDir}/test_lex_rarest"
     LexicalStore.buildPositional(spark, docs.toDF("doc_id", "text"), p)
     val df = LexicalStore.searchPhrase(spark, p,
       Seq("common1", "common2", "needle"), k = 10)
@@ -907,8 +901,8 @@ class LexicalSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "a b c"), (2L, "a b d"), (3L, "z a b"),
       (4L, "a z b"), (5L, "b a q")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_pos_maint"
-    val fresh = "/root/repo/target/test_lex_pos_fresh"
+    val p = s"${Sessions.workDir}/test_lex_pos_maint"
+    val fresh = s"${Sessions.workDir}/test_lex_pos_fresh"
     def phrase(path: String) =
       LexicalStore.searchPhrase(spark, path, Seq("a", "b"), k = 10)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
@@ -946,8 +940,8 @@ class LexicalSpec extends AnyFunSuite {
       (3L, "steel stone gamma"), (4L, "alpha beta gamma"),
       (5L, "star steel stick"), (6L, "stick stone star")
     ).toDF("doc_id", "text")
-    val segP = "/root/repo/target/test_lex_seg_dict"
-    val oneP = "/root/repo/target/test_lex_seg_dict_one"
+    val segP = s"${Sessions.workDir}/test_lex_seg_dict"
+    val oneP = s"${Sessions.workDir}/test_lex_seg_dict_one"
     val fs = new org.apache.hadoop.fs.Path(segP)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(segP), true)
@@ -992,7 +986,7 @@ class LexicalSpec extends AnyFunSuite {
       (3L, "scream x y"),    // dist 2
       (4L, "unrelated x y")
     ).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_fuzzy"
+    val p = s"${Sessions.workDir}/test_lex_fuzzy"
     LexicalStore.build(spark, docs, p)
     val got = LexicalStore.searchFuzzy(spark, p, "streem",
         maxDist = 2, k = 10)
@@ -1020,7 +1014,7 @@ class LexicalSpec extends AnyFunSuite {
       (4L, "alpha alpha alpha"), // 1 distinct (repeats don't count)
       (5L, "x y z")
     ).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_msm"
+    val p = s"${Sessions.workDir}/test_lex_msm"
     LexicalStore.build(spark, docs, p)
     def ids(msm: Int) = LexicalStore.searchBoolean(spark, p,
         must = Seq.empty, should = Seq("alpha", "beta", "gamma"),
@@ -1041,7 +1035,7 @@ class LexicalSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "windmill x"), (2L, "window x"), (3L, "rewind x"),
       (4L, "nothing here")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_wild"
+    val p = s"${Sessions.workDir}/test_lex_wild"
     LexicalStore.build(spark, docs, p)
     val got = LexicalStore.searchWildcard(spark, p, "ind", k = 10)
       .collect().map(_.getLong(0)).toSet
@@ -1050,7 +1044,7 @@ class LexicalSpec extends AnyFunSuite {
     assert(LexicalStore.searchWildcard(spark, p, "mill", k = 10)
       .collect().map(_.getLong(0)).toSet == Set(1L))
     // segmented: same result via merged dictionaries + segmented scorer
-    val segP = "/root/repo/target/test_lex_wild_seg"
+    val segP = s"${Sessions.workDir}/test_lex_wild_seg"
     val fs = new org.apache.hadoop.fs.Path(segP)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(segP), true)
@@ -1078,7 +1072,7 @@ class LexicalSpec extends AnyFunSuite {
       (4L, "common common common"),
       (5L, "common z")
     ).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_mlt"
+    val p = s"${Sessions.workDir}/test_lex_mlt"
     LexicalStore.build(spark, docs, p)
     val got = LexicalStore.moreLikeThis(spark, p, docs, 1L,
         maxTerms = 1, k = 10)
@@ -1098,7 +1092,7 @@ class LexicalSpec extends AnyFunSuite {
       "analyzer memos for the path") {
     import spark.implicits._
     val docs = Seq((1L, "The Word.")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_ana_xsession"
+    val p = s"${Sessions.workDir}/test_lex_ana_xsession"
     LexicalStore.build(spark, docs, p) // raw
     // session A memoizes 'raw' for the path
     assert(LexicalStore.analyzerOf(spark, p) == LexicalStore.AnalyzerRaw)
@@ -1120,7 +1114,7 @@ class LexicalSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Seq((1L, "hit a"), (2L, "hit b"), (3L, "miss c"))
       .toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_facet_dup"
+    val p = s"${Sessions.workDir}/test_lex_facet_dup"
     LexicalStore.build(spark, docs, p)
     val facets = Seq(
       (1L, "web"), (1L, "web"),       // duplicate pair: one count
@@ -1137,8 +1131,8 @@ class LexicalSpec extends AnyFunSuite {
       "contributes zero instead of failing") {
     import spark.implicits._
     val docs = Seq((1L, "... ..."), (2L, "plain text")).toDF("doc_id", "text")
-    val foldedP = "/root/repo/target/test_lex_mf_folded"
-    val rawP = "/root/repo/target/test_lex_mf_raw"
+    val foldedP = s"${Sessions.workDir}/test_lex_mf_folded"
+    val rawP = s"${Sessions.workDir}/test_lex_mf_raw"
     LexicalStore.build(spark, docs, foldedP,
       analyzer = LexicalStore.AnalyzerFolded)
     LexicalStore.build(spark, docs, rawP)
@@ -1155,7 +1149,7 @@ class LexicalSpec extends AnyFunSuite {
 
   test("searchFuzzy on appended segments equals one build of the union") {
     import spark.implicits._
-    val p = "/root/repo/target/test_lex_fuzzy_seg"
+    val p = s"${Sessions.workDir}/test_lex_fuzzy_seg"
     val one = s"${p}_one"
     deleteDir(p)
     val segs = Seq(Seq((1L, "stream things")), Seq((2L, "steam streams stream")))
@@ -1182,7 +1176,7 @@ class LexicalSpec extends AnyFunSuite {
       (1L, "stream stream steam a q"),
       (2L, "scream b steam z"),
       (3L, "stream x y w")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_symspell"
+    val p = s"${Sessions.workDir}/test_lex_symspell"
     LexicalStore.build(spark, docs, p)
     LexicalStore.buildSymSpell(spark, p, maxDist = 2)
     def pair(term: String, maxDist: Int, k: Int) = (
@@ -1207,12 +1201,12 @@ class LexicalSpec extends AnyFunSuite {
     // no index -> loud, named error
     intercept[IllegalArgumentException] {
       LexicalStore.suggestTermsIndexed(spark,
-        "/root/repo/target/test_lex_prefix", "streem")
+        s"${Sessions.workDir}/test_lex_prefix", "streem")
     }
   }
 
   test("symspell-indexed fuzzy equals the scan-rewrite fuzzy") {
-    val p = "/root/repo/target/test_lex_symspell"
+    val p = s"${Sessions.workDir}/test_lex_symspell"
     val scan = LexicalStore.searchFuzzy(spark, p, "streem",
         maxDist = 2, k = 10).collect().map(_.toSeq).toSeq
     val indexed = LexicalStore.searchFuzzyIndexed(spark, p, "streem",
@@ -1221,8 +1215,7 @@ class LexicalSpec extends AnyFunSuite {
   }
 
   test("symspell query prunes the variant read to the probe's buckets") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val p = "/root/repo/target/test_lex_symspell"
+    val p = s"${Sessions.workDir}/test_lex_symspell"
     // short probe: 'qq' has <= 1 + 2 + 1 variants -> few buckets
     val df = LexicalStore.suggestTermsIndexed(spark, p, "qq", maxDist = 2)
     df.collect()
@@ -1249,7 +1242,7 @@ class LexicalSpec extends AnyFunSuite {
       (1L, "hit hit filler"), (2L, "hit hit filler"), (3L, "hit hit filler"),
       (4L, "hit filler x"), (5L, "hit filler x"), (6L, "hit filler x"),
       (7L, "none of these")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_pages"
+    val p = s"${Sessions.workDir}/test_lex_pages"
     LexicalStore.build(spark, docs, p)
     val all = LexicalStore.searchTopKLexical(spark, p, Seq("hit"), 6)
       .orderBy(col("lex_rank"))
@@ -1272,7 +1265,7 @@ class LexicalSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "hit x", "web"), (2L, "hit y", "web"), (3L, "hit z", "book"),
       (4L, "miss a", "web")).toDF("doc_id", "text", "source")
-    val p = "/root/repo/target/test_lex_facets"
+    val p = s"${Sessions.workDir}/test_lex_facets"
     LexicalStore.build(spark, docs, p)
     val got = LexicalStore.facetCounts(spark, p, Seq("hit"),
         docs.select(col("doc_id"), col("source")), "source")
@@ -1293,7 +1286,7 @@ class LexicalSpec extends AnyFunSuite {
       (6L, "b a b z c"),        // a@1 -> b@2 -> c@4: gap 1
       (7L, "a c b c")           // a@0 -> b@2 -> c@3: gap 1
     ).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_span"
+    val p = s"${Sessions.workDir}/test_lex_span"
     LexicalStore.buildPositional(spark, docs, p)
     val got = LexicalStore.searchSpanNear(spark, p, Seq("a", "b", "c"),
         slop = 2, k = 10)
@@ -1310,7 +1303,7 @@ class LexicalSpec extends AnyFunSuite {
     // repeated word spans need two distinct increasing offsets
     val rep = Seq((10L, "w w"), (11L, "w z w"), (12L, "w"))
       .toDF("doc_id", "text")
-    val p2 = "/root/repo/target/test_lex_span_rep"
+    val p2 = s"${Sessions.workDir}/test_lex_span_rep"
     LexicalStore.buildPositional(spark, rep, p2)
     val reps = LexicalStore.searchSpanNear(spark, p2, Seq("w", "w"), slop = 1)
       .collect().map(r => (r.getLong(0), r.getInt(2))).toMap
@@ -1326,7 +1319,7 @@ class LexicalSpec extends AnyFunSuite {
       (1L, "stream stream steam alpha"),
       (2L, "scream beta steam gamma"),
       (3L, "stream delta epsilon zeta")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_sym_stale"
+    val p = s"${Sessions.workDir}/test_lex_sym_stale"
     LexicalStore.build(spark, docs, p)
     LexicalStore.buildSymSpell(spark, p, maxDist = 2)
     // sanity: indexed path live and scan-identical before the rewrite
@@ -1366,7 +1359,7 @@ class LexicalSpec extends AnyFunSuite {
 
   test("segment append and merge invalidate _symspell the same way") {
     import spark.implicits._
-    val p = "/root/repo/target/test_lex_sym_seg_stale"
+    val p = s"${Sessions.workDir}/test_lex_sym_seg_stale"
     val fsPath = new org.apache.hadoop.fs.Path(p)
     val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(fsPath)) fs.delete(fsPath, true)
@@ -1402,7 +1395,7 @@ class LexicalSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "window windows wind"), (2L, "widow window x"),
       (3L, "sandbox y z")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_glob"
+    val p = s"${Sessions.workDir}/test_lex_glob"
     LexicalStore.build(spark, docs, p)
     // mid-pattern ? plus tail *: w?ndow* serves window/windows, not
     // widow — neither prefix nor infix-contains could express this
@@ -1436,7 +1429,7 @@ class LexicalSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "window windows wind"), (2L, "widow window x"),
       (3L, "sandbox y z")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_regexp"
+    val p = s"${Sessions.workDir}/test_lex_regexp"
     LexicalStore.build(spark, docs, p)
     // alternation + class + star: wid|wind matches widow-family AND
     // wind-family terms — inexpressible as prefix/infix/glob
@@ -1497,7 +1490,7 @@ class LexicalSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "window windows wind"), (2L, "widow window x"),
       (3L, "sandbox y z")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_glob_vs_regexp"
+    val p = s"${Sessions.workDir}/test_lex_glob_vs_regexp"
     LexicalStore.build(spark, docs, p)
     // the glob grammar is a sub-grammar of the regexp one (* -> .*,
     // ? -> .); the two verbs share the dictionary walk, cap and
@@ -1523,7 +1516,7 @@ class LexicalSpec extends AnyFunSuite {
       (2L, "Unrelated title", "streams and windows everywhere"),
       (3L, "Plain other", "nothing relevant here"))
       .toDF("doc_id", "title", "body")
-    val p = "/root/repo/target/test_lex_bm25f_english"
+    val p = s"${Sessions.workDir}/test_lex_bm25f_english"
     LexicalStore.buildBm25F(spark, docs, p,
       Seq("title" -> 3L, "body" -> 1L),
       analyzer = LexicalStore.AnalyzerEnglish)
@@ -1551,7 +1544,7 @@ class LexicalSpec extends AnyFunSuite {
       (1L, "stream alpha key"), (2L, "stream beta key"),
       (3L, "stream gamma kei"), (4L, "steam delta key"))
       .toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_phrase_sugg"
+    val p = s"${Sessions.workDir}/test_lex_phrase_sugg"
     LexicalStore.build(spark, docs, p)
     LexicalStore.buildSymSpell(spark, p, maxDist = 2)
     val got = LexicalStore.suggestPhrase(spark, p, Seq("streem", "kee"),
@@ -1609,7 +1602,7 @@ class LexicalSpec extends AnyFunSuite {
       (2L, "runs of data stream merging"),
       (3L, "He ran the quality of data checks"),
       (4L, "nothing relevant here")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_english"
+    val p = s"${Sessions.workDir}/test_lex_english"
     LexicalStore.build(spark, docs, p,
       analyzer = LexicalStore.AnalyzerEnglish)
     // inflected, mixed-case, stopword-laden query matches OTHER
@@ -1631,7 +1624,7 @@ class LexicalSpec extends AnyFunSuite {
     assert(pre == Set(1L, 2L), pre.toString)
     // positional: offsets are dense over the post-stopword sequence,
     // so "quality of data" phrase-matches via the stop-phrase rule
-    val pp = "/root/repo/target/test_lex_english_pos"
+    val pp = s"${Sessions.workDir}/test_lex_english_pos"
     LexicalStore.buildPositional(spark, docs, pp,
       analyzer = LexicalStore.AnalyzerEnglish)
     val ph = LexicalStore.searchPhrase(spark, pp,
@@ -1664,7 +1657,7 @@ class LexicalSpec extends AnyFunSuite {
       (5L, "nothing matching here")).toDF("doc_id", "text")
     val terms = Seq("stream", "window", "merge")
     // denormalized layout
-    val p = "/root/repo/target/test_lex_explain"
+    val p = s"${Sessions.workDir}/test_lex_explain"
     LexicalStore.build(spark, docs, p)
     val page = LexicalStore.searchTopKLexical(spark, p, terms, 3)
     val want = page.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
@@ -1684,7 +1677,7 @@ class LexicalSpec extends AnyFunSuite {
     // its explain share the contribution frame; scores equal the
     // denormalized build's (the q157 merge-equivalence), so the
     // explain sums must too
-    val ps = "/root/repo/target/test_lex_explain_seg"
+    val ps = s"${Sessions.workDir}/test_lex_explain_seg"
     deleteDir(ps) // appends accumulate — a rerun must start fresh
     LexicalStore.appendLexicalSegment(spark,
       docs.filter(col("doc_id") <= 2), ps)
@@ -1705,7 +1698,7 @@ class LexicalSpec extends AnyFunSuite {
       .select(col("df")).distinct().collect().map(_.getLong(0)).toSeq
     assert(dfs == Seq(3L), dfs.toString)
     // english layout: the explain folds the query exactly once
-    val pe = "/root/repo/target/test_lex_explain_eng"
+    val pe = s"${Sessions.workDir}/test_lex_explain_eng"
     LexicalStore.build(spark, docs, pe,
       analyzer = LexicalStore.AnalyzerEnglish)
     val ePage = LexicalStore.searchTopKLexical(spark, pe,
@@ -1728,8 +1721,8 @@ class LexicalSpec extends AnyFunSuite {
       (1L, "a body about windows and merges"),
       (2L, "stream stream stream details"),
       (3L, "unrelated body text")).toDF("doc_id", "text")
-    val pt = "/root/repo/target/test_lex_fields_title"
-    val pb = "/root/repo/target/test_lex_fields_body"
+    val pt = s"${Sessions.workDir}/test_lex_fields_title"
+    val pb = s"${Sessions.workDir}/test_lex_fields_body"
     LexicalStore.build(spark, title, pt)
     LexicalStore.build(spark, body, pb)
     val fields = Seq((pt, 2L), (pb, 1L))
@@ -1760,7 +1753,7 @@ class LexicalSpec extends AnyFunSuite {
       (2L, "other news", "alpha beta gamma delta"),
       (3L, "plain here", "beta gamma delta epsilon"))
       .toDF("doc_id", "title", "body")
-    val p = "/root/repo/target/test_lex_bm25f"
+    val p = s"${Sessions.workDir}/test_lex_bm25f"
     LexicalStore.buildBm25F(spark, docs, p,
       Seq("title" -> 3L, "body" -> 1L))
     val hits = LexicalStore.searchTopKLexical(spark, p, Seq("alpha"), 10)
@@ -1796,7 +1789,7 @@ class LexicalSpec extends AnyFunSuite {
       (2L, "other news", "alpha beta gamma delta"),
       (3L, "plain here", "beta gamma delta epsilon"))
       .toDF("doc_id", "title", "body")
-    val p = "/root/repo/target/test_lex_bm25f_maint"
+    val p = s"${Sessions.workDir}/test_lex_bm25f_maint"
     def dump(path: String) = LexicalStore.searchTopKLexical(
         spark, path, Seq("alpha", "epsilon"), 10)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
@@ -1810,7 +1803,7 @@ class LexicalSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("upsertBm25F"), e.getMessage)
     // upsertBm25F on a plain layout fails loudly the other way
-    val plain = "/root/repo/target/test_lex_bm25f_maint_plain"
+    val plain = s"${Sessions.workDir}/test_lex_bm25f_maint_plain"
     LexicalStore.build(spark,
       Seq((1L, "alpha beta")).toDF("doc_id", "text"), plain)
     val e2 = intercept[RuntimeException] {
@@ -1836,7 +1829,7 @@ class LexicalSpec extends AnyFunSuite {
       (2L, "epsilon news", "epsilon beta"),
       (4L, "fresh title", "alpha epsilon"))
       .toDF("doc_id", "title", "body")
-    val ref = "/root/repo/target/test_lex_bm25f_maint_ref"
+    val ref = s"${Sessions.workDir}/test_lex_bm25f_maint_ref"
     LexicalStore.buildBm25F(spark, merged, ref,
       Seq("title" -> 3L, "body" -> 1L))
     assert(dump(p) == dump(ref), s"${dump(p)} != ${dump(ref)}")
@@ -1871,7 +1864,7 @@ class LexicalSpec extends AnyFunSuite {
       (3L, "alpha beta gamma banned"),// excluded
       (4L, "alpha gamma")             // fails must (no beta)
     ).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_explain_bool"
+    val p = s"${Sessions.workDir}/test_lex_explain_bool"
     LexicalStore.build(spark, docs, p)
     val page = LexicalStore.searchBoolean(spark, p,
       must = Seq("alpha", "beta"), should = Seq("gamma"),
@@ -1933,7 +1926,7 @@ class LexicalSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "stream stream steam"), (2L, "steam strem x"),
       (3L, "other words here")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_explain_fuzzy"
+    val p = s"${Sessions.workDir}/test_lex_explain_fuzzy"
     LexicalStore.build(spark, docs, p)
     val page = LexicalStore.searchFuzzy(spark, p, "streem",
       maxDist = 2, k = 3, maxExpansions = 4)
@@ -1962,7 +1955,7 @@ class LexicalSpec extends AnyFunSuite {
       (2L, "alpha shared deep topic"),
       (3L, "shared topic words only"),
       (4L, "unrelated filler entirely")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_explain_prf"
+    val p = s"${Sessions.workDir}/test_lex_explain_prf"
     LexicalStore.build(spark, docs, p)
     val page = LexicalStore.searchTopKPrf(spark, p, docs,
       Seq("alpha"), k = 4, fbDocs = 1, fbTerms = 2)
@@ -1999,7 +1992,7 @@ class LexicalSpec extends AnyFunSuite {
       (1L, "agreed agreed terms agreed upon"),
       (2L, "thens upon thens again"),
       (3L, "unrelated content entirely")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_english_noreanalyze"
+    val p = s"${Sessions.workDir}/test_lex_english_noreanalyze"
     LexicalStore.build(spark, docs, p,
       analyzer = LexicalStore.AnalyzerEnglish)
     // prefix: the probe only lowercases (multi-term queries bypass
@@ -2048,7 +2041,7 @@ class LexicalSpec extends AnyFunSuite {
       Seq("thens"), k = 5).collect().map(_.getLong(0))
     assert(prf.head == 2L && prf.toSet == Set(1L, 2L), prf.mkString(","))
     // the segmented rank path routes pre-analyzed expansions too
-    val ps = "/root/repo/target/test_lex_english_noreanalyze_seg"
+    val ps = s"${Sessions.workDir}/test_lex_english_noreanalyze_seg"
     deleteDir(ps) // appends accumulate — a rerun must start fresh
     LexicalStore.appendLexicalSegment(spark, docs.filter(col("doc_id") <= 2),
       ps, analyzer = LexicalStore.AnalyzerEnglish)
@@ -2067,7 +2060,7 @@ class LexicalSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "alpha beta"), (2L, "alpha gamma"),
       (3L, "beta gamma"), (4L, "alpha delta")).toDF("doc_id", "text")
-    val p = "/root/repo/target/test_lex_seg_tombstones"
+    val p = s"${Sessions.workDir}/test_lex_seg_tombstones"
     deleteDir(p)
     LexicalStore.appendLexicalSegment(spark, docs.filter(col("doc_id") <= 2), p)
     LexicalStore.appendLexicalSegment(spark, docs.filter(col("doc_id") > 2), p)
@@ -2122,7 +2115,7 @@ class LexicalSpec extends AnyFunSuite {
       (1L, "The streaming of merges and windowing details"),
       (2L, "streams merged quickly window checks"),
       (3L, "partitions alone here")).toDF("doc_id", "text")
-    val pp = "/root/repo/target/test_lex_eng_snippets"
+    val pp = s"${Sessions.workDir}/test_lex_eng_snippets"
     LexicalStore.buildPositional(spark, docs, pp,
       analyzer = LexicalStore.AnalyzerEnglish)
     // inflected, mixed-case, stopword-laden query folds to stems
@@ -2143,7 +2136,7 @@ class LexicalSpec extends AnyFunSuite {
     // more-like-this on the scoring english layout: doc 2's mined
     // stems (stream/merg/window...) retrieve doc 1, which shares NO
     // surface token with doc 2 — only stems
-    val ps = "/root/repo/target/test_lex_eng_mlt"
+    val ps = s"${Sessions.workDir}/test_lex_eng_mlt"
     LexicalStore.build(spark, docs, ps,
       analyzer = LexicalStore.AnalyzerEnglish)
     val mlt = LexicalStore.moreLikeThis(spark, ps, docs, 2L,
@@ -2153,7 +2146,7 @@ class LexicalSpec extends AnyFunSuite {
 
   test("a corrupted _analyzer sidecar fails loudly, not as silent fold") {
     import spark.implicits._
-    val p = "/root/repo/target/test_lex_bad_analyzer"
+    val p = s"${Sessions.workDir}/test_lex_bad_analyzer"
     LexicalStore.build(spark,
       Seq((1L, "alpha beta")).toDF("doc_id", "text"), p)
     // hand-corrupt the sidecar value (requireAnalyzer guards builds,

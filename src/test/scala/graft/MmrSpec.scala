@@ -9,13 +9,7 @@ import graft.sources.IndexStore
   * the search surface over a persisted layout. */
 class MmrSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private val d = "/root/testdata/sf0.001"
 
@@ -54,7 +48,7 @@ class MmrSpec extends AnyFunSuite {
   }
 
   test("searchTopKMmr over a persisted layout: k ranked rows, diversity-shifted") {
-    val path = "/root/repo/target/test_mmr_idx"
+    val path = s"${Sessions.workDir}/test_mmr_idx"
     val docs = Tables.documents(spark, d).limit(60)
     IndexStore.build(spark, docs, path)
     val r = IndexStore.searchTopKMmr(spark, path, "alpha beta", k = 5,
@@ -81,7 +75,7 @@ class MmrSpec extends AnyFunSuite {
 
   test("searchTopKMmr on a one-row-per-(table,chunk) bucketed layout " +
        "returns each chunk once") {
-    val path = "/root/repo/target/test_mmr_bucketed"
+    val path = s"${Sessions.workDir}/test_mmr_bucketed"
     val docs = Tables.documents(spark, d).limit(30)
     IndexStore.buildBucketed(spark, docs, path)
     val r = IndexStore.searchTopKMmr(spark, path, "alpha beta", k = 5,
@@ -93,7 +87,7 @@ class MmrSpec extends AnyFunSuite {
 
   test("searchTopKMmrBatch: each query's rows reproduce the single-query " +
        "selection; IVF batch with all-cells probing equals the exact batch") {
-    val path = "/root/repo/target/test_mmr_batch_idx"
+    val path = s"${Sessions.workDir}/test_mmr_batch_idx"
     val docs = Tables.documents(spark, d).limit(60)
     IndexStore.buildIvf(spark, docs, path, nCells = 4)
     val queries = Seq(0L -> "alpha beta", 1L -> "gamma delta shuffle")
@@ -122,7 +116,7 @@ class MmrSpec extends AnyFunSuite {
   }
 
   test("searchTopKMmrIvf: probe-pruned fetch; all-cells probing equals full scan") {
-    val path = "/root/repo/target/test_mmr_ivf_idx"
+    val path = s"${Sessions.workDir}/test_mmr_ivf_idx"
     val docs = Tables.documents(spark, d).limit(60)
     IndexStore.buildIvf(spark, docs, path, nCells = 4)
     val full = IndexStore.searchTopKMmr(spark, path, "alpha beta", k = 5,

@@ -44,12 +44,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(FakeCodec.sampleFrames(blob(10), 32, 24).isEmpty)
   }
 
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private def planesDf(rows: (Long, Seq[Int])*) = {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.obs.Profile
@@ -15,13 +14,7 @@ import graft.obs.Profile
   */
 class PlanAuditSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private val d = "/root/testdata/sf0.001"
 
@@ -643,7 +636,7 @@ class PlanAuditSpec extends AnyFunSuite {
   test("filtered searchTopK: a source predicate prunes the source-partitioned layout") {
     import org.apache.spark.sql.functions.col
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_filtered_idx"
+    val path = s"${Sessions.workDir}/test_filtered_idx"
     val docs = Tables.documents(spark, d)
     IndexStore.build(spark, docs, path)
     val src = docs.select("source").orderBy("source").limit(1)
@@ -777,7 +770,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // the other layouts' columns (the checkpoint severs the scan from
     // q103's plan, so audit the pin itself)
     val pinned = graft.sources.IndexStore.hnswShards(spark,
-      "/root/repo/target/q103_hnsw_index/root_testdata_sf0.001").schema.fieldNames.toSet
+      s"${Sessions.workDir}/q103_hnsw_index/root_testdata_sf0.001").schema.fieldNames.toSet
     assert(pinned("hnsw_links") && pinned("embedding"), pinned.toString)
     assert(!pinned("chunk") && !pinned("lsh_buckets") && !pinned("sq8_code"),
       s"shard pin must hold only traversal state: $pinned")

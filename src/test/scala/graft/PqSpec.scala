@@ -13,13 +13,7 @@ import graft.sources.IndexStore
   * deterministic training, and the persisted layout's search path. */
 class PqSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private val d = "/root/testdata/sf0.001"
 
@@ -90,7 +84,7 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("buildIvfPq + searchTopKIvfPq: lifecycle, where=, and vec-form parity") {
-    val path = "/root/repo/target/test_pq_idx"
+    val path = s"${Sessions.workDir}/test_pq_idx"
     val docs = Tables.documents(spark, d).limit(60)
     IndexStore.buildIvfPq(spark, docs, path, nCells = 4)
     // the sidecars both persisted
@@ -125,7 +119,7 @@ class PqSpec extends AnyFunSuite {
 
   test("maintenance on the PQ layout keeps codes: append and upsert encode " +
        "through the persisted books, delete composes") {
-    val path = "/root/repo/target/test_pq_maint"
+    val path = s"${Sessions.workDir}/test_pq_maint"
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
@@ -159,7 +153,7 @@ class PqSpec extends AnyFunSuite {
 
   test("residual layout: lifecycle, maintenance re-encode through the " +
        "stored contract, and exact rerank parity with the raw layout") {
-    val path = "/root/repo/target/test_pqr_maint"
+    val path = s"${Sessions.workDir}/test_pqr_maint"
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)

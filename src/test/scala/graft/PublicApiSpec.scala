@@ -12,12 +12,7 @@ import graft.operators.{Corpus, Dedup, VectorSearch}
   */
 class PublicApiSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   test("minhashPairs finds a planted near-dup under custom column names and bands") {
     import spark.implicits._
@@ -173,7 +168,7 @@ class PublicApiSpec extends AnyFunSuite {
   test("where= is exact filtered top-k on every search path that claims it") {
     import spark.implicits._
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_where_idx"
+    val path = s"${Sessions.workDir}/test_where_idx"
     val docs = (0L until 60L).map(i =>
         (i, s"synthetic document number $i about topic ${i % 7}", s"src${i % 3}"))
       .toDF("doc_id", "text", "source")
@@ -189,7 +184,7 @@ class PublicApiSpec extends AnyFunSuite {
     // the independent baseline: a search over a PHYSICALLY
     // pre-filtered copy of the corpus must return the same ranking
     // (post-filtering the unfiltered top-k would not — it loses rows)
-    val prePath = "/root/repo/target/test_where_idx_pre"
+    val prePath = s"${Sessions.workDir}/test_where_idx_pre"
     IndexStore.build(spark, docs.filter(pred), prePath)
     val pre = IndexStore.searchTopK(spark, prePath, q, k = 5).collect()
     assert(filtered.map(_.getAs[String]("chunk_id")).toSeq ==
@@ -235,7 +230,7 @@ class PublicApiSpec extends AnyFunSuite {
     // that 4x widening recovers, and widening can never hurt recall
     import spark.implicits._
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_q105_api_idx"
+    val path = s"${Sessions.workDir}/test_q105_api_idx"
     val docs = (0L until 60L).map(i =>
         (i, s"synthetic document number $i about topic ${i % 7}", s"src${i % 3}"))
       .toDF("doc_id", "text", "source")
@@ -262,7 +257,7 @@ class PublicApiSpec extends AnyFunSuite {
   test("collection get/count/peek: query-less retrieval with stable paging") {
     import spark.implicits._
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_get_idx"
+    val path = s"${Sessions.workDir}/test_get_idx"
     val docs = (0L until 30L).map(i =>
         (i, s"plain document body number $i", s"src${i % 3}"))
       .toDF("doc_id", "text", "source")
@@ -296,7 +291,7 @@ class PublicApiSpec extends AnyFunSuite {
   test("query/get include= toggles mirror the chroma 0.4.6 projection contract") {
     import spark.implicits._
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_include_idx"
+    val path = s"${Sessions.workDir}/test_include_idx"
     val docs = (0L until 20L).map(i =>
         (i, s"include toggle document number $i", s"src${i % 2}"))
       .toDF("doc_id", "text", "source")
@@ -365,7 +360,7 @@ class PublicApiSpec extends AnyFunSuite {
     val docs = (0L until 30L).map(i =>
         (i, s"describe verb document number $i", s"src${i % 3}"))
       .toDF("doc_id", "text", "source")
-    val srcPath = "/root/repo/target/test_describe_src"
+    val srcPath = s"${Sessions.workDir}/test_describe_src"
     IndexStore.build(spark, docs, srcPath)
     val src = IndexStore.describeCollection(spark, srcPath).collect().head
     assert(src.getAs[String]("family") == "source-partitioned")
@@ -374,7 +369,7 @@ class PublicApiSpec extends AnyFunSuite {
     assert(src.getAs[Long]("dim") == 64L)
     assert(src.getAs[Long]("n_rows") == 30L)
     assert(src.getAs[Boolean]("has_centroids") == false)
-    val ivfPath = "/root/repo/target/test_describe_ivf"
+    val ivfPath = s"${Sessions.workDir}/test_describe_ivf"
     IndexStore.buildIvf(spark, docs, ivfPath, nCells = 4)
     val ivf = IndexStore.describeCollection(spark, ivfPath).collect().head
     assert(ivf.getAs[String]("family") == "ivf-sq")
@@ -383,7 +378,7 @@ class PublicApiSpec extends AnyFunSuite {
     assert(ivf.getAs[Long]("n_partitions") == 4L,
       "partition count must come from the directory listing")
     // the token-vector layout routes to the colbert verbs, never ivf
-    val cbPath = "/root/repo/target/test_describe_cb"
+    val cbPath = s"${Sessions.workDir}/test_describe_cb"
     graft.sources.VersionedStore.deleteTree(java.nio.file.Paths.get(cbPath))
     graft.operators.Hybrid.buildColbert(spark, docs, cbPath,
       maxToks = 8, kCells = 4)
@@ -394,7 +389,7 @@ class PublicApiSpec extends AnyFunSuite {
     // must disambiguate them from the LSH row family, and a vector
     // maintenance verb aimed at the postings must fail loudly on the
     // column probe (not corrupt or silently no-op)
-    val lexPath = "/root/repo/target/test_describe_lex"
+    val lexPath = s"${Sessions.workDir}/test_describe_lex"
     graft.sources.VersionedStore.deleteTree(java.nio.file.Paths.get(lexPath))
     graft.sources.LexicalStore.build(spark, docs, lexPath)
     val lex = IndexStore.describeCollection(spark, lexPath).collect().head
@@ -410,7 +405,7 @@ class PublicApiSpec extends AnyFunSuite {
     // the POSITIONAL postings also carry bucket= AND term — the
     // positions column must separate them from the scoring family
     // (their verbs differ: phrase/NEAR/snippets, no tf/df to score)
-    val posIdx = "/root/repo/target/test_describe_pos"
+    val posIdx = s"${Sessions.workDir}/test_describe_pos"
     graft.sources.VersionedStore.deleteTree(java.nio.file.Paths.get(posIdx))
     graft.sources.LexicalStore.buildPositional(spark, docs, posIdx)
     val pos = IndexStore.describeCollection(spark, posIdx).collect().head
@@ -419,14 +414,14 @@ class PublicApiSpec extends AnyFunSuite {
     assert(pos.getAs[String]("space") == "positional")
     assert(pos.getAs[Long]("dim") == 0L)
     intercept[IllegalArgumentException] {
-      IndexStore.describeCollection(spark, "/root/repo/target/no_such_coll")
+      IndexStore.describeCollection(spark, s"${Sessions.workDir}/no_such_coll")
     }
   }
 
   test("describeStore reports manifest metadata through the whole lifecycle") {
     import spark.implicits._
     import graft.sources.VersionedStore._
-    val path = "/root/repo/target/test_describe_store"
+    val path = s"${Sessions.workDir}/test_describe_store"
     deleteTree(java.nio.file.Paths.get(path))
     val docs = (0L until 40L).map(i => (i, s"src${i % 4}", i * 10))
       .toDF("doc_id", "source", "n_chars")
@@ -469,11 +464,11 @@ class PublicApiSpec extends AnyFunSuite {
     assert(d3.getAs[Int]("n_segs_live") == 1)
     assert(d3.getAs[Int]("n_segs_disk") == 1)
     intercept[IllegalArgumentException] {
-      describeStore(spark, "/root/repo/target/no_such_store", "t")
+      describeStore(spark, s"${Sessions.workDir}/no_such_store", "t")
     }
     // a later-sorted column covered by EVERY zone-mapped segment must
     // not be masked by an earlier-sorted partially-covered one
-    val p2 = "/root/repo/target/test_describe_store_span"
+    val p2 = s"${Sessions.workDir}/test_describe_store_span"
     deleteTree(java.nio.file.Paths.get(p2))
     val docs2 = (0L until 20L).map(i => (i, i * 2, i * 10))
       .toDF("doc_id", "a_rank", "n_chars")
@@ -490,7 +485,7 @@ class PublicApiSpec extends AnyFunSuite {
   test("searchTopKHnswBatch where= matches the single-query filtered search") {
     import spark.implicits._
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_hnsw_batch_where_idx"
+    val path = s"${Sessions.workDir}/test_hnsw_batch_where_idx"
     val docs = (0L until 60L).map(i =>
         (i, s"graph batch document number $i about topic ${i % 6}", s"src${i % 2}"))
       .toDF("doc_id", "text", "source")
@@ -575,7 +570,7 @@ class PublicApiSpec extends AnyFunSuite {
   test("searchTopKIvfBatch where= filters every query like the single path") {
     import spark.implicits._
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_ivf_batch_where_idx"
+    val path = s"${Sessions.workDir}/test_ivf_batch_where_idx"
     val docs = (0L until 40L).map(i =>
         (i, s"filtered batch document number $i about topic ${i % 5}", s"src${i % 2}"))
       .toDF("doc_id", "text", "source")
@@ -600,7 +595,7 @@ class PublicApiSpec extends AnyFunSuite {
   test("searchTopKIvfBatch reproduces each query's single-query ranking") {
     import spark.implicits._
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_ivf_batch_idx"
+    val path = s"${Sessions.workDir}/test_ivf_batch_idx"
     val docs = (0L until 40L).map(i =>
         (i, s"synthetic document number $i about topic ${i % 5}", s"src${i % 2}"))
       .toDF("doc_id", "text", "source")
@@ -624,8 +619,8 @@ class PublicApiSpec extends AnyFunSuite {
     import graft.sources.IndexStore
     import graft.functions.Embed
     // reuse the IVF batch fixture layout; build the graph beside it
-    val path = "/root/repo/target/test_ivf_batch_idx"
-    val hPath = "/root/repo/target/test_vecform_hnsw"
+    val path = s"${Sessions.workDir}/test_ivf_batch_idx"
+    val hPath = s"${Sessions.workDir}/test_vecform_hnsw"
     val docs = (0L until 40L).map(i =>
         (i, s"synthetic document number $i about topic ${i % 5}", s"src${i % 2}"))
       .toDF("doc_id", "text", "source")
@@ -640,9 +635,9 @@ class PublicApiSpec extends AnyFunSuite {
     // single-query paths: every text form must equal its vec form on
     // the same vector (the layout serves both; exact/SQ8/IVF share
     // the IVF layout's columns, LSH probes need the source layout)
-    val sPath = "/root/repo/target/test_vecform_src"
+    val sPath = s"${Sessions.workDir}/test_vecform_src"
     IndexStore.build(spark, docs, sPath)
-    val bPath = "/root/repo/target/test_vecform_bucketed"
+    val bPath = s"${Sessions.workDir}/test_vecform_bucketed"
     IndexStore.buildBucketed(spark, docs, bPath)
     def topIds(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.getAs[String]("chunk_id")).toSeq
@@ -691,7 +686,7 @@ class PublicApiSpec extends AnyFunSuite {
   test("collection metadata: roundtrip, legacy default, and space validation") {
     import spark.implicits._
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_collmeta"
+    val path = s"${Sessions.workDir}/test_collmeta"
     val docs = (0L until 10L).map(i => (i, s"metadata doc $i", "s0"))
       .toDF("doc_id", "text", "source")
     IndexStore.build(spark, docs, path,
@@ -741,7 +736,7 @@ class PublicApiSpec extends AnyFunSuite {
   test("space family edges: tiny corpora, k overshoot, filter kills all") {
     import spark.implicits._
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_space_edges"
+    val path = s"${Sessions.workDir}/test_space_edges"
     val docs = (0L until 3L).map(i => (i, s"tiny corpus doc $i", "s0"))
       .toDF("doc_id", "text", "source")
     IndexStore.build(spark, docs, path,
@@ -760,7 +755,7 @@ class PublicApiSpec extends AnyFunSuite {
   test("hnsw:space metadata switches the exact search path's rank metric") {
     import spark.implicits._
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_space_idx"
+    val path = s"${Sessions.workDir}/test_space_idx"
     // a previous run's _collmeta sidecar survives the dynamic
     // partition overwrite — start from a clean layout so the
     // "no sidecar = default space" leg actually sees no sidecar
@@ -831,7 +826,7 @@ class PublicApiSpec extends AnyFunSuite {
   test("getOrCreateCollection: creates once, then gets without rebuilding") {
     import spark.implicits._
     import graft.sources.IndexStore
-    val path = "/root/repo/target/test_get_or_create"
+    val path = s"${Sessions.workDir}/test_get_or_create"
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(hp, true)

@@ -16,13 +16,7 @@ import graft.sources.QueryParser._
   */
 class QueryParserSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   // ---- grammar --------------------------------------------------------
 
@@ -237,9 +231,9 @@ class QueryParserSpec extends AnyFunSuite {
 
   // ---- executor routing equivalences ----------------------------------
 
-  private val bodyP = "/root/repo/target/test_qp_body"
-  private val titleP = "/root/repo/target/test_qp_title"
-  private val posP = "/root/repo/target/test_qp_pos"
+  private val bodyP = s"${Sessions.workDir}/test_qp_body"
+  private val titleP = s"${Sessions.workDir}/test_qp_title"
+  private val posP = s"${Sessions.workDir}/test_qp_pos"
 
   private def buildStores(): Unit = {
     import spark.implicits._
@@ -335,8 +329,8 @@ class QueryParserSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "merge the stream"), (2L, "stream only here"),
       (3L, "nothing relevant")).toDF("doc_id", "text")
-    val bp = "/root/repo/target/test_qp_eng_body"
-    val pp = "/root/repo/target/test_qp_eng_pos"
+    val bp = s"${Sessions.workDir}/test_qp_eng_body"
+    val pp = s"${Sessions.workDir}/test_qp_eng_pos"
     LexicalStore.build(spark, docs, bp,
       analyzer = LexicalStore.AnalyzerEnglish)
     LexicalStore.buildPositional(spark, docs, pp,
@@ -354,7 +348,7 @@ class QueryParserSpec extends AnyFunSuite {
     // degrade scores ONLY the surviving word, translated to the
     // scoring chain — a positionally-consumed stopword must never
     // re-enter the clause's match set through the scoring fold
-    val mixedScore = "/root/repo/target/test_qp_mixed_body"
+    val mixedScore = s"${Sessions.workDir}/test_qp_mixed_body"
     LexicalStore.build(spark,
       Seq((1L, "merge the stream"), (2L, "the thing here"),
         (3L, "stream only")).toDF("doc_id", "text"),
@@ -375,7 +369,7 @@ class QueryParserSpec extends AnyFunSuite {
 
   test("segmented layouts score parsed queries like one build") {
     import spark.implicits._
-    val sp = "/root/repo/target/test_qp_seg"
+    val sp = s"${Sessions.workDir}/test_qp_seg"
     val one = s"${sp}_one"
     val fs = new org.apache.hadoop.fs.Path(sp)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -518,7 +512,7 @@ class QueryParserSpec extends AnyFunSuite {
       "dense arm IS the IVF probe of plainText, fused by rrfFuse") {
     import spark.implicits._
     buildStores()
-    val ivfP = "/root/repo/target/test_qp_docivf"
+    val ivfP = s"${Sessions.workDir}/test_qp_docivf"
     val rows = Seq(
       (1L, "alpha beta gamma delta"),
       (2L, "alpha beta alpha slowpoke"),

@@ -22,12 +22,7 @@ import graft.sources.{IndexStore, LexicalStore, QueryParser}
   * tombstoned document. */
 class SearchPipelineSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private val vocab = Seq("alpha", "beta", "gamma", "delta", "sheet", "range",
     "column", "formula", "pivot", "chart", "macro", "filter", "index", "vector")

@@ -17,13 +17,7 @@ import graft.functions.{PorterStem, PorterStemmer}
   */
 class StemmerSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   // (input, expected stem) — published Porter vectors
   private val vectors = Seq(

@@ -13,12 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StreamingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
@@ -181,7 +176,7 @@ class StreamingSpec extends AnyFunSuite {
     // the layout's row algebra unchanged (identity = (source, doc_id))
     import spark.implicits._
     import graft.sources.IndexStore
-    val dir = "/root/repo/target/test_stream_replay_idx"
+    val dir = s"${Sessions.workDir}/test_stream_replay_idx"
     val docs = (0L until 30L).map(i =>
         (i, s"stream replay document number $i body text", s"src${i % 3}"))
       .toDF("doc_id", "text", "source")
@@ -226,5 +221,14 @@ class StreamingSpec extends AnyFunSuite {
     val second = graft.streaming.Streams.q214Lifecycle(spark, d)
       .collect().map(_.toSeq).toSeq
     assert(first == second)
+  }
+
+  test("q83 leaves the session's partition overwrite mode as it found it") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.get(key)
+    val rows = SparkEntry.queries("q83_incremental_index")(spark, "/root/testdata/sf0.001")
+      .collect()
+    assert(rows.nonEmpty)
+    assert(spark.conf.get(key) == before)
   }
 }

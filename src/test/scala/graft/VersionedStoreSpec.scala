@@ -16,15 +16,10 @@ import graft.sources.VersionedStore
   */
 class VersionedStoreSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   private def freshPath(name: String): String = {
-    val p = s"/root/repo/target/test_versioned/$name"
+    val p = s"${Sessions.workDir}/test_versioned/$name"
     val root = Paths.get(p)
     if (Files.isDirectory(root))
       Files.walk(root).iterator().asScala.toSeq.reverse
@@ -147,7 +142,6 @@ class VersionedStoreSpec extends AnyFunSuite {
   }
 
   test("compact merges to one segment, preserves data and union zone maps, keeps history") {
-    import org.apache.spark.sql.functions.col
     val p = freshPath("compact")
     VersionedStore.create(spark, df(1L -> "a", 2L -> "a"), p)
     VersionedStore.writeZoneMap(spark, p, "seg=0", Seq("id"))
@@ -172,7 +166,6 @@ class VersionedStoreSpec extends AnyFunSuite {
   }
 
   test("rollback republishes history forward; evolved schemas merge on read") {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val p = freshPath("rollback")
     VersionedStore.create(spark, df(1L -> "a"), p)
@@ -197,7 +190,6 @@ class VersionedStoreSpec extends AnyFunSuite {
 
   test("numeric-segment verbs keep working after rollback (names derive " +
       "from disk, not the republished manifest)") {
-    import spark.implicits._
     val p = freshPath("rollback_append")
     VersionedStore.create(spark, df(1L -> "a"), p)          // v1: seg=0
     VersionedStore.append(spark, df(2L -> "b"), p)          // v2: seg=0,seg=1
@@ -292,7 +284,6 @@ class VersionedStoreSpec extends AnyFunSuite {
 
   test("a racing writer to the same version number fails loudly instead " +
       "of silently replacing the winner's manifest") {
-    import spark.implicits._
     val p = freshPath("race_commit")
     VersionedStore.create(spark, df(1L -> "a"), p)
     // the winner takes v2; the loser — who computed next=2 from a

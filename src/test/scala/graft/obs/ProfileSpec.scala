@@ -19,12 +19,7 @@ object ProfileSpecLatch {
   * keeps no state once a profile closed. */
 class ProfileSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.local(4)
 
   private def assertConsistent(p: Profile): Unit = {
     assert(math.abs(p.driverMs + p.jobMs - p.wallMs) <= 1.0, p)
